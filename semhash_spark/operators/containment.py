@@ -12,14 +12,22 @@ fingerprinting from the same paper): a shingle hash is an ANCHOR iff
 shared regions, so anchor equality is a join key.
 
 Plan:
-  shingle hashes (already computed) --filter anchors--> explode
-  (anchor_hash, record_id) --self-join on anchor (skew-capped like
-  LSH buckets)--> candidate (a,b) --verify containment ratio
-  |S(a) ∩ S(b)| / |S(a)| with array_intersect (JVM)--> optional
-  exact substring confirmation via locate() on the content pair.
+  (id, shingles) projection, persisted once --> distributed parquet
+  write (the blob) and --filter anchors--> explode (record_id,
+  band_idx=0, band_hash=anchor) --1 shuffle on the anchor, sorted by
+  id--> the LSH bucket generator (skew-capped like LSH buckets)
+  scores every candidate pair in-task against the mmap'd blob:
+  containment |S(a) ∩ S(b)| / min(|S(a)|, |S(b)|) --> distinct edges
+  >= containment_threshold, collected before the blob and the
+  projection cache are dropped --> optional exact substring
+  confirmation via instr() on the content pair.
 
-The final substring check joins content back ONLY for surviving
-candidates (tiny relation), never shuffling content at scale.
+No candidate pair relation is shuffled, counted or joined with the
+shingle arrays. Without blob transport, or with a blob above
+VERIFY_BROADCAST_MAX_BYTES, the candidates are joined with the
+shingle arrays and scored by ``verify_containment`` (JVM) instead.
+The substring check joins content back ONLY for surviving edges
+(tiny relation), never shuffling content at scale.
 """
 
 from __future__ import annotations
@@ -28,23 +36,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from semhash_spark.operators.lsh import candidate_pairs_self
-
-# below this estimated candidate-pair volume the broadcast-blob
-# verify's fixed pack cost exceeds its kernel win over the join form
-# (interleaved A/B at 100k files / 3.2k pairs: join ~6 s vs blob
-# ~10 s; the blob's measured 8x kernel advantage needs a pair stream
-# big enough to spend kernel time in)
-_BLOB_MIN_PAIRS = 250_000
-
-
-def _safe_unpersist(df) -> None:
-    """weakref.finalize target: unpersisting after the owning session
-    stopped (or at interpreter shutdown) must never raise."""
-    try:
-        df.unpersist()
-    except Exception:
-        pass
+from semhash_spark.operators.lsh import candidate_pairs_self, verified_edges_self
 
 
 def anchor_table(
@@ -124,49 +116,39 @@ def containment_edges(
 
     Output is symmetric-ready for the CC edge union: (a, b, score)
     with a < b (ids), score = containment ratio of the smaller set.
+
+    The verified edges are computed before the call returns (a
+    driver-held frame, see ``lsh.verified_edges_self``): the scratch
+    blob and the (id, shingles) cache are gone by then, and the frame
+    stays usable however long it lives. The join fallback is lazy and
+    caches nothing. ``persisted`` is accepted for call-site
+    compatibility; the call leaves nothing for it to release.
     """
-    at = anchor_table(
-        feats, "shingles", cfg.anchor_mod, id_col,
-        policy=getattr(cfg, "anchor_policy", "mod"),
-        window=getattr(cfg, "winnow_window", 8),
-        # strict winnowing guarantee when the caller carried the
-        # positional sequence through (see anchor_table docstring)
-        positional_col="shingles_pos" if "shingles_pos" in feats.columns else None,
-    )
-    # Verify-strategy choice is PAIR-VOLUME driven (measured r4): the
-    # broadcast-blob scorer (ids-only pair stream + mmap'd payload,
-    # VERDICT r3 #4) amortizes its fixed pack cost (~seconds of jobs)
-    # only when the candidate relation is large; anchor-bounded
-    # candidate sets are often tiny, where the broadcast-hinted join
-    # wins outright. Round 6: the gate input is the EXACT candidate
-    # count — the candidates are cached and counted once, then fed to
-    # verify from the cache. The round-5 star-cap arithmetic estimate
-    # was a second full aggregation pass over the anchor table
-    # (0.6-1.3 s per call at 100k) that the strategy decision ran
-    # BEFORE the work it was estimating; counting the real relation
-    # costs the candidate generation we were about to do anyway, and
-    # the decision now sees distinct pairs (the estimate overcounted
-    # cross-band repeats ~2x). Strategy is performance-only: both
-    # verify forms return identical scores (tests/test_verify.py).
     from semhash_spark.operators.verify import verify_containment
 
-    cands = candidate_pairs_self(at, cfg.bucket_cap, id_col, persisted).persist()
-    if persisted is not None:
-        persisted.append(cands)
-    n_pairs = cands.count()
-    strategy = "auto" if n_pairs >= _BLOB_MIN_PAIRS else "join"
-    scored = verify_containment(
-        cands, feats.select(id_col, "shingles"), "shingles", id_col,
-        cfg.containment_threshold, strategy=strategy,
-    ).select("a", "b", "score")
-    if persisted is None:
-        # no caller-owned cache list: tie the candidate cache's
-        # lifetime to the returned frame so a long-lived session
-        # doesn't accumulate dead caches (an early collection merely
-        # recomputes — never wrong)
-        import weakref
-
-        weakref.finalize(scored, _safe_unpersist, cands)
+    # strict winnowing guarantee when the caller carried the
+    # positional sequence through (see anchor_table docstring)
+    pos = "shingles_pos" if "shingles_pos" in feats.columns else None
+    # one projection serves the blob write and the anchors, instead of
+    # re-deriving shingles from the caller's plan for each
+    sh = feats.select(id_col, "shingles", *([pos] if pos else [])).persist()
+    try:
+        at = anchor_table(
+            sh, "shingles", cfg.anchor_mod, id_col,
+            policy=getattr(cfg, "anchor_policy", "mod"),
+            window=getattr(cfg, "winnow_window", 8),
+            positional_col=pos,
+        )
+        scored = verified_edges_self(at, sh, cfg.bucket_cap, id_col, "containment",
+                                     cfg.containment_threshold, "contain")
+    finally:
+        sh.unpersist()
+    if scored is None:
+        cands = candidate_pairs_self(at, cfg.bucket_cap, id_col)
+        scored = verify_containment(
+            cands, sh, "shingles", id_col, cfg.containment_threshold,
+            strategy="join",
+        ).select("a", "b", "score")
 
     if confirm_substring and content_df is not None:
         c = content_df.select(F.col(id_col), F.col(content_col))

@@ -13,14 +13,21 @@ above threshold (existential semi/anti-join split).
 Plan shape (self mode, minhash):
 
   input ──exact stage (1 shuffle on exact_key)──► exemplars
-     exemplars ──shingles/signature (codegen, no shuffle)──►
-     band explode ──self-join on band key (1 shuffle, skew-guarded)──►
-     candidate pairs ──verify joins (2 shuffles)──► edges >= θ
+     exemplars ──shingles/signature (codegen, no shuffle)──► feats
+     feats (id, shingles) ──distributed parquet write──► blob
+     band explode ──1 shuffle on the band key, sorted by id──►
+     bucket generator: pairs scored in-task against the mmap'd blob
+       (skew-guarded, exact float64 Jaccard)──► edges >= θ ──distinct,
+       collected to the driver; blob removed──►
      edges ──large-star/small-star CC (O(log n) rounds)──► clusters
      clusters ──join back (1 shuffle)──► selected / filtered / pairs
 
 Content and signatures never enter the band shuffle (ids+hashes
-only); the verify joins rehydrate features keyed by id.
+only), and no candidate pair relation exists: the generator emits
+only verified edges, collected before the blob is removed.
+Without blob transport, or with a blob above
+VERIFY_BROADCAST_MAX_BYTES, the edges come from candidate pairs
+(distinct) joined with the shingle arrays instead (``_edges_minhash``).
 """
 
 from __future__ import annotations
@@ -45,6 +52,7 @@ from semhash_spark.operators.lsh import (
     candidate_pairs_cross,
     candidate_pairs_self,
     explode_band_array,
+    verified_edges_self,
 )
 from semhash_spark.operators.verify import verify_cosine, verify_jaccard
 
@@ -108,18 +116,38 @@ def add_features(df: DataFrame, cfg: DedupConfig, mode: str) -> DataFrame:
     raise ValueError(f"unknown mode {mode!r}")
 
 
+def _edges_minhash(feats: DataFrame, cfg: DedupConfig, id_col: str,
+                   threshold: float) -> DataFrame:
+    """Minhash edges (a, b, score >= threshold): LSH candidates verified
+    inside the bucket generator against the (id, shingles) blob,
+    collected before the blob is removed (``lsh.verified_edges_self``).
+    Without blob transport, or with a blob above
+    VERIFY_BROADCAST_MAX_BYTES, distinct candidates -> ``verify_jaccard``
+    join instead."""
+    edges = verified_edges_self(_minhash_bands(feats, cfg, id_col),
+                                feats.where(F.size("shingles") > 0), cfg.bucket_cap,
+                                id_col, "jaccard", threshold, "lshverify")
+    if edges is None:
+        cands = _candidates_self(feats, cfg, "minhash", id_col)
+        edges = verify_jaccard(cands, feats, "shingles", id_col, threshold,
+                               strategy="join")
+    return edges
+
+
+def _minhash_bands(feats: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
+    # tokenless docs (empty shingle set -> all-sentinel signature)
+    # can never verify >= threshold, but their IDENTICAL signatures
+    # would co-bucket every such doc into one mega band bucket at
+    # scale — prune them from banding (and from the blob) entirely
+    return band_table(feats.where(F.size("shingles") > 0), "sig", cfg.bands, id_col,
+                      cfg.rows_per_band)
+
+
 def _candidates_self(feats: DataFrame, cfg: DedupConfig, mode: str, id_col: str,
                      persisted: list | None = None) -> DataFrame:
     if mode == "minhash":
-        # tokenless docs (empty shingle set -> all-sentinel signature)
-        # can never verify >= threshold, but their IDENTICAL signatures
-        # would co-bucket every such doc into one mega band bucket at
-        # scale — prune them from banding entirely
-        bt = band_table(
-            feats.where(F.size("shingles") > 0),
-            "sig", cfg.bands, id_col, cfg.rows_per_band,
-        )
-        return candidate_pairs_self(bt, cfg.bucket_cap, id_col, persisted)
+        return candidate_pairs_self(_minhash_bands(feats, cfg, id_col), cfg.bucket_cap,
+                                    id_col, persisted)
     if mode == "simhash":
         banded = feats.where(F.size("shingles") > 0).withColumn(
             "shb", simhash_bands("sim64", cfg.simhash_bands))
@@ -286,6 +314,13 @@ def self_deduplicate(
                 seed=cfg.hyperplane_seed, n_rows=n_feats,
                 group_cap=cfg.ivf_group_cap,
                 payload_blob=cfg.ivf_payload_blob,
+            ),
+        )
+    elif mode == "minhash":
+        edges = ck(
+            f"edges_{mode}",
+            lambda: _edges_minhash(feats, cfg, id_col, threshold).select(
+                "a", "b", "score"
             ),
         )
     else:

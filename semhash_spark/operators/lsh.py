@@ -1,19 +1,27 @@
-"""LSH banding: signature -> band table -> candidate pairs.
+"""LSH banding: signature -> band table -> candidate pairs or edges.
 
 Replaces the reference's in-memory ANN index query
-(semhash/index.py:50-70) with a relational plan:
+(semhash/index.py:50-70) with a partitioned plan:
 
     signature array --posexplode bands--> (record_id, band_idx, band_hash)
-    band table self-join on (band_idx, band_hash), a.id < b.id
-    --> distinct candidate pairs --> exact verification (verify.py)
+    band table --one shuffle on (band_idx, band_hash), sorted by id-->
+    streaming bucket generator (mapInArrow), either
+      pairs-only: every bucket's pairs (a < b) --> distinct pairs
+      verified:   every pair scored in-task against the mmap'd
+                  (id, shingles) pack --> distinct edges (a, b, score)
+
+Self-dedup minhash and the containment stage use the verified mode
+(``verified_edges_self``): no candidate pair relation is shuffled,
+sized or joined with shingle arrays, and the edges are collected
+before the call returns, so the pack is removed with it. Simhash and
+cosine LSH use pairs-only and verify downstream.
 
 Skew: common-boilerplate buckets (license headers) are quadratic in
 bucket size. Buckets with more than ``bucket_cap`` members switch
 from all-pairs to STAR edges (every member -> the bucket's min-id
 member): O(m) edges that preserve connectivity for truly-duplicate
-mega-groups while bounding the join output. AQE skew-join splitting
-(on in session.py) handles residual partition skew. Only ids and
-band hashes flow through the shuffle — content/signatures are pruned
+mega-groups while bounding the generator's output. Only ids and band
+hashes flow through the shuffle — content/signatures are pruned
 before the explode.
 """
 
@@ -146,34 +154,204 @@ def _seg_ramp(lens):
     return np.arange(total, dtype=np.int64) - np.repeat(offs, lens)
 
 
+# pairs scored per kernel call in verified mode: bounds each python
+# worker's padded intersection matrix (pairs x widest pair) however
+# many pairs a batch of buckets emits. On the 3,000-file benchmark
+# (local[2], 4-core host) the python workers' peak PSS rose 124 MB
+# over the join plan with 8,192-pair chunks, 39 MB with 2,048 and
+# 26 MB with 512, at no measurable cost in pass time.
+_SCORE_CHUNK = 2048
+# emitted pairs a verified task gathers (16 bytes each) and
+# de-duplicates before scoring: a pair sharing several bands is
+# emitted once per band (6.2x repeats on the 3,000-file benchmark),
+# and every band of a bucket key lands in the same task once AQE
+# coalesces a small band shuffle
+_DEDUP_PAIRS = 1 << 20
+
+
+def _bucket_walk(batches, cap: int):
+    """Each bucket's pairs as (a, b) int64 arrays (one yield per input
+    batch that completes pairs), from Arrow record batches of
+    (band_idx, band_hash, _id) sorted by (bucket key, id).
+
+    All-pairs for buckets <= ``cap`` members, star edges (min-id ->
+    member) above it. Memory is bounded by construction: ids arrive
+    ascending within a bucket, so a bucket is buffered only up to
+    ``cap`` ids — the moment it overflows, the buffer flushes as star
+    edges (the first id IS the bucket min) and the rest of the bucket
+    streams through without being held, however large it is (a
+    10^9-member boilerplate bucket costs one task O(cap) memory). A
+    bucket open at a batch boundary is carried into the next batch.
+    """
+    import numpy as np
+
+    carry_key = None  # bucket key open at the last batch boundary
+    carry_ids = None  # buffered ids of the open bucket (<= cap)
+    star_min = None   # not None => the open bucket overflowed cap
+
+    def bucket_pairs(ids_seg):
+        """(a, b) arrays for ONE completed bucket (ascending ids)."""
+        k = len(ids_seg)
+        if k < 2:
+            return None
+        if k > cap:
+            return np.repeat(ids_seg[0], k - 1), ids_seg[1:]
+        rep = np.arange(k, dtype=np.int64)
+        b = np.repeat(ids_seg, rep)
+        a = ids_seg[_seg_ramp(rep)]
+        return a, b
+
+    def col(rb, name):
+        return rb.column(name).to_numpy(zero_copy_only=False)
+
+    for rb in batches:
+        n = rb.num_rows
+        if n == 0:
+            continue
+        bi = col(rb, "band_idx")
+        bh = col(rb, "band_hash")
+        ids = col(rb, "_id").astype(np.int64, copy=False)
+        new_seg = np.empty(n, dtype=bool)
+        new_seg[0] = True
+        np.logical_or(bi[1:] != bi[:-1], bh[1:] != bh[:-1], out=new_seg[1:])
+        seg_starts = np.flatnonzero(new_seg)
+        n_seg = len(seg_starts)
+        seg_ends = np.append(seg_starts[1:], n)
+        out_a: list = []
+        out_b: list = []
+        s_first = 0
+        first_key = (bi[0], bh[0])
+        if carry_key is not None:
+            if first_key == carry_key:
+                seg0 = ids[: seg_ends[0]]
+                open_at_end = n_seg == 1
+                if star_min is not None:
+                    out_a.append(np.repeat(star_min, len(seg0)))
+                    out_b.append(seg0)
+                else:
+                    merged = np.concatenate([carry_ids, seg0])
+                    if open_at_end and len(merged) <= cap:
+                        carry_ids = merged
+                        if out_a:
+                            yield np.concatenate(out_a), np.concatenate(out_b)
+                        continue
+                    if len(merged) > cap:
+                        # overflow: flush as star NOW (first id is
+                        # the bucket min under the ascending sort)
+                        # and stream the rest without buffering
+                        star_min = merged[0]
+                        out_a.append(np.repeat(star_min, len(merged) - 1))
+                        out_b.append(merged[1:])
+                        carry_ids = None
+                        if open_at_end:
+                            if out_a:
+                                yield np.concatenate(out_a), np.concatenate(out_b)
+                            continue
+                    else:
+                        p = bucket_pairs(merged)
+                        if p is not None:
+                            out_a.append(p[0])
+                            out_b.append(p[1])
+                if not open_at_end:
+                    carry_key = None
+                    carry_ids = None
+                    star_min = None
+                    s_first = 1
+                else:
+                    if out_a:
+                        yield np.concatenate(out_a), np.concatenate(out_b)
+                    continue
+            else:
+                # the carried bucket closed at the batch boundary
+                if star_min is None and carry_ids is not None:
+                    p = bucket_pairs(carry_ids)
+                    if p is not None:
+                        out_a.append(p[0])
+                        out_b.append(p[1])
+                carry_key = None
+                carry_ids = None
+                star_min = None
+
+        # segments [s_first, n_seg - 1) are complete: vectorized
+        # pair emission across all of them at once
+        if n_seg - 1 > s_first:
+            seg_len = seg_ends - seg_starts
+            seg_id = np.cumsum(new_seg) - 1
+            complete = np.zeros(n_seg, dtype=bool)
+            complete[s_first : n_seg - 1] = True
+            small = complete & (seg_len >= 2) & (seg_len <= cap)
+            big = complete & (seg_len > cap)
+            f_elem = seg_starts[seg_id]
+            local = np.arange(n, dtype=np.int64) - f_elem
+            if small.any():
+                sel = small[seg_id]
+                rep = local[sel]
+                b_s = np.repeat(ids[sel], rep)
+                base = np.repeat(f_elem[sel], rep)
+                a_s = ids[base + _seg_ramp(rep)]
+                out_a.append(a_s)
+                out_b.append(b_s)
+            if big.any():
+                m = big[seg_id] & (local > 0)
+                out_a.append(ids[f_elem[m]])
+                out_b.append(ids[m])
+
+        # the batch's last segment becomes (or stays) the carry
+        last = ids[seg_starts[-1] :]
+        carry_key = (bi[-1], bh[-1])
+        if len(last) > cap:
+            star_min = last[0]
+            out_a.append(np.repeat(star_min, len(last) - 1))
+            out_b.append(last[1:])
+            carry_ids = None
+        else:
+            star_min = None
+            carry_ids = last.copy()
+        if out_a:
+            yield np.concatenate(out_a), np.concatenate(out_b)
+
+    if carry_key is not None and star_min is None and carry_ids is not None:
+        p = bucket_pairs(carry_ids)
+        if p is not None:
+            yield p
+
+
 def candidate_pairs_self(
     bands_df: DataFrame,
     bucket_cap: int = 1000,
     id_col: str = "record_id",
     persisted: list | None = None,
+    pack: dict | None = None,
+    metric: str = "jaccard",
+    threshold: float | None = None,
 ) -> DataFrame:
-    """Distinct candidate pairs (a < b) from a band table.
+    """Distinct candidate pairs (a < b) from a band table — or, with
+    ``pack``, the distinct verified edges (a, b, score) among them.
 
     Small buckets -> all pairs; oversized buckets -> star edges to
     the bucket min-id (skew guard, see module docstring).
 
-    Plan (round 6 — one band shuffle, was three): the band table is
-    hash-repartitioned on the bucket key, locally sorted by
-    (bucket key, id), and a streaming Arrow generator emits each
-    bucket's pairs directly — all-pairs for buckets <= ``bucket_cap``,
-    star edges (min-id -> member) above it. The round-5 relational
-    form shuffled the band table for a sizes aggregate, joined the
-    sizes back, self-joined the annotated table on the bucket key and
-    cached both intermediates; the 100k bench spent ~4-5 s there and
-    the 3M flagship 41% of its wall. The generator's memory is
-    bounded by construction: ids arrive ascending within a bucket, so
-    a bucket is buffered only up to ``bucket_cap`` ids — the moment
-    it overflows, the buffer flushes as star edges (the first id IS
-    the bucket min) and the rest of the bucket streams through
-    without being held, however large it is (a 10^9-member
-    boilerplate bucket costs one task O(cap) memory). Emitted pair
-    sets are identical to the relational form; ``distinct`` then
-    collapses cross-band repeats exactly as before.
+    Plan: the band table (ids and hashes only) is hash-repartitioned
+    on the bucket key — the one shuffle — and locally sorted by
+    (bucket key, id); a streaming ``mapInArrow`` generator walks the
+    buckets (``_bucket_walk``) and emits each bucket's pairs directly.
+
+    * pairs-only (``pack=None``; the simhash and cosine-LSH callers):
+      the emitted (a, b) pairs, then ``distinct`` collapses the
+      repeats of a pair that shares several bands.
+    * verified (``pack`` = a ``verify.pack_set_blob`` ref of the
+      call's (id, shingles) table; ``verified_edges_self`` owns the
+      blob around this plan): every task mmaps the pack
+      (``load_feats_segments``) and scores each emitted pair in
+      ``_SCORE_CHUNK``-pair chunks — after dropping the repeats among
+      up to ``_DEDUP_PAIRS`` gathered pairs — with exact float64 ``metric``
+      ("jaccard", with the ``J >= t => min >= t * max`` size prune,
+      or "containment"; ``verify.score_set_pairs``), keeping only
+      edges >= ``threshold``. No pair relation is ever shuffled,
+      sized or joined against the shingle arrays; the only
+      ``distinct`` is on the small edge set. The scores are
+      bit-identical to candidates -> ``verify_jaccard`` /
+      ``verify_containment``.
 
     ``persisted`` is kept for call-site compatibility; this form
     caches nothing (the band table is consumed exactly once).
@@ -185,145 +363,103 @@ def candidate_pairs_self(
         .sortWithinPartitions(*BAND_COLS, "_id")
     )
 
-    def gen(batches):
+    if pack is None:
+        def gen(batches):
+            import pyarrow as pa
+
+            for a, b in _bucket_walk(batches, cap):
+                yield pa.RecordBatch.from_arrays(
+                    [pa.array(a), pa.array(b)], names=["a", "b"])
+
+        return st.mapInArrow(gen, "a long, b long").distinct()
+
+    if metric not in ("jaccard", "containment"):
+        raise ValueError(f"unknown set metric {metric!r}")
+
+    def verified(batches):
         import numpy as np
-        import pandas as pd
+        import pyarrow as pa
 
-        carry_key = None  # bucket key open at the last batch boundary
-        carry_ids = None  # buffered ids of the open bucket (<= cap)
-        star_min = None   # not None => the open bucket overflowed cap
+        from semhash_spark.operators.verify import load_feats_segments, score_set_pairs
 
-        def bucket_pairs(ids_seg):
-            """(a, b) arrays for ONE completed bucket (ascending ids)."""
-            k = len(ids_seg)
-            if k < 2:
-                return None
-            if k > cap:
-                return np.repeat(ids_seg[0], k - 1), ids_seg[1:]
-            rep = np.arange(k, dtype=np.int64)
-            b = np.repeat(ids_seg, rep)
-            a = ids_seg[_seg_ramp(rep)]
-            return a, b
+        feats = load_feats_segments(pack)
 
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            bi = pdf["band_idx"].to_numpy()
-            bh = pdf["band_hash"].to_numpy()
-            ids = pdf["_id"].to_numpy().astype(np.int64, copy=False)
-            new_seg = np.empty(n, dtype=bool)
-            new_seg[0] = True
-            np.logical_or(bi[1:] != bi[:-1], bh[1:] != bh[:-1], out=new_seg[1:])
-            seg_starts = np.flatnonzero(new_seg)
-            n_seg = len(seg_starts)
-            seg_ends = np.append(seg_starts[1:], n)
-            out_a: list = []
-            out_b: list = []
-            s_first = 0
-            first_key = (bi[0], bh[0])
-            if carry_key is not None:
-                if first_key == carry_key:
-                    seg0 = ids[: seg_ends[0]]
-                    open_at_end = n_seg == 1
-                    if star_min is not None:
-                        out_a.append(np.repeat(star_min, len(seg0)))
-                        out_b.append(seg0)
-                    else:
-                        merged = np.concatenate([carry_ids, seg0])
-                        if open_at_end and len(merged) <= cap:
-                            carry_ids = merged
-                            if out_a:
-                                yield pd.DataFrame(
-                                    {"a": np.concatenate(out_a),
-                                     "b": np.concatenate(out_b)})
-                            continue
-                        if len(merged) > cap:
-                            # overflow: flush as star NOW (first id is
-                            # the bucket min under the ascending sort)
-                            # and stream the rest without buffering
-                            star_min = merged[0]
-                            out_a.append(np.repeat(star_min, len(merged) - 1))
-                            out_b.append(merged[1:])
-                            carry_ids = None
-                            if open_at_end:
-                                if out_a:
-                                    yield pd.DataFrame(
-                                        {"a": np.concatenate(out_a),
-                                         "b": np.concatenate(out_b)})
-                                continue
-                        else:
-                            p = bucket_pairs(merged)
-                            if p is not None:
-                                out_a.append(p[0])
-                                out_b.append(p[1])
-                    if not open_at_end:
-                        carry_key = None
-                        carry_ids = None
-                        star_min = None
-                        s_first = 1
-                    else:
-                        if out_a:
-                            yield pd.DataFrame(
-                                {"a": np.concatenate(out_a),
-                                 "b": np.concatenate(out_b)})
-                        continue
-                else:
-                    # the carried bucket closed at the batch boundary
-                    if star_min is None and carry_ids is not None:
-                        p = bucket_pairs(carry_ids)
-                        if p is not None:
-                            out_a.append(p[0])
-                            out_b.append(p[1])
-                    carry_key = None
-                    carry_ids = None
-                    star_min = None
+        def score(pend):
+            a = np.concatenate([p[0] for p in pend])
+            b = np.concatenate([p[1] for p in pend])
+            order = np.lexsort((b, a))
+            a, b = a[order], b[order]
+            first = np.ones(len(a), dtype=bool)
+            np.logical_or(a[1:] != a[:-1], b[1:] != b[:-1], out=first[1:])
+            a, b = a[first], b[first]
+            out = [
+                score_set_pairs(feats, a[i : i + _SCORE_CHUNK],
+                                b[i : i + _SCORE_CHUNK], threshold, metric)
+                for i in range(0, len(a), _SCORE_CHUNK)
+            ]
+            if sum(len(o[0]) for o in out):
+                return pa.RecordBatch.from_arrays(
+                    [pa.array(np.concatenate([o[k] for o in out])) for k in range(3)],
+                    names=["a", "b", "score"])
+            return None
 
-            # segments [s_first, n_seg - 1) are complete: vectorized
-            # pair emission across all of them at once
-            if n_seg - 1 > s_first:
-                seg_len = seg_ends - seg_starts
-                seg_id = np.cumsum(new_seg) - 1
-                complete = np.zeros(n_seg, dtype=bool)
-                complete[s_first : n_seg - 1] = True
-                small = complete & (seg_len >= 2) & (seg_len <= cap)
-                big = complete & (seg_len > cap)
-                f_elem = seg_starts[seg_id]
-                local = np.arange(n, dtype=np.int64) - f_elem
-                if small.any():
-                    sel = small[seg_id]
-                    rep = local[sel]
-                    b_s = np.repeat(ids[sel], rep)
-                    base = np.repeat(f_elem[sel], rep)
-                    a_s = ids[base + _seg_ramp(rep)]
-                    out_a.append(a_s)
-                    out_b.append(b_s)
-                if big.any():
-                    m = big[seg_id] & (local > 0)
-                    out_a.append(ids[f_elem[m]])
-                    out_b.append(ids[m])
+        pend: list = []
+        n_pend = 0
+        for a, b in _bucket_walk(batches, cap):
+            pend.append((a, b))
+            n_pend += len(a)
+            if n_pend >= _DEDUP_PAIRS:
+                rb = score(pend)
+                pend, n_pend = [], 0
+                if rb is not None:
+                    yield rb
+        if pend:
+            rb = score(pend)
+            if rb is not None:
+                yield rb
 
-            # the batch's last segment becomes (or stays) the carry
-            last = ids[seg_starts[-1] :]
-            carry_key = (bi[-1], bh[-1])
-            if len(last) > cap:
-                star_min = last[0]
-                out_a.append(np.repeat(star_min, len(last) - 1))
-                out_b.append(last[1:])
-                carry_ids = None
-            else:
-                star_min = None
-                carry_ids = last.copy()
-            if out_a:
-                yield pd.DataFrame(
-                    {"a": np.concatenate(out_a), "b": np.concatenate(out_b)})
+    return st.mapInArrow(verified, "a long, b long, score double").distinct()
 
-        if carry_key is not None and star_min is None and carry_ids is not None:
-            p = bucket_pairs(carry_ids)
-            if p is not None:
-                yield pd.DataFrame({"a": p[0], "b": p[1]})
 
-    return st.mapInPandas(gen, "a long, b long").distinct()
+def verified_edges_self(
+    bands_df: DataFrame,
+    sets_df: DataFrame,
+    bucket_cap: int,
+    id_col: str,
+    metric: str,
+    threshold: float,
+    name_prefix: str,
+) -> DataFrame | None:
+    """The distinct verified edges (a, b, score >= ``threshold``) of a
+    band table, computed now: writes the (id, shingles) blob of
+    ``sets_df`` (``verify.pack_set_blob``), runs the verified
+    ``candidate_pairs_self`` and removes the blob, so the returned
+    frame never reads it. Like the connected-components driver path,
+    up to ``DRIVER_CC_CAP`` edges come back as a driver-held frame
+    (no cache, nothing to release, valid however long it lives); a
+    larger edge set stays on the executors as an eager local
+    checkpoint, freed when the frame is garbage-collected. None when
+    the blob cannot serve the call (no transport, no rows, above
+    ``VERIFY_BROADCAST_MAX_BYTES``): the caller keeps the candidates ->
+    join-verify plan."""
+    from semhash_spark.operators.components import DRIVER_CC_CAP
+    from semhash_spark.operators.verify import drop_blob, pack_set_blob
+
+    ref = pack_set_blob(sets_df, id_col, "shingles", name_prefix)
+    if ref is None:
+        return None
+    try:
+        edges = candidate_pairs_self(
+            bands_df, bucket_cap, id_col, pack=ref, metric=metric, threshold=threshold
+        )
+        # Arrow both ways: a pandas round trip cost ~100 MB more peak
+        # PSS on the 3,000-file benchmark (local[2], 4-core host)
+        probe = edges.limit(DRIVER_CC_CAP + 1).toArrow()
+        if probe.num_rows > DRIVER_CC_CAP:
+            return edges.localCheckpoint(eager=True)
+        return edges.sparkSession.createDataFrame(probe)
+    finally:
+        drop_blob(ref)
 
 
 def thin_index_bands(

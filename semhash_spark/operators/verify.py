@@ -92,25 +92,58 @@ def containment_score(a: str | Column, b: str | Column) -> Column:
     return F.when(small > 0, inter / small).otherwise(F.lit(0.0))
 
 
-# worker-side mmap cache: one entry per distributed blob file; shared
-# page cache across the executor's python workers, survives tasks
+# worker-side mmap cache: (kind, tag) -> (pack, pack dir, blob dir),
+# one entry per distributed blob file; shared page cache across the
+# executor's python workers, survives tasks. Entries whose pack dir or
+# blob dir was removed (the call that wrote the blob is done with it)
+# are dropped at the next load: _prune_blob_cache
 _BLOB_CACHE: dict = {}
 
 # driver-created temp blob dirs, removed at interpreter exit
 _TEMP_BLOBS: list[str] = []
 
 
+def _pack_root(tag: str) -> str:
+    """Worker-local pack dir of a blob (outside the SparkFiles-managed
+    tree: executors re-validate fetched dirs against their source on
+    later addFile calls, and foreign files inside them fail that check
+    — "exists and does not match contents")."""
+    import os
+    import tempfile
+
+    return os.path.join(tempfile.gettempdir(), "semhash_packed", tag)
+
+
+def _prune_blob_cache() -> None:
+    """Drop the cached packs of removed blobs. Their mmaps would
+    otherwise pin the deleted files' pages for the worker's lifetime
+    (each call makes a new tag, so the cache only grows). A blob
+    source gone while its pack dir stays (a shared ``blobDir`` whose
+    packs live on worker-local disk the driver cannot reach) also
+    removes the pack dir here."""
+    import os
+    import shutil
+
+    for key, (_, root, src) in list(_BLOB_CACHE.items()):
+        if os.path.isdir(root) and os.path.isdir(src):
+            continue
+        shutil.rmtree(root, ignore_errors=True)
+        del _BLOB_CACHE[key]
+
+
+def _cache_pack(ref: dict, key, value):
+    """Cache a worker-side pack with the dirs it depends on."""
+    _BLOB_CACHE[key] = (value, _pack_root(ref["tag"]), _blob_root(ref))
+    return value
+
+
 def _cleanup_temp_blobs() -> None:
     import os
     import shutil
-    import tempfile
 
     for p in _TEMP_BLOBS:
         shutil.rmtree(p, ignore_errors=True)
-        packed = os.path.join(
-            tempfile.gettempdir(), "semhash_packed", os.path.basename(p)
-        )
-        shutil.rmtree(packed, ignore_errors=True)
+        shutil.rmtree(_pack_root(os.path.basename(p)), ignore_errors=True)
 
 
 import atexit  # noqa: E402
@@ -207,16 +240,130 @@ def materialize_feats(
     }
 
 
+def _dir_bytes(path: str) -> int:
+    import os
+
+    total = 0
+    with os.scandir(path) as it:
+        for e in it:
+            try:
+                total += e.stat().st_size
+            except FileNotFoundError:  # a part renamed into place meanwhile
+                pass
+    return total
+
+
+def _capped_part_writer(path: str, max_bytes: int):
+    """``mapInArrow`` function writing each task's rows as one parquet
+    part under ``path``; yields the task's (rows, bytes) written.
+
+    Writing stops once the dir holds more than ``max_bytes``: the task
+    that sees it leaves an ``_OVER_CAP`` marker, and every task checks
+    the marker between batches and drains its input without writing.
+    A blob that cannot fit so costs at most ``max_bytes`` plus one
+    batch per concurrent task, not a write of the whole table. Parts
+    are named by partition and renamed into place when complete, so a
+    retried task replaces its part instead of duplicating rows."""
+
+    def write(batches):
+        import os
+
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark import TaskContext
+
+        ctx = TaskContext.get()
+        part = os.path.join(path, f"part-{ctx.partitionId():05d}.parquet")
+        tmp = f"{part}.{ctx.attemptNumber()}.tmp"
+        over = os.path.join(path, "_OVER_CAP")
+        writer, rows = None, 0
+        for rb in batches:
+            if rb.num_rows == 0 or os.path.exists(over):
+                continue
+            if writer is None:
+                writer = pq.ParquetWriter(tmp, rb.schema, compression="none")
+            writer.write_batch(rb)
+            rows += rb.num_rows
+            if _dir_bytes(path) > max_bytes:
+                open(over, "a").close()
+        nbytes = 0
+        if writer is not None:
+            writer.close()
+            nbytes = os.path.getsize(tmp)
+            os.replace(tmp, part)
+        yield pa.RecordBatch.from_arrays(
+            [pa.array([rows], pa.int64()), pa.array([nbytes], pa.int64())],
+            names=["rows", "bytes"])
+
+    return write
+
+
+def pack_set_blob(
+    feats: DataFrame, id_col: str, feat_col: str, name_prefix: str
+) -> dict | None:
+    """Write the (id, array<long>) blob that in-generator verification
+    (``lsh.candidate_pairs_self(pack=...)``) mmaps and return its ref,
+    or None when the caller must keep the candidates -> join-verify
+    plan: no blob transport (``blob_transport_available``), no rows,
+    or a blob above ``VERIFY_BROADCAST_MAX_BYTES``. The fit check reads
+    the bytes being written — no separate size aggregate job — and
+    stops the write once they pass the cap (``_capped_part_writer``).
+
+    The blob is read in place, not addFile'd (an addFile'd blob removed
+    while the session lives makes every later task fail re-fetching
+    it): the caller removes it with ``drop_blob`` once the plans that
+    read it have run."""
+    import os
+    import tempfile
+
+    spark = feats.sparkSession
+    if not blob_transport_available(spark):
+        return None
+    blob_dir = spark.conf.get("spark.semhash.blobDir", None) or tempfile.gettempdir()
+    written = []
+
+    def write(df, path):
+        os.makedirs(path)
+        write_fn = _capped_part_writer(path, VERIFY_BROADCAST_MAX_BYTES)
+        written.extend(df.select(id_col, feat_col).mapInArrow(
+            write_fn, "rows long, bytes long").collect())
+
+    ref = materialize_feats(feats, id_col, feat_col, name_prefix, blob_dir=blob_dir,
+                            write_fn=write)
+    rows = sum(r.rows for r in written)
+    nbytes = sum(r.bytes for r in written)
+    if rows == 0 or nbytes > VERIFY_BROADCAST_MAX_BYTES or os.path.exists(
+        os.path.join(ref["path"], "_OVER_CAP")
+    ):
+        drop_blob(ref)
+        return None
+    return ref
+
+
+def drop_blob(ref: dict) -> None:
+    """Remove a ``pack_set_blob`` blob and the workers' pack dir
+    (``semhash_packed/<tag>``); the workers' caches drop the pack at
+    their next load (``_prune_blob_cache``)."""
+    import shutil
+
+    shutil.rmtree(ref["path"], ignore_errors=True)
+    shutil.rmtree(_pack_root(ref["tag"]), ignore_errors=True)
+
+
+def _blob_root(ref: dict) -> str:
+    """The blob's parquet dir as this process sees it."""
+    if ref["path"] is not None:
+        return ref["path"]
+    from pyspark import SparkFiles
+
+    return SparkFiles.get(ref["tag"])
+
+
 def _blob_files(ref: dict) -> list[str]:
     import glob
     import os
 
-    if ref["path"] is not None:
-        root = ref["path"]
-    else:
-        from pyspark import SparkFiles
-
-        root = SparkFiles.get(ref["tag"])
+    root = _blob_root(ref)
     files = sorted(glob.glob(os.path.join(root, "*.parquet")))
     if not files:
         raise FileNotFoundError(f"no parquet parts under {root}")
@@ -342,18 +489,11 @@ def _pack_once_per_executor(ref: dict, kind: str, builder):
     import os
     import time as _time
 
+    _prune_blob_cache()
     key = (kind, ref["tag"])
     if key in _BLOB_CACHE:
-        return _BLOB_CACHE[key]
-    # scratch dir OUTSIDE the SparkFiles-managed tree: executors
-    # re-validate fetched dirs against their source on later
-    # addFile calls, and foreign files inside them fail that check
-    # ("exists and does not match contents")
-    import tempfile
-
-    root = os.path.join(
-        tempfile.gettempdir(), "semhash_packed", ref["tag"]
-    )
+        return _BLOB_CACHE[key][0]
+    root = _pack_root(ref["tag"])
     os.makedirs(root, exist_ok=True)
     base = os.path.join(root, f"_packed_{kind}")
     done = base + ".done"
@@ -393,8 +533,7 @@ def _pack_once_per_executor(ref: dict, kind: str, builder):
         if _time.time() > deadline:
             raise TimeoutError(f"pack of {base} never completed")
         _time.sleep(0.05)
-    _BLOB_CACHE[key] = _mmap()
-    return _BLOB_CACHE[key]
+    return _cache_pack(ref, key, _mmap())
 
 
 def _read_part_id_payload(path: str, id_col: str, payload_col: str):
@@ -430,13 +569,12 @@ def _pack_sharded(ref: dict, kind: str, part_builder, finalize_builder):
     import os
     import time as _time
 
+    _prune_blob_cache()
     key = (kind, ref["tag"])
     if key in _BLOB_CACHE:
-        return _BLOB_CACHE[key]
-    import tempfile
-
+        return _BLOB_CACHE[key][0]
     parts = _blob_files(ref)
-    root = os.path.join(tempfile.gettempdir(), "semhash_packed", ref["tag"])
+    root = _pack_root(ref["tag"])
     os.makedirs(root, exist_ok=True)
 
     def _save(base: str, arrays) -> None:
@@ -494,9 +632,9 @@ def _pack_sharded(ref: dict, kind: str, part_builder, finalize_builder):
             "finalize",
             lambda: finalize_builder([_mmap_group(b) for b in shard_base]),
         )
-    result = (_mmap_group(final_base), [_mmap_group(b) for b in shard_base])
-    _BLOB_CACHE[key] = result
-    return result
+    return _cache_pack(
+        ref, key, (_mmap_group(final_base), [_mmap_group(b) for b in shard_base])
+    )
 
 
 def load_feats_segments(ref: dict):
@@ -973,6 +1111,44 @@ def _ramp(lens: np.ndarray) -> np.ndarray:
     return np.arange(total, dtype=np.int64) - np.repeat(offs, lens)
 
 
+def score_set_pairs(
+    pack, a: np.ndarray, b: np.ndarray, threshold: float | None,
+    metric: str = "jaccard", left: str = "a", right: str = "b",
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """Exact float64 set scores of the pairs (a[i], b[i]) against a
+    ``load_feats_segments`` pack: (a, b, score) of the pairs scoring
+    >= ``threshold`` (every pair when it is None).
+
+    ``metric`` "jaccard" scores |A∩B| / |A∪B| after the exact-safe size
+    prune J >= t  =>  min >= t * max (|A∩B| <= min, |A∪B| >= max),
+    which kills e.g. the boilerplate-vs-full-file band collisions
+    before any gather work; "containment" scores |A∩B| / min(|A|,|B|)
+    with no prune (the smaller side can be fully contained at any
+    size skew). Empty sets score 0.0, like the JVM join forms — the
+    same integer counts and float64 division, so the scores are
+    bit-identical to theirs."""
+    ids, perm, row_shard, row_off, row_len, flats = pack
+    pos_a = perm[_lookup_positions(ids, a, left)]
+    pos_b = perm[_lookup_positions(ids, b, right)]
+    is_jaccard = metric == "jaccard"
+    if threshold is not None and is_jaccard:
+        la0 = np.asarray(row_len[pos_a])
+        lb0 = np.asarray(row_len[pos_b])
+        keep = np.minimum(la0, lb0) >= threshold * np.maximum(la0, lb0)
+        if not keep.all():
+            a, b = a[keep], b[keep]
+            pos_a, pos_b = pos_a[keep], pos_b[keep]
+    inter, la, lb = _pair_intersections((flats, row_shard, row_off, row_len), pos_a, pos_b)
+    denom = la + lb - inter if is_jaccard else np.minimum(la, lb)
+    s = np.divide(
+        inter.astype(np.float64), denom, out=np.zeros(len(a)), where=denom > 0
+    )
+    if threshold is not None:
+        hit = s >= threshold
+        a, b, s = a[hit], b[hit], s[hit]
+    return a, b, s
+
+
 def _verify_set_broadcast(
     pairs: DataFrame,
     feats: DataFrame,
@@ -1001,49 +1177,21 @@ def _verify_set_broadcast(
     # no broadcast hint: AQE broadcasts the id set when it is small
     # and falls back to an ids-only shuffle when it is not
     needed = feats.join(pair_ids, feats[id_col] == F.col("_pid"), "left_semi")
-    ref = materialize_feats(needed, id_col, feat_col, "verify")
-    thr = threshold
     if metric not in ("jaccard", "containment"):
         raise ValueError(f"unknown set metric {metric!r}")
-    is_jaccard = metric == "jaccard"
+    ref = materialize_feats(needed, id_col, feat_col, "verify")
 
     def score(batches):
-        ids, perm, row_shard, row_off, row_len, flats = load_feats_segments(ref)
-        seg = (flats, row_shard, row_off, row_len)
+        pack = load_feats_segments(ref)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            a = pdf[left].to_numpy(dtype=np.int64)
-            b = pdf[right].to_numpy(dtype=np.int64)
-            pos_a = perm[_lookup_positions(ids, a, left)]
-            pos_b = perm[_lookup_positions(ids, b, right)]
-            if thr is not None and is_jaccard:
-                # exact-safe size prune: J >= t  =>  min >= t * max
-                # (|A∩B| <= min, |A∪B| >= max); kills e.g. the
-                # boilerplate-vs-full-file band collisions before any
-                # gather work. NOT valid for containment: the smaller
-                # side can be fully contained at any size skew.
-                la0 = np.asarray(row_len[pos_a])
-                lb0 = np.asarray(row_len[pos_b])
-                keep = np.minimum(la0, lb0) >= thr * np.maximum(la0, lb0)
-                if not keep.all():
-                    a, b = a[keep], b[keep]
-                    pos_a, pos_b = pos_a[keep], pos_b[keep]
-                if len(a) == 0:
-                    continue
-            inter, la, lb = _pair_intersections(seg, pos_a, pos_b)
-            if is_jaccard:
-                denom = la + lb - inter
-            else:
-                denom = np.minimum(la, lb)
-            s = np.divide(
-                inter.astype(np.float64), denom, out=np.zeros(len(a)), where=denom > 0
+            a, b, s = score_set_pairs(
+                pack, pdf[left].to_numpy(dtype=np.int64),
+                pdf[right].to_numpy(dtype=np.int64), threshold, metric, left, right,
             )
-            out = pd.DataFrame({left: a, right: b, "score": s})
-            if thr is not None:
-                out = out[out["score"] >= thr]
-            if len(out):
-                yield out
+            if len(a):
+                yield pd.DataFrame({left: a, right: b, "score": s})
 
     return pairs.select(left, right).mapInPandas(
         score, f"{left} long, {right} long, score double"

@@ -52,10 +52,37 @@ def test_exact_stage_broadcasts_annotation(spark, sf_dir):
             assert "text" not in ln
 
 
-def test_band_shuffle_carries_ids_and_hashes_only(spark, sf_dir):
+def _exchange_outputs(df) -> list[tuple[str, list[str]]]:
+    """(node name, output column names) of every Exchange — shuffle or
+    broadcast — in the physical plan, i.e. what each one carries."""
+    node = df._jdf.queryExecution().executedPlan()
+    if node.nodeName() == "AdaptiveSparkPlan":
+        node = node.executedPlan()
+    found, stack = [], [node]
+    while stack:
+        node = stack.pop()
+        if "Exchange" in node.nodeName():
+            out = node.output()
+            found.append((node.nodeName(),
+                          [out.apply(i).name() for i in range(out.size())]))
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in range(kids.size()))
+    return found
+
+
+def test_band_shuffle_carries_ids_and_hashes_only(spark, sf_dir, monkeypatch):
     """Band-table exchanges ship (record_id, band_idx, band_hash) —
-    never the text/shingles/signature payloads."""
+    never the text/shingles/signature payloads. The same holds for the
+    plans that verify inside the bucket generator (self-dedup minhash
+    edges, containment edges): no Exchange carries ``shingles`` or
+    ``sig``, and no broadcast (hash-join build side) carries shingle
+    arrays — the scorer reads them from the mmap'd blob. Those plans run
+    inside the calls, so they are audited as built."""
+    from semhash_spark.config import DedupConfig
     from semhash_spark.functions.hashing import minhash_signature, shingle_hashes
+    from semhash_spark.operators import lsh
+    from semhash_spark.operators.containment import containment_edges
+    from semhash_spark.operators.dedup import _edges_minhash
     from semhash_spark.operators.lsh import band_table, candidate_pairs_self
 
     docs = documents(spark, sf_dir).select(
@@ -68,6 +95,29 @@ def test_band_shuffle_carries_ids_and_hashes_only(spark, sf_dir):
     for ln in plan.splitlines():
         if "Exchange" in ln:
             assert "text" not in ln and "shingles" not in ln and "sig#" not in ln, ln
+
+    cfg = DedupConfig(columns=("text",), threshold=0.8, shingle_k=3, num_perm=16,
+                      bands=4, containment_threshold=0.9, anchor_mod=4)
+    verified: list = []
+
+    def recording(*args, **kwargs):
+        df = candidate_pairs_self(*args, **kwargs)
+        if kwargs.get("pack") is not None:
+            verified.append(df)
+        return df
+
+    monkeypatch.setattr(lsh, "candidate_pairs_self", recording)
+    _edges_minhash(feats, cfg, "record_id", 0.8)
+    containment_edges(feats.select("record_id", "shingles"), cfg, "record_id")
+    # both calls really verified in the generator (no fallback)
+    assert len(verified) == 2
+    plans = {"candidates": cands, "minhash_edges": verified[0],
+             "containment_edges": verified[1]}
+    for name, df in plans.items():
+        exchanges = _exchange_outputs(df)
+        assert exchanges, name
+        for node, cols in exchanges:
+            assert not {"text", "shingles", "sig"} & set(cols), (name, node, cols)
     feats.unpersist()
 
 

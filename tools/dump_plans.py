@@ -24,7 +24,8 @@ from semhash_spark.operators.exact import self_exact_dedup  # noqa: E402
 from semhash_spark.operators.lsh import band_table, candidate_pairs_self  # noqa: E402
 from semhash_spark.operators.verify import (  # noqa: E402
     cosine_threshold_edges,
-    verify_jaccard,
+    drop_blob,
+    pack_set_blob,
 )
 from semhash_spark.session import get_spark  # noqa: E402
 from semhash_spark.sources.corpus import generate_corpus  # noqa: E402
@@ -37,6 +38,18 @@ def dump(name: str, df) -> None:
     with open(os.path.join(OUT, f"{name}_{TAG}.txt"), "w") as fh:
         fh.write(buf.getvalue())
     print(f"wrote {name}_{TAG}.txt", file=sys.stderr)
+
+
+def dump_verified(name: str, bands, sets, cap: int, metric: str, threshold: float) -> None:
+    """Dump the in-generator verification plan that
+    ``lsh.verified_edges_self`` checkpoints (its blob only has to exist
+    while the plan is built)."""
+    ref = pack_set_blob(sets, "record_id", "shingles", name)
+    try:
+        dump(name, candidate_pairs_self(bands, cap, "record_id", pack=ref,
+                                        metric=metric, threshold=threshold))
+    finally:
+        drop_blob(ref)
 
 
 def main() -> None:
@@ -60,10 +73,8 @@ def main() -> None:
     feats.count()
     bt = band_table(feats.where(F.size("shingles") > 0), "sig",
                     code_cfg.bands, "record_id", code_cfg.rows_per_band)
-    cands = candidate_pairs_self(bt, code_cfg.bucket_cap, "record_id")
-    dump("selfdedup_candidates", cands)
-    dump("selfdedup_verify",
-         verify_jaccard(cands, feats, "shingles", "record_id", 0.8))
+    dump_verified("selfdedup_edges", bt, feats.where(F.size("shingles") > 0),
+                  code_cfg.bucket_cap, "jaccard", 0.8)
 
     cos_cfg = DedupConfig(columns=("content",), threshold=0.75,
                           embedding_dim=128, embedding_ngram=2)
@@ -98,13 +109,15 @@ def main() -> None:
         dump("cross_dedup_small_pairs", res2.pairs)
 
     from semhash_spark.functions.hashing import shingle_hashes
-    from semhash_spark.operators.containment import containment_edges
+    from semhash_spark.operators.containment import anchor_table
 
     sfeats = corpus.select(
         "record_id", shingle_hashes("content", 5).alias("shingles")
     ).persist()
     ccfg = code_cfg.with_(containment_threshold=0.9, anchor_mod=8)
-    dump("containment_edges", containment_edges(sfeats, ccfg, "record_id"))
+    dump_verified("containment_edges",
+                  anchor_table(sfeats, "shingles", ccfg.anchor_mod, "record_id"),
+                  sfeats, ccfg.bucket_cap, "containment", ccfg.containment_threshold)
     spark.stop()
 
 

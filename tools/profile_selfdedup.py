@@ -2,11 +2,14 @@
 
 Materializes each pipeline stage separately (count/persist barriers)
 so the breakdown attributes time to: exact stage, featurize
-(shingles+sig), banding+candidates, verify, connected components,
-and result bookkeeping. Options let A/B runs flip the verify
-strategy. Usage:
+(shingles+sig), LSH edges, connected components, and result
+bookkeeping. The default ``fused`` strategy is the library's plan:
+banding with each candidate pair verified inside the bucket
+generator (one "bands+verify" stage). ``auto``, ``join`` or
+``broadcast`` profile the candidates -> ``verify_jaccard`` plan
+instead (separate "bands+candidates" and "verify" stages). Usage:
 
-    python tools/profile_selfdedup.py [n_files] [verify_strategy]
+    python tools/profile_selfdedup.py [n_files] [fused|auto|join|broadcast]
 """
 
 from __future__ import annotations
@@ -15,12 +18,12 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 100_000
-    strategy = sys.argv[2] if len(sys.argv) > 2 else "auto"
+    strategy = sys.argv[2] if len(sys.argv) > 2 else "fused"
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from pyspark.sql import functions as F
@@ -28,6 +31,7 @@ def main() -> None:
     from semhash_spark.config import DedupConfig
     from semhash_spark.functions.hashing import minhash_signature, shingle_hashes
     from semhash_spark.operators.components import connected_components
+    from semhash_spark.operators.dedup import _edges_minhash
     from semhash_spark.operators.exact import self_exact_dedup
     from semhash_spark.operators.lsh import band_table, candidate_pairs_self
     from semhash_spark.operators.verify import verify_jaccard
@@ -71,21 +75,29 @@ def main() -> None:
 
     feats = timed("featurize", build_feats)
 
+    def build_fused():
+        e = _edges_minhash(feats, cfg, "record_id", cfg.threshold)
+        print("  edges:", e.count())
+        return e
+
     def build_cands():
-        bt = band_table(feats, "sig", cfg.bands, "record_id", cfg.rows_per_band)
+        bt = band_table(feats.where(F.size("shingles") > 0), "sig", cfg.bands,
+                        "record_id", cfg.rows_per_band)
         c = candidate_pairs_self(bt, cfg.bucket_cap, "record_id").persist()
         print("  candidates:", c.count())
         return c
 
-    cands = timed("bands+candidates", build_cands)
-
-    def build_edges():
+    def build_edges(cands):
         e = verify_jaccard(cands, feats, "shingles", "record_id",
                            cfg.threshold, strategy=strategy).persist()
         print("  edges:", e.count())
         return e
 
-    edges = timed("verify", build_edges)
+    if strategy == "fused":
+        edges = timed("bands+verify", build_fused)
+    else:
+        cands = timed("bands+candidates", build_cands)
+        edges = timed("verify", lambda: build_edges(cands))
 
     cc = timed("components", lambda: connected_components(
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
