@@ -9,8 +9,18 @@ Reference surface (semhash/semhash.py):
   find_representative / self_find_representative
 
 The "fitted index" is not an ANN structure but a pair of persisted
-DataFrames: the exact-stage exemplars and their feature columns.
-The ranking memoization of the reference (semhash/semhash.py:41,
+DataFrames: the exact stage of the table (its exemplars are a filter
+of it) and the exemplars' feature columns. Like the reference's one
+index per ``from_records``, every surface of a fit shares them:
+``self_deduplicate`` reads both instead of recomputing the exact stage
+and the features. In cosine mode a fit also measures its embedding
+table once, writes it as one executor-side blob (cross dedup, the
+threshold scan and the top-k kernel all read it) and, while the table
+fits both the fused-scan and the broadcast top-k gates, scans it once
+per threshold for both the self-dedup edges and every row's top-k
+average (``rank.cosine_self_scan``), so ``self_deduplicate``,
+``self_filter_outliers`` and ``self_find_representative`` share one
+scan. The ranking memoization of the reference (semhash/semhash.py:41,
 498-518) maps to persisting the self-ranking DataFrame.
 """
 
@@ -107,6 +117,9 @@ class SparkSemHash:
         # DedupResult regardless, this only records provenance
         self.was_string = False
         self._df: DataFrame | None = None
+        # persisted self_exact_dedup of the fitted table (with the key);
+        # _exemplars is its non-duplicate filter
+        self._keyed: DataFrame | None = None
         self._exemplars: DataFrame | None = None
         self._feats: DataFrame | None = None
         self._ranking: DataFrame | None = None  # memoized self-ranking
@@ -118,10 +131,15 @@ class SparkSemHash:
         self._idx_keys: DataFrame | None = None
         self._idx_bands: DataFrame | None = None
         self._idx_bands_thinned: bool = True
-        # cosine mode, fused path: the index-side embedding blob ref,
-        # built once per fit so repeated deduplicate() calls skip the
-        # blob write (the reference's dedup-only benchmark split)
+        # the embedding table's blob ref, written once per fit: the
+        # cosine cross scan (repeated deduplicate() calls skip the blob
+        # write — the reference's dedup-only benchmark split), the self
+        # scan and the broadcast top-k all read it
         self._idx_blob_ref: dict | None = None
+        # _feat_bytes of the embedding table, measured once per fit
+        self._emb_size_memo: tuple[int, int] | None = None
+        # cosine mode: persisted rank.cosine_self_scan per threshold
+        self._scans: dict[float, DataFrame] = {}
         # minhash single-job cross-dedup blob refs (keys/bands/
         # shingles), built by prepare_index for large fitted sides
         self._idx_cross_blobs: dict | None = None
@@ -138,8 +156,8 @@ class SparkSemHash:
         cfg = self.cfg
         _validate_records(df, cfg)
         self._df = df
-        keyed = self_exact_dedup(df, cfg.columns, cfg.id_col)
-        self._exemplars = keyed.where(~F.col("is_exact_dup")).persist()
+        self._keyed = self_exact_dedup(df, cfg.columns, cfg.id_col).persist()
+        self._exemplars = self._keyed.where(~F.col("is_exact_dup"))
         # cache only (id, feature cols): every consumer (band memos,
         # cross blobs, verify rehydration, the embedding blob) selects
         # exactly these — the full-width persist duplicated the content
@@ -179,8 +197,8 @@ class SparkSemHash:
         self.cfg = cfg
         self.mode = "cosine"
         self._df = df
-        keyed = self_exact_dedup(df, cfg.columns, cfg.id_col)
-        self._exemplars = keyed.where(~F.col("is_exact_dup")).persist()
+        self._keyed = self_exact_dedup(df, cfg.columns, cfg.id_col).persist()
+        self._exemplars = self._keyed.where(~F.col("is_exact_dup"))
         self._feats = self._exemplars.select(cfg.id_col, emb_col).persist()
         return self
 
@@ -189,14 +207,16 @@ class SparkSemHash:
             raise RuntimeError("call fit()/fit_embeddings() first")
 
     def release(self) -> None:
-        """Unpersist every cache this fitted object owns (exemplars,
-        features, memoized ranking, cross-dedup key/band tables).
-        The object stays usable — frames recompute on next use; call
-        when done querying this fit (cache-lifecycle parity with
-        DedupResult.release / FilterResultDF.release)."""
+        """Unpersist every cache this fitted object owns (exact stage,
+        features, memoized ranking and self scans, cross-dedup key/band
+        tables) and drop its size memo. The object stays usable — frames
+        recompute on next use; call when done querying this fit
+        (cache-lifecycle parity with DedupResult.release /
+        FilterResultDF.release)."""
         for df in (
-            self._exemplars, self._feats, self._ranking,
+            self._keyed, self._feats, self._ranking,
             self._idx_keys, self._idx_bands, self._emb_feats,
+            *self._scans.values(),
         ):
             if df is not None:
                 try:
@@ -204,6 +224,8 @@ class SparkSemHash:
                 except Exception:
                     pass
         self._ranking = None
+        self._scans = {}
+        self._emb_size_memo = None
         self._idx_keys = None
         self._idx_bands = None
         self._idx_bands_thinned = True
@@ -215,9 +237,87 @@ class SparkSemHash:
     def self_deduplicate(
         self, threshold: float | None = None, checkpointer=None
     ) -> DedupResult:
+        """Self dedup of the fitted table over the fit's caches: the
+        exact stage and features are not recomputed, and in cosine mode
+        the edges come from the fit's blob (and its shared scan)."""
         self._require_fit()
+        cosine = self.mode == "cosine"
+        fitted = dedup_ops.FittedFrames(
+            self._keyed, self._feats,
+            feat_size=self._emb_size() if cosine else None,
+            cosine_edges=self._cosine_edges if cosine else None,
+        )
         return dedup_ops.self_deduplicate(
-            self._df, self.cfg, self.mode, threshold, checkpointer
+            self._df, self.cfg, self.mode, threshold, checkpointer, fitted=fitted
+        )
+
+    # ------------------------------------------- fit-wide cosine memos
+    def _emb_size(self) -> tuple[int, int]:
+        """``_feat_bytes`` of the embedding table, once per fit."""
+        if self._emb_size_memo is None:
+            from semhash_spark.operators.verify import _feat_bytes
+
+            self._emb_size_memo = _feat_bytes(
+                self._embedding_feats(), self.cfg.embedding_col
+            )
+        return self._emb_size_memo
+
+    def _emb_blob(self) -> dict:
+        """The embedding table's executor-side blob, written once per fit."""
+        if self._idx_blob_ref is None:
+            from semhash_spark.operators.verify import materialize_feats
+
+            cfg = self.cfg
+            self._idx_blob_ref = materialize_feats(
+                self._embedding_feats().select(cfg.id_col, cfg.embedding_col),
+                cfg.id_col, cfg.embedding_col, "fitemb",
+            )
+        return self._idx_blob_ref
+
+    def _cosine_fused(self) -> bool:
+        """Cosine mode: whether the fused scan plan serves this fit."""
+        from semhash_spark.operators.verify import cosine_fused_fits
+
+        return self.mode == "cosine" and cosine_fused_fits(
+            self.cfg, *self._emb_size(), self._feats.sparkSession
+        )
+
+    def _rank_blob(self) -> dict | None:
+        """The fit's blob when the top-k runs the broadcast plan."""
+        strategy, _ = rank_ops._auto_strategy(
+            self._embedding_feats(), self.cfg.embedding_col, self._emb_size()
+        )
+        return self._emb_blob() if strategy == "broadcast" else None
+
+    def _shared_scan(self, threshold: float) -> DataFrame | None:
+        """Cosine mode: the persisted ``rank.cosine_self_scan`` of the
+        fit at ``threshold`` (memoized per threshold), or None unless
+        the gates pick both the fused edges and the broadcast top-k."""
+        if threshold not in self._scans:
+            if not self._cosine_fused() or self._rank_blob() is None:
+                return None
+            cfg = self.cfg
+            self._scans[threshold] = rank_ops.cosine_self_scan(
+                self._feats, self._emb_blob(), threshold, cfg.rank_k,
+                cfg.cosine_max_k, cfg.id_col, cfg.embedding_col,
+                n_rows=self._emb_size()[0],
+            ).persist()
+        return self._scans[threshold]
+
+    def _cosine_edges(self, threshold: float) -> DataFrame:
+        """The fused self-dedup edges at ``threshold``: read from the
+        shared scan, or scanned over the fit's blob alone when the
+        top-k does not take the broadcast plan."""
+        scan = self._shared_scan(threshold)
+        if scan is not None:
+            return rank_ops.scan_edges(scan)
+        from semhash_spark.operators.verify import cosine_threshold_edges
+
+        cfg = self.cfg
+        return cosine_threshold_edges(
+            self._feats, threshold, cfg.id_col, cfg.embedding_col,
+            max_k=cfg.cosine_max_k, n_rows=self._emb_size()[0],
+            ref=self._emb_blob(),
         )
 
     def prepare_index(self) -> "SparkSemHash":
@@ -271,11 +371,10 @@ class SparkSemHash:
                 F.col(EXACT_KEY),
                 F.col(self.cfg.id_col).alias("exemplar_id"),
             ).persist()
-        if self._idx_blob_ref is not None:
-            # cosine fused path already memoized: don't re-run the
-            # _feat_bytes agg (a full pass over the fitted feature
-            # table) just to re-derive the fit-side decision on every
-            # deduplicate()/incremental() call
+        if self._cosine_fused():
+            # the fused cross scan reads the fit's embedding blob, never
+            # a band table (the decision is memoized with the fit's size)
+            self._emb_blob()
             return
         if self._idx_bands is None and self.mode in ("minhash", "simhash", "cosine"):
             from semhash_spark.functions.hashing import simhash_bands
@@ -336,50 +435,21 @@ class SparkSemHash:
                     self.cfg.id_col,
                 )).persist()
             else:
-                # cosine: memoize the hyperplane band table only when
-                # deduplicate() will actually take the LSH path (the
-                # fused blob path below the caps never reads bands)
+                # cosine above the fused gate: the hyperplane band table
                 from semhash_spark.functions.vectors import hyperplane_bands
-                from semhash_spark.operators.verify import (
-                    VERIFY_BROADCAST_CAP,
-                    VERIFY_BROADCAST_MAX_BYTES,
-                    _feat_bytes,
-                    blob_transport_available,
-                )
 
                 cfg = self.cfg
-                fused_cap = (
-                    cfg.cosine_fused_cap
-                    if cfg.cosine_fused_cap is not None
-                    else VERIFY_BROADCAST_CAP
+                banded = self._feats.withColumn(
+                    "hpb",
+                    hyperplane_bands(
+                        cfg.embedding_col, cfg.hyperplane_bits,
+                        cfg.hyperplane_bands, cfg.hyperplane_seed,
+                        cfg.embedding_dim,
+                    ),
                 )
-                n_idx, idx_bytes = _feat_bytes(self._feats, cfg.embedding_col)
-                if (
-                    n_idx <= fused_cap
-                    and idx_bytes <= VERIFY_BROADCAST_MAX_BYTES
-                    and blob_transport_available(self._feats.sparkSession)
-                ):
-                    if self._idx_blob_ref is None:
-                        from semhash_spark.operators.verify import (
-                            materialize_feats,
-                        )
-
-                        self._idx_blob_ref = materialize_feats(
-                            self._feats.select(cfg.id_col, cfg.embedding_col),
-                            cfg.id_col, cfg.embedding_col, "crossedges",
-                        )
-                else:
-                    banded = self._feats.withColumn(
-                        "hpb",
-                        hyperplane_bands(
-                            cfg.embedding_col, cfg.hyperplane_bits,
-                            cfg.hyperplane_bands, cfg.hyperplane_seed,
-                            cfg.embedding_dim,
-                        ),
-                    )
-                    self._idx_bands = _thin(explode_band_array(
-                        banded, "hpb", cfg.id_col
-                    )).persist()
+                self._idx_bands = _thin(explode_band_array(
+                    banded, "hpb", cfg.id_col
+                )).persist()
 
     def deduplicate(
         self,
@@ -399,7 +469,7 @@ class SparkSemHash:
             broadcast_query=broadcast_query,
             index_keys=self._idx_keys,
             index_bands=self._idx_bands,
-            index_blob_ref=self._idx_blob_ref,
+            index_blob_ref=self._idx_blob_ref if self._cosine_fused() else None,
             index_bands_thinned=self._idx_bands_thinned,
             index_cross_blobs=self._idx_cross_blobs,
         )
@@ -427,7 +497,7 @@ class SparkSemHash:
             broadcast_query=broadcast_query,
             index_keys=self._idx_keys,
             index_bands=self._idx_bands,
-            index_blob_ref=self._idx_blob_ref,
+            index_blob_ref=self._idx_blob_ref if self._cosine_fused() else None,
             index_bands_thinned=self._idx_bands_thinned,
             index_cross_blobs=self._idx_cross_blobs,
         )
@@ -461,11 +531,20 @@ class SparkSemHash:
         """Memoized self-ranking (reference semhash.py:490-519)."""
         self._require_fit()
         if self._ranking is None:
-            feats = self._embedding_feats()
-            self._ranking = rank_ops.rank_by_avg_similarity(
-                feats, feats, self.cfg.rank_k, exclude_self=True,
-                id_col=self.cfg.id_col, emb_col=self.cfg.embedding_col,
-            ).persist()
+            # any shared scan of the fit carries the averages (they do
+            # not depend on its threshold); else scan at cfg.threshold
+            scan = next(iter(self._scans.values()), None)
+            if scan is None and self.mode == "cosine":
+                scan = self._shared_scan(self.cfg.threshold)
+            if scan is not None:
+                self._ranking = rank_ops.scan_ranking(scan).persist()
+            else:
+                feats = self._embedding_feats()
+                self._ranking = rank_ops.rank_by_avg_similarity(
+                    feats, feats, self.cfg.rank_k, exclude_self=True,
+                    id_col=self.cfg.id_col, emb_col=self.cfg.embedding_col,
+                    ref=self._rank_blob(), index_size=self._emb_size(),
+                ).persist()
         return self._ranking
 
     def rank(self, query_df: DataFrame) -> DataFrame:
@@ -474,6 +553,7 @@ class SparkSemHash:
         return rank_ops.rank_by_avg_similarity(
             q, self._embedding_feats(), self.cfg.rank_k, exclude_self=False,
             id_col=self.cfg.id_col, emb_col=self.cfg.embedding_col,
+            ref=self._rank_blob(), index_size=self._emb_size(),
         )
 
     def self_filter_outliers(self, outlier_percentage: float | None = None) -> FilterResultDF:

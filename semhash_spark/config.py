@@ -99,7 +99,8 @@ class DedupConfig:
     # None -> auto (id-only shuffle + executor-blob row gathers when
     # blob transport is available and the input is >= 100k rows);
     # True/False force the id-only / payload-shuffle plan (results are
-    # bit-identical either way — this only picks the transport)
+    # bit-identical either way — this only picks the transport); True
+    # without blob transport warns and runs the payload shuffle
     ivf_payload_blob: bool | None = None
     # per-row neighbor cap in the FUSED cosine kernels — the
     # reference's ANN result cap (max_k=100, semhash/index.py:59).

@@ -28,9 +28,27 @@ only verified edges, collected before the blob is removed.
 Without blob transport, or with a blob above
 VERIFY_BROADCAST_MAX_BYTES, the edges come from candidate pairs
 (distinct) joined with the shingle arrays instead (``_edges_minhash``).
+
+Plan shape (self mode, cosine, below the fused caps):
+
+  exemplars ──encoder (pandas UDF)──► feats (id, embedding)
+     feats ──distributed parquet write──► blob (one per fit)
+     feats ──mapInPandas: f32 tiled gemm against the mmap'd blob,
+       f64 rescore of the survivors──► edges >= θ (a < b, max_k cap)
+     edges ──CC──► clusters ──join back──► selected / filtered / pairs
+
+Above the caps the edges come from IVF cells (``cosine_candidates=
+"ivf"``) or hyperplane-LSH candidates + verify. Called from a fitted
+``SparkSemHash`` (``fitted``), the exact stage, the features, their
+size and the blob are the fit's, and the edges are read from the fit's
+one scan that also carries the top-k averages of its self ranking
+(``rank.cosine_self_scan``).
 """
 
 from __future__ import annotations
+
+from dataclasses import dataclass
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -202,6 +220,26 @@ def _verify(pairs: DataFrame, feats: DataFrame, cfg: DedupConfig, mode: str,
                           strategy="auto")
 
 
+@dataclass(frozen=True)
+class FittedFrames:
+    """The caches a fitted ``SparkSemHash`` holds for its table, which
+    ``self_deduplicate`` reads instead of recomputing. Their owner is
+    the fit: ``DedupResult.release()`` leaves them alone.
+
+    * ``keyed``: ``self_exact_dedup`` of the table (with the key);
+    * ``feats``: the exemplars' ``(id, *mode_feature_cols)``;
+    * ``feat_size``: cosine mode, ``_feat_bytes`` of ``feats``;
+    * ``cosine_edges``: cosine mode, ``threshold -> (a, b, score)``
+      edges of the fused scan over the fit's blob; called only when the
+      fused plan is chosen.
+    """
+
+    keyed: DataFrame
+    feats: DataFrame
+    feat_size: tuple[int, int] | None = None
+    cosine_edges: Callable[[float], DataFrame] | None = None
+
+
 def self_deduplicate(
     df: DataFrame,
     cfg: DedupConfig,
@@ -210,6 +248,7 @@ def self_deduplicate(
     checkpointer=None,
     extra_edges: DataFrame | None = None,
     stage_times: dict | None = None,
+    fitted: FittedFrames | None = None,
 ) -> DedupResult:
     """Dedup within one table. ``df`` must carry ``cfg.id_col``.
 
@@ -220,6 +259,9 @@ def self_deduplicate(
         materialization and collect per-stage wall-clock (bench
         instrumentation; adds count() barriers, so leave None in
         production).
+    :param fitted: the caches a fitted ``SparkSemHash`` already holds
+        for ``df`` (see ``FittedFrames``); they are read instead of
+        recomputed, and left out of the result's ``_persisted``.
     """
     import time as _time
 
@@ -238,10 +280,9 @@ def self_deduplicate(
 
     # with_key=False: every output of this pipeline drops exact_key,
     # so the wide branch skips the second sha pass entirely
-    keyed = ck(
-        "exact", lambda: self_exact_dedup(df, cfg.columns, id_col, with_key=False)
-    )
-    if checkpointer is None:
+    keyed = ck("exact", lambda: fitted.keyed if fitted else self_exact_dedup(
+        df, cfg.columns, id_col, with_key=False))
+    if checkpointer is None and fitted is None:
         # selected/filtered/pairs are separate actions on this DAG;
         # without a parquet checkpoint, cache the shared stages so
         # each action doesn't replay the exact window + LSH joins
@@ -256,9 +297,10 @@ def self_deduplicate(
     feat_cols = mode_feature_cols(mode, cfg)
     feats = ck(
         f"features_{mode}",
-        lambda: add_features(exemplars, cfg, mode).select(id_col, *feat_cols),
+        lambda: fitted.feats if fitted else add_features(exemplars, cfg, mode).select(
+            id_col, *feat_cols),
     )
-    if checkpointer is None:
+    if checkpointer is None and fitted is None:
         # materialize sketches so downstream band/verify joins read
         # computed arrays instead of re-deriving them per reference
         # (with a checkpointer the parquet stage plays this role)
@@ -267,35 +309,26 @@ def self_deduplicate(
     mark("featurize", feats)
 
     from semhash_spark.operators.verify import (
-        VERIFY_BROADCAST_CAP,
-        VERIFY_BROADCAST_MAX_BYTES,
         _feat_bytes,
-        blob_transport_available,
+        cosine_fused_fits,
         cosine_threshold_edges,
     )
 
-    def _blob_ok(frame):
-        # fused matmul needs the executor-side blob; without transport
-        # (cluster master, no spark.semhash.blobDir) fall through to
-        # the hyperplane-LSH + verify path, which needs none
-        return blob_transport_available(frame.sparkSession)
-
-    fused_cap = (
-        cfg.cosine_fused_cap if cfg.cosine_fused_cap is not None else VERIFY_BROADCAST_CAP
-    )
     if mode == "cosine":
-        n_feats, feat_bytes = _feat_bytes(feats, cfg.embedding_col)
-    if (
-        mode == "cosine"
-        and n_feats <= fused_cap
-        and feat_bytes <= VERIFY_BROADCAST_MAX_BYTES
-        and _blob_ok(feats)
-    ):
+        n_feats, feat_bytes = (
+            fitted.feat_size if fitted and fitted.feat_size
+            else _feat_bytes(feats, cfg.embedding_col)
+        )
+    # the fused matmul needs the executor-side blob; without transport
+    # (cluster master, no spark.semhash.blobDir) fall through to the
+    # IVF or hyperplane-LSH + verify paths, which need none
+    if mode == "cosine" and cosine_fused_fits(cfg, n_feats, feat_bytes, feats.sparkSession):
         # fused candidates+verify: one broadcast matmul pass emits
         # only passing pairs (no |n|^2 pair materialization)
         edges = ck(
             f"edges_{mode}",
-            lambda: cosine_threshold_edges(
+            lambda: fitted.cosine_edges(threshold) if fitted and fitted.cosine_edges
+            else cosine_threshold_edges(
                 feats, threshold, id_col, cfg.embedding_col,
                 max_k=cfg.cosine_max_k, n_rows=n_feats,
             ),
@@ -561,30 +594,16 @@ def deduplicate(
         #     >= 0.99 at the reference θ).
         from semhash_spark.functions.vectors import hyperplane_bands
         from semhash_spark.operators.verify import (
-            VERIFY_BROADCAST_CAP,
-            VERIFY_BROADCAST_MAX_BYTES,
             _feat_bytes,
-            blob_transport_available,
             cosine_cross_threshold_edges,
+            cosine_fused_fits,
         )
 
-        fused_cap = (
-            cfg.cosine_fused_cap
-            if cfg.cosine_fused_cap is not None
-            else VERIFY_BROADCAST_CAP
+        # a prebuilt index blob means the fitted api already made the
+        # fit-side decision (caps + transport): skip the byte measure
+        fits_fused = index_blob_ref is not None or cosine_fused_fits(
+            cfg, *_feat_bytes(index_feats, cfg.embedding_col), query_df.sparkSession
         )
-        if index_blob_ref is not None:
-            # the fitted api prebuilt the index blob: the fit-side
-            # decision (caps + transport) was already made there, so
-            # skip the per-call byte measure too
-            fits_fused = True
-        else:
-            n_idx, idx_bytes = _feat_bytes(index_feats, cfg.embedding_col)
-            fits_fused = (
-                n_idx <= fused_cap
-                and idx_bytes <= VERIFY_BROADCAST_MAX_BYTES
-                and blob_transport_available(query_df.sparkSession)
-            )
         if fits_fused:
             hits = cosine_cross_threshold_edges(
                 q_feats.select(id_col, cfg.embedding_col),

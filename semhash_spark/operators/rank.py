@@ -23,17 +23,26 @@ Top-k plan (``topk_scores``), chosen by index size:
   (distributed parquet write + pack-once-per-executor mmap,
   operators/verify.materialize_feats) and each query partition
   computes exact cosine top-k with one BLAS matmul + 2-D
-  argpartition inside ``mapInPandas`` — no pair shuffle, no window,
-  output is |Q| x k rows only. This is the plan a 1000-executor
-  cluster wants whenever the index matrix is bounded (100k x 64
-  floats = 50 MB per executor vs a |Q| x |X| pair shuffle).
+  argpartition inside ``mapInPandas`` (``_topk_chunks``) — no pair
+  shuffle, no window, output is |Q| x k rows only. This is the plan a
+  1000-executor cluster wants whenever the index matrix is bounded
+  (100k x 64 floats = 50 MB per executor vs a |Q| x |X| pair
+  shuffle). ``rank_by_avg_similarity`` on this plan averages inside
+  the kernel (``_topk_avgs``, equal to Spark's ``avg`` bit for bit),
+  so only |Q| (query_id, avg_score) rows leave it.
 * ``ivf`` (the automatic above-cap fallback): cell-id equi-join from
   operators/knn.py — exhaustively probed by default so results stay
   bit-exact; drop ``n_probe`` below ``n_cells`` for pruned
-  approximate search at extreme scale.
+  approximate search at extreme scale. Averaged with a ``groupBy``.
 * ``crossjoin``: pair scores + per-query window — explicit-only
   (never auto-chosen; |Q| x |X| materialization does not survive
   scale).
+
+A fitted cosine ``SparkSemHash`` whose table fits both the fused
+threshold scan and the broadcast top-k runs neither separately:
+``cosine_self_scan`` makes one pass over the fit's one blob that emits
+the self-dedup edges and every row's self-excluded top-k average, and
+the fit's self ranking is read from it (``scan_ranking``).
 """
 
 from __future__ import annotations
@@ -76,6 +85,74 @@ def _topk_crossjoin(
     return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
 
 
+def _topk_buffers(n_idx: int, exclude_self: bool):
+    """Reused per-partition work buffers of ``_topk_chunks``: the
+    |chunk| x |index| score block (row chunks sized to keep it ~16 MB)
+    and, when self matches are excluded, its id-equality mask. A fresh
+    64 MB gemm output per chunk measured 16x slower (mmap first-touch
+    faults + THP compaction; see verify._chunked_threshold)."""
+    step = max(16, int((16 << 20) // (8 * max(n_idx, 1))))
+    buf = np.empty((step, max(n_idx, 1)))
+    return buf, (np.empty(buf.shape, dtype=bool) if exclude_self else None)
+
+
+def _topk_chunks(q_ids, qm, qz, ids_i, mnT, zn, k, exclude_self, bufs):
+    """Exact top-k of one normalized query batch (``verify.normalized_batch``)
+    against the normalized TRANSPOSED index
+    (``verify.load_feats_matrix_normalized_T``), in row chunks.
+
+    Yields ``(lo, hi, sorted_i, sorted_s, valid, counts)`` per chunk
+    with any ranked neighbor: each row's candidates ordered by (score
+    desc, index id asc), ``valid`` marking real neighbors (a prefix of
+    each row; zero-norm sides and excluded self matches never rank)
+    and ``counts`` their number per row."""
+    n_idx = len(ids_i)
+    if n_idx == 0:
+        return
+    buf, ebuf = bufs
+    step = buf.shape[0]
+    kk = min(k, n_idx)
+    for lo in range(0, len(q_ids), step):
+        hi = min(lo + step, len(q_ids))
+        scores = buf[: hi - lo]
+        np.dot(qm[lo:hi], mnT, out=scores)
+        # zero-norm on either side -> NULL semantically: exclude
+        scores[:, zn] = -np.inf
+        scores[qz[lo:hi], :] = -np.inf
+        if exclude_self:
+            sm = ebuf[: hi - lo]
+            np.equal(q_ids[lo:hi, None], ids_i[None, :], out=sm)
+            scores[sm] = -np.inf
+        if kk < n_idx:
+            part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
+        else:
+            part = np.broadcast_to(np.arange(n_idx), scores.shape).copy()
+        ps = np.take_along_axis(scores, part, axis=1)
+        pid = ids_i[part]
+        # per-row (score desc, id asc) lexsort along the last axis
+        order = np.lexsort((pid, -ps), axis=1)
+        sorted_s = np.take_along_axis(ps, order, axis=1)
+        sorted_i = np.take_along_axis(pid, order, axis=1)
+        valid = sorted_s > -np.inf
+        counts = valid.sum(axis=1)
+        if counts.sum():
+            yield lo, hi, sorted_i, sorted_s, valid, counts
+
+
+def _topk_avgs(q_ids, sorted_s, valid, counts):
+    """(query ids, mean top-k score) of the rows of one ``_topk_chunks``
+    chunk that ranked anything. The scores are summed one rank at a
+    time from 0.0 and the sum divided by the count: the arithmetic of
+    Spark's ``avg`` over the kernel's rows, which arrive in rank order
+    within one task, so the result equals
+    ``groupBy("query_id").agg(avg("score"))`` bit for bit."""
+    acc = np.zeros(len(sorted_s))
+    for j in range(sorted_s.shape[1]):
+        acc += np.where(valid[:, j], sorted_s[:, j], 0.0)
+    has = counts > 0
+    return q_ids[has], acc[has] / counts[has]
+
+
 def _topk_broadcast(
     query_feats: DataFrame,
     index_feats: DataFrame,
@@ -83,71 +160,43 @@ def _topk_broadcast(
     exclude_self: bool,
     id_col: str,
     emb_col: str,
+    ref: dict | None = None,
+    avg: bool = False,
 ) -> DataFrame:
     """Index matrix reaches the executors via ``materialize_feats``
     (distributed parquet write + per-worker mmap'd pack — NOT
     ``sc.broadcast``, whose ~100 MB pickle re-streams per task,
     measured ~10 s/task at local[32]); per-batch top-k is fully
-    vectorized (2-D argpartition + row-wise lexsort)."""
+    vectorized (``_topk_chunks``). ``ref``: the index blob if one is
+    already written (a fitted ``SparkSemHash`` keeps one per fit).
+    ``avg=True`` emits each query's (query_id, avg_score) instead of
+    its k neighbor rows."""
     from semhash_spark.operators.verify import (
         load_feats_matrix_normalized_T,
         materialize_feats,
+        normalized_batch,
     )
 
-    ref = materialize_feats(index_feats, id_col, emb_col, "topk")
+    if ref is None:
+        ref = materialize_feats(index_feats, id_col, emb_col, "topk")
 
     def compute(batches):
         from semhash_spark.operators.verify import _ramp
 
-        # normalized TRANSPOSED (dim x n) matrix cached once per
-        # executor — the layout gemm wants (see verify loaders)
         ids_i, mnT, nz = load_feats_matrix_normalized_T(ref)
         zn = ~nz
-        n_idx = len(ids_i)
-        step = max(16, int((16 << 20) // (8 * max(n_idx, 1))))
-        buf = np.empty((step, max(n_idx, 1)))
-        ebuf = np.empty(buf.shape, dtype=bool) if exclude_self else None
+        bufs = _topk_buffers(len(ids_i), exclude_self)
         for pdf in batches:
-            if len(pdf) == 0:
+            batch = normalized_batch(pdf, id_col, emb_col) if len(ids_i) else None
+            if batch is None:  # NULL queries rank nothing
                 continue
-            pdf = pdf[pdf[emb_col].notna()]  # NULL queries rank nothing
-            if len(pdf) == 0 or len(ids_i) == 0:
-                continue
-            q_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            q = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[emb_col]])
-            qn = np.linalg.norm(q, axis=1, keepdims=True)
-            qz = qn.ravel() <= 0
-            qm = np.divide(q, qn, out=q, where=qn > 0)
-            # row-chunk so the |chunk| x |index| score block stays
-            # ~64 MB, and reuse ONE preallocated output buffer: a
-            # fresh 64 MB gemm output per chunk is 16x slower on this
-            # host (mmap first-touch faults + THP compaction; see
-            # verify._chunked_threshold)
-            for lo in range(0, len(q_ids), step):
-                hi = min(lo + step, len(q_ids))
-                scores = buf[: hi - lo]
-                np.dot(qm[lo:hi], mnT, out=scores)
-                # zero-norm on either side -> NULL semantically: exclude
-                scores[:, zn] = -np.inf
-                scores[qz[lo:hi], :] = -np.inf
-                if exclude_self:
-                    sm = ebuf[: hi - lo]
-                    np.equal(q_ids[lo:hi, None], ids_i[None, :], out=sm)
-                    scores[sm] = -np.inf
-                kk = min(k, n_idx)
-                if kk < n_idx:
-                    part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-                else:
-                    part = np.broadcast_to(np.arange(n_idx), scores.shape).copy()
-                ps = np.take_along_axis(scores, part, axis=1)
-                pid = ids_i[part]
-                # per-row (score desc, id asc) lexsort along the last axis
-                order = np.lexsort((pid, -ps), axis=1)
-                sorted_s = np.take_along_axis(ps, order, axis=1)
-                sorted_i = np.take_along_axis(pid, order, axis=1)
-                valid = sorted_s > -np.inf
-                counts = valid.sum(axis=1)
-                if counts.sum() == 0:
+            q_ids, qm, qz = batch
+            for lo, hi, sorted_i, sorted_s, valid, counts in _topk_chunks(
+                q_ids, qm, qz, ids_i, mnT, zn, k, exclude_self, bufs,
+            ):
+                if avg:
+                    q, s = _topk_avgs(q_ids[lo:hi], sorted_s, valid, counts)
+                    yield pd.DataFrame({"query_id": q, "avg_score": s})
                     continue
                 yield pd.DataFrame(
                     {
@@ -158,9 +207,34 @@ def _topk_broadcast(
                     }
                 )
 
-    return query_feats.select(id_col, emb_col).mapInPandas(
-        compute, "query_id long, index_id long, score double, rk long"
+    schema = (
+        "query_id long, avg_score double" if avg
+        else "query_id long, index_id long, score double, rk long"
     )
+    return query_feats.select(id_col, emb_col).mapInPandas(compute, schema)
+
+
+def _auto_strategy(
+    index_feats: DataFrame, emb_col: str, index_size: tuple[int, int] | None,
+) -> tuple[str, tuple[int, int]]:
+    """(``broadcast`` or ``ivf``, index size) of ``strategy="auto"``:
+    broadcast while the index fits BROADCAST_TOPK_CAP rows and
+    VERIFY_BROADCAST_MAX_BYTES and blob transport is available.
+    ``index_size``: the index's ``_feat_bytes`` if already measured."""
+    from semhash_spark.operators.verify import (
+        VERIFY_BROADCAST_MAX_BYTES,
+        _feat_bytes,
+        blob_transport_available,
+    )
+
+    index_size = index_size or _feat_bytes(index_feats, emb_col)
+    n_idx, idx_bytes = index_size
+    fits = (
+        n_idx <= BROADCAST_TOPK_CAP
+        and idx_bytes <= VERIFY_BROADCAST_MAX_BYTES
+        and blob_transport_available(index_feats.sparkSession)
+    )
+    return ("broadcast" if fits else "ivf"), index_size
 
 
 def topk_scores(
@@ -173,6 +247,7 @@ def topk_scores(
     strategy: str = "auto",
     n_cells: int | None = None,
     n_probe: int | None = None,
+    index_size: tuple[int, int] | None = None,
 ) -> DataFrame:
     """(query_id, index_id, score, rk) for each query's top-k neighbors.
 
@@ -187,25 +262,12 @@ def topk_scores(
     ``crossjoin`` (explicit-only pair materialization; never chosen
     automatically — VERDICT r2 #3: a |Q| x |X| crossjoin above the
     broadcast cap was the remaining scale-killer, ``auto`` now falls
-    back to ``ivf`` instead).
+    back to ``ivf`` instead). ``index_size``: the index's
+    ``_feat_bytes`` when the caller already has it.
     """
-    n_idx = None
     if strategy == "auto":
-        from semhash_spark.operators.verify import (
-            VERIFY_BROADCAST_MAX_BYTES,
-            _feat_bytes,
-        )
-
-        from semhash_spark.operators.verify import blob_transport_available
-
-        n_idx, idx_bytes = _feat_bytes(index_feats, emb_col)
-        strategy = (
-            "broadcast"
-            if n_idx <= BROADCAST_TOPK_CAP
-            and idx_bytes <= VERIFY_BROADCAST_MAX_BYTES
-            and blob_transport_available(index_feats.sparkSession)
-            else "ivf"
-        )
+        strategy, index_size = _auto_strategy(index_feats, emb_col, index_size)
+    n_idx = index_size[0] if index_size else None
     if strategy == "ivf":
         from semhash_spark.operators.knn import ivf_topk
 
@@ -224,6 +286,12 @@ def topk_scores(
     return fn(query_feats, index_feats, k, exclude_self, id_col, emb_col)
 
 
+def order_ranking(avgs: DataFrame) -> DataFrame:
+    """(query_id, avg_score) ordered descending, ties by id ascending
+    (the reference's stable sort of the mean scores)."""
+    return avgs.orderBy(F.col("avg_score").desc(), F.col("query_id").asc())
+
+
 def rank_by_avg_similarity(
     query_feats: DataFrame,
     index_feats: DataFrame,
@@ -231,17 +299,97 @@ def rank_by_avg_similarity(
     exclude_self: bool = False,
     id_col: str = "record_id",
     emb_col: str = "embedding",
+    ref: dict | None = None,
+    index_size: tuple[int, int] | None = None,
 ) -> DataFrame:
     """(query_id, avg_score) ordered descending (ties: id asc).
 
     Mirrors reference :476-480 (mean over top-k sims, stable sort).
+    On the broadcast plan the kernel emits each query's average
+    (``_topk_avgs``, equal to the ``groupBy`` average bit for bit);
+    the small average frame then passes one hash exchange, so the
+    sort's range sampling reads shuffle output instead of re-running
+    the scan. The IVF plan averages its top-k rows with a ``groupBy``.
+    ``ref``: the index blob if one is already written (a fitted
+    ``SparkSemHash`` keeps one per fit); ``index_size`` as in
+    ``topk_scores``.
     """
-    tk = topk_scores(query_feats, index_feats, k, exclude_self, id_col, emb_col)
-    return (
-        tk.groupBy("query_id")
-        .agg(F.avg("score").alias("avg_score"))
-        .orderBy(F.col("avg_score").desc(), F.col("query_id").asc())
+    strategy, index_size = _auto_strategy(index_feats, emb_col, index_size)
+    if strategy == "broadcast":
+        avgs = _topk_broadcast(query_feats, index_feats, k, exclude_self,
+                               id_col, emb_col, ref=ref, avg=True)
+        return order_ranking(avgs.repartition("query_id"))
+    tk = topk_scores(query_feats, index_feats, k, exclude_self, id_col, emb_col,
+                     strategy="ivf", index_size=index_size)
+    return order_ranking(tk.groupBy("query_id").agg(F.avg("score").alias("avg_score")))
+
+
+def cosine_self_scan(
+    feats: DataFrame,
+    ref: dict,
+    threshold: float,
+    k: int,
+    max_k: int | None,
+    id_col: str = "record_id",
+    emb_col: str = "embedding",
+    n_rows: int | None = None,
+) -> DataFrame:
+    """One pass over a fitted (id, embedding) table that serves both
+    self-dedup and the self ranking, against the table's one blob
+    ``ref`` (both pack kinds of it: the f32 tiles of the threshold scan
+    and the f64 matrix of the top-k).
+
+    Rows ``(a, b, score)`` with ``a < b`` are the >= ``threshold``
+    edges of ``verify.cosine_threshold_edges`` (the same kernel and
+    ``max_k`` cap); rows with ``a == b`` carry row ``a``'s mean
+    self-excluded top-``k`` score, the ``avg_score`` of
+    ``rank_by_avg_similarity(feats, feats, k, exclude_self=True)``.
+    Rows with a NULL or zero-norm embedding, or no other row to rank,
+    get no average row."""
+    from semhash_spark.operators.verify import (
+        _chunked_threshold,
+        load_feats_matrix_blocked,
+        load_feats_matrix_normalized_T,
+        normalized_batch,
+        scan_rows,
     )
+
+    thr = float(threshold)
+
+    def scan(batches):
+        ids_b, matn, nz_b, blocks = load_feats_matrix_blocked(ref)
+        ids_t, mnT, nz_t = load_feats_matrix_normalized_T(ref)
+        zn = ~nz_t
+        bufs = _topk_buffers(len(ids_t), True)
+        for pdf in batches:
+            batch = normalized_batch(pdf, id_col, emb_col)
+            if batch is None:
+                continue
+            q_ids, qm, qz = batch
+            for r_g, c, sc in _chunked_threshold(
+                q_ids, qm, qz, ids_b, matn, blocks, nz_b, thr, max_k, self_mode=True,
+            ):
+                yield pd.DataFrame({"a": q_ids[r_g], "b": ids_b[c], "score": sc})
+            for lo, hi, _, sorted_s, valid, counts in _topk_chunks(
+                q_ids, qm, qz, ids_t, mnT, zn, k, True, bufs,
+            ):
+                q, s = _topk_avgs(q_ids[lo:hi], sorted_s, valid, counts)
+                yield pd.DataFrame({"a": q, "b": q, "score": s})
+
+    return scan_rows(feats, id_col, emb_col, n_rows).mapInPandas(
+        scan, "a long, b long, score double")
+
+
+def scan_edges(scan: DataFrame) -> DataFrame:
+    """The threshold edges (a, b, score) of a ``cosine_self_scan``."""
+    return scan.where(F.col("a") < F.col("b"))
+
+
+def scan_ranking(scan: DataFrame) -> DataFrame:
+    """The self ranking (query_id, avg_score) of a ``cosine_self_scan``,
+    ordered as ``rank_by_avg_similarity`` orders it."""
+    return order_ranking(scan.where(F.col("a") == F.col("b")).select(
+        F.col("a").alias("query_id"), F.col("score").alias("avg_score")))
 
 
 # boundary searches switch from direct TakeOrdered to quantile
@@ -661,25 +809,25 @@ def find_representative(
 ) -> tuple[list[int], list[float], list[int]]:
     """Top-candidate MMR selection; returns (selected_ids, scores,
     filtered_ids). Collects <= max(candidate_limit, 1000) rows — the
-    bounded-driver-side step (SURVEY §2.6 R5)."""
-    total = ranking.count()
+    bounded-driver-side step (SURVEY §2.6 R5): the top candidates of
+    the ranking joined to their embeddings, in one collect, ordered on
+    the driver by (avg_score desc, id asc)."""
     if candidate_limit == "auto":
-        candidate_limit = compute_candidate_limit(total, selection_size)
-    cand_rows = ranking.limit(int(candidate_limit)).collect()
-    cand_ids = [int(r["query_id"]) for r in cand_rows]
-    relevance = np.array([float(r["avg_score"]) for r in cand_rows])
-    if not cand_ids:
+        candidate_limit = compute_candidate_limit(ranking.count(), selection_size)
+    top = order_ranking(ranking).limit(int(candidate_limit))
+    rows = top.join(
+        feats.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("_emb")),
+        "query_id",
+    ).collect()
+    if not rows:
         return [], [], []
-
-    emb_rows = (
-        feats.where(F.col(id_col).isin(cand_ids))
-        .select(id_col, emb_col)
-        .collect()
-    )
-    emb_map = {int(r[id_col]): np.asarray(r[emb_col], dtype=np.float64) for r in emb_rows}
-    embs = np.stack([emb_map[i] for i in cand_ids])
+    rows.sort(key=lambda r: (-r["avg_score"], r["query_id"]))
+    cand_ids = [int(r["query_id"]) for r in rows]
+    relevance = np.array([float(r["avg_score"]) for r in rows])
+    embs = np.stack([np.asarray(r["_emb"], dtype=np.float64) for r in rows])
 
     sel_pos, sel_scores = diversify(embs, relevance, selection_size, diversity, strategy)
     sel_ids = [cand_ids[p] for p in sel_pos]
-    filtered_ids = [cid for p, cid in enumerate(cand_ids) if p not in set(sel_pos)]
+    chosen = set(sel_pos)
+    filtered_ids = [cid for p, cid in enumerate(cand_ids) if p not in chosen]
     return sel_ids, sel_scores, filtered_ids

@@ -979,6 +979,19 @@ def _feat_bytes(feats: DataFrame, payload_col: str) -> tuple[int, int]:
     return n, int(row["vals"]) * 8 + n * 16
 
 
+def cosine_fused_fits(cfg, n_rows: int, n_bytes: int, spark) -> bool:
+    """The fused cosine scan's gate (self and cross dedup): the
+    embedding table (``n_rows``, ``n_bytes`` from ``_feat_bytes``)
+    fits ``cfg.cosine_fused_cap`` (default VERIFY_BROADCAST_CAP) and
+    VERIFY_BROADCAST_MAX_BYTES, and blob transport is available."""
+    cap = cfg.cosine_fused_cap if cfg.cosine_fused_cap is not None else VERIFY_BROADCAST_CAP
+    return (
+        n_rows <= cap
+        and n_bytes <= VERIFY_BROADCAST_MAX_BYTES
+        and blob_transport_available(spark)
+    )
+
+
 def _lookup_positions(ids_sorted: np.ndarray, wanted: np.ndarray, side: str):
     """searchsorted + MEMBERSHIP CHECK: raises instead of silently
     scoring a neighboring record's features when a pair id is absent
@@ -1311,10 +1324,11 @@ def _chunked_threshold(q_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k,
     Round-5 history (kept because the same pathologies shape this
     form): the one-shot kernel materialized the FULL |batch| x
     |index| f64 similarity matrix per worker (page-fault/TLB storm,
-    bench_r5_try2); the row-chunked full-width kernel fixed that but
-    still streamed the whole 50 MB B operand per 41-row chunk and
-    wrote 3 full-width bool/score passes per chunk — measured 13-15 s
-    per worker at 100k x 100k under 32-way concurrency, nearly all
+    ``git show b871efc:bench_r5_try2.log``); the row-chunked
+    full-width kernel fixed that but still streamed the whole 50 MB B
+    operand per 41-row chunk and wrote 3 full-width bool/score passes
+    per chunk — measured 13-15 s per worker at 100k x 100k under
+    32-way concurrency, nearly all
     memory-bus time. Round 6 re-tiled it: per row chunk (~512 rows),
     each ~2 MB B tile is one sgemm into a reused (row_step x _BLK_W)
     score tile that stays cache-resident through its threshold mask
@@ -1429,9 +1443,9 @@ def _chunked_threshold(q_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k,
         # one-shot fancy-index rescore materializes TWO (hits x dim)
         # float64 copies: ~8 GB/worker at 4M hits x 128 dims, which is
         # what globally OOM'd the 1M IVF flagship (14 workers at
-        # 7.6 GB RSS each, flagship_r5_1m_ivf2.log). Slicing keeps the
-        # peak at ~2 x slice x dim x 8 bytes (~134 MB) with identical
-        # survivors, scores, and cap order.
+        # 7.6 GB RSS each, git show b871efc:flagship_r5_1m_ivf2.log).
+        # Slicing keeps the peak at ~2 x slice x dim x 8 bytes
+        # (~134 MB) with identical survivors, scores, and cap order.
         if len(r) <= _RESCORE_HITS:
             s = np.einsum("ij,ij->i", qm[lo + r], matn[c])
             keep = s >= thr
@@ -1561,11 +1575,20 @@ def cosine_threshold_edges_ivf(
 
     if n_rows is None:
         n_rows = feats.count()
+    transport = blob_transport_available(feats.sparkSession)
     if payload_blob is None:
-        payload_blob = (
-            n_rows >= _IVF_BLOB_MIN_ROWS
-            and blob_transport_available(feats.sparkSession)
+        payload_blob = n_rows >= _IVF_BLOB_MIN_ROWS and transport
+    elif payload_blob and not transport:
+        import warnings
+
+        warnings.warn(
+            "ivf_payload_blob=True needs blob transport (a local master or "
+            "spark.semhash.blobDir); using the payload-shuffle plan, whose "
+            "edges are identical",
+            RuntimeWarning,
+            stacklevel=2,
         )
+        payload_blob = False
     ref = (
         materialize_feats(feats.select(id_col, emb_col), id_col, emb_col, "ivfrows")
         if payload_blob
@@ -1749,11 +1772,14 @@ def cosine_threshold_edges(
     emb_col: str = "embedding",
     max_k: int | None = None,
     n_rows: int | None = None,
+    ref: dict | None = None,
 ) -> DataFrame:
     """All pairs (a < b, score) with cosine >= threshold — fused
     candidate generation + verification via broadcast matmul.
     ``max_k`` caps each row's emitted neighbors (reference
-    query_threshold cap; see ``_cap_rows_sparse``).
+    query_threshold cap; see ``_cap_rows_sparse``). ``ref``: a
+    ``materialize_feats`` blob of ``feats`` already written (a fitted
+    ``SparkSemHash`` writes one per fit); without it one is written.
 
     The embedding table is materialized as parquet executor-side
     (``materialize_feats`` — a distributed write, NO driver
@@ -1766,39 +1792,58 @@ def cosine_threshold_edges(
     LSH candidates + verify_cosine. Zero-norm rows never pair
     (NULL-cosine semantics).
     """
-    ref = materialize_feats(feats, id_col, emb_col, "cosedges")
+    if ref is None:
+        ref = materialize_feats(feats, id_col, emb_col, "cosedges")
     thr = float(threshold)
 
     def edges(batches):
         ids_i, matn, nz_i, blocks = load_feats_matrix_blocked(ref)
         for pdf_b in batches:
-            if len(pdf_b) == 0:
+            batch = normalized_batch(pdf_b, id_col, emb_col)
+            if batch is None:
                 continue
-            nn = pdf_b[emb_col].notna()
-            if not nn.all():  # NULL embeddings never pair
-                pdf_b = pdf_b[nn]
-                if len(pdf_b) == 0:
-                    continue
-            a_ids = pdf_b[id_col].to_numpy(dtype=np.int64)
-            q = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf_b[emb_col]])
-            qn = np.linalg.norm(q, axis=1, keepdims=True)
-            qm = np.divide(q, qn, out=q, where=qn > 0)  # zero rows stay 0
+            a_ids, qm, qz = batch
             for r_g, c, sc in _chunked_threshold(
-                a_ids, qm, qn.ravel() <= 0, ids_i, matn, blocks, nz_i, thr,
-                max_k, self_mode=True,
+                a_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k, self_mode=True,
             ):
                 yield pd.DataFrame(
                     {"a": a_ids[r_g], "b": ids_i[c], "score": sc}
                 )
 
+    return scan_rows(feats, id_col, emb_col, n_rows).mapInPandas(
+        edges, "a long, b long, score double")
+
+
+def normalized_batch(pdf: pd.DataFrame, id_col: str, emb_col: str):
+    """(ids, row-normalized float64 matrix, zero-norm mask) of one
+    Arrow batch of (id, embedding) rows, NULL embeddings dropped; None
+    when nothing is left. Zero-norm rows stay all-zero."""
+    if len(pdf) == 0:
+        return None
+    nn = pdf[emb_col].notna()
+    if not nn.all():  # NULL embeddings never pair or rank
+        pdf = pdf[nn]
+        if len(pdf) == 0:
+            return None
+    ids = pdf[id_col].to_numpy(dtype=np.int64)
+    q = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[emb_col]])
+    qn = np.linalg.norm(q, axis=1, keepdims=True)
+    qm = np.divide(q, qn, out=q, where=qn > 0)
+    return ids, qm, qn.ravel() <= 0
+
+
+def scan_rows(feats: DataFrame, id_col: str, emb_col: str,
+              n_rows: int | None) -> DataFrame:
+    """The (id, embedding) rows a fused self scan streams. At
+    ``_SCAN_SPLIT_MIN_ROWS`` and above they are range-split into
+    finer tasks; the split keeps each task's ids contiguous, so the
+    tile skip of ``_chunked_threshold`` stays fully effective."""
     q = feats.select(id_col, emb_col)
     if n_rows is not None and n_rows >= _SCAN_SPLIT_MIN_ROWS:
         spark = feats.sparkSession
         n_split = 4 * max(spark.sparkContext.defaultParallelism, 8)
-        # range split preserves per-task id contiguity, so the tile
-        # skip stays fully effective inside each finer task
         q = q.repartitionByRange(n_split, F.col(id_col))
-    return q.mapInPandas(edges, "a long, b long, score double")
+    return q
 
 
 def cosine_cross_threshold_edges(
@@ -1843,20 +1888,12 @@ def cosine_cross_threshold_edges(
     def edges(batches):
         ids_i, matn, nz_i, blocks = load_feats_matrix_blocked(ref)
         for pdf_b in batches:
-            if len(pdf_b) == 0 or len(ids_i) == 0:
+            batch = normalized_batch(pdf_b, id_col, emb_col) if len(ids_i) else None
+            if batch is None:
                 continue
-            nn = pdf_b[emb_col].notna()
-            if not nn.all():
-                pdf_b = pdf_b[nn]
-                if len(pdf_b) == 0:
-                    continue
-            q_ids = pdf_b[id_col].to_numpy(dtype=np.int64)
-            q = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf_b[emb_col]])
-            qn = np.linalg.norm(q, axis=1, keepdims=True)
-            qm = np.divide(q, qn, out=q, where=qn > 0)
+            q_ids, qm, qz = batch
             for r_g, c, sc in _chunked_threshold(
-                q_ids, qm, qn.ravel() <= 0, ids_i, matn, blocks, nz_i, thr,
-                max_k, self_mode=False,
+                q_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k, self_mode=False,
             ):
                 yield pd.DataFrame(
                     {"query_id": q_ids[r_g], "index_id": ids_i[c], "score": sc}

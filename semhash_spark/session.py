@@ -44,7 +44,8 @@ def get_spark(
     # ~64 MB chunk buffers (verify._chunked_threshold), per-free
     # munmap caused a kernel-side page-fault + THP-compaction storm
     # (khugepaged/kcompactd topping CPU, >90% system time, round-5
-    # bench_r5_try2). Trailing underscore = fixed, no dynamic adjust.
+    # log: git show b871efc:bench_r5_try2.log). Trailing underscore =
+    # fixed, no dynamic adjust.
     _malloc_env = {
         "MALLOC_MMAP_THRESHOLD_": str(256 * 1024 * 1024),
         "MALLOC_TRIM_THRESHOLD_": str(256 * 1024 * 1024),

@@ -170,3 +170,58 @@ def test_centroids_deterministic_across_partitionings(spark):
     cr = train_centroids(emb.orderBy(F.rand(3)).repartition(5), 6, train_cap=100)
     np.testing.assert_array_equal(c1, c8)
     np.testing.assert_array_equal(c1, cr)
+
+
+def _scan_table(spark):
+    rng = np.random.default_rng(23)
+    base = rng.standard_normal((120, 16))
+    base[40:60] = base[40] + 0.05 * rng.standard_normal((20, 16))  # clique
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(base)]
+    rows[5] = (5, [0.0] * 16)
+    rows[6] = (6, None)
+    return spark.createDataFrame(rows, "record_id long, embedding array<float>").repartition(3)
+
+
+def test_shared_scan_matches_edges_and_ranking(spark):
+    """One cosine_self_scan pass emits exactly cosine_threshold_edges'
+    edges (max_k cap included) and rank_by_avg_similarity's ranking."""
+    from semhash_spark.operators import rank as rank_ops
+    from semhash_spark.operators.verify import cosine_threshold_edges, materialize_feats
+
+    emb = _scan_table(spark).persist()
+    ref = materialize_feats(emb, "record_id", "embedding", "t_scan")
+    scan = rank_ops.cosine_self_scan(emb, ref, 0.9, k=10, max_k=7).persist()
+    try:
+        got = sorted(tuple(r) for r in rank_ops.scan_edges(scan).collect())
+        want = sorted(tuple(r) for r in cosine_threshold_edges(
+            emb, 0.9, max_k=7).collect())
+        assert got == want and len(got) > 50
+        ranking = [tuple(r) for r in rank_ops.scan_ranking(scan).collect()]
+        expect = [tuple(r) for r in rank_ops.rank_by_avg_similarity(
+            emb, emb, 10, exclude_self=True).collect()]
+        assert ranking == expect and len(ranking) == 118
+    finally:
+        scan.unpersist()
+        emb.unpersist()
+
+
+def test_ivf_payload_blob_without_transport_falls_back(spark, monkeypatch):
+    """ivf_payload_blob=True on a session without blob transport runs
+    the payload-shuffle plan with a warning (identical edges) instead
+    of failing at plan time."""
+    from semhash_spark.operators import verify as V
+
+    emb = _clustered_embeddings(spark, n_centers=4, per_center=30)
+    kw = dict(n_cells=4, n_probe=2, max_k=20, n_rows=120)
+    want = sorted(tuple(r) for r in V.cosine_threshold_edges_ivf(
+        emb, 0.9, payload_blob=False, **kw).collect())
+    monkeypatch.setattr(V, "blob_transport_available", lambda spark: False)
+
+    def no_blob(*a, **k):
+        raise AssertionError("no blob may be written without transport")
+
+    monkeypatch.setattr(V, "materialize_feats", no_blob)
+    with pytest.warns(RuntimeWarning, match="payload-shuffle"):
+        edges = V.cosine_threshold_edges_ivf(emb, 0.9, payload_blob=True, **kw)
+    got = sorted(tuple(r) for r in edges.collect())
+    assert got == want and len(got) > 100

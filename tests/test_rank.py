@@ -180,3 +180,68 @@ def test_filter_outliers_leaves_caller_cache_alone(spark):
         assert ranking.is_cached
     finally:
         ranking.unpersist()
+
+
+def _avg_parity_table(spark, sqltype):
+    rng = np.random.default_rng(5)
+    rows = [(i, [float(x) for x in rng.standard_normal(6)]) for i in range(40)]
+    rows[3] = (3, [0.0] * 6)  # zero norm: never ranks
+    rows[7] = (7, None)  # NULL: never ranks
+    rows[11] = (11, list(rows[12][1]))  # exact tie
+    return spark.createDataFrame(rows, f"record_id long, embedding array<{sqltype}>").repartition(3)
+
+
+@pytest.mark.parametrize("exclude_self", [True, False])
+@pytest.mark.parametrize("k", [5, 39, 100])
+@pytest.mark.parametrize("sqltype", ["float", "double"])
+def test_kernel_avg_equals_groupby_avg_bitwise(spark, exclude_self, k, sqltype):
+    """The in-kernel top-k average is Spark's avg of the kernel's rows,
+    bit for bit: zero-norm and NULL rows, ties, and k >= n included."""
+    emb = _avg_parity_table(spark, sqltype)
+    tk = topk_scores(emb, emb, k, exclude_self=exclude_self, strategy="broadcast")
+    want = {r["query_id"]: r["avg_score"] for r in
+            tk.groupBy("query_id").agg(F.avg("score").alias("avg_score")).collect()}
+    got = {r["query_id"]: r["avg_score"] for r in rank_ops._topk_broadcast(
+        emb, emb, k, exclude_self, "record_id", "embedding", avg=True).collect()}
+    assert got == want
+    assert 3 not in got and 7 not in got and len(got) == 38
+
+
+def test_rank_by_avg_similarity_sorts_shuffled_averages(spark):
+    """The kernel's average frame passes a hash exchange below the
+    sort's range exchange, so the range sampling reads shuffle output
+    instead of re-running the scan."""
+    emb = _avg_parity_table(spark, "double")
+    r = rank_ops.rank_by_avg_similarity(emb, emb, 5, exclude_self=True)
+    r.collect()
+    plan = r._jdf.queryExecution().executedPlan().toString()
+    rng, hsh, scan = (plan.find(s) for s in (
+        "rangepartitioning", "hashpartitioning(query_id", "MapInPandas"))
+    assert -1 < rng < hsh < scan, plan
+    assert "HashAggregate" not in plan
+
+
+def test_find_representative_one_collect_matches_driver_reference(spark):
+    """The top candidates joined to their embeddings come back in one
+    collect and are ordered on the driver by (avg_score desc, id asc):
+    selection and the filtered-id order equal a driver-side reference,
+    ties included."""
+    from semhash_spark.operators.rank import find_representative
+
+    rng = np.random.default_rng(9)
+    n = 60
+    scores = np.round(rng.random(n), 1)  # heavy ties
+    embs = rng.standard_normal((n, 4))
+    ranking = spark.createDataFrame(
+        [(i, float(scores[i])) for i in range(n)], "query_id long, avg_score double"
+    ).repartition(4)
+    feats = spark.createDataFrame(
+        [(i, [float(x) for x in embs[i]]) for i in range(n)],
+        "record_id long, embedding array<double>",
+    ).repartition(3)
+    got = find_representative(ranking, feats, 5, candidate_limit=25, diversity=0.5)
+    order = sorted(range(n), key=lambda i: (-scores[i], i))[:25]
+    sel, sc = diversify(embs[order], scores[order], 5, 0.5, "mmr")
+    want_sel = [order[p] for p in sel]
+    assert got[0] == want_sel and got[1] == sc
+    assert got[2] == [i for p, i in enumerate(order) if p not in set(sel)]

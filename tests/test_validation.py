@@ -113,10 +113,10 @@ def test_fitted_release_unpersists_all_caches(spark):
     res = sh.deduplicate(df.where("record_id >= 15"))
     res.selected.count()
     res.release()
-    cached = [sh._exemplars, sh._feats, sh._idx_keys, sh._idx_bands]
+    cached = [sh._keyed, sh._feats, sh._idx_keys, sh._idx_bands]
     assert all(c is not None and c.is_cached for c in cached)
     sh.release()
-    assert not sh._exemplars.is_cached and not sh._feats.is_cached
+    assert not sh._keyed.is_cached and not sh._feats.is_cached
     assert sh._idx_keys is None and sh._idx_bands is None
     # still usable after release (recomputes)
     res2 = sh.deduplicate(df.where("record_id >= 15"))

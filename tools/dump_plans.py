@@ -22,9 +22,14 @@ from semhash_spark.config import DedupConfig  # noqa: E402
 from semhash_spark.operators.dedup import add_features, deduplicate  # noqa: E402
 from semhash_spark.operators.exact import self_exact_dedup  # noqa: E402
 from semhash_spark.operators.lsh import band_table, candidate_pairs_self  # noqa: E402
+from semhash_spark.operators.rank import (  # noqa: E402
+    cosine_self_scan,
+    rank_by_avg_similarity,
+)
 from semhash_spark.operators.verify import (  # noqa: E402
     cosine_threshold_edges,
     drop_blob,
+    materialize_feats,
     pack_set_blob,
 )
 from semhash_spark.session import get_spark  # noqa: E402
@@ -84,6 +89,13 @@ def main() -> None:
     dump("cosine_edges",
          cosine_threshold_edges(cfeats, 0.75, "record_id", "embedding",
                                 max_k=100))
+    # the fitted cosine surfaces' one scan (edges + top-k averages) and
+    # the kernel-averaged ranking of the unfitted operator
+    cref = materialize_feats(cfeats, "record_id", "embedding", "dumpscan")
+    dump("cosine_self_scan",
+         cosine_self_scan(cfeats, cref, 0.75, 100, 100, "record_id", "embedding"))
+    dump("rank_by_avg_similarity",
+         rank_by_avg_similarity(cfeats, cfeats, 100, exclude_self=True))
 
     # cross dedup through the api memo path (after: blob single-job)
     from semhash_spark.api import SparkSemHash

@@ -1,6 +1,13 @@
 #!/usr/bin/env python
 """Sub-phase profiler for the cosine-mode flagship (guide §1: isolate
-with noop sinks + labeled jobs). NOT part of the frozen bench."""
+with noop sinks + labeled jobs). NOT part of the frozen bench.
+
+Usage: python tools/profile_cosine.py [n_files]   (SPARK_GRAFT_CPUS sets
+the core count). Times the exact stage, the encoder, the size check,
+the blob write and pack, the threshold scan alone and the shared
+self scan (edges + top-k averages, ``rank.cosine_self_scan``), CC, then
+full fitted passes (fit, self_deduplicate, self_filter_outliers,
+self_find_representative)."""
 from __future__ import annotations
 
 import json
@@ -8,7 +15,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
@@ -73,6 +80,12 @@ def main() -> None:
     edges = cosine_threshold_edges(feats, cfg.threshold, cfg.id_col,
                                    cfg.embedding_col, max_k=cfg.cosine_max_k)
     timed("scan_noop", lambda: edges.write.format("noop").mode("overwrite").save())
+    from semhash_spark.operators.rank import cosine_self_scan
+
+    shared = cosine_self_scan(feats, ref, cfg.threshold, cfg.rank_k, cfg.cosine_max_k,
+                              cfg.id_col, cfg.embedding_col)
+    timed("shared_scan_noop",
+          lambda: shared.write.format("noop").mode("overwrite").save())
     edges_p = edges.persist()
     timed("edges_count", edges_p.count)
     n_edges = edges_p.count()
@@ -83,15 +96,22 @@ def main() -> None:
         cfg.id_col)
     timed("cc", cc.count)
 
-    # bookkeeping: full self_deduplicate selected/filtered counts (warm)
-    from semhash_spark.operators.dedup import self_deduplicate
+    # bookkeeping: full fitted passes, selected/filtered counts (warm)
+    from semhash_spark.api import SparkSemHash
+
     def full():
-        res = self_deduplicate(corpus, cfg, mode="cosine")
+        sh = SparkSemHash(cfg, mode="cosine").fit(corpus)
+        res = sh.self_deduplicate()
         ns, nf = res.selected.count(), res.filtered.count()
+        fo = sh.self_filter_outliers(0.1)
+        fo.filtered.count()
+        sh.self_find_representative(10)
+        fo.release()
         res.release()
+        sh.release()
         return ns, nf
-    counts = timed("full_selfdedup", full)
-    counts2 = timed("full_selfdedup2", full)
+    counts = timed("full_pass", full)
+    counts2 = timed("full_pass2", full)
 
     print(json.dumps({"n": n, "timings": t, "n_edges": n_edges,
                       "counts": list(counts), "counts2": list(counts2),
