@@ -20,7 +20,9 @@ fits both the fused-scan and the broadcast top-k gates, scans it once
 per threshold for both the self-dedup edges and every row's top-k
 average (``rank.cosine_self_scan``), so ``self_deduplicate``,
 ``self_filter_outliers`` and ``self_find_representative`` share one
-scan. The ranking memoization of the reference (semhash/semhash.py:41,
+scan. The fit owns its blobs: every frame it hands out is detached
+from them (``verify.detach``), and ``release()`` drops them. The
+ranking memoization of the reference (semhash/semhash.py:41,
 498-518) maps to persisting the self-ranking DataFrame.
 """
 
@@ -138,8 +140,11 @@ class SparkSemHash:
         self._idx_blob_ref: dict | None = None
         # _feat_bytes of the embedding table, measured once per fit
         self._emb_size_memo: tuple[int, int] | None = None
-        # cosine mode: persisted rank.cosine_self_scan per threshold
+        # cosine mode: detached rank.cosine_self_scan per threshold
         self._scans: dict[float, DataFrame] = {}
+        # one finalizer per blob this fit wrote: release() runs them,
+        # and an unreleased fit drops its blobs when it is collected
+        self._blob_drops: list = []
         # minhash single-job cross-dedup blob refs (keys/bands/
         # shingles), built by prepare_index for large fitted sides
         self._idx_cross_blobs: dict | None = None
@@ -208,15 +213,16 @@ class SparkSemHash:
 
     def release(self) -> None:
         """Unpersist every cache this fitted object owns (exact stage,
-        features, memoized ranking and self scans, cross-dedup key/band
-        tables) and drop its size memo. The object stays usable — frames
-        recompute on next use; call when done querying this fit
-        (cache-lifecycle parity with DedupResult.release /
-        FilterResultDF.release)."""
+        features, memoized ranking, cross-dedup key/band tables), drop
+        its self-scan and size memos, and remove its blobs (the
+        embedding blob and the cross-dedup blobs). The object stays
+        usable — frames and blobs are rebuilt on next use — and every
+        frame it handed out still computes, since none reads a blob;
+        call when done querying this fit (cache-lifecycle parity with
+        DedupResult.release / FilterResultDF.release)."""
         for df in (
             self._keyed, self._feats, self._ranking,
             self._idx_keys, self._idx_bands, self._emb_feats,
-            *self._scans.values(),
         ):
             if df is not None:
                 try:
@@ -229,9 +235,21 @@ class SparkSemHash:
         self._idx_keys = None
         self._idx_bands = None
         self._idx_bands_thinned = True
-        self._idx_blob_ref = None  # temp blob files are reaped at exit
+        for drop in self._blob_drops:
+            drop()
+        self._blob_drops = []
+        self._idx_blob_ref = None
         self._idx_cross_blobs = None
         self._emb_feats = None
+
+    def _own(self, ref: dict) -> dict:
+        """Make ``ref`` this fit's blob: ``release()`` drops it."""
+        import weakref
+
+        from semhash_spark.operators.verify import drop_blob
+
+        self._blob_drops.append(weakref.finalize(self, drop_blob, ref))
+        return ref
 
     # ---------------------------------------------------------- dedup
     def self_deduplicate(
@@ -265,13 +283,13 @@ class SparkSemHash:
     def _emb_blob(self) -> dict:
         """The embedding table's executor-side blob, written once per fit."""
         if self._idx_blob_ref is None:
-            from semhash_spark.operators.verify import materialize_feats
+            from semhash_spark.operators.verify import write_blob
 
             cfg = self.cfg
-            self._idx_blob_ref = materialize_feats(
+            self._idx_blob_ref = self._own(write_blob(
                 self._embedding_feats().select(cfg.id_col, cfg.embedding_col),
                 cfg.id_col, cfg.embedding_col, "fitemb",
-            )
+            ))
         return self._idx_blob_ref
 
     def _cosine_fused(self) -> bool:
@@ -290,18 +308,21 @@ class SparkSemHash:
         return self._emb_blob() if strategy == "broadcast" else None
 
     def _shared_scan(self, threshold: float) -> DataFrame | None:
-        """Cosine mode: the persisted ``rank.cosine_self_scan`` of the
-        fit at ``threshold`` (memoized per threshold), or None unless
-        the gates pick both the fused edges and the broadcast top-k."""
+        """Cosine mode: the ``rank.cosine_self_scan`` of the fit at
+        ``threshold``, run once per threshold and memoized detached
+        (driver-held up to ``DRIVER_CC_CAP`` rows), or None unless the
+        gates pick both the fused edges and the broadcast top-k."""
         if threshold not in self._scans:
             if not self._cosine_fused() or self._rank_blob() is None:
                 return None
+            from semhash_spark.operators.verify import detach
+
             cfg = self.cfg
-            self._scans[threshold] = rank_ops.cosine_self_scan(
+            self._scans[threshold] = detach(rank_ops.cosine_self_scan(
                 self._feats, self._emb_blob(), threshold, cfg.rank_k,
                 cfg.cosine_max_k, cfg.id_col, cfg.embedding_col,
                 n_rows=self._emb_size()[0],
-            ).persist()
+            ))
         return self._scans[threshold]
 
     def _cosine_edges(self, threshold: float) -> DataFrame:
@@ -311,14 +332,14 @@ class SparkSemHash:
         scan = self._shared_scan(threshold)
         if scan is not None:
             return rank_ops.scan_edges(scan)
-        from semhash_spark.operators.verify import cosine_threshold_edges
+        from semhash_spark.operators.verify import cosine_threshold_edges, detach
 
         cfg = self.cfg
-        return cosine_threshold_edges(
+        return detach(cosine_threshold_edges(
             self._feats, threshold, cfg.id_col, cfg.embedding_col,
             max_k=cfg.cosine_max_k, n_rows=self._emb_size()[0],
             ref=self._emb_blob(),
-        )
+        ))
 
     def prepare_index(self) -> "SparkSemHash":
         """Materialize every fitted-side structure cross-dedup reads
@@ -349,10 +370,11 @@ class SparkSemHash:
         ):
             from semhash_spark.operators.crossblob import build_cross_blobs
 
-            self._idx_cross_blobs = build_cross_blobs(
-                self._feats.select(self.cfg.id_col, "shingles"),
-                self._idx_keys, self._idx_bands, self.cfg.id_col,
-            )
+            self._idx_cross_blobs = {
+                name: self._own(ref) for name, ref in build_cross_blobs(
+                    self._feats, self._idx_keys, self._idx_bands, self.cfg.id_col,
+                ).items()
+            }
         return self
 
     def _build_cross_memos(self) -> None:
@@ -539,22 +561,25 @@ class SparkSemHash:
             if scan is not None:
                 self._ranking = rank_ops.scan_ranking(scan).persist()
             else:
-                feats = self._embedding_feats()
-                self._ranking = rank_ops.rank_by_avg_similarity(
-                    feats, feats, self.cfg.rank_k, exclude_self=True,
-                    id_col=self.cfg.id_col, emb_col=self.cfg.embedding_col,
-                    ref=self._rank_blob(), index_size=self._emb_size(),
-                ).persist()
+                self._ranking = self._ranked(self._embedding_feats(), True).persist()
         return self._ranking
 
     def rank(self, query_df: DataFrame) -> DataFrame:
         self._require_fit()
-        q = self._query_embedding_feats(query_df)
-        return rank_ops.rank_by_avg_similarity(
-            q, self._embedding_feats(), self.cfg.rank_k, exclude_self=False,
+        return self._ranked(self._query_embedding_feats(query_df), False)
+
+    def _ranked(self, q: DataFrame, exclude_self: bool) -> DataFrame:
+        """``rank_by_avg_similarity`` of ``q`` against the fit, detached
+        when it reads the fit's blob."""
+        from semhash_spark.operators.verify import detach
+
+        ref = self._rank_blob()
+        ranking = rank_ops.rank_by_avg_similarity(
+            q, self._embedding_feats(), self.cfg.rank_k, exclude_self=exclude_self,
             id_col=self.cfg.id_col, emb_col=self.cfg.embedding_col,
-            ref=self._rank_blob(), index_size=self._emb_size(),
+            ref=ref, index_size=self._emb_size(),
         )
+        return detach(ranking) if ref is not None else ranking
 
     def self_filter_outliers(self, outlier_percentage: float | None = None) -> FilterResultDF:
         pct = self.cfg.outlier_percentage if outlier_percentage is None else outlier_percentage

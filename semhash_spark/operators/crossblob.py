@@ -40,14 +40,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from semhash_spark.operators.verify import (
-    _blob_files,
-    _pack_once_per_executor,
+    _gather_rows,
+    _lookup_rows,
     _pack_sharded,
+    _padded_intersections,
+    _ramp,
     load_feats_segments,
-    materialize_feats,
+    write_blob,
 )
-
-_INT64_MAX = np.iinfo(np.int64).max
 
 
 def build_cross_blobs(
@@ -57,56 +57,54 @@ def build_cross_blobs(
     id_col: str = "record_id",
 ) -> dict:
     """Write the three fitted-side parquet blobs; returns the ref dict
-    ``cross_match_blob`` needs. ``idx_bands`` must be the PRE-THINNED
-    band table (api memo) so the kernel probes the exact buckets the
-    relational plan joins."""
+    ``cross_match_blob`` needs. The caller (the fit) owns the blobs and
+    drops them. ``idx_bands`` must be the PRE-THINNED band table (api
+    memo) so the kernel probes the exact buckets the relational plan
+    joins; it is written range-sorted by band hash, one disjoint hash
+    range per part."""
     spark = feats.sparkSession
     n_part = max(8, int(spark.conf.get("spark.sql.shuffle.partitions")))
-
-    keys_ref = materialize_feats(
-        idx_keys.select(F.col("exemplar_id"), F.col("exact_key")),
-        "exemplar_id", "exact_key", "xkeys",
+    bands = (
+        idx_bands.select("band_hash", "band_idx", F.col(id_col).alias("member"))
+        .repartitionByRange(n_part, "band_hash")
+        .sortWithinPartitions("band_hash")
     )
-
-    def band_writer(df, path):
-        (
-            df.select("band_hash", "band_idx", F.col(id_col).alias("member"))
-            .repartitionByRange(n_part, "band_hash")
-            .sortWithinPartitions("band_hash")
-            .write.option("compression", "uncompressed").parquet(path)
-        )
-
-    bands_ref = materialize_feats(
-        idx_bands, id_col, "band_hash", "xbands", write_fn=band_writer
-    )
-    feats_ref = materialize_feats(feats, id_col, "shingles", "xfeats")
-    return {"keys": keys_ref, "bands": bands_ref, "feats": feats_ref}
+    return {
+        "keys": write_blob(idx_keys.select("exemplar_id", "exact_key"),
+                           "exemplar_id", "exact_key", "xkeys"),
+        "bands": write_blob(bands, "member", "band_hash", "xbands"),
+        "feats": write_blob(feats.select(id_col, "shingles"), id_col, "shingles",
+                            "xfeats"),
+    }
 
 
 def _load_keys(ref: dict):
     """Sorted digest pack: (k0..k3 uint64 columns in lexicographic
     digest order, exemplar ids aligned). sha256 hex sorts the same as
     its big-endian words, so a first-word searchsorted plus a short
-    run compare on the remaining words is an exact lookup."""
+    run compare on the remaining words is an exact lookup. Each part
+    decodes to (n, 4) digest words on its own worker; the finalizer
+    sorts them globally."""
 
-    def build():
+    def part_builder(path):
         import pyarrow.parquet as pq
 
-        tbl = pq.read_table(_blob_files(ref), columns=["exemplar_id", "exact_key"])
+        tbl = pq.read_table([path], columns=["exemplar_id", "exact_key"])
         ex = tbl.column("exemplar_id").to_numpy().astype(np.int64, copy=False)
-        keys = tbl.column("exact_key").to_pylist()
-        n = len(ex)
-        if n == 0:
-            z = np.empty(0, dtype=np.uint64)
-            return (z, z, z, z, np.empty(0, dtype=np.int64))
-        kb = np.frombuffer(bytes.fromhex("".join(keys)), dtype=">u8")
-        kb = kb.reshape(n, 4).astype(np.uint64)
-        order = np.lexsort((kb[:, 3], kb[:, 2], kb[:, 1], kb[:, 0]))
-        kb = kb[order]
-        return (kb[:, 0].copy(), kb[:, 1].copy(), kb[:, 2].copy(),
-                kb[:, 3].copy(), ex[order])
+        kb = np.frombuffer(
+            bytes.fromhex("".join(tbl.column("exact_key").to_pylist())), dtype=">u8")
+        return [kb.reshape(len(ex), 4).astype(np.uint64), ex]
 
-    return _pack_once_per_executor(ref, "xkeys", build)
+    def finalize_builder(shards):
+        if not shards:
+            return [np.empty((0, 4), np.uint64), np.empty(0, np.int64)]
+        kb = np.concatenate([s[0] for s in shards])
+        ex = np.concatenate([s[1] for s in shards])
+        order = np.lexsort((kb[:, 3], kb[:, 2], kb[:, 1], kb[:, 0]))
+        return [kb[order].T, ex[order]]
+
+    (kbT, ex), _ = _pack_sharded(ref, "xkeys", part_builder, finalize_builder)
+    return kbT[0], kbT[1], kbT[2], kbT[3], ex
 
 
 def _load_bands(ref: dict):
@@ -144,72 +142,18 @@ def _load_bands(ref: dict):
     return mins, maxs, nos, shard_groups
 
 
-def _ramp(lens: np.ndarray) -> np.ndarray:
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    offs = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-    return np.arange(total, dtype=np.int64) - np.repeat(offs, lens)
-
-
-# padded-matrix budget per verify block — same bound as
-# verify._PAIR_CELLS_BUDGET (64 MB int64 scratch per worker)
-_CELLS_BUDGET = 1 << 23
-
-
 def _cross_intersections(segt, pos_b, q_flat, q_offs, q_lens, qrow):
     """|Q_r ∩ B_p| per pair: side A = the pair's query shingle set
     (batch-local flat/offsets), side B = an index row of the sharded
-    segments pack. The same padded-sort kernel as
-    verify._pair_intersections, blocked under the cells budget.
-    Returns (inter, la, lb)."""
-    from semhash_spark.operators.verify import _gather_rows
-
-    lens_b = segt[3]
-    n = len(pos_b)
+    segments pack — the padded-sort kernel of
+    ``verify._padded_intersections``. Returns (inter, la, lb)."""
     la = q_lens[qrow]
-    lb = np.asarray(lens_b[pos_b])
-    inter = np.zeros(n, dtype=np.int64)
-    if n == 0:
-        return inter, la, lb
-    tot = la + lb
-    wmax = int(tot.max()) if n else 0
-    if wmax == 0:
-        return inter, la, lb
-
-    def block(sel):
-        ns = len(sel)
-        las, lbs = la[sel], lb[sel]
-        w = int((las + lbs).max())
-        m = np.full((ns, w), _INT64_MAX, dtype=np.int64)
-        rows_a = np.repeat(np.arange(ns), las)
-        src_a = np.repeat(q_offs[qrow[sel]], las) + _ramp(las)
-        m[rows_a, _ramp(las)] = q_flat[src_a]
-        rows_b = np.repeat(np.arange(ns), lbs)
-        cols_b = _ramp(lbs) + np.repeat(las, lbs)
-        m[rows_b, cols_b] = _gather_rows(segt, pos_b[sel], lbs)
-        m.sort(axis=1)
-        eq = m[:, 1:] == m[:, :-1]
-        valid = np.arange(1, w)[None, :] < (las + lbs)[:, None]
-        return (eq & valid).sum(axis=1)
-
-    if n * wmax <= _CELLS_BUDGET:
-        inter[:] = block(np.arange(n))
-        return inter, la, lb
-    order = np.argsort(tot, kind="stable")
-    start = 0
-    while start < n:
-        width = int(tot[order[start]])
-        rows = max(1, _CELLS_BUDGET // max(width, 1))
-        end = min(start + rows, n)
-        width_end = int(tot[order[end - 1]])
-        if width_end > width:
-            rows = max(1, _CELLS_BUDGET // width_end)
-            end = min(start + rows, n)
-        blk = order[start:end]
-        inter[blk] = block(blk)
-        start = end
+    lb = np.asarray(segt[3][pos_b])
+    inter = _padded_intersections(
+        la, lb,
+        lambda sel: q_flat[np.repeat(q_offs[qrow[sel]], la[sel]) + _ramp(la[sel])],
+        lambda sel: _gather_rows(segt, pos_b[sel], lb[sel]),
+    )
     return inter, la, lb
 
 
@@ -227,7 +171,8 @@ def cross_match_blob(
     no semantic matching, mirroring ``cross_exact_split``. exact=false
     rows: every (query, index) pair at Jaccard >= threshold reachable
     through the thinned band buckets — the relational plan's ``hits``
-    relation, scores bit-identical.
+    relation, scores bit-identical. The frame reads the fit's blobs;
+    the caller detaches it (``verify.detach``).
     """
     from semhash_spark.operators.dedup import add_features
     from semhash_spark.operators.ids import exact_key
@@ -332,11 +277,7 @@ def cross_match_blob(
                         )
                         cq, ci = cq[first], ci[first]
                         # verify: exact float64 Jaccard
-                        from semhash_spark.operators.verify import (
-                            _lookup_positions,
-                        )
-
-                        pos = perm[_lookup_positions(ids_sorted, ci, "index")]
+                        pos = _lookup_rows(ids_sorted, perm, ci, "index")
                         sh_arrays = [
                             np.asarray(pdf["_sh"].iloc[i], dtype=np.int64)
                             if pdf["_sh"].iloc[i] is not None

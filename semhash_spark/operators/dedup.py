@@ -72,7 +72,7 @@ from semhash_spark.operators.lsh import (
     explode_band_array,
     verified_edges_self,
 )
-from semhash_spark.operators.verify import verify_cosine, verify_jaccard
+from semhash_spark.operators.verify import detach, verify_cosine, verify_jaccard
 
 _TEXT_MODES = ("minhash", "simhash", "jaccard_exact")
 
@@ -507,13 +507,12 @@ def deduplicate(
         # single-job blob path (reference-benchmark shape): exact +
         # band-probe + verify fused into one map-only pass over the
         # query side against the fitted index's mmap blobs — no
-        # index-side scan per call (operators/crossblob.py)
+        # index-side scan per call (operators/crossblob.py). The blobs
+        # are the fit's: the matches are detached, so no result frame
+        # reads them
         from semhash_spark.operators.crossblob import cross_match_blob
 
-        out = cross_match_blob(
-            query_df, cfg, index_cross_blobs, threshold, id_col
-        ).persist()
-        persisted.append(out)
+        out = detach(cross_match_blob(query_df, cfg, index_cross_blobs, threshold, id_col))
         ex_hits = out.where(F.col("exact")).select(
             F.col("query_id"), F.col("match_id").alias("exemplar_id")
         )
@@ -605,12 +604,16 @@ def deduplicate(
             cfg, *_feat_bytes(index_feats, cfg.embedding_col), query_df.sparkSession
         )
         if fits_fused:
+            # detached by the call when it writes its own blob; a fit's
+            # blob is detached here
             hits = cosine_cross_threshold_edges(
                 q_feats.select(id_col, cfg.embedding_col),
                 index_feats.select(id_col, cfg.embedding_col),
                 threshold, id_col, cfg.embedding_col,
                 ref=index_blob_ref, max_k=cfg.cosine_max_k,
-            ).persist()
+            )
+            if index_blob_ref is not None:
+                hits = detach(hits)
         else:
             def _hp_bands(frame):
                 banded = frame.withColumn(
@@ -657,7 +660,7 @@ def deduplicate(
                 .drop("_fa", "_fb")
             )
         hits = scored.where(F.col("score") >= threshold).persist()
-    persisted.append(hits)
+        persisted.append(hits)
     return _cross_result(kept, exact_dups, hits, cfg, threshold, id_col, persisted)
 
 

@@ -339,7 +339,7 @@ def candidate_pairs_self(
     * pairs-only (``pack=None``; the simhash and cosine-LSH callers):
       the emitted (a, b) pairs, then ``distinct`` collapses the
       repeats of a pair that shares several bands.
-    * verified (``pack`` = a ``verify.pack_set_blob`` ref of the
+    * verified (``pack`` = a ``verify.write_blob`` ref of the
       call's (id, shingles) table; ``verified_edges_self`` owns the
       blob around this plan): every task mmaps the pack
       (``load_feats_segments``) and scores each emitted pair in
@@ -432,34 +432,23 @@ def verified_edges_self(
 ) -> DataFrame | None:
     """The distinct verified edges (a, b, score >= ``threshold``) of a
     band table, computed now: writes the (id, shingles) blob of
-    ``sets_df`` (``verify.pack_set_blob``), runs the verified
-    ``candidate_pairs_self`` and removes the blob, so the returned
-    frame never reads it. Like the connected-components driver path,
-    up to ``DRIVER_CC_CAP`` edges come back as a driver-held frame
-    (no cache, nothing to release, valid however long it lives); a
-    larger edge set stays on the executors as an eager local
-    checkpoint, freed when the frame is garbage-collected. None when
-    the blob cannot serve the call (no transport, no rows, above
-    ``VERIFY_BROADCAST_MAX_BYTES``): the caller keeps the candidates ->
-    join-verify plan."""
-    from semhash_spark.operators.components import DRIVER_CC_CAP
-    from semhash_spark.operators.verify import drop_blob, pack_set_blob
+    ``sets_df`` (``verify.write_blob``), runs the verified
+    ``candidate_pairs_self`` and detaches its edges before the blob
+    is dropped (``verify.detach``: a driver-held frame up to
+    ``DRIVER_CC_CAP`` edges, an eager local checkpoint above), so the
+    returned frame never reads it. None when the blob cannot serve
+    the call (no transport, or above ``VERIFY_BROADCAST_MAX_BYTES``):
+    the caller keeps the candidates -> join-verify plan."""
+    from semhash_spark.operators import verify
 
-    ref = pack_set_blob(sets_df, id_col, "shingles", name_prefix)
+    if not verify.blob_transport_available(sets_df.sparkSession):
+        return None
+    ref = verify.write_blob(sets_df.select(id_col, "shingles"), id_col, "shingles",
+                            name_prefix, max_bytes=verify.VERIFY_BROADCAST_MAX_BYTES)
     if ref is None:
         return None
-    try:
-        edges = candidate_pairs_self(
-            bands_df, bucket_cap, id_col, pack=ref, metric=metric, threshold=threshold
-        )
-        # Arrow both ways: a pandas round trip cost ~100 MB more peak
-        # PSS on the 3,000-file benchmark (local[2], 4-core host)
-        probe = edges.limit(DRIVER_CC_CAP + 1).toArrow()
-        if probe.num_rows > DRIVER_CC_CAP:
-            return edges.localCheckpoint(eager=True)
-        return edges.sparkSession.createDataFrame(probe)
-    finally:
-        drop_blob(ref)
+    return verify.detach(candidate_pairs_self(
+        bands_df, bucket_cap, id_col, pack=ref, metric=metric, threshold=threshold), ref)
 
 
 def thin_index_bands(

@@ -19,9 +19,10 @@ Semantics reproduced:
 Top-k plan (``topk_scores``), chosen by index size:
 
 * ``broadcast`` (default when the index fits executor memory): the
-  index (id, embedding) table is materialized executor-side
-  (distributed parquet write + pack-once-per-executor mmap,
-  operators/verify.materialize_feats) and each query partition
+  index (id, embedding) table becomes an executor-side blob
+  (``verify.write_blob``: a distributed parquet write, packed per host
+  into the f64 normalized transposed matrix,
+  ``verify.load_feats_rows(ref, "topk")``) and each query partition
   computes exact cosine top-k with one BLAS matmul + 2-D
   argpartition inside ``mapInPandas`` (``_topk_chunks``) — no pair
   shuffle, no window, output is |Q| x k rows only. This is the plan a
@@ -29,7 +30,10 @@ Top-k plan (``topk_scores``), chosen by index size:
   (100k x 64 floats = 50 MB per executor vs a |Q| x |X| pair
   shuffle). ``rank_by_avg_similarity`` on this plan averages inside
   the kernel (``_topk_avgs``, equal to Spark's ``avg`` bit for bit),
-  so only |Q| (query_id, avg_score) rows leave it.
+  so only |Q| (query_id, avg_score) rows leave it. A call that writes
+  its own blob returns the rows detached (``verify.detach``) and has
+  dropped the blob; given the blob of a fit, it returns the lazy plan
+  and the fit detaches it.
 * ``ivf`` (the automatic above-cap fallback): cell-id equi-join from
   operators/knn.py — exhaustively probed by default so results stay
   bit-exact; drop ``n_probe`` below ``n_cells`` for pruned
@@ -99,7 +103,7 @@ def _topk_buffers(n_idx: int, exclude_self: bool):
 def _topk_chunks(q_ids, qm, qz, ids_i, mnT, zn, k, exclude_self, bufs):
     """Exact top-k of one normalized query batch (``verify.normalized_batch``)
     against the normalized TRANSPOSED index
-    (``verify.load_feats_matrix_normalized_T``), in row chunks.
+    (``verify.load_feats_rows(ref, "topk")``), in row chunks.
 
     Yields ``(lo, hi, sorted_i, sorted_s, valid, counts)`` per chunk
     with any ranked neighbor: each row's candidates ordered by (score
@@ -163,27 +167,31 @@ def _topk_broadcast(
     ref: dict | None = None,
     avg: bool = False,
 ) -> DataFrame:
-    """Index matrix reaches the executors via ``materialize_feats``
-    (distributed parquet write + per-worker mmap'd pack — NOT
+    """Index matrix reaches the executors as a blob (``write_blob``:
+    distributed parquet write + per-host mmap'd pack — NOT
     ``sc.broadcast``, whose ~100 MB pickle re-streams per task,
     measured ~10 s/task at local[32]); per-batch top-k is fully
-    vectorized (``_topk_chunks``). ``ref``: the index blob if one is
-    already written (a fitted ``SparkSemHash`` keeps one per fit).
+    vectorized (``_topk_chunks``). ``ref``: the index blob if its
+    owner (a fitted ``SparkSemHash``) already wrote one — the lazy
+    frame is returned for the owner to detach; without it the call
+    writes its own blob and returns the rows detached.
     ``avg=True`` emits each query's (query_id, avg_score) instead of
     its k neighbor rows."""
     from semhash_spark.operators.verify import (
-        load_feats_matrix_normalized_T,
-        materialize_feats,
+        detach,
+        load_feats_rows,
         normalized_batch,
+        write_blob,
     )
 
-    if ref is None:
-        ref = materialize_feats(index_feats, id_col, emb_col, "topk")
+    own = None if ref is not None else write_blob(
+        index_feats.select(id_col, emb_col), id_col, emb_col, "topk")
+    ref = ref or own
 
     def compute(batches):
         from semhash_spark.operators.verify import _ramp
 
-        ids_i, mnT, nz = load_feats_matrix_normalized_T(ref)
+        ids_i, mnT, nz = load_feats_rows(ref, "topk")
         zn = ~nz
         bufs = _topk_buffers(len(ids_i), exclude_self)
         for pdf in batches:
@@ -211,7 +219,10 @@ def _topk_broadcast(
         "query_id long, avg_score double" if avg
         else "query_id long, index_id long, score double, rk long"
     )
-    return query_feats.select(id_col, emb_col).mapInPandas(compute, schema)
+    out = query_feats.select(id_col, emb_col).mapInPandas(compute, schema)
+    # a query's k rows stay in one partition in rank order, so a Spark
+    # avg over them equals the kernel's (``_topk_avgs``)
+    return detach(out, own, in_order=not avg) if own else out
 
 
 def _auto_strategy(
@@ -306,19 +317,19 @@ def rank_by_avg_similarity(
 
     Mirrors reference :476-480 (mean over top-k sims, stable sort).
     On the broadcast plan the kernel emits each query's average
-    (``_topk_avgs``, equal to the ``groupBy`` average bit for bit);
-    the small average frame then passes one hash exchange, so the
-    sort's range sampling reads shuffle output instead of re-running
-    the scan. The IVF plan averages its top-k rows with a ``groupBy``.
-    ``ref``: the index blob if one is already written (a fitted
-    ``SparkSemHash`` keeps one per fit); ``index_size`` as in
+    (``_topk_avgs``, equal to the ``groupBy`` average bit for bit).
+    With its own blob the averages are detached before they are
+    sorted, so the sort reads driver-held rows; with a fit's blob
+    (``ref``) the fit detaches the ranking, whose row limit plans the
+    sort as one ordered take over a single scan. The IVF plan averages
+    its top-k rows with a ``groupBy``. ``index_size`` as in
     ``topk_scores``.
     """
     strategy, index_size = _auto_strategy(index_feats, emb_col, index_size)
     if strategy == "broadcast":
         avgs = _topk_broadcast(query_feats, index_feats, k, exclude_self,
                                id_col, emb_col, ref=ref, avg=True)
-        return order_ranking(avgs.repartition("query_id"))
+        return order_ranking(avgs)
     tk = topk_scores(query_feats, index_feats, k, exclude_self, id_col, emb_col,
                      strategy="ivf", index_size=index_size)
     return order_ranking(tk.groupBy("query_id").agg(F.avg("score").alias("avg_score")))
@@ -336,8 +347,10 @@ def cosine_self_scan(
 ) -> DataFrame:
     """One pass over a fitted (id, embedding) table that serves both
     self-dedup and the self ranking, against the table's one blob
-    ``ref`` (both pack kinds of it: the f32 tiles of the threshold scan
-    and the f64 matrix of the top-k).
+    ``ref`` (two packs finalized from its one decode: the f32 tiles of
+    the threshold scan and the f64 matrix of the top-k). The frame
+    reads the blob; its owner, the fit, detaches it
+    (``verify.detach``) once per threshold.
 
     Rows ``(a, b, score)`` with ``a < b`` are the >= ``threshold``
     edges of ``verify.cosine_threshold_edges`` (the same kernel and
@@ -348,8 +361,7 @@ def cosine_self_scan(
     get no average row."""
     from semhash_spark.operators.verify import (
         _chunked_threshold,
-        load_feats_matrix_blocked,
-        load_feats_matrix_normalized_T,
+        load_feats_rows,
         normalized_batch,
         scan_rows,
     )
@@ -357,8 +369,8 @@ def cosine_self_scan(
     thr = float(threshold)
 
     def scan(batches):
-        ids_b, matn, nz_b, blocks = load_feats_matrix_blocked(ref)
-        ids_t, mnT, nz_t = load_feats_matrix_normalized_T(ref)
+        ids_b, matn, nz_b, blocks = load_feats_rows(ref, "scan")
+        ids_t, mnT, nz_t = load_feats_rows(ref, "topk")
         zn = ~nz_t
         bufs = _topk_buffers(len(ids_t), True)
         for pdf in batches:

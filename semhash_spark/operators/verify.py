@@ -1,30 +1,34 @@
-"""Exact verification of candidate pairs.
+"""Exact verification of candidate pairs, and the executor-side blobs
+the verifying kernels read.
 
 The reference never needs this (its ANN returns exact cosine
 distances, semhash/index.py:59); in the LSH plan, candidates are
 probabilistic and every surviving pair is re-scored exactly.
 
-Two physical strategies for Jaccard (chosen by feature-table size):
+Set similarity (Jaccard, containment) has two physical strategies,
+chosen by feature-table size:
 
-* ``broadcast`` — the shingle table is flattened to ONE numpy blob
-  (sorted ids, concatenated hashes, offsets) and broadcast; the pair
+* ``broadcast`` — the (id, shingles) table becomes a blob; the pair
   stream ships only (a, b) longs through Arrow (~16 bytes/pair
   instead of two ~1 KB arrays/pair) and a mapInPandas kernel gathers
-  both sides from the blob and computes intersections with a single
+  both sides from the mmap'd pack and intersects them with one
   row-wise padded sort per batch. Measured ~8x faster than either
   join-based form at 576k pairs / 100k records (local[32]).
 * ``join`` — two hash joins rehydrate the arrays onto the pairs and
   JVM ``array_intersect`` scores them (|A∪B| derived as
   |A|+|B|-|A∩B|, both sides duplicate-free). This is the fallback
-  when the feature table exceeds executor memory; AQE skew-join
-  splitting handles hot hub ids from star-edged mega-buckets.
+  when the feature table exceeds executor memory or no blob can reach
+  the executors; AQE skew-join splitting handles hot hub ids from
+  star-edged mega-buckets.
 
-Cosine uses the vectorized pandas UDF (functions/vectors.py) on the
-joined pairs — embedding arrays are small (64 floats) and the numpy
-matmul dominates.
+Cosine pairs are not verified after the fact below the blob caps: the
+fused scans (``cosine_threshold_edges`` and its cross and IVF forms)
+generate and score them in one f32 gemm pass over the embedding blob
+with an exact float64 rescore of the survivors. ``verify_cosine``
+scores LSH candidates against the blob, or by a join above the caps.
 
-Integer-exact in both strategies: identical counts, identical
-float64 division — bit-identical to the DuckDB oracle.
+Integer-exact set scores in both strategies: identical counts,
+identical float64 division — bit-identical to the DuckDB oracle.
 """
 
 from __future__ import annotations
@@ -59,14 +63,13 @@ def _c(col: str | Column) -> Column:
 
 
 def blob_transport_available(spark) -> bool:
-    """True when ``materialize_feats`` CAN ship a feature blob to the
-    executors: local master (driver tempdir + addFile share a
-    filesystem) or a configured shared ``spark.semhash.blobDir``.
-    AUTO strategy choices consult this so a cluster without shared
-    storage falls back to the join/LSH strategies instead of dying in
-    materialize_feats' availability check (the explicit strategies
-    still raise with guidance — an explicit ask should not silently
-    degrade)."""
+    """True when ``write_blob`` can reach the executors: a local master
+    (executors share the driver's tempdir) or a configured shared
+    ``spark.semhash.blobDir``. AUTO strategy choices consult this so a
+    cluster without shared storage falls back to the join/LSH
+    strategies instead of dying in write_blob's check (the explicit
+    strategies still raise with guidance — an explicit ask should not
+    silently degrade)."""
     if spark.conf.get("spark.semhash.blobDir", None):
         return True
     return spark.conf.get("spark.master", "").startswith("local")
@@ -92,22 +95,38 @@ def containment_score(a: str | Column, b: str | Column) -> Column:
     return F.when(small > 0, inter / small).otherwise(F.lit(0.0))
 
 
-# worker-side mmap cache: (kind, tag) -> (pack, pack dir, blob dir),
-# one entry per distributed blob file; shared page cache across the
-# executor's python workers, survives tasks. Entries whose pack dir or
-# blob dir was removed (the call that wrote the blob is done with it)
-# are dropped at the next load: _prune_blob_cache
-_BLOB_CACHE: dict = {}
+# ------------------------------------------- executor-side feature blob
+#
+# Packing a feature table on the DRIVER (toPandas -> numpy -> shipped
+# .npy) sends gigabytes through one process in a serial stage right
+# before an otherwise-parallel kernel, and ``sc.broadcast`` is worse: a
+# ~100 MB numpy pickle re-streams PER TASK (~10 s/task measured at
+# local[32]). A blob is instead the table written as parquet IN PLACE
+# by the executors (``write_blob``: one part per task, no driver hop)
+# under ``spark.semhash.blobDir`` or the driver tempdir, where every
+# python worker reads it directly. The workers of a host decode its
+# parts in parallel into mmap'd numpy shards and one of them finalizes
+# the small global index (``_pack_sharded``); the page cache shares
+# the pack across the host's workers and tasks.
+#
+# Every blob has one owner. A call drops the blobs it writes before it
+# returns, after running the frames that read them (``detach``); a
+# fitted ``SparkSemHash`` owns its embedding and cross-dedup blobs,
+# detaches every frame it hands out, and drops them in ``release()``.
+# No returned frame reads a blob, so results outlive both.
 
-# driver-created temp blob dirs, removed at interpreter exit
-_TEMP_BLOBS: list[str] = []
+# worker-side mmap cache: (kind, final, tag) -> (pack, pack dir, blob
+# dir), one entry per pack of a blob; survives tasks. Entries whose
+# pack dir or blob dir was removed (the blob's owner dropped it) are
+# dropped at the next load: _prune_blob_cache
+_BLOB_CACHE: dict = {}
 
 
 def _pack_root(tag: str) -> str:
-    """Worker-local pack dir of a blob (outside the SparkFiles-managed
-    tree: executors re-validate fetched dirs against their source on
-    later addFile calls, and foreign files inside them fail that check
-    — "exists and does not match contents")."""
+    """The host-local dir of a blob's packs (``_pack_sharded``). It is
+    kept apart from the blob, which may sit on shared storage
+    (``spark.semhash.blobDir``) that every host reads, while each host
+    packs for its own workers."""
     import os
     import tempfile
 
@@ -117,10 +136,10 @@ def _pack_root(tag: str) -> str:
 def _prune_blob_cache() -> None:
     """Drop the cached packs of removed blobs. Their mmaps would
     otherwise pin the deleted files' pages for the worker's lifetime
-    (each call makes a new tag, so the cache only grows). A blob
-    source gone while its pack dir stays (a shared ``blobDir`` whose
-    packs live on worker-local disk the driver cannot reach) also
-    removes the pack dir here."""
+    (each blob has a new tag, so the cache only grows). A blob gone
+    while its pack dir stays (a shared ``blobDir`` whose packs live on
+    worker-local disk the driver cannot reach) also removes the pack
+    dir here."""
     import os
     import shutil
 
@@ -129,115 +148,6 @@ def _prune_blob_cache() -> None:
             continue
         shutil.rmtree(root, ignore_errors=True)
         del _BLOB_CACHE[key]
-
-
-def _cache_pack(ref: dict, key, value):
-    """Cache a worker-side pack with the dirs it depends on."""
-    _BLOB_CACHE[key] = (value, _pack_root(ref["tag"]), _blob_root(ref))
-    return value
-
-
-def _cleanup_temp_blobs() -> None:
-    import os
-    import shutil
-
-    for p in _TEMP_BLOBS:
-        shutil.rmtree(p, ignore_errors=True)
-        shutil.rmtree(_pack_root(os.path.basename(p)), ignore_errors=True)
-
-
-import atexit  # noqa: E402
-
-atexit.register(_cleanup_temp_blobs)
-
-
-# ------------------------------------------- executor-side feature blob
-#
-# The round-1 broadcast paths packed the feature table on the DRIVER
-# (toPandas -> numpy -> addFile'd .npy): gigabytes through one
-# process and a serial stage (Amdahl) right before an otherwise-
-# parallel kernel. (sc.broadcast is even worse: a ~100 MB
-# incompressible numpy pickle re-streams PER TASK, ~10 s/task
-# measured at local[32].) materialize_feats instead WRITES THE TABLE
-# AS PARQUET (distributed write, no driver hop) and ships the
-# directory via SparkFiles; the first python worker per executor
-# packs the table into mmap'd numpy (pack-once, see
-# _pack_once_per_executor) and every other worker shares the pack.
-# On a multi-node cluster pass ``blob_dir`` on shared storage (NFS /
-# fuse-mounted object store) and the addFile hop is skipped entirely.
-
-
-def materialize_feats(
-    feats: DataFrame,
-    id_col: str,
-    payload_col: str,
-    name_prefix: str,
-    blob_dir: str | None = None,
-    write_fn=None,
-) -> dict:
-    """Write (id, payload) as parquet reachable by every executor;
-    returns a ref dict for ``load_feats`` inside the UDF closure.
-
-    Blob transport by deployment mode:
-
-    * ``blob_dir`` given — parquet written there directly; must be
-      shared storage (NFS / fuse-mounted object store) on a real
-      cluster. Also settable session-wide via
-      ``spark.semhash.blobDir`` (spark conf), so jobs need no code
-      change between local and cluster runs.
-    * ``blob_dir`` absent + local master — driver tempdir + addFile
-      (executors share the driver's filesystem in local mode).
-    * ``blob_dir`` absent + NON-local master — raise: the tempdir
-      default would surface as a confusing executor
-      ``FileNotFoundError`` mid-stage (addFile ships FILES, but the
-      pack protocol needs a shared scratch root). Failing at plan
-      time with the fix in the message is the cluster-correct
-      default (VERDICT r2 #5).
-    """
-    import os
-    import tempfile
-    import uuid
-
-    spark = feats.sparkSession
-    if blob_dir is None:
-        conf_dir = spark.conf.get("spark.semhash.blobDir", None)
-        if conf_dir:
-            blob_dir = conf_dir
-        else:
-            master = spark.conf.get("spark.master", "")
-            if not master.startswith("local"):
-                raise RuntimeError(
-                    f"materialize_feats: master {master!r} is not local and no "
-                    "shared blob_dir was given; the tempdir+addFile default only "
-                    "works when executors share the driver's filesystem. Pass "
-                    "blob_dir= on shared storage (NFS / object-store mount) or "
-                    "set spark.semhash.blobDir in the session conf."
-                )
-    tag = f"{name_prefix}_{uuid.uuid4().hex[:12]}"
-    shipped = blob_dir is None
-    base = tempfile.gettempdir() if blob_dir is None else blob_dir
-    path = os.path.join(base, tag)
-    # scratch blob, read back immediately by the workers: hash/float
-    # payloads are high-entropy so codecs only burn CPU (measured:
-    # uncompressed 0.5-0.6 s vs snappy 0.75-2.4 s for the 51 MB
-    # 100k x 128-float blob, ~same bytes on disk). ``write_fn``
-    # overrides the projection/layout (the cross-dedup band blob
-    # writes range-sorted multi-column parts).
-    if write_fn is not None:
-        write_fn(feats, path)
-    else:
-        feats.select(id_col, payload_col).write.option(
-            "compression", "uncompressed"
-        ).parquet(path)
-    if shipped:
-        feats.sparkSession.sparkContext.addFile(path, recursive=True)
-        _TEMP_BLOBS.append(path)
-    return {
-        "tag": tag,
-        "path": None if shipped else path,
-        "id_col": id_col,
-        "payload_col": payload_col,
-    }
 
 
 def _dir_bytes(path: str) -> int:
@@ -253,17 +163,18 @@ def _dir_bytes(path: str) -> int:
     return total
 
 
-def _capped_part_writer(path: str, max_bytes: int):
+def _capped_part_writer(path: str, max_bytes: int | None):
     """``mapInArrow`` function writing each task's rows as one parquet
     part under ``path``; yields the task's (rows, bytes) written.
 
-    Writing stops once the dir holds more than ``max_bytes``: the task
-    that sees it leaves an ``_OVER_CAP`` marker, and every task checks
-    the marker between batches and drains its input without writing.
-    A blob that cannot fit so costs at most ``max_bytes`` plus one
-    batch per concurrent task, not a write of the whole table. Parts
-    are named by partition and renamed into place when complete, so a
-    retried task replaces its part instead of duplicating rows."""
+    With ``max_bytes``, writing stops once the dir holds more than
+    that: the task that sees it leaves an ``_OVER_CAP`` marker, and
+    every task checks the marker between batches and drains its input
+    without writing. A blob that cannot fit so costs at most
+    ``max_bytes`` plus one batch per concurrent task, not a write of
+    the whole table. Parts are named by partition and renamed into
+    place when complete, so a retried task replaces its part instead
+    of duplicating rows, and part order is partition order."""
 
     def write(batches):
         import os
@@ -281,10 +192,12 @@ def _capped_part_writer(path: str, max_bytes: int):
             if rb.num_rows == 0 or os.path.exists(over):
                 continue
             if writer is None:
+                # scratch read back at once: hash/float payloads are
+                # high-entropy, so a codec only burns CPU
                 writer = pq.ParquetWriter(tmp, rb.schema, compression="none")
             writer.write_batch(rb)
             rows += rb.num_rows
-            if _dir_bytes(path) > max_bytes:
+            if max_bytes is not None and _dir_bytes(path) > max_bytes:
                 open(over, "a").close()
         nbytes = 0
         if writer is not None:
@@ -298,92 +211,113 @@ def _capped_part_writer(path: str, max_bytes: int):
     return write
 
 
-def pack_set_blob(
-    feats: DataFrame, id_col: str, feat_col: str, name_prefix: str
+def write_blob(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    name_prefix: str,
+    max_bytes: int | None = None,
 ) -> dict | None:
-    """Write the (id, array<long>) blob that in-generator verification
-    (``lsh.candidate_pairs_self(pack=...)``) mmaps and return its ref,
-    or None when the caller must keep the candidates -> join-verify
-    plan: no blob transport (``blob_transport_available``), no rows,
-    or a blob above ``VERIFY_BROADCAST_MAX_BYTES``. The fit check reads
-    the bytes being written — no separate size aggregate job — and
-    stops the write once they pass the cap (``_capped_part_writer``).
+    """Write ``df`` (projected and ordered by the caller; one part per
+    partition) as a blob the executors read in place; return its ref:
+    ``tag``, ``path`` and the ``id_col`` / ``payload_col`` the loaders
+    read. The caller owns the blob.
 
-    The blob is read in place, not addFile'd (an addFile'd blob removed
-    while the session lives makes every later task fail re-fetching
-    it): the caller removes it with ``drop_blob`` once the plans that
-    read it have run."""
+    ``max_bytes``: the size gate of callers with a fallback plan. A blob
+    above it is removed after a bounded write and None is returned; the
+    check reads the bytes being written, so no size job runs.
+
+    Raises on a non-local master without ``spark.semhash.blobDir``: the
+    driver tempdir would surface as a confusing executor
+    ``FileNotFoundError`` mid-stage, so this fails at plan time with the
+    fix in the message."""
     import os
     import tempfile
+    import uuid
 
-    spark = feats.sparkSession
+    spark = df.sparkSession
     if not blob_transport_available(spark):
-        return None
-    blob_dir = spark.conf.get("spark.semhash.blobDir", None) or tempfile.gettempdir()
-    written = []
-
-    def write(df, path):
-        os.makedirs(path)
-        write_fn = _capped_part_writer(path, VERIFY_BROADCAST_MAX_BYTES)
-        written.extend(df.select(id_col, feat_col).mapInArrow(
-            write_fn, "rows long, bytes long").collect())
-
-    ref = materialize_feats(feats, id_col, feat_col, name_prefix, blob_dir=blob_dir,
-                            write_fn=write)
-    rows = sum(r.rows for r in written)
-    nbytes = sum(r.bytes for r in written)
-    if rows == 0 or nbytes > VERIFY_BROADCAST_MAX_BYTES or os.path.exists(
-        os.path.join(ref["path"], "_OVER_CAP")
+        raise RuntimeError(
+            f"master {spark.conf.get('spark.master', '')!r} is not local and "
+            "spark.semhash.blobDir is not set; executor-side blobs default to "
+            "the driver's tempdir, which only local executors share. Set "
+            "spark.semhash.blobDir to shared storage (NFS / object-store mount) "
+            "in the session conf."
+        )
+    base = spark.conf.get("spark.semhash.blobDir", None) or tempfile.gettempdir()
+    tag = f"{name_prefix}_{uuid.uuid4().hex[:12]}"
+    path = os.path.join(base, tag)
+    os.makedirs(path)
+    written = df.mapInArrow(
+        _capped_part_writer(path, max_bytes), "rows long, bytes long").collect()
+    ref = {"tag": tag, "path": path, "id_col": id_col, "payload_col": payload_col}
+    if max_bytes is not None and (
+        sum(r.bytes for r in written) > max_bytes
+        or os.path.exists(os.path.join(path, "_OVER_CAP"))
     ):
         drop_blob(ref)
         return None
     return ref
 
 
-def drop_blob(ref: dict) -> None:
-    """Remove a ``pack_set_blob`` blob and the workers' pack dir
-    (``semhash_packed/<tag>``); the workers' caches drop the pack at
-    their next load (``_prune_blob_cache``)."""
+def drop_blob(ref: dict | None) -> None:
+    """Remove a blob and its packs (``semhash_packed/<tag>``); the
+    workers' caches drop the packs at their next load
+    (``_prune_blob_cache``). None is a no-op."""
     import shutil
 
-    shutil.rmtree(ref["path"], ignore_errors=True)
-    shutil.rmtree(_pack_root(ref["tag"]), ignore_errors=True)
+    if ref is not None:
+        shutil.rmtree(ref["path"], ignore_errors=True)
+        shutil.rmtree(_pack_root(ref["tag"]), ignore_errors=True)
 
 
-def _blob_root(ref: dict) -> str:
-    """The blob's parquet dir as this process sees it."""
-    if ref["path"] is not None:
-        return ref["path"]
-    from pyspark import SparkFiles
+def detach(frame: DataFrame, own: dict | None = None, in_order: bool = False) -> DataFrame:
+    """Run ``frame``, a plan that reads blobs, now and return a frame
+    that reads none; then drop ``own``, the blob the caller wrote for
+    this frame alone (None when the blob's owner outlives the call).
+    Like the connected-components driver path, up to ``DRIVER_CC_CAP``
+    rows come back as a driver-held frame (no cache, nothing to
+    release); more stay on the executors as an eager local checkpoint,
+    freed when the frame is garbage-collected. ``in_order`` makes the
+    driver-held frame one partition in collected order, where each
+    task's rows stay contiguous and in order, for consumers whose
+    aggregates depend on row order (a float ``avg`` of a query's top-k
+    rows then sums as it does over ``frame``); otherwise its rows are
+    spread over the default parallelism, as downstream stages want."""
+    from semhash_spark.operators.components import DRIVER_CC_CAP
 
-    return SparkFiles.get(ref["tag"])
+    try:
+        # Arrow both ways: a pandas round trip cost ~100 MB more peak
+        # PSS on the 3,000-file benchmark (local[2], 4-core host)
+        probe = frame.limit(DRIVER_CC_CAP + 1).toArrow()
+        if probe.num_rows > DRIVER_CC_CAP:
+            return frame.localCheckpoint(eager=True)
+        out = frame.sparkSession.createDataFrame(probe)
+        return out.coalesce(1) if in_order else out
+    finally:
+        drop_blob(own)
 
 
 def _blob_files(ref: dict) -> list[str]:
+    """The blob's parquet parts in partition order (none for an empty
+    table). A removed blob raises: reading it as empty would turn a
+    lifetime bug into silently missing results."""
     import glob
     import os
 
-    root = _blob_root(ref)
-    files = sorted(glob.glob(os.path.join(root, "*.parquet")))
-    if not files:
-        raise FileNotFoundError(f"no parquet parts under {root}")
-    return files
-
-
-def _read_id_payload(ref: dict):
-    """(ids int64, flat values np, per-row lens int64) from the blob.
-
-    Uses ``flatten()`` + ``value_lengths()`` (slice- and null-safe,
-    unlike raw ``.values``/``.offsets``); NULL payload rows read as
-    length 0.
-    """
-    return _read_id_payload_files(
-        _blob_files(ref), ref["id_col"], ref["payload_col"]
-    )
+    if not os.path.isdir(ref["path"]):
+        raise FileNotFoundError(f"blob {ref['path']} was dropped by its owner")
+    return sorted(glob.glob(os.path.join(ref["path"], "*.parquet")))
 
 
 def _read_id_payload_files(files: list[str], id_col: str, payload_col: str):
-    """(ids, flat values, lens, null_rows) of a parquet file list."""
+    """(ids int64, flat values, per-row lens int64, null_rows) of a
+    parquet file list.
+
+    Uses ``flatten()`` + ``value_lengths()`` (slice- and null-safe,
+    unlike raw ``.values``/``.offsets``); NULL payload rows read as
+    length 0 and are flagged in ``null_rows`` (None when there are
+    none)."""
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(files, columns=[id_col, payload_col])
@@ -473,104 +407,34 @@ def _release_pack_lock(lock: str) -> None:
             pass
 
 
-def _pack_once_per_executor(ref: dict, kind: str, builder):
-    """Executor-level pack cache: the FIRST python worker to need the
-    blob packs it and writes .npy files next to the fetched parquet
-    (atomic rename + done marker); every other worker — and every
-    later task — mmaps the shared files. Without this, each of N
-    concurrent workers would decode+pack the parquet independently
-    (measured 6x slowdown of the verify stage at local[32]); with it
-    the pack cost is paid once per executor and the OS page cache is
-    shared, matching round 1's driver-shipped .npy behavior minus
-    its serial driver pack.
+def _pack_sharded(ref: dict, kind: str, part_builder, finalize_builder,
+                  final: str | None = None):
+    """The executor pack of a blob: every python worker that needs it
+    claims unpacked parquet parts (one lock file per part), decodes
+    and saves its shards CONCURRENTLY with the other workers, then one
+    worker finalizes the small global index arrays; every later task
+    mmaps the saved files. Decode is the pack's dominant cost
+    (measured 8-20 s for a 535 MB shingle blob — disk + Arrow
+    assembly) and it is O(blob) while everything downstream is
+    O(pairs): with W workers the wall cost is ~decode/W + finalize,
+    where a whole-blob pack on one worker serialized it (the largest
+    fixed cost in the N->4N scaling profile; 6x slower verify at
+    local[32] when each worker packed for itself).
 
-    ``builder`` returns an ordered dict of numpy arrays to persist.
-    """
+    ``part_builder(path) -> [arrays]`` packs one parquet part into the
+    ``kind`` shards; ``finalize_builder(shard_arrays) -> [arrays]``
+    builds the ``final`` pack (default: ``kind``) from them. Several
+    finals can share one kind's shards, which are then decoded once.
+    Locks whose owner died or that outlived ``_LOCK_STALE_SECS`` are
+    reclaimed; a builder that raises releases its lock. Returns
+    (final_arrays, shard_arrays) — all mmap'd, shared across the
+    host's workers via the OS page cache."""
     import os
     import time as _time
 
+    final = final or kind
     _prune_blob_cache()
-    key = (kind, ref["tag"])
-    if key in _BLOB_CACHE:
-        return _BLOB_CACHE[key][0]
-    root = _pack_root(ref["tag"])
-    os.makedirs(root, exist_ok=True)
-    base = os.path.join(root, f"_packed_{kind}")
-    done = base + ".done"
-    lock = base + ".lock"
-
-    def _mmap():
-        names = sorted(
-            f for f in os.listdir(root)
-            if f.startswith(f"_packed_{kind}__") and f.endswith(".npy")
-        )
-        return tuple(
-            np.load(os.path.join(root, f), mmap_mode="r") for f in names
-        )
-
-    # win-or-wait loop: a waiter re-attempts acquisition each poll so
-    # a stale lock (dead owner) is taken over instead of timing out.
-    # tmp names are pid-unique: even if two workers ever build the
-    # same pack concurrently (post-reclaim race), each writes complete
-    # files and the atomic renames commute.
-    pid = os.getpid()
-    deadline = _time.time() + 600
-    while not os.path.exists(done):
-        if _acquire_pack_lock(lock, done):
-            try:
-                arrays = builder()
-                for i, arr in enumerate(arrays):
-                    path = os.path.join(root, f"_packed_{kind}__{i:02d}.npy")
-                    np.save(f"{path}.tmp{pid}.npy", np.ascontiguousarray(arr))
-                    os.rename(f"{path}.tmp{pid}.npy", path)
-                with open(f"{done}.tmp{pid}", "w") as fh:
-                    fh.write("ok")
-                os.rename(f"{done}.tmp{pid}", done)
-            except BaseException:
-                _release_pack_lock(lock)  # let another worker retry
-                raise
-            break
-        if _time.time() > deadline:
-            raise TimeoutError(f"pack of {base} never completed")
-        _time.sleep(0.05)
-    return _cache_pack(ref, key, _mmap())
-
-
-def _read_part_id_payload(path: str, id_col: str, payload_col: str):
-    """(ids, flat values, lens) of ONE parquet part file."""
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table([path], columns=[id_col, payload_col])
-    ids = tbl.column(id_col).to_numpy().astype(np.int64, copy=False)
-    payload = tbl.column(payload_col).combine_chunks()
-    values = payload.flatten().to_numpy(zero_copy_only=False)
-    lens = payload.value_lengths().to_numpy(zero_copy_only=False)
-    lens = np.nan_to_num(lens.astype(np.float64), nan=0.0).astype(np.int64)
-    return ids, values, lens
-
-
-def _pack_sharded(ref: dict, kind: str, part_builder, finalize_builder):
-    """Shard-PARALLEL executor pack: every python worker that needs
-    the blob claims unpacked parquet parts (one lock file per part),
-    decodes and saves its shards CONCURRENTLY with the other
-    workers, then one worker finalizes the small global index
-    arrays. Decode is the pack's dominant cost (measured 8-20 s for
-    a 535 MB shingle blob — disk + Arrow assembly) and it is O(blob)
-    while everything downstream is O(pairs): packing it serially on
-    one worker per executor was the largest fixed cost in the
-    N->4N scaling profile. With W workers the wall cost drops to
-    ~decode/W + finalize (finalize touches only the id arrays).
-
-    ``part_builder(path) -> [arrays]`` packs one parquet part;
-    ``finalize_builder(shard_arrays) -> [arrays]`` builds the global
-    index from the per-shard packs. Returns (final_arrays,
-    shard_arrays) — all mmap'd, shared across the executor's
-    workers via the OS page cache."""
-    import os
-    import time as _time
-
-    _prune_blob_cache()
-    key = (kind, ref["tag"])
+    key = (kind, final, ref["tag"])
     if key in _BLOB_CACHE:
         return _BLOB_CACHE[key][0]
     parts = _blob_files(ref)
@@ -625,16 +489,16 @@ def _pack_sharded(ref: dict, kind: str, part_builder, finalize_builder):
     for k in range(len(parts)):
         _build_or_await(shard_base[k], "shard", part_builder, parts[k])
 
-    final_base = os.path.join(root, f"_final_{kind}")
+    final_base = os.path.join(root, f"_final_{final}")
     if not os.path.exists(final_base + ".done"):
         _build_or_await(
             final_base,
             "finalize",
             lambda: finalize_builder([_mmap_group(b) for b in shard_base]),
         )
-    return _cache_pack(
-        ref, key, (_mmap_group(final_base), [_mmap_group(b) for b in shard_base])
-    )
+    pack = (_mmap_group(final_base), [_mmap_group(b) for b in shard_base])
+    _BLOB_CACHE[key] = (pack, root, ref["path"])
+    return pack
 
 
 def load_feats_segments(ref: dict):
@@ -654,19 +518,17 @@ def load_feats_segments(ref: dict):
     id_col, payload_col = ref["id_col"], ref["payload_col"]
 
     def part_builder(path):
-        ids, values, lens = _read_part_id_payload(path, id_col, payload_col)
+        ids, values, lens, _ = _read_id_payload_files([path], id_col, payload_col)
         return [ids, lens, values.astype(np.int64, copy=False)]
 
     def finalize_builder(shards):
-        ids_all = np.concatenate([s[0] for s in shards]) if shards else np.empty(0, np.int64)
-        lens_all = np.concatenate([s[1] for s in shards]) if shards else np.empty(0, np.int64)
-        row_shard = np.concatenate(
-            [np.full(len(s[0]), k, dtype=np.int64) for k, s in enumerate(shards)]
-        ) if shards else np.empty(0, np.int64)
-        row_off = np.concatenate(
-            [np.concatenate([[0], np.cumsum(s[1][:-1])]) if len(s[1]) else np.empty(0, np.int64)
-             for s in shards]
-        ).astype(np.int64) if shards else np.empty(0, np.int64)
+        shards = shards or [(np.empty(0, np.int64),) * 2]
+        ids_all = np.concatenate([s[0] for s in shards])
+        lens_all = np.concatenate([s[1] for s in shards])
+        row_shard = np.repeat(np.arange(len(shards), dtype=np.int64),
+                              [len(s[0]) for s in shards])
+        # each row's offset in its part: the exclusive prefix sum of lens
+        row_off = np.concatenate([np.cumsum(s[1]) - s[1] for s in shards]).astype(np.int64)
         order = np.argsort(ids_all, kind="stable")
         return [ids_all[order], order.astype(np.int64), row_shard, row_off, lens_all]
 
@@ -675,73 +537,6 @@ def load_feats_segments(ref: dict):
     )
     flats = [g[2] for g in shard_groups]
     return ids_sorted, perm, row_shard, row_off, row_len, flats
-
-
-def load_feats_matrix(ref: dict):
-    """Worker-side: (ids, float64 matrix, norms) pack of an
-    (id, array<float>) parquet blob — packed once per executor,
-    mmap'd by every worker. Rows stay in PARQUET ORDER (ids aligned
-    with matrix rows — consumers only need alignment, and the
-    id-order re-gather was the pack's dominant cost; see
-    load_feats_segments). NULL embedding rows are dropped
-    (NULL-cosine never pairs); raises on ragged rows."""
-
-    def build():
-        ids, values, lens, null_rows = _read_id_payload(ref)
-        if null_rows is not None:
-            keep = ~null_rows
-            ids, lens = ids[keep], lens[keep]
-            # values from flatten() already exclude null slots
-        if len(ids) == 0:
-            return (ids, np.zeros((0, 0)), np.zeros(0))
-        dim = int(lens[0])
-        if not (lens == dim).all():
-            bad = int(np.argmax(lens != dim))
-            raise ValueError(
-                f"ragged embeddings: row id={ids[bad]} has dim {lens[bad]}, "
-                f"expected {dim}"
-            )
-        mat = values.astype(np.float64, copy=False).reshape(-1, dim)
-        return (ids, mat, np.linalg.norm(mat, axis=1))
-
-    return _pack_once_per_executor(ref, "mat", build)
-
-
-def load_feats_matrix_normalized(ref: dict):
-    """Worker-side: (ids, row-normalized float64 matrix, nonzero-norm
-    mask) — cached once per executor like ``load_feats_matrix``.
-    Zero-norm rows stay all-zero (their cosine with anything is 0
-    after normalization, which the threshold kernels exploit: any
-    thr > 0 excludes them with no explicit mask pass). Normalizing
-    ONCE here turns the per-chunk ``num/den`` arithmetic of the fused
-    kernels into a single gemm — the |chunk| x |index| ``den``
-    multiply and divide passes were 2 extra 64 MB temporaries per
-    chunk, and >32 MB allocations always come from mmap (glibc clamps
-    MMAP_THRESHOLD at 32 MB), so each was a fresh page-fault storm on
-    this host (measured 16x on the gemm itself; see
-    ``_chunked_threshold``)."""
-
-    def build():
-        ids, mat, nrm = load_feats_matrix(ref)
-        nz = nrm > 0
-        matn = np.divide(mat, nrm[:, None], out=np.zeros_like(mat),
-                         where=nrm[:, None] > 0)
-        return (ids, matn, nz)
-
-    return _pack_once_per_executor(ref, "matn", build)
-
-
-def load_feats_matrix_normalized_T(ref: dict):
-    """float64 TRANSPOSED (dim x n, C-contiguous) normalized matrix,
-    cached per executor — the exact-top-k gemm B operand (same 3.6x
-    layout win as the f32 variant; top-k selection must stay float64
-    because the ORDER near the k-th boundary is the result)."""
-
-    def build():
-        ids, matn, nz = load_feats_matrix_normalized(ref)
-        return (ids, matn.T, nz)
-
-    return _pack_once_per_executor(ref, "matnt", build)
 
 
 # fused-scan block geometry: the f32 index matrix is packed as
@@ -758,43 +553,48 @@ _BLK_W = 4096
 _SCAN_ROW_STEP = 512
 
 
+def _fill_blocks(blocks: np.ndarray, matn: np.ndarray, r0: int) -> None:
+    """Write the rows of ``matn`` (normalized f64, global rows ``r0``
+    on) into their columns of the f32 tiles ``blocks``."""
+    mT = matn.T.astype(np.float32)
+    c0, end = r0, r0 + len(matn)
+    while c0 < end:
+        b = c0 // _BLK_W
+        w = min((b + 1) * _BLK_W, end) - c0
+        blocks[b][:, c0 - b * _BLK_W : c0 - b * _BLK_W + w] = mT[:, c0 - r0 : c0 - r0 + w]
+        c0 += w
+
+
 def _build_blocks(matn: np.ndarray) -> np.ndarray:
     """(n_blocks, dim, _BLK_W) float32 zero-padded column blocks of a
     row-major (n, dim) float64 normalized matrix — the fused scan's
-    gemm B operand tiles. Values match the previous
-    ``matn.T.astype(float32)`` operand exactly; padding columns are
-    all-zero (they can only pass a thr <= 0 scan and are dropped by
-    the kernel's explicit width mask)."""
+    gemm B operand tiles, ``matn.T.astype(float32)`` split by columns.
+    Padding columns are all-zero (they can only pass a thr <= 0 scan
+    and are dropped by the kernel's explicit width mask)."""
     n, dim = matn.shape
-    nb = max(1, (n + _BLK_W - 1) // _BLK_W)
-    blk = np.zeros((nb, dim, _BLK_W), dtype=np.float32)
-    mT = matn.T.astype(np.float32)
-    for b in range(nb):
-        w = min(_BLK_W, n - b * _BLK_W)
-        if w > 0:
-            blk[b, :, :w] = mT[:, b * _BLK_W : b * _BLK_W + w]
+    blk = np.zeros((max(1, (n + _BLK_W - 1) // _BLK_W), dim, _BLK_W), dtype=np.float32)
+    _fill_blocks(blk, matn, 0)
     return blk
 
 
 class _ShardRows:
-    """Lazy row provider for the fused kernels' f64 rescore: fancy
-    indexing (``rows[c]`` with an int array) reconstructs normalized
-    float64 rows on demand from the mmap'd f32 shard packs instead of
-    a materialized (n, dim) f64 matrix. Reconstruction is the exact
-    arithmetic the round-5 finalize ran over the full matrix —
-    f32 -> f64 upcast (lossless), divide by the precomputed f64 row
-    norm, zero-norm rows stay all-zero — applied to just the gathered
-    rows, so values are bit-identical while the pack neither computes
-    nor writes the 2x-blob-size f64 matrix (at 100k x 128 that was a
-    100 MB compute + 100 MB disk write per call; at the 2M-row fused
-    cap it would be 2 GB)."""
+    """Lazy row provider over the mmap'd embedding shards: fancy
+    indexing (``rows[c]`` with an int array) returns normalized f64
+    rows, ``raw(c)`` the rows as stored, upcast to f64. Shards keep the
+    blob's source dtype, so an f32 row upcasts losslessly and an f64
+    row is read exactly — the values the Arrow path ships either way —
+    and normalization is the row-wise arithmetic of a whole-matrix
+    ``np.divide(m, norms, where=norms > 0)`` applied to just the
+    gathered rows. No (n, dim) f64 matrix is ever built or written for
+    the fused scan or the id-keyed gathers (at 100k x 128 that was a
+    100 MB compute + 100 MB disk write per call)."""
 
     def __init__(self, flats, starts, nrm):
-        self._flats = flats      # list of (n_k, dim) f32 mmaps, non-empty
+        self._flats = flats      # list of (n_k, dim) mmaps, non-empty
         self._starts = starts    # int64 start row of each shard
         self._nrm = nrm          # (n,) f64 row norms, global order
 
-    def __getitem__(self, idx):
+    def raw(self, idx) -> np.ndarray:
         idx = np.asarray(idx, dtype=np.int64)
         dim = self._flats[0].shape[1] if self._flats else 0
         out = np.empty((len(idx), dim), dtype=np.float64)
@@ -803,6 +603,11 @@ class _ShardRows:
             for k in np.unique(sh):
                 m = sh == k
                 out[m] = self._flats[k][idx[m] - self._starts[k]]
+        return out
+
+    def __getitem__(self, idx):
+        idx = np.asarray(idx, dtype=np.int64)
+        out = self.raw(idx)
         # divide IN PLACE (one buffer, not a second zeros allocation —
         # gathers run inside the rescore hot loop): rows with nr <= 0
         # are all-zero raw vectors, zeroed explicitly to mirror the
@@ -815,123 +620,18 @@ class _ShardRows:
         return out
 
 
-def load_feats_matrix_blocked(ref: dict):
-    """(ids, normalized-f64 row provider, nonzero mask, f32 block
-    tiles) of an (id, array<float>) parquet blob — the fused-scan
-    pack.
+def _emb_part_builder(id_col: str, payload_col: str):
+    """Shard pack of one (id, embedding) part: (ids, (n, dim) values in
+    the source dtype). NULL embedding rows are dropped (NULL-cosine
+    never pairs or ranks); ragged rows raise."""
 
-    Sharded-PARALLEL decode (``_pack_sharded``): every python worker
-    claims parquet parts and decodes them concurrently (the round-5
-    whole-blob ``_pack_once_per_executor`` serialized the ~3 s decode
-    on one worker while 31 polled); one worker then finalizes the
-    small global arrays (ids, row norms, nz, f32 block tiles) —
-    streaming each shard through the normalize + tile fill, so the
-    full (n, dim) float64 matrix is never materialized or written
-    (it was the dominant finalize compute + disk cost; the rescore
-    only ever gathers a few rows per chunk, now served by
-    ``_ShardRows`` from the shard mmaps with identical values). Rows
-    stay in parquet part order (ids aligned with matrix rows); NULL
-    embedding rows are dropped (NULL-cosine never pairs); raises on
-    ragged rows. Row values are bit-identical to
-    ``load_feats_matrix_normalized`` (same astype/norm/divide
-    arithmetic, row-wise so the part split cannot change it)."""
-
-    id_col, payload_col = ref["id_col"], ref["payload_col"]
-
-    def part_builder(path):
-        ids, values, lens, null_rows = _read_id_payload_files(
-            [path], id_col, payload_col
-        )
+    def build(path):
+        ids, values, lens, null_rows = _read_id_payload_files([path], id_col, payload_col)
         if null_rows is not None:
             keep = ~null_rows
             ids, lens = ids[keep], lens[keep]
         if len(ids) == 0:
-            return [ids, np.zeros((0, 0), dtype=np.float32)]
-        dim = int(lens[0])
-        if not (lens == dim).all():
-            bad = int(np.argmax(lens != dim))
-            raise ValueError(
-                f"ragged embeddings: row id={ids[bad]} has dim {lens[bad]}, "
-                f"expected {dim}"
-            )
-        vals = values.astype(np.float32, copy=False).reshape(-1, dim)
-        return [ids, vals]
-
-    def finalize_builder(shards):
-        shards = [s for s in shards if len(s[0])]
-        if not shards:
-            return [
-                np.empty(0, np.int64),
-                np.zeros(0),
-                np.zeros(0, dtype=bool),
-                np.zeros((0, 0, 0), dtype=np.float32),
-            ]
-        dims = {s[1].shape[1] for s in shards}
-        if len(dims) != 1:
-            raise ValueError(f"ragged embeddings across parts: dims {sorted(dims)}")
-        dim = dims.pop()
-        ids = np.concatenate([s[0] for s in shards])
-        n = len(ids)
-        nb = max(1, (n + _BLK_W - 1) // _BLK_W)
-        blocks = np.zeros((nb, dim, _BLK_W), dtype=np.float32)
-        nrm = np.empty(n, dtype=np.float64)
-        r0 = 0
-        for s in shards:
-            a = s[1].astype(np.float64)
-            nr = np.linalg.norm(a, axis=1)
-            an = np.divide(a, nr[:, None], out=np.zeros_like(a),
-                           where=nr[:, None] > 0)
-            nrm[r0 : r0 + len(nr)] = nr
-            # fill this shard's global column range of the tiles —
-            # values identical to _build_blocks over the full matrix
-            anT = an.T.astype(np.float32)
-            c0 = r0
-            while c0 < r0 + len(nr):
-                b = c0 // _BLK_W
-                w = min((b + 1) * _BLK_W, r0 + len(nr)) - c0
-                blocks[b][:, c0 - b * _BLK_W : c0 - b * _BLK_W + w] = (
-                    anT[:, c0 - r0 : c0 - r0 + w]
-                )
-                c0 += w
-            r0 += len(nr)
-        return [ids, nrm, nrm > 0, blocks]
-
-    (ids, nrm, nz, blocks), shard_groups = _pack_sharded(
-        ref, "blk", part_builder, finalize_builder
-    )
-    flats = [g[1] for g in shard_groups if len(g[0])]
-    starts = np.concatenate(
-        ([0], np.cumsum([f.shape[0] for f in flats])[:-1])
-    ).astype(np.int64) if flats else np.zeros(1, dtype=np.int64)
-    return ids, _ShardRows(flats, starts, np.asarray(nrm)), nz, blocks
-
-
-def load_feats_rows(ref: dict):
-    """(ids_sorted, perm, row provider, row norms) for ID-KEYED
-    gathers of normalized f64 embedding rows — the IVF id-only plan's
-    executor-side feature source (guide §8: the salt shuffle carries
-    ids, the payload moves once via the blob).
-
-    Unlike ``load_feats_matrix_blocked`` this pack keeps the shards
-    in their SOURCE dtype (f32 stays f32, f64 stays f64) so gathered
-    rows upcast to exactly the values the Arrow path shipped — scores
-    are bit-identical whichever transport carried the embedding. A
-    record with id ``x`` lives at row ``perm[searchsorted(ids_sorted,
-    x)]``; ``rows[row_idx_array]`` returns normalized f64 rows and
-    ``nrm[row]`` its norm (<= 0 marks zero-norm/NULL semantics). NULL
-    embedding rows are dropped from the pack (absent ids)."""
-
-    id_col, payload_col = ref["id_col"], ref["payload_col"]
-
-    def part_builder(path):
-        ids, values, lens, null_rows = _read_id_payload_files(
-            [path], id_col, payload_col
-        )
-        if null_rows is not None:
-            keep = ~null_rows
-            ids, lens = ids[keep], lens[keep]
-        if len(ids) == 0:
-            return [ids, np.zeros((0, 0), dtype=np.float32)]
+            return [ids, np.zeros((0, 0), dtype=values.dtype)]
         dim = int(lens[0])
         if not (lens == dim).all():
             bad = int(np.argmax(lens != dim))
@@ -941,27 +641,112 @@ def load_feats_rows(ref: dict):
             )
         return [ids, values.reshape(-1, dim)]
 
-    def finalize_builder(shards):
-        shards = [s for s in shards if len(s[0])]
-        if not shards:
-            return [np.empty(0, np.int64), np.empty(0, np.int64), np.zeros(0)]
-        dims = {s[1].shape[1] for s in shards}
-        if len(dims) != 1:
-            raise ValueError(f"ragged embeddings across parts: dims {sorted(dims)}")
-        ids = np.concatenate([s[0] for s in shards])
-        nrm = np.concatenate(
-            [np.linalg.norm(s[1].astype(np.float64), axis=1) for s in shards]
-        )
-        order = np.argsort(ids, kind="stable")
-        return [ids[order], order.astype(np.int64), nrm]
+    return build
 
-    (ids_sorted, perm, nrm), shard_groups = _pack_sharded(
-        ref, "rows", part_builder, finalize_builder
+
+def _emb_shards(shards):
+    """The non-empty embedding shards; raises on ragged dims across parts."""
+    shards = [s for s in shards if len(s[0])]
+    dims = {s[1].shape[1] for s in shards}
+    if len(dims) > 1:
+        raise ValueError(f"ragged embeddings across parts: dims {sorted(dims)}")
+    return shards
+
+
+def _normalized(vals) -> tuple[np.ndarray, np.ndarray]:
+    """(row-normalized f64 rows, f64 row norms); zero-norm rows stay 0."""
+    a = np.asarray(vals).astype(np.float64)
+    nr = np.linalg.norm(a, axis=1)
+    return np.divide(a, nr[:, None], out=np.zeros_like(a), where=nr[:, None] > 0), nr
+
+
+def _final_scan(shards):
+    """Fused threshold scan pack: [ids, f64 row norms, f32 tiles]."""
+    shards = _emb_shards(shards)
+    if not shards:
+        return [np.empty(0, np.int64), np.zeros(0), np.zeros((0, 0, 0), np.float32)]
+    ids = np.concatenate([s[0] for s in shards])
+    n, dim = len(ids), shards[0][1].shape[1]
+    blocks = np.zeros((max(1, (n + _BLK_W - 1) // _BLK_W), dim, _BLK_W), np.float32)
+    nrm = np.empty(n, dtype=np.float64)
+    r0 = 0
+    for s in shards:
+        an, nr = _normalized(s[1])
+        nrm[r0 : r0 + len(nr)] = nr
+        _fill_blocks(blocks, an, r0)
+        r0 += len(nr)
+    return [ids, nrm, blocks]
+
+
+def _final_topk(shards):
+    """Exact top-k pack: [ids, f64 normalized TRANSPOSED (dim x n)
+    matrix, nonzero-norm mask]. The transposed layout is the gemm B
+    operand's 3.6x layout win; top-k stays f64 because the ORDER near
+    the k-th boundary is the result."""
+    shards = _emb_shards(shards)
+    if not shards:
+        return [np.empty(0, np.int64), np.zeros((0, 0)), np.zeros(0, dtype=bool)]
+    ids = np.concatenate([s[0] for s in shards])
+    mnT = np.empty((shards[0][1].shape[1], len(ids)), dtype=np.float64)
+    nz = np.empty(len(ids), dtype=bool)
+    r0 = 0
+    for s in shards:
+        an, nr = _normalized(s[1])
+        mnT[:, r0 : r0 + len(nr)] = an.T
+        nz[r0 : r0 + len(nr)] = nr > 0
+        r0 += len(nr)
+    return [ids, mnT, nz]
+
+
+def _final_keyed(shards):
+    """Id-keyed gather pack: [ids_sorted, perm, f64 row norms]."""
+    shards = _emb_shards(shards)
+    if not shards:
+        return [np.empty(0, np.int64), np.empty(0, np.int64), np.zeros(0)]
+    ids = np.concatenate([s[0] for s in shards])
+    nrm = np.concatenate(
+        [np.linalg.norm(np.asarray(s[1]).astype(np.float64), axis=1) for s in shards])
+    order = np.argsort(ids, kind="stable")
+    return [ids[order], order.astype(np.int64), nrm]
+
+
+_EMB_FINALS = {"scan": _final_scan, "topk": _final_topk, "keyed": _final_keyed}
+
+
+def load_feats_rows(ref: dict, kind: str):
+    """Worker-side pack of an (id, array<float|double>) blob for the
+    consumer ``kind``. The parts decode once (``_pack_sharded``) into
+    shards that keep the source dtype — every kind of one blob shares
+    them — and each kind finalizes its own small pack:
+
+    * ``"scan"`` -> ``(ids, rows, nz, blocks)``: the fused threshold
+      scan's f32 tiles (``_build_blocks`` values) with ids in parquet
+      part order;
+    * ``"topk"`` -> ``(ids, mnT, nz)``: the exact top-k's f64
+      normalized transposed matrix, ids in part order;
+    * ``"keyed"`` -> ``(ids_sorted, perm, rows, nrm)``: id-keyed
+      gathers (the IVF id-only plan, ``verify_cosine``): id ``x`` lives
+      at row ``perm[searchsorted(ids_sorted, x)]``.
+
+    ``rows`` is a ``_ShardRows`` over the shards, so the f64 rescore of
+    the fused kernels reads exact source values; ``nrm`` are f64 row
+    norms and ``nz`` = norm > 0, in part order. NULL embedding rows are
+    dropped (their ids are absent); ragged rows raise."""
+    final, groups = _pack_sharded(
+        ref, "emb", _emb_part_builder(ref["id_col"], ref["payload_col"]),
+        _EMB_FINALS[kind], kind,
     )
-    flats = [g[1] for g in shard_groups if len(g[0])]
+    if kind == "topk":
+        return final
+    flats = [g[1] for g in groups if len(g[0])]
     starts = np.concatenate(
         ([0], np.cumsum([f.shape[0] for f in flats])[:-1])
     ).astype(np.int64) if flats else np.zeros(1, dtype=np.int64)
+    if kind == "scan":
+        ids, nrm, blocks = final
+        nrm = np.asarray(nrm)
+        return ids, _ShardRows(flats, starts, nrm), nrm > 0, blocks
+    ids_sorted, perm, nrm = final
     nrm = np.asarray(nrm)
     return np.asarray(ids_sorted), np.asarray(perm), _ShardRows(flats, starts, nrm), nrm
 
@@ -992,27 +777,31 @@ def cosine_fused_fits(cfg, n_rows: int, n_bytes: int, spark) -> bool:
     )
 
 
-def _lookup_positions(ids_sorted: np.ndarray, wanted: np.ndarray, side: str):
-    """searchsorted + MEMBERSHIP CHECK: raises instead of silently
+def _locate_rows(ids_sorted: np.ndarray, perm: np.ndarray, x: np.ndarray):
+    """(pack rows, found mask) of the ids ``x`` in an id-keyed pack;
+    rows of absent ids are arbitrary and must be masked out."""
+    if len(ids_sorted) == 0:
+        return np.zeros(len(x), np.int64), np.zeros(len(x), bool)
+    p = np.minimum(np.searchsorted(ids_sorted, x), len(ids_sorted) - 1)
+    return perm[p], ids_sorted[p] == x
+
+
+def _lookup_rows(ids_sorted: np.ndarray, perm: np.ndarray, wanted: np.ndarray,
+                 side: str) -> np.ndarray:
+    """``_locate_rows`` + MEMBERSHIP CHECK: raises instead of silently
     scoring a neighboring record's features when a pair id is absent
     from the feature table (ADVICE r1)."""
-    pos = np.searchsorted(ids_sorted, wanted)
-    np.clip(pos, 0, max(len(ids_sorted) - 1, 0), out=pos)
-    if len(ids_sorted) == 0 or not (ids_sorted[pos] == wanted).all():
-        missing = (
-            wanted[ids_sorted[pos] != wanted][:5]
-            if len(ids_sorted)
-            else wanted[:5]
-        )
+    rows, ok = _locate_rows(ids_sorted, perm, wanted)
+    if not ok.all():
         raise KeyError(
             f"pair column '{side}' contains ids absent from the feature "
-            f"table (sample: {missing.tolist()}); every pair id must "
+            f"table (sample: {wanted[~ok][:5].tolist()}); every pair id must "
             "exist in feats for the broadcast strategy"
         )
-    return pos
+    return rows
 
 
-# padded-matrix budget for _pair_intersections: 8M int64 cells =
+# padded-matrix budget for _padded_intersections: 8M int64 cells =
 # 64 MB scratch per python worker (32 workers -> 2 GB total, bounded
 # regardless of how skewed the pair widths are)
 _PAIR_CELLS_BUDGET = 1 << 23
@@ -1040,38 +829,10 @@ def _gather_rows(seg, rows: np.ndarray, l: np.ndarray) -> np.ndarray:
     return out
 
 
-def _pair_intersections_block(
-    seg,
-    pos_a: np.ndarray,
-    pos_b: np.ndarray,
-    la: np.ndarray,
-    lb: np.ndarray,
-) -> np.ndarray:
-    """|A ∩ B| for one block of pairs via row-wise padded sort."""
-    n = len(pos_a)
-    tot = la + lb
-    wmax = int(tot.max()) if n else 0
-    if wmax == 0:
-        return np.zeros(n, dtype=np.int64)
-    m = np.full((n, wmax), np.iinfo(np.int64).max, dtype=np.int64)
-    # for each pair: a's values then b's values into one padded row
-    rows_a = np.repeat(np.arange(n), la)
-    cols_a = _ramp(la)
-    m[rows_a, cols_a] = _gather_rows(seg, pos_a, la)
-    rows_b = np.repeat(np.arange(n), lb)
-    cols_b = _ramp(lb) + np.repeat(la, lb)
-    m[rows_b, cols_b] = _gather_rows(seg, pos_b, lb)
-    m.sort(axis=1)
-    eq = m[:, 1:] == m[:, :-1]
-    valid = np.arange(1, wmax)[None, :] < tot[:, None]
-    return (eq & valid).sum(axis=1)
-
-
-def _pair_intersections(
-    seg, pos_a: np.ndarray, pos_b: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """|A ∩ B| per pair; ``seg`` = (flats, row_shard, row_off, lens)
-    from the sharded pack, positions are original global rows.
+def _padded_intersections(la: np.ndarray, lb: np.ndarray, gather_a, gather_b) -> np.ndarray:
+    """|A ∩ B| per pair of duplicate-free sets of sizes ``la``, ``lb``;
+    ``gather_a(sel)`` / ``gather_b(sel)`` return the concatenated values
+    of side A / B of the pairs ``sel``, in order.
 
     Row-wise padded sort: each pair's concatenated values fill one
     row of an (n x wmax) INT64_MAX-padded matrix; ``sort(axis=1)`` is
@@ -1081,19 +842,27 @@ def _pair_intersections(
     stays correct). Pairs are processed in width-sorted blocks under
     ``_PAIR_CELLS_BUDGET`` cells so ONE outlier-wide pair can no
     longer inflate the whole batch's padded matrix (ADVICE r1).
-    Returns (inter, len_a, len_b).
     """
-    lens = seg[3]
-    n = len(pos_a)
-    la = np.asarray(lens[pos_a])
-    lb = np.asarray(lens[pos_b])
+    n = len(la)
     tot = la + lb
     inter = np.zeros(n, dtype=np.int64)
     if n == 0 or int(tot.max()) == 0:
-        return inter, la, lb
+        return inter
+
+    def block(sel):
+        ns, las, lbs = len(sel), la[sel], lb[sel]
+        w = int((las + lbs).max())
+        m = np.full((ns, w), np.iinfo(np.int64).max, dtype=np.int64)
+        # for each pair: a's values then b's values into one padded row
+        m[np.repeat(np.arange(ns), las), _ramp(las)] = gather_a(sel)
+        m[np.repeat(np.arange(ns), lbs), _ramp(lbs) + np.repeat(las, lbs)] = gather_b(sel)
+        m.sort(axis=1)
+        eq = m[:, 1:] == m[:, :-1]
+        valid = np.arange(1, w)[None, :] < (las + lbs)[:, None]
+        return (eq & valid).sum(axis=1)
+
     if n * int(tot.max()) <= _PAIR_CELLS_BUDGET:
-        inter = _pair_intersections_block(seg, pos_a, pos_b, la, lb)
-        return inter, la, lb
+        return block(np.arange(n))
     order = np.argsort(tot, kind="stable")
     start = 0
     while start < n:
@@ -1107,10 +876,24 @@ def _pair_intersections(
             rows = max(1, _PAIR_CELLS_BUDGET // width_end)
             end = min(start + rows, n)
         blk = order[start:end]
-        inter[blk] = _pair_intersections_block(
-            seg, pos_a[blk], pos_b[blk], la[blk], lb[blk]
-        )
+        inter[blk] = block(blk)
         start = end
+    return inter
+
+
+def _pair_intersections(
+    seg, pos_a: np.ndarray, pos_b: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """(|A ∩ B|, len_a, len_b) per pair of rows of the sharded pack
+    ``seg`` = (flats, row_shard, row_off, lens); positions are global
+    rows (``_padded_intersections``)."""
+    la = np.asarray(seg[3][pos_a])
+    lb = np.asarray(seg[3][pos_b])
+    inter = _padded_intersections(
+        la, lb,
+        lambda sel: _gather_rows(seg, pos_a[sel], la[sel]),
+        lambda sel: _gather_rows(seg, pos_b[sel], lb[sel]),
+    )
     return inter, la, lb
 
 
@@ -1141,8 +924,8 @@ def score_set_pairs(
     same integer counts and float64 division, so the scores are
     bit-identical to theirs."""
     ids, perm, row_shard, row_off, row_len, flats = pack
-    pos_a = perm[_lookup_positions(ids, a, left)]
-    pos_b = perm[_lookup_positions(ids, b, right)]
+    pos_a = _lookup_rows(ids, perm, a, left)
+    pos_b = _lookup_rows(ids, perm, b, right)
     is_jaccard = metric == "jaccard"
     if threshold is not None and is_jaccard:
         la0 = np.asarray(row_len[pos_a])
@@ -1190,9 +973,7 @@ def _verify_set_broadcast(
     # no broadcast hint: AQE broadcasts the id set when it is small
     # and falls back to an ids-only shuffle when it is not
     needed = feats.join(pair_ids, feats[id_col] == F.col("_pid"), "left_semi")
-    if metric not in ("jaccard", "containment"):
-        raise ValueError(f"unknown set metric {metric!r}")
-    ref = materialize_feats(needed, id_col, feat_col, "verify")
+    ref = write_blob(needed.select(id_col, feat_col), id_col, feat_col, "verify")
 
     def score(batches):
         pack = load_feats_segments(ref)
@@ -1206,9 +987,8 @@ def _verify_set_broadcast(
             if len(a):
                 yield pd.DataFrame({left: a, right: b, "score": s})
 
-    return pairs.select(left, right).mapInPandas(
-        score, f"{left} long, {right} long, score double"
-    )
+    return detach(pairs.select(left, right).mapInPandas(
+        score, f"{left} long, {right} long, score double"), ref)
 
 
 def verify_jaccard(
@@ -1234,31 +1014,8 @@ def verify_jaccard(
     shuffling the shingle arrays; the pair stream stays partitioned
     in place).
     """
-    n_rows, est_bytes = _feat_bytes(feats, feat_col)
-    feats_fit = n_rows <= VERIFY_BROADCAST_CAP and est_bytes <= VERIFY_BROADCAST_MAX_BYTES
-    if strategy == "auto":
-        extra = set(pairs.columns) - {left, right}
-        strategy = (
-            "broadcast"
-            if not extra
-            and feats_fit
-            and est_bytes >= VERIFY_BLOB_MIN_BYTES
-            and blob_transport_available(feats.sparkSession)
-            else "join"
-        )
-    if strategy == "broadcast":
-        return _verify_set_broadcast(
-            pairs, feats, feat_col, id_col, threshold, left, right, "jaccard"
-        )
-    fa = feats.select(F.col(id_col).alias(left), F.col(feat_col).alias("_fa"))
-    fb = feats.select(F.col(id_col).alias(right), F.col(feat_col).alias("_fb"))
-    if est_bytes <= JOIN_BROADCAST_MAX_BYTES:
-        fa, fb = F.broadcast(fa), F.broadcast(fb)
-    j = pairs.join(fa, left).join(fb, right)
-    scored = j.withColumn("score", jaccard_similarity("_fa", "_fb")).drop("_fa", "_fb")
-    if threshold is not None:
-        scored = scored.where(F.col("score") >= threshold)
-    return scored
+    return _verify_sets(pairs, feats, feat_col, id_col, threshold, left, right,
+                        strategy, "jaccard")
 
 
 def verify_containment(
@@ -1279,6 +1036,14 @@ def verify_containment(
     the pair stream and reads the shingle payload from the mmap'd
     executor blob). Returns (left, right, score).
     """
+    return _verify_sets(pairs, feats, feat_col, id_col, threshold, left, right,
+                        strategy, "containment").select(left, right, "score")
+
+
+def _verify_sets(pairs, feats, feat_col, id_col, threshold, left, right, strategy,
+                 metric) -> DataFrame:
+    """The strategy choice and join plan shared by ``verify_jaccard``
+    and ``verify_containment`` (see ``verify_jaccard``)."""
     n_rows, est_bytes = _feat_bytes(feats, feat_col)
     feats_fit = n_rows <= VERIFY_BROADCAST_CAP and est_bytes <= VERIFY_BROADCAST_MAX_BYTES
     if strategy == "auto":
@@ -1293,17 +1058,18 @@ def verify_containment(
         )
     if strategy == "broadcast":
         return _verify_set_broadcast(
-            pairs, feats, feat_col, id_col, threshold, left, right, "containment"
+            pairs, feats, feat_col, id_col, threshold, left, right, metric
         )
     fa = feats.select(F.col(id_col).alias(left), F.col(feat_col).alias("_fa"))
     fb = feats.select(F.col(id_col).alias(right), F.col(feat_col).alias("_fb"))
     if est_bytes <= JOIN_BROADCAST_MAX_BYTES:
         fa, fb = F.broadcast(fa), F.broadcast(fb)
     j = pairs.join(fa, left).join(fb, right)
-    scored = j.withColumn("score", containment_score("_fa", "_fb")).drop("_fa", "_fb")
+    score = jaccard_similarity if metric == "jaccard" else containment_score
+    scored = j.withColumn("score", score("_fa", "_fb")).drop("_fa", "_fb")
     if threshold is not None:
         scored = scored.where(F.col("score") >= threshold)
-    return scored.select(left, right, "score")
+    return scored
 
 
 _F32_MARGIN = 1e-5
@@ -1317,7 +1083,7 @@ _RESCORE_HITS = 1 << 16
 def _chunked_threshold(q_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k,
                        self_mode, row_step=_SCAN_ROW_STEP):
     """Tiled threshold gemm for the fused kernels, over
-    PRE-NORMALIZED rows on both sides (``load_feats_matrix_blocked``;
+    PRE-NORMALIZED rows on both sides (``load_feats_rows(ref, "scan")``;
     callers normalize the query batch in place). ``blocks`` is the
     (n_blocks, dim, _BLK_W) f32 tile pack (``_build_blocks``).
 
@@ -1560,9 +1326,10 @@ def cosine_threshold_edges_ivf(
     available and the input is large (auto at >=
     ``_IVF_BLOB_MIN_ROWS``), the salt shuffle ships ONLY
     (id, cell, salt, home) — the embedding payload moves exactly once
-    into an executor-side blob (``materialize_feats``) and each group
+    into an executor-side blob (``write_blob``; the edges are detached
+    and the blob dropped before the call returns) and each group
     GATHERS its rows from the mmap'd shard pack
-    (``load_feats_rows``). Round 5 shipped every embedding through
+    (``load_feats_rows(ref, "keyed")``). Round 5 shipped every embedding through
     the groupBy shuffle ``n_probe`` times for probes plus once per
     salt for the replicated home packs, then paid the Arrow list
     conversion per group — the dominant residual worker RSS at the 1M
@@ -1589,11 +1356,6 @@ def cosine_threshold_edges_ivf(
             stacklevel=2,
         )
         payload_blob = False
-    ref = (
-        materialize_feats(feats.select(id_col, emb_col), id_col, emb_col, "ivfrows")
-        if payload_blob
-        else None
-    )
     if n_cells is None:
         # home size ~2k/cell keeps per-cell gemm ~0.5 GFLOP; the cap
         # keeps driver k-means training bounded (train_cap rows)
@@ -1689,21 +1451,14 @@ def cosine_threshold_edges_ivf(
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         if ref is not None:
             # id-only group: gather normalized rows from the blob pack
-            ids_sorted, perm, rowsrc, nrm_rows = load_feats_rows(ref)
-            p = np.searchsorted(ids_sorted, ids)
-            p = np.clip(p, 0, max(len(ids_sorted) - 1, 0))
-            ok = (
-                (ids_sorted[p] == ids)
-                if len(ids_sorted)
-                else np.zeros(len(ids), bool)
-            )
+            ids_sorted, perm, rowsrc, nrm_rows = load_feats_rows(ref, "keyed")
+            rows, ok = _locate_rows(ids_sorted, perm, ids)
             if not ok.all():  # NULL-embedding ids are absent from the pack
                 pdf = pdf[ok]
                 ids = ids[ok]
-                p = p[ok]
+                rows = rows[ok]
                 if len(pdf) < 2:
                     return pd.DataFrame(_empty)
-            rows = perm[p]
             xm = rowsrc[rows]
             xzero = nrm_rows[rows] <= 0
         else:
@@ -1749,10 +1504,16 @@ def cosine_threshold_edges_ivf(
             return pd.DataFrame(_empty)
         return pd.concat(outs, ignore_index=True)
 
+    # written last, so no earlier planning step can strand it
+    ref = (
+        write_blob(feats.select(id_col, emb_col), id_col, emb_col, "ivfrows")
+        if payload_blob
+        else None
+    )
     edges = grouped.groupBy("_cell", "_salt").applyInPandas(
         scan, "a long, b long, score double"
-    )
-    return edges.distinct()
+    ).distinct()
+    return detach(edges, ref) if payload_blob else edges
 
 
 # below this many rows the fused self-scan keeps the input's own
@@ -1777,41 +1538,52 @@ def cosine_threshold_edges(
     """All pairs (a < b, score) with cosine >= threshold — fused
     candidate generation + verification via broadcast matmul.
     ``max_k`` caps each row's emitted neighbors (reference
-    query_threshold cap; see ``_cap_rows_sparse``). ``ref``: a
-    ``materialize_feats`` blob of ``feats`` already written (a fitted
-    ``SparkSemHash`` writes one per fit); without it one is written.
+    query_threshold cap; see ``_cap_rows_sparse``).
 
-    The embedding table is materialized as parquet executor-side
-    (``materialize_feats`` — a distributed write, NO driver
-    collect/re-ship) and each python worker packs + caches the
-    float64 matrix once; each partition of rows computes one
-    |batch| x |index| float64 matmul and emits only the passing
-    pairs — no |n|^2 pair materialization, no Arrow shipping of
-    arrays per pair. The right plan whenever the matrix fits
+    ``ref``: the ``write_blob`` blob of ``feats`` when its owner (a
+    fitted ``SparkSemHash``) already wrote one; the returned frame then
+    reads it and the owner detaches it. Without ``ref`` the call writes
+    its own blob and returns the edges detached (``detach``), the blob
+    already dropped.
+
+    The embedding table reaches the executors as a blob (a distributed
+    write, NO driver collect/re-ship) whose pack each host's python
+    workers build once (``load_feats_rows(ref, "scan")``); each
+    partition of rows runs the tiled f32 scan with an exact f64 rescore
+    (``_chunked_threshold``) and emits only the passing pairs — no
+    |n|^2 pair materialization, no Arrow shipping of arrays per pair. The right plan whenever the matrix fits
     executor memory (64-dim floats: 2M rows ~ 1 GB); above that, use
     LSH candidates + verify_cosine. Zero-norm rows never pair
     (NULL-cosine semantics).
     """
-    if ref is None:
-        ref = materialize_feats(feats, id_col, emb_col, "cosedges")
+    own = None if ref is not None else write_blob(
+        feats.select(id_col, emb_col), id_col, emb_col, "cosedges")
+    out = _fused_edges(scan_rows(feats, id_col, emb_col, n_rows), ref or own,
+                       threshold, max_k, True, id_col, emb_col, ("a", "b"))
+    return detach(out, own) if own else out
+
+
+def _fused_edges(query: DataFrame, ref: dict, threshold: float, max_k: int | None,
+                 self_mode: bool, id_col: str, emb_col: str, names) -> DataFrame:
+    """The fused scan's ``mapInPandas``: each (id, embedding) batch of
+    ``query`` runs ``_chunked_threshold`` against the scan pack of
+    ``ref`` and emits (names[0], names[1], score) rows."""
     thr = float(threshold)
+    q_col, i_col = names
 
     def edges(batches):
-        ids_i, matn, nz_i, blocks = load_feats_matrix_blocked(ref)
+        ids_i, matn, nz_i, blocks = load_feats_rows(ref, "scan")
         for pdf_b in batches:
-            batch = normalized_batch(pdf_b, id_col, emb_col)
+            batch = normalized_batch(pdf_b, id_col, emb_col) if len(ids_i) else None
             if batch is None:
                 continue
-            a_ids, qm, qz = batch
+            q_ids, qm, qz = batch
             for r_g, c, sc in _chunked_threshold(
-                a_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k, self_mode=True,
+                q_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k, self_mode,
             ):
-                yield pd.DataFrame(
-                    {"a": a_ids[r_g], "b": ids_i[c], "score": sc}
-                )
+                yield pd.DataFrame({q_col: q_ids[r_g], i_col: ids_i[c], "score": sc})
 
-    return scan_rows(feats, id_col, emb_col, n_rows).mapInPandas(
-        edges, "a long, b long, score double")
+    return query.mapInPandas(edges, f"{q_col} long, {i_col} long, score double")
 
 
 def normalized_batch(pdf: pd.DataFrame, id_col: str, emb_col: str):
@@ -1861,8 +1633,8 @@ def cosine_cross_threshold_edges(
     query_threshold cap; cross dedup is existential, so selected/
     filtered are unchanged — only the pairs detail truncates).
 
-    The INDEX embeddings are materialized as an executor-side blob
-    (distributed parquet write, mmap'd float64 matrix per worker) and
+    The INDEX embeddings are written as an executor-side blob
+    (distributed parquet write, mmap'd scan pack per host) and
     the QUERY side streams through ``mapInPandas``: each Arrow batch
     computes one |batch| x |index| matmul and emits only the passing
     pairs. This is exactly the reference benchmark shape (a 4.3k-row
@@ -1876,32 +1648,18 @@ def cosine_cross_threshold_edges(
     Zero-norm / NULL rows on either side never pair (NULL-cosine
     semantics, matching ``cosine_similarity``).
 
-    ``ref``: a prebuilt ``materialize_feats`` blob ref for the index
-    side — the fitted api memoizes one per fit so REPEATED query
-    batches (the reference's dedup-only benchmark split) skip the
-    blob write entirely and pay only their own matmul.
+    ``ref``: the index side's blob when its owner already wrote one —
+    the fitted api keeps one per fit so REPEATED query batches (the
+    reference's dedup-only benchmark split) skip the blob write and pay
+    only their own matmul; the owner detaches the returned frame.
+    Without it, the call writes, detaches and drops its own blob, as
+    ``cosine_threshold_edges`` does.
     """
-    if ref is None:
-        ref = materialize_feats(index_feats, id_col, emb_col, "crossedges")
-    thr = float(threshold)
-
-    def edges(batches):
-        ids_i, matn, nz_i, blocks = load_feats_matrix_blocked(ref)
-        for pdf_b in batches:
-            batch = normalized_batch(pdf_b, id_col, emb_col) if len(ids_i) else None
-            if batch is None:
-                continue
-            q_ids, qm, qz = batch
-            for r_g, c, sc in _chunked_threshold(
-                q_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k, self_mode=False,
-            ):
-                yield pd.DataFrame(
-                    {"query_id": q_ids[r_g], "index_id": ids_i[c], "score": sc}
-                )
-
-    return query_feats.select(id_col, emb_col).mapInPandas(
-        edges, "query_id long, index_id long, score double"
-    )
+    own = None if ref is not None else write_blob(
+        index_feats.select(id_col, emb_col), id_col, emb_col, "crossedges")
+    out = _fused_edges(query_feats.select(id_col, emb_col), ref or own, threshold,
+                       max_k, False, id_col, emb_col, ("query_id", "index_id"))
+    return detach(out, own) if own else out
 
 
 def verify_cosine(
@@ -1918,8 +1676,9 @@ def verify_cosine(
 
     ``auto``: when blob transport is available and the feature table
     fits the executor byte cap, candidate ids ship 16 bytes/pair
-    through Arrow and score against the mmap'd float64 matrix — one
-    vectorized gather + einsum per batch. The join form rehydrates
+    through Arrow and score against the call's embedding blob — one
+    vectorized gather + einsum per batch, detached before the blob is
+    dropped. The join form rehydrates
     two 128-float arrays per pair and evaluates the cosine as
     INTERPRETED JVM higher-order lambdas, which is ~2 orders slower
     at millions of candidates (round-5: 4M hyperplane candidates at
@@ -1958,33 +1717,24 @@ def _verify_cosine_blob(
     Pairs whose ids are absent from ``feats`` drop (the join form's
     inner-join semantics); zero-norm sides never pass a threshold
     and score NaN without one (NULL-cosine semantics)."""
-    ref = materialize_feats(feats, id_col, feat_col, "cosverify")
+    ref = write_blob(feats.select(id_col, feat_col), id_col, feat_col, "cosverify")
     thr = None if threshold is None else float(threshold)
 
     def score(batches):
-        ids_i, mat, nrm = load_feats_matrix(ref)
-        order = np.argsort(ids_i, kind="stable")
-        sorted_ids = ids_i[order]
-
-        def locate(x):
-            p = np.searchsorted(sorted_ids, x)
-            p = np.clip(p, 0, max(len(sorted_ids) - 1, 0))
-            ok = (sorted_ids[p] == x) if len(sorted_ids) else np.zeros(len(x), bool)
-            return order[p], ok
-
+        sorted_ids, perm, rows, nrm = load_feats_rows(ref, "keyed")
         for pdf in batches:
-            if len(pdf) == 0 or len(ids_i) == 0:
+            if len(pdf) == 0 or len(sorted_ids) == 0:
                 continue
             a = pdf[left].to_numpy(np.int64)
             b = pdf[right].to_numpy(np.int64)
-            ia, oka = locate(a)
-            ib, okb = locate(b)
+            ia, oka = _locate_rows(sorted_ids, perm, a)
+            ib, okb = _locate_rows(sorted_ids, perm, b)
             ok = oka & okb
             if not ok.all():
                 a, b, ia, ib = a[ok], b[ok], ia[ok], ib[ok]
             if len(a) == 0:
                 continue
-            num = np.einsum("ij,ij->i", mat[ia], mat[ib])
+            num = np.einsum("ij,ij->i", rows.raw(ia), rows.raw(ib))
             den = nrm[ia] * nrm[ib]
             if thr is None:
                 with np.errstate(divide="ignore", invalid="ignore"):
@@ -1997,6 +1747,5 @@ def _verify_cosine_blob(
                         {left: a[m], right: b[m], "score": num[m] / den[m]}
                     )
 
-    return pairs.select(left, right).mapInPandas(
-        score, f"{left} long, {right} long, score double"
-    )
+    return detach(pairs.select(left, right).mapInPandas(
+        score, f"{left} long, {right} long, score double"), ref)

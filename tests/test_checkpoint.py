@@ -35,14 +35,14 @@ def _assignment(res):
 
 def test_resume_from_partial_checkpoints(spark, monkeypatch):
     blobs: list = []
-    pack = verify.pack_set_blob
+    write = verify.write_blob
 
-    def counted_pack(*args, **kwargs):
-        ref = pack(*args, **kwargs)
+    def counted_write(*args, **kwargs):
+        ref = write(*args, **kwargs)
         blobs.append(ref)
         return ref
 
-    monkeypatch.setattr(verify, "pack_set_blob", counted_pack)
+    monkeypatch.setattr(verify, "write_blob", counted_write)
     base = tempfile.mkdtemp(prefix="semhash_ckpt_")
     try:
         cfg = DedupConfig(columns=("content",), threshold=0.8, shingle_k=5,

@@ -72,7 +72,7 @@ def test_cosine_fit_runs_each_step_once_and_matches(spark, corpus, monkeypatch):
     _counting(monkeypatch, dedup_ops, "featurize", counts)
     _counting(monkeypatch, api, "self_exact_dedup", counts)
     _counting(monkeypatch, dedup_ops, "self_exact_dedup", counts)
-    _counting(monkeypatch, verify_ops, "materialize_feats", counts)
+    _counting(monkeypatch, verify_ops, "write_blob", counts)
     _counting(monkeypatch, verify_ops, "_feat_bytes", counts)
 
     sh = SparkSemHash(COS, mode="cosine").fit(corpus)
@@ -83,7 +83,7 @@ def test_cosine_fit_runs_each_step_once_and_matches(spark, corpus, monkeypatch):
     reps = sh.self_find_representative(5)
     ranking = [tuple(r) for r in sh.self_rank().collect()]
     assert counts == {"featurize": 1, "self_exact_dedup": 1,
-                      "materialize_feats": 1, "_feat_bytes": 1}, counts
+                      "write_blob": 1, "_feat_bytes": 1}, counts
     assert len(sh._scans) == 1
 
     monkeypatch.undo()
@@ -96,17 +96,25 @@ def test_cosine_fit_runs_each_step_once_and_matches(spark, corpus, monkeypatch):
     assert outliers == sorted(r[0] for r in outl.select("query_id").collect())
     assert reps == rank_ops.find_representative(unfused, sh._feats, 5)
 
-    # a result's release leaves the fit's caches alone
+    # a result's release leaves the fit's caches, its driver-held scan
+    # memo and its blob alone
+    import os
+
     scan = sh._scans[COS.threshold]
-    fit_frames = (sh._keyed, sh._feats, scan)
-    assert not any(any(f is p for p in res._persisted) for f in fit_frames)
+    n_scan = scan.count()
+    blob = sh._idx_blob_ref["path"]
+    fit_frames = (sh._keyed, sh._feats)
+    assert not any(any(f is p for p in res._persisted) for f in (*fit_frames, scan))
     res.release()
     fo.release()
     assert all(_cached(f) for f in fit_frames)
-    # the fit's release drops them, the scan memo and the size memo
+    assert sh._scans[COS.threshold] is scan and os.path.isdir(blob)
+    # the fit's release drops them, the blob, the scan memo and the
+    # size memo; the detached scan still computes without its blob
     sh.release()
     assert not any(_cached(f) for f in fit_frames)
     assert sh._scans == {} and sh._emb_size_memo is None
+    assert not os.path.exists(blob) and scan.count() == n_scan
     ref.release()
     unfused.unpersist()
 
@@ -134,14 +142,14 @@ def test_cosine_above_topk_cap_keeps_fused_edges(spark, corpus, monkeypatch):
     the edges still come from the fused scan over the fit's blob and
     the ranking from the IVF plan, with the same results."""
     counts: dict = {}
-    _counting(monkeypatch, verify_ops, "materialize_feats", counts)
+    _counting(monkeypatch, verify_ops, "write_blob", counts)
     monkeypatch.setattr(rank_ops, "BROADCAST_TOPK_CAP", 0)
     sh = SparkSemHash(COS, mode="cosine").fit(corpus)
     try:
         res = sh.self_deduplicate()
         got = _dedup_rows(res)
         ranking = [tuple(r) for r in sh.self_rank().collect()]
-        assert sh._scans == {} and counts == {"materialize_feats": 1}
+        assert sh._scans == {} and counts == {"write_blob": 1}
         ref = dedup_ops.self_deduplicate(corpus, COS, "cosine")
         assert got == _dedup_rows(ref)
         unfused = _unfused_ranking(sh._feats, COS)

@@ -65,8 +65,8 @@ def tiny_batches(spark):
 
 
 def _fused(bands, feats, cap, metric, threshold):
-    ref = verify.pack_set_blob(feats, "record_id", "shingles", "paritytest")
-    assert ref is not None
+    ref = verify.write_blob(feats.select("record_id", "shingles"), "record_id",
+                            "shingles", "paritytest")
     try:
         return _rows(candidate_pairs_self(bands, cap, "record_id", pack=ref,
                                           metric=metric, threshold=threshold))
@@ -123,7 +123,7 @@ def test_fallback_without_blob_transport_matches_fused(spark, corpus, feats, mon
         raise AssertionError("the fallback wrote a blob")
 
     monkeypatch.setattr(verify, "blob_transport_available", lambda spark: False)
-    monkeypatch.setattr(verify, "materialize_feats", no_blob)
+    monkeypatch.setattr(verify, "write_blob", no_blob)
     assert _rows(containment_edges(sh, CFG, "record_id")) == fused_c
     res = self_deduplicate(corpus, CFG, mode="minhash")
     assert {tuple(r) for r in res.pairs.collect()} == fused_pairs
@@ -137,7 +137,7 @@ def test_blob_above_cap_falls_back_after_a_bounded_write(spark, feats, monkeypat
     VERIFY_BROADCAST_MAX_BYTES, is removed, and the call keeps the join
     plan with the same edges."""
     sh = feats.select("record_id", "shingles")
-    ref = verify.pack_set_blob(sh, "record_id", "shingles", "captest")
+    ref = verify.write_blob(sh, "record_id", "shingles", "captest")
     full = verify._dir_bytes(ref["path"])
     verify.drop_blob(ref)
     fused = _rows(containment_edges(sh, CFG, "record_id"))
@@ -151,7 +151,8 @@ def test_blob_above_cap_falls_back_after_a_bounded_write(spark, feats, monkeypat
 
     monkeypatch.setattr(verify, "VERIFY_BROADCAST_MAX_BYTES", full // 20)
     monkeypatch.setattr(verify, "drop_blob", measured_drop)
-    assert verify.pack_set_blob(sh, "record_id", "shingles", "captest") is None
+    assert verify.write_blob(sh, "record_id", "shingles", "captest",
+                             max_bytes=full // 20) is None
     assert len(seen) == 1 and seen[0] < full // 2, (seen, full)
     assert _rows(containment_edges(sh, CFG, "record_id")) == fused
 
@@ -197,7 +198,7 @@ def _worker_cache_sizes(spark, tags: set) -> list[tuple[int, int]]:
         from semhash_spark.operators import verify as v
 
         def mine():
-            return sum(tag in tags for _, tag in v._BLOB_CACHE)
+            return sum(key[-1] in tags for key in v._BLOB_CACHE)
 
         before = mine()
         v._prune_blob_cache()
@@ -217,15 +218,15 @@ def test_blob_lifecycle_flat_over_repeated_calls(spark, monkeypatch):
     feats = corpus.select(
         "record_id", shingle_hashes("content", CFG.shingle_k).alias("shingles"))
     tags: set = set()
-    pack = verify.pack_set_blob
+    write = verify.write_blob
 
-    def recorded_pack(*args, **kwargs):
-        ref = pack(*args, **kwargs)
+    def recorded_write(*args, **kwargs):
+        ref = write(*args, **kwargs)
         assert ref is not None, "no blob was written"
         tags.add(ref["tag"])
         return ref
 
-    monkeypatch.setattr(verify, "pack_set_blob", recorded_pack)
+    monkeypatch.setattr(verify, "write_blob", recorded_write)
     before = _scratch_entries()
     counts = set()
     for _ in range(20):

@@ -186,11 +186,17 @@ def test_shared_scan_matches_edges_and_ranking(spark):
     """One cosine_self_scan pass emits exactly cosine_threshold_edges'
     edges (max_k cap included) and rank_by_avg_similarity's ranking."""
     from semhash_spark.operators import rank as rank_ops
-    from semhash_spark.operators.verify import cosine_threshold_edges, materialize_feats
+    from semhash_spark.operators.verify import (
+        cosine_threshold_edges,
+        detach,
+        drop_blob,
+        write_blob,
+    )
 
     emb = _scan_table(spark).persist()
-    ref = materialize_feats(emb, "record_id", "embedding", "t_scan")
-    scan = rank_ops.cosine_self_scan(emb, ref, 0.9, k=10, max_k=7).persist()
+    ref = write_blob(emb, "record_id", "embedding", "t_scan")
+    scan = detach(rank_ops.cosine_self_scan(emb, ref, 0.9, k=10, max_k=7))
+    drop_blob(ref)  # the detached scan outlives its blob
     try:
         got = sorted(tuple(r) for r in rank_ops.scan_edges(scan).collect())
         want = sorted(tuple(r) for r in cosine_threshold_edges(
@@ -201,7 +207,6 @@ def test_shared_scan_matches_edges_and_ranking(spark):
             emb, emb, 10, exclude_self=True).collect()]
         assert ranking == expect and len(ranking) == 118
     finally:
-        scan.unpersist()
         emb.unpersist()
 
 
@@ -220,7 +225,7 @@ def test_ivf_payload_blob_without_transport_falls_back(spark, monkeypatch):
     def no_blob(*a, **k):
         raise AssertionError("no blob may be written without transport")
 
-    monkeypatch.setattr(V, "materialize_feats", no_blob)
+    monkeypatch.setattr(V, "write_blob", no_blob)
     with pytest.warns(RuntimeWarning, match="payload-shuffle"):
         edges = V.cosine_threshold_edges_ivf(emb, 0.9, payload_blob=True, **kw)
     got = sorted(tuple(r) for r in edges.collect())

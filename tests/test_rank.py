@@ -207,18 +207,18 @@ def test_kernel_avg_equals_groupby_avg_bitwise(spark, exclude_self, k, sqltype):
     assert 3 not in got and 7 not in got and len(got) == 38
 
 
-def test_rank_by_avg_similarity_sorts_shuffled_averages(spark):
-    """The kernel's average frame passes a hash exchange below the
-    sort's range exchange, so the range sampling reads shuffle output
-    instead of re-running the scan."""
+def test_rank_by_avg_similarity_sorts_detached_averages(spark):
+    """The kernel's averages are detached before the sort (the call's
+    blob is gone when it returns), so the sort reads driver-held rows
+    and never re-runs the scan, and no aggregate recomputes the
+    averages."""
     emb = _avg_parity_table(spark, "double")
     r = rank_ops.rank_by_avg_similarity(emb, emb, 5, exclude_self=True)
-    r.collect()
+    rows = [(x.query_id, x.avg_score) for x in r.collect()]
     plan = r._jdf.queryExecution().executedPlan().toString()
-    rng, hsh, scan = (plan.find(s) for s in (
-        "rangepartitioning", "hashpartitioning(query_id", "MapInPandas"))
-    assert -1 < rng < hsh < scan, plan
+    assert "Sort" in plan and "LocalTableScan" in plan and "MapInPandas" not in plan, plan
     assert "HashAggregate" not in plan
+    assert rows == sorted(rows, key=lambda t: (-t[1], t[0])) and len(rows) == 38
 
 
 def test_find_representative_one_collect_matches_driver_reference(spark):

@@ -121,10 +121,16 @@ def test_tiled_kernel_cross_and_zero_threshold():
 
 
 def test_blocked_pack_matches_normalized_loader(spark, tmp_path):
-    """load_feats_matrix_blocked (sharded pack) must reproduce the
-    round-5 whole-blob normalized pack bit-for-bit: same ids (parquet
-    part order), same f64 normalized rows, same nz mask, and block
-    tiles equal to matn.T.astype(f32)."""
+    """The fused-scan pack (``load_feats_rows(ref, "scan")``) must
+    reproduce the whole-blob normalized matrix bit-for-bit: same ids
+    (parquet part order), same f64 normalized rows, same nz mask, and
+    block tiles equal to matn.T.astype(f32). The reference is the
+    whole-blob loader's arithmetic in numpy: every part read at once,
+    upcast to f64, row norms, divide where the norm is positive."""
+    import glob
+    import os
+
+    import pyarrow.parquet as pq
     import pandas as pd
     from pyspark.sql import functions as F
 
@@ -137,10 +143,19 @@ def test_blocked_pack_matches_normalized_loader(spark, tmp_path):
         pd.DataFrame({"record_id": np.arange(n), "embedding": emb}),
         schema="record_id long, embedding array<float>",
     ).repartition(7, F.col("record_id"))
-    ref = V.materialize_feats(df, "record_id", "embedding", "t_blk")
+    ref = V.write_blob(df, "record_id", "embedding", "t_blk")
 
-    ids_a, matn_a, nz_a = V.load_feats_matrix_normalized(ref)
-    ids_b, rows_b, nz_b, blocks = V.load_feats_matrix_blocked(ref)
+    tbl = pq.read_table(sorted(glob.glob(os.path.join(ref["path"], "*.parquet"))))
+    tbl = tbl.filter(tbl.column("embedding").is_valid())
+    ids_a = tbl.column("record_id").to_numpy()
+    mat = tbl.column("embedding").combine_chunks().flatten().to_numpy()
+    mat = mat.astype(np.float64, copy=False).reshape(len(ids_a), -1)
+    nrm = np.linalg.norm(mat, axis=1)
+    matn_a = np.divide(mat, nrm[:, None], out=np.zeros_like(mat), where=nrm[:, None] > 0)
+    nz_a = nrm > 0
+    assert len(ids_a) == n - 1 and not nz_a[ids_a == 12].any()
+
+    ids_b, rows_b, nz_b, blocks = V.load_feats_rows(ref, "scan")
     assert np.array_equal(ids_a, ids_b)
     # the blocked pack serves rows lazily (_ShardRows): gathering every
     # row must reproduce the whole-blob normalized matrix bit-for-bit,
@@ -155,6 +170,12 @@ def test_blocked_pack_matches_normalized_loader(spark, tmp_path):
         [np.asarray(blocks[b]) for b in range(blocks.shape[0])], axis=1
     )[:, : len(ids_b)]
     assert np.array_equal(flat, full.T.astype(np.float32))
+    # the top-k pack finalizes the same shards into the f64 transposed
+    # matrix the whole-blob loader built
+    ids_t, mnT, nz_t = V.load_feats_rows(ref, "topk")
+    assert np.array_equal(ids_t, ids_a) and np.array_equal(nz_t, nz_a)
+    assert np.array_equal(np.asarray(mnT), matn_a.T)
+    V.drop_blob(ref)
 
 
 def _relational_pairs(spark, rows, cap):

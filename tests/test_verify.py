@@ -18,7 +18,7 @@ from semhash_spark.operators.verify import (
 )
 
 
-def test_pack_once_per_executor_reuse(spark):
+def test_sharded_pack_built_once_and_reused(spark):
     """The executor-side shard pack must be written once and
     re-mmapped by later workers (a fresh process cache must NOT
     rebuild it), and the sharded layout must reconstruct every
@@ -33,7 +33,7 @@ def test_pack_once_per_executor_reuse(spark):
     ).repartition(3)  # multiple parquet parts -> multiple shards
     import tempfile
 
-    ref = V.materialize_feats(feats, "record_id", "shingles", "packtest")
+    ref = V.write_blob(feats, "record_id", "shingles", "packtest")
     out1 = V.load_feats_segments(ref)
     root = os.path.join(tempfile.gettempdir(), "semhash_packed", ref["tag"])
     packed = sorted(f for f in os.listdir(root) if f.endswith(".npy"))
@@ -43,7 +43,7 @@ def test_pack_once_per_executor_reuse(spark):
     assert len(shard_files) >= 3  # >=1 part x 3 arrays
     assert os.path.exists(os.path.join(root, "_final_seg.done"))
     mtimes = [os.path.getmtime(os.path.join(root, f)) for f in packed]
-    V._BLOB_CACHE.pop(("seg", ref["tag"]), None)  # fresh worker simulation
+    V._BLOB_CACHE.pop(("seg", "seg", ref["tag"]), None)  # fresh worker simulation
     out2 = V.load_feats_segments(ref)
     for a, b in zip(out1[:5], out2[:5]):
         assert np.array_equal(np.asarray(a), np.asarray(b))
@@ -58,6 +58,7 @@ def test_pack_once_per_executor_reuse(spark):
         s0 = int(row_shard[row]); o0 = int(row_off[row]); l0 = int(row_len[row])
         got = np.asarray(flats[s0][o0:o0 + l0]).tolist()
         assert got == rows[int(rid)], rid
+    V.drop_blob(ref)
 
 
 def _feats(spark, n=60, seed=3):

@@ -29,8 +29,7 @@ from semhash_spark.operators.rank import (  # noqa: E402
 from semhash_spark.operators.verify import (  # noqa: E402
     cosine_threshold_edges,
     drop_blob,
-    materialize_feats,
-    pack_set_blob,
+    write_blob,
 )
 from semhash_spark.session import get_spark  # noqa: E402
 from semhash_spark.sources.corpus import generate_corpus  # noqa: E402
@@ -47,9 +46,9 @@ def dump(name: str, df) -> None:
 
 def dump_verified(name: str, bands, sets, cap: int, metric: str, threshold: float) -> None:
     """Dump the in-generator verification plan that
-    ``lsh.verified_edges_self`` checkpoints (its blob only has to exist
+    ``lsh.verified_edges_self`` detaches (its blob only has to exist
     while the plan is built)."""
-    ref = pack_set_blob(sets, "record_id", "shingles", name)
+    ref = write_blob(sets.select("record_id", "shingles"), "record_id", "shingles", name)
     try:
         dump(name, candidate_pairs_self(bands, cap, "record_id", pack=ref,
                                         metric=metric, threshold=threshold))
@@ -86,16 +85,19 @@ def main() -> None:
     cfeats = add_features(exemplars, cos_cfg, "cosine").select(
         "record_id", "embedding").persist()
     cfeats.count()
+    # the blob-reading plans, before they are detached: given a written
+    # blob, the operators return their lazy frames (as they do for a
+    # fit). The fitted cosine surfaces' one scan (edges + top-k
+    # averages) and the kernel-averaged ranking follow the edges.
+    cref = write_blob(cfeats, "record_id", "embedding", "dumpscan")
     dump("cosine_edges",
          cosine_threshold_edges(cfeats, 0.75, "record_id", "embedding",
-                                max_k=100))
-    # the fitted cosine surfaces' one scan (edges + top-k averages) and
-    # the kernel-averaged ranking of the unfitted operator
-    cref = materialize_feats(cfeats, "record_id", "embedding", "dumpscan")
+                                max_k=100, ref=cref))
     dump("cosine_self_scan",
          cosine_self_scan(cfeats, cref, 0.75, 100, 100, "record_id", "embedding"))
     dump("rank_by_avg_similarity",
-         rank_by_avg_similarity(cfeats, cfeats, 100, exclude_self=True))
+         rank_by_avg_similarity(cfeats, cfeats, 100, exclude_self=True, ref=cref))
+    drop_blob(cref)
 
     # cross dedup through the api memo path (after: blob single-job)
     from semhash_spark.api import SparkSemHash
@@ -110,6 +112,7 @@ def main() -> None:
     res = sh.deduplicate(q, broadcast_query=True)
     dump("cross_dedup_filtered", res.filtered)
     dump("cross_dedup_pairs", res.pairs)
+    sh.release()
 
     # small-index relational path: below cross_thin_min_rows the band
     # memo stays unthinned and candidate_pairs_cross thins per call

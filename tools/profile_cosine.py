@@ -52,7 +52,7 @@ def main() -> None:
     from semhash_spark.operators.exact import self_exact_dedup
     from semhash_spark.operators.dedup import add_features
     from semhash_spark.operators.verify import (
-        _feat_bytes, materialize_feats, cosine_threshold_edges,
+        _feat_bytes, cosine_threshold_edges, drop_blob, write_blob,
     )
 
     keyed = self_exact_dedup(corpus, cfg.columns, cfg.id_col).persist()
@@ -62,13 +62,13 @@ def main() -> None:
         cfg.id_col, cfg.embedding_col).persist()
     timed("featurize", feats.count)
     timed("feat_bytes", lambda: _feat_bytes(feats, cfg.embedding_col))
-    ref = timed("blob_write", lambda: materialize_feats(
+    ref = timed("blob_write", lambda: write_blob(
         feats, cfg.id_col, cfg.embedding_col, "cosedges"))
 
     # pack only: one no-output pass that forces every worker to build/mmap
     def pack_only(batches):
-        from semhash_spark.operators.verify import load_feats_matrix_blocked
-        load_feats_matrix_blocked(ref)
+        from semhash_spark.operators.verify import load_feats_rows
+        load_feats_rows(ref, "scan")
         import pandas as pd
         for b in batches:
             pass
@@ -77,8 +77,10 @@ def main() -> None:
     timed("pack", lambda: spark.range(0, cpus, 1, cpus).mapInPandas(
         pack_only, "x long").count())
 
+    # given the blob, the scans are lazy frames (not detached), so each
+    # runs inside its own timed span
     edges = cosine_threshold_edges(feats, cfg.threshold, cfg.id_col,
-                                   cfg.embedding_col, max_k=cfg.cosine_max_k)
+                                   cfg.embedding_col, max_k=cfg.cosine_max_k, ref=ref)
     timed("scan_noop", lambda: edges.write.format("noop").mode("overwrite").save())
     from semhash_spark.operators.rank import cosine_self_scan
 
@@ -95,6 +97,8 @@ def main() -> None:
         edges_p.select(F.col("a").alias("src"), F.col("b").alias("dst")),
         cfg.id_col)
     timed("cc", cc.count)
+    edges_p.unpersist()
+    drop_blob(ref)
 
     # bookkeeping: full fitted passes, selected/filtered counts (warm)
     from semhash_spark.api import SparkSemHash
