@@ -69,8 +69,9 @@ def _track(df: DataFrame) -> DataFrame:
 
 
 def release_caches() -> None:
-    """Unpersist every frame/result the query helpers cached; queries
-    recompute on next use. Call after a queries() sweep."""
+    """Unpersist every frame/result the query helpers cached and remove
+    the job-export output dirs; queries recompute on next use. Call
+    after a queries() sweep."""
     for df in _PERSISTED:
         try:
             df.unpersist()
@@ -89,9 +90,16 @@ def release_caches() -> None:
         except Exception:
             pass
     _RESULTS.clear()
+    import shutil
+
+    for path in _EXPORT_DIRS:
+        shutil.rmtree(path, ignore_errors=True)
+    _EXPORT_DIRS.clear()
 
 
 _RESULTS: list = []
+# q_job_export output dirs, removed by release_caches()
+_EXPORT_DIRS: list = []
 
 
 def _keep(res):
@@ -786,7 +794,10 @@ def q_job_export(spark, sf_dir):
 
     from jobs.dedup_job import main as job_main
 
+    # the returned frame reads the parquet lazily: release_caches()
+    # removes the dir once the sweep is done with it
     out = tempfile.mkdtemp(prefix="semhash_job_export_")
+    _EXPORT_DIRS.append(out)
     job_main(
         [
             "--input", os.path.join(sf_dir, "documents.parquet"),

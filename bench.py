@@ -51,6 +51,33 @@ from pyspark.sql import functions as F
 CORPUS_PER_SF = 1_000_000  # sf0.1 -> 100k synthetic source files
 
 
+class StageTimer:
+    """A ``self_deduplicate`` checkpointer that times each stage: the
+    wall of ``build()`` plus a persist and a count of its frame, so a
+    stage is timed where its work runs whether it builds lazily or
+    eagerly. ``release()`` unpersists what it persisted."""
+
+    def __init__(self) -> None:
+        self.seconds: dict[str, float] = {}
+        self.held: list = []
+
+    def stage(self, name: str, build):
+        t0 = time.perf_counter()
+        df = build().persist()
+        df.count()
+        self.seconds[name] = round(time.perf_counter() - t0, 3)
+        self.held.append(df)
+        return df
+
+    def write_metrics(self) -> None:
+        """Called by ``self_deduplicate`` at its end; nothing to write."""
+
+    def release(self) -> None:
+        for df in self.held:
+            df.unpersist()
+        self.held = []
+
+
 def _sf_from_dir(sf_dir: str) -> float:
     base = os.path.basename(sf_dir.rstrip("/"))
     try:
@@ -148,14 +175,18 @@ def run_suite(sf_dir: str, cpus: int, sf: float, corpus_n: int) -> dict:
             # per-stage barriers only on the FIRST run: the breakdown
             # is diagnostic; later runs measure the uninstrumented
             # pipeline (no forced stage materialization)
-            stages: dict | None = {} if i == 0 else None
+            timer = StageTimer() if i == 0 else None
             t0 = time.perf_counter()
             res = self_deduplicate(corpus, code_cfg, mode="minhash",
-                                   stage_times=stages)
+                                   checkpointer=timer)
             n_sel = res.selected.count()
             n_fil = res.filtered.count()
             sec = round(time.perf_counter() - t0, 3)
             res.release()
+            stages = None
+            if timer is not None:
+                stages = timer.seconds
+                timer.release()
             runs.append({"sec": sec, "stages": stages,
                          "load1": round(os.getloadavg()[0], 1)})
             print(f"[bench] corpus_selfdedup run: {sec:.2f}s "
@@ -187,13 +218,14 @@ def run_suite(sf_dir: str, cpus: int, sf: float, corpus_n: int) -> dict:
     )
 
     def run_corpus_cosine() -> None:
-        stages: dict = {}
+        timer = StageTimer()
         res = self_deduplicate(corpus, cos_cfg, mode="cosine",
-                               stage_times=stages)
+                               checkpointer=timer)
         extras["cosine_corpus_selected"] = res.selected.count()
         extras["cosine_corpus_filtered"] = res.filtered.count()
-        extras["cosine_selfdedup_stages"] = stages
+        extras["cosine_selfdedup_stages"] = timer.seconds
         res.release()
+        timer.release()
 
     # cross-dedup mirrors the reference benchmark's fit/dedup split
     # (benchmarks report "dedup-only" seconds separately from index

@@ -28,6 +28,8 @@ ranking memoization of the reference (semhash/semhash.py:41,
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -125,14 +127,12 @@ class SparkSemHash:
         self._exemplars: DataFrame | None = None
         self._feats: DataFrame | None = None
         self._ranking: DataFrame | None = None  # memoized self-ranking
-        # fitted-side cross-dedup memos (built lazily on the first
-        # deduplicate() call): the index key table and band table are
-        # static per fit, so repeated query batches pay only
-        # query-side work — the reference benchmark's dedup-only
-        # split (benchmarks/README.md:43-61)
-        self._idx_keys: DataFrame | None = None
-        self._idx_bands: DataFrame | None = None
-        self._idx_bands_thinned: bool = True
+        # the fit's cross-dedup index side (dedup.build_index, built
+        # lazily on the first deduplicate() call): it is static per
+        # fit, so repeated query batches pay only query-side work —
+        # the reference benchmark's dedup-only split
+        # (benchmarks/README.md:43-61)
+        self._index: dedup_ops.FittedIndex | None = None
         # the embedding table's blob ref, written once per fit: the
         # cosine cross scan (repeated deduplicate() calls skip the blob
         # write — the reference's dedup-only benchmark split), the self
@@ -145,9 +145,6 @@ class SparkSemHash:
         # one finalizer per blob this fit wrote: release() runs them,
         # and an unreleased fit drops its blobs when it is collected
         self._blob_drops: list = []
-        # minhash single-job cross-dedup blob refs (keys/bands/
-        # shingles), built by prepare_index for large fitted sides
-        self._idx_cross_blobs: dict | None = None
         # memoized exemplar-embedding frame for the rank surfaces in
         # minhash/simhash mode (VERDICT r3 #4: self_rank followed by
         # find_representative used to re-run the featurize UDF over
@@ -213,17 +210,17 @@ class SparkSemHash:
 
     def release(self) -> None:
         """Unpersist every cache this fitted object owns (exact stage,
-        features, memoized ranking, cross-dedup key/band tables), drop
+        features, memoized ranking, the cross-dedup index side), drop
         its self-scan and size memos, and remove its blobs (the
         embedding blob and the cross-dedup blobs). The object stays
         usable — frames and blobs are rebuilt on next use — and every
         frame it handed out still computes, since none reads a blob;
         call when done querying this fit (cache-lifecycle parity with
         DedupResult.release / FilterResultDF.release)."""
-        for df in (
-            self._keyed, self._feats, self._ranking,
-            self._idx_keys, self._idx_bands, self._emb_feats,
-        ):
+        frames = [self._keyed, self._feats, self._ranking, self._emb_feats]
+        if self._index is not None:
+            frames += [self._index.keys, self._index.bands]
+        for df in frames:
             if df is not None:
                 try:
                     df.unpersist()
@@ -232,14 +229,11 @@ class SparkSemHash:
         self._ranking = None
         self._scans = {}
         self._emb_size_memo = None
-        self._idx_keys = None
-        self._idx_bands = None
-        self._idx_bands_thinned = True
+        self._index = None
         for drop in self._blob_drops:
             drop()
         self._blob_drops = []
         self._idx_blob_ref = None
-        self._idx_cross_blobs = None
         self._emb_feats = None
 
     def _own(self, ref: dict) -> dict:
@@ -259,14 +253,19 @@ class SparkSemHash:
         exact stage and features are not recomputed, and in cosine mode
         the edges come from the fit's blob (and its shared scan)."""
         self._require_fit()
+        return dedup_ops.self_deduplicate(
+            self._df, self.cfg, self.mode, threshold, checkpointer,
+            fitted=self._frames(),
+        )
+
+    def _frames(self) -> dedup_ops.FittedFrames:
+        """The fit's caches, as ``self_deduplicate`` and
+        ``dedup.build_index`` read them."""
         cosine = self.mode == "cosine"
-        fitted = dedup_ops.FittedFrames(
+        return dedup_ops.FittedFrames(
             self._keyed, self._feats,
             feat_size=self._emb_size() if cosine else None,
             cosine_edges=self._cosine_edges if cosine else None,
-        )
-        return dedup_ops.self_deduplicate(
-            self._df, self.cfg, self.mode, threshold, checkpointer, fitted=fitted
         )
 
     # ------------------------------------------- fit-wide cosine memos
@@ -350,11 +349,11 @@ class SparkSemHash:
         benchmarks/README.md:43-61); without it the first
         ``deduplicate`` call builds the memos lazily."""
         self._require_fit()
-        self._build_cross_memos()
+        index = self._build_cross_memos()
         n_feats = self._feats.count()
-        self._idx_keys.count()
-        if self._idx_bands is not None:
-            self._idx_bands.count()
+        index.keys.count()
+        if index.bands is not None:
+            index.bands.count()
         # large minhash fitted sides additionally serialize the index
         # as executor-side blobs so deduplicate() is ONE map-only job
         # (operators/crossblob.py); below the gate the relational plan
@@ -363,115 +362,27 @@ class SparkSemHash:
 
         if (
             self.mode == "minhash"
-            and self._idx_cross_blobs is None
-            and self.cfg.cross_blob_min_rows is not None
-            and n_feats >= self.cfg.cross_blob_min_rows
+            and index.cross_blobs is None
+            and n_feats >= dedup_ops.CROSS_BLOB_MIN_ROWS
             and blob_transport_available(self._feats.sparkSession)
         ):
             from semhash_spark.operators.crossblob import build_cross_blobs
 
-            self._idx_cross_blobs = {
+            self._index = replace(index, cross_blobs={
                 name: self._own(ref) for name, ref in build_cross_blobs(
-                    self._feats, self._idx_keys, self._idx_bands, self.cfg.id_col,
+                    self._feats, index.keys, index.bands, self.cfg.id_col,
                 ).items()
-            }
+            })
         return self
 
-    def _build_cross_memos(self) -> None:
-        if self._idx_keys is None:
-            # (exact_key, exemplar_id) per distinct fitted key. Each
-            # group's exemplar IS its min-id row, and those rows are
-            # exactly the persisted exemplars — so the key table is a
-            # narrow projection of a cache that already exists, not a
-            # fourth sha pass + groupBy over the full fitted table
-            # (index_key_table stays available for callers without a
-            # fitted exemplar cache; equivalence is pinned by
-            # tests/test_exact.py::test_index_key_table_reuse_matches_recompute).
-            from semhash_spark.operators.exact import EXACT_KEY
-
-            self._idx_keys = self._exemplars.select(
-                F.col(EXACT_KEY),
-                F.col(self.cfg.id_col).alias("exemplar_id"),
-            ).persist()
-        if self._cosine_fused():
-            # the fused cross scan reads the fit's embedding blob, never
-            # a band table (the decision is memoized with the fit's size)
-            self._emb_blob()
-            return
-        if self._idx_bands is None and self.mode in ("minhash", "simhash", "cosine"):
-            from semhash_spark.functions.hashing import simhash_bands
-            from semhash_spark.operators.lsh import (
-                band_table,
-                explode_band_array,
-                thin_index_bands,
+    def _build_cross_memos(self) -> dedup_ops.FittedIndex:
+        """The fit's cross-dedup index side, built once (its key and
+        band tables persisted until ``release()``)."""
+        if self._index is None:
+            self._index = dedup_ops.build_index(
+                self._df, self.cfg, self.mode, self._frames(), emb_blob=self._emb_blob
             )
-
-            # LARGE fitted sides store their band memo PRE-THINNED
-            # (the oversized-bucket consistent-hash sampling is a pure
-            # function of the fitted side): repeated deduplicate()
-            # calls skip the full-index bucket-size aggregation that
-            # dominated dedup-only time at the 4.3k-vs-1.8M shape.
-            # SMALL sides (< cross_thin_min_rows, unless the blob path
-            # will consume the bands) keep the memo unthinned and thin
-            # per call instead — at e.g. a 99k index the extra
-            # band-table aggregation pass costs more at fit time than
-            # it ever saves per call. Identical results either way.
-            # The oversized-bucket list is bounded at band_rows/cap
-            # entries; below ~4M such entries (~100 MB worst-case
-            # broadcast) hint it broadcast so the annotate join never
-            # re-shuffles the full band table at memo-build time
-            n_ex = self._feats.count()
-            bands_n = self.cfg.bands if self.mode == "minhash" else (
-                self.cfg.simhash_bands if self.mode == "simhash"
-                else self.cfg.hyperplane_bands
-            )
-            bcast = (n_ex * bands_n) // max(self.cfg.bucket_cap, 1) <= 4_000_000
-            blob_will_consume = (
-                self.mode == "minhash"
-                and self.cfg.cross_blob_min_rows is not None
-                and n_ex >= self.cfg.cross_blob_min_rows
-            )
-            pre_thin = blob_will_consume or n_ex >= self.cfg.cross_thin_min_rows
-            self._idx_bands_thinned = pre_thin
-
-            def _thin(bt):
-                if not pre_thin:
-                    return bt
-                return thin_index_bands(
-                    bt, self.cfg.bucket_cap, self.cfg.id_col,
-                    broadcast_big=bcast,
-                )
-
-            if self.mode == "minhash":
-                self._idx_bands = _thin(band_table(
-                    self._feats.where(F.size("shingles") > 0),
-                    "sig", self.cfg.bands, self.cfg.id_col,
-                    self.cfg.rows_per_band,
-                )).persist()
-            elif self.mode == "simhash":
-                self._idx_bands = _thin(explode_band_array(
-                    self._feats.where(F.size("shingles") > 0).withColumn(
-                        "shb", simhash_bands("sim64", self.cfg.simhash_bands)
-                    ),
-                    "shb",
-                    self.cfg.id_col,
-                )).persist()
-            else:
-                # cosine above the fused gate: the hyperplane band table
-                from semhash_spark.functions.vectors import hyperplane_bands
-
-                cfg = self.cfg
-                banded = self._feats.withColumn(
-                    "hpb",
-                    hyperplane_bands(
-                        cfg.embedding_col, cfg.hyperplane_bits,
-                        cfg.hyperplane_bands, cfg.hyperplane_seed,
-                        cfg.embedding_dim,
-                    ),
-                )
-                self._idx_bands = _thin(explode_band_array(
-                    banded, "hpb", cfg.id_col
-                )).persist()
+        return self._index
 
     def deduplicate(
         self,
@@ -480,20 +391,9 @@ class SparkSemHash:
         broadcast_query: bool = False,
     ) -> DedupResult:
         self._require_fit()
-        self._build_cross_memos()
         return dedup_ops.deduplicate(
-            query_df,
-            self._df,
-            self.cfg,
-            self.mode,
-            threshold,
-            index_feats=self._feats,
-            broadcast_query=broadcast_query,
-            index_keys=self._idx_keys,
-            index_bands=self._idx_bands,
-            index_blob_ref=self._idx_blob_ref if self._cosine_fused() else None,
-            index_bands_thinned=self._idx_bands_thinned,
-            index_cross_blobs=self._idx_cross_blobs,
+            query_df, self._df, self.cfg, self.mode, threshold,
+            fitted=self._build_cross_memos(), broadcast_query=broadcast_query,
         )
 
     def incremental(
@@ -504,24 +404,13 @@ class SparkSemHash:
     ) -> DedupResult:
         """Daily-ingest dedup against THIS fitted corpus: existential
         cross dedup of ``new_df`` vs the fitted rows (reusing the
-        cached key/band memos), then self dedup within the survivors.
+        fit's index side), then self dedup within the survivors.
         ``result.selected`` are the genuinely-new rows to append to
         the stored corpus (operators.dedup.incremental_deduplicate)."""
         self._require_fit()
-        self._build_cross_memos()
         return dedup_ops.incremental_deduplicate(
-            new_df,
-            self._df,
-            self.cfg,
-            self.mode,
-            threshold,
-            index_feats=self._feats,
-            broadcast_query=broadcast_query,
-            index_keys=self._idx_keys,
-            index_bands=self._idx_bands,
-            index_blob_ref=self._idx_blob_ref if self._cosine_fused() else None,
-            index_bands_thinned=self._idx_bands_thinned,
-            index_cross_blobs=self._idx_cross_blobs,
+            new_df, self._df, self.cfg, self.mode, threshold,
+            fitted=self._build_cross_memos(), broadcast_query=broadcast_query,
         )
 
     # ----------------------------------------------------- rank-based

@@ -95,41 +95,12 @@ class DedupConfig:
     # groups OOM'd a 128 GiB box at 1M rows), so group size is bounded
     # by salting the probe stream and replicating the capped home pack
     ivf_group_cap: int = 50000
-    # IVF salt-shuffle payload routing (verify.cosine_threshold_edges_ivf):
-    # None -> auto (id-only shuffle + executor-blob row gathers when
-    # blob transport is available and the input is >= 100k rows);
-    # True/False force the id-only / payload-shuffle plan (results are
-    # bit-identical either way — this only picks the transport); True
-    # without blob transport warns and runs the payload shuffle
-    ivf_payload_blob: bool | None = None
     # per-row neighbor cap in the FUSED cosine kernels — the
     # reference's ANN result cap (max_k=100, semhash/index.py:59).
     # Bounds edge emission for mega-clusters (an m-member >=θ clique
     # emits m*max_k edges instead of m^2/2) while keeping complete
     # sub-clusters connected for min-id CC. None = uncapped.
     cosine_max_k: int | None = 100
-
-    # --- cross-dedup single-job blob index ---
-    # fitted indexes at or above this many exemplar rows get their
-    # exact-key / thinned-band / shingle structures packed as
-    # executor-side blobs at prepare_index() time, and deduplicate()
-    # answers query batches in ONE map-only job instead of the
-    # relational plan (whose per-call cost is full scans of the
-    # fitted caches — the reference-benchmark dedup-only shape).
-    # Below the gate the relational plan is cheaper than the blob
-    # build. None disables the path.
-    cross_blob_min_rows: int | None = 300_000
-
-    # Fitted sides at or above this many exemplars store their band
-    # memo PRE-thinned (the oversized-bucket aggregation runs once at
-    # prepare_index, not per deduplicate call — the dominant dedup-only
-    # cost at the 4.3k-queries-vs-1.8M reference shape). Below it the
-    # memo stays unthinned and candidate_pairs_cross thins per call:
-    # at small index sizes the per-call aggregate costs less than the
-    # extra band-table pass at fit time. Results are identical either
-    # way (same consistent-hash filter). The blob path always consumes
-    # pre-thinned bands, so cross_blob_min_rows also forces thinning.
-    cross_thin_min_rows: int = 300_000
 
     # --- connected components ---
     # verified-edge sets at or below this resolve on the driver

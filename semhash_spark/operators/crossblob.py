@@ -26,10 +26,10 @@ At 100 TB the same structure holds: the blobs are the fitted index's
 serialized form (built once per fit on shared storage via
 ``spark.semhash.blobDir``), queries scale out by partition, and the
 per-task memory is the mmap'd blobs (shared page cache) plus one
-Arrow batch. The path is gated by ``DedupConfig.cross_blob_min_rows``
-(the relational plan stays cheaper for small fitted sides where the
-blob build would dominate) and by index size staying within
-``VERIFY_BROADCAST_MAX_BYTES`` of shingle payload per executor.
+Arrow batch. The path is gated by ``dedup.CROSS_BLOB_MIN_ROWS``
+fitted exemplars (the relational plan stays cheaper for small fitted
+sides where the blob build would dominate) and by index size staying
+within ``VERIFY_BROADCAST_MAX_BYTES`` of shingle payload per executor.
 """
 
 from __future__ import annotations
@@ -58,10 +58,10 @@ def build_cross_blobs(
 ) -> dict:
     """Write the three fitted-side parquet blobs; returns the ref dict
     ``cross_match_blob`` needs. The caller (the fit) owns the blobs and
-    drops them. ``idx_bands`` must be the PRE-THINNED band table (api
-    memo) so the kernel probes the exact buckets the relational plan
-    joins; it is written range-sorted by band hash, one disjoint hash
-    range per part."""
+    drops them. ``idx_bands`` must be the PRE-THINNED band table of
+    the fit (``dedup.build_index``) so the kernel probes the exact
+    buckets the relational plan joins; it is written range-sorted by
+    band hash, one disjoint hash range per part."""
     spark = feats.sparkSession
     n_part = max(8, int(spark.conf.get("spark.sql.shuffle.partitions")))
     bands = (

@@ -1,8 +1,8 @@
 """Similarity search over embedding columns.
 
-* ``brute_topk`` — exact cosine top-k via cross join + per-query
-  window. O(|Q|·|X|): the correctness baseline and the right plan
-  when one side is small enough to broadcast.
+* ``brute_topk`` — exact cosine top-k (``rank.topk_scores``: the
+  broadcast matmul while the index fits executor memory, exhaustive
+  IVF above it). The correctness baseline of the pruned search.
 * ``ivf_topk`` — the scale path: IVF (inverted-file) pruning.
   Centroids are trained driver-side with deterministic k-means over
   a bounded sample (<= ``train_cap`` rows collected), broadcast as a
@@ -202,7 +202,7 @@ def ivf_topk(
         pairs.withColumn("score", cosine_similarity("_qe", "_ie"))
         .select("query_id", "index_id", "score")
         # NULL/zero-norm never ranks — same semantics as the
-        # broadcast/crossjoin top-k strategies (rank.topk_scores)
+        # broadcast top-k strategy (rank.topk_scores)
         .where(F.col("score").isNotNull())
     )
     w = Window.partitionBy("query_id").orderBy(

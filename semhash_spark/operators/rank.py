@@ -38,9 +38,11 @@ Top-k plan (``topk_scores``), chosen by index size:
   operators/knn.py — exhaustively probed by default so results stay
   bit-exact; drop ``n_probe`` below ``n_cells`` for pruned
   approximate search at extreme scale. Averaged with a ``groupBy``.
-* ``crossjoin``: pair scores + per-query window — explicit-only
-  (never auto-chosen; |Q| x |X| materialization does not survive
-  scale).
+
+No |Q| x |X| crossjoin plan: it loses to the broadcast pack at every
+measured size (500 x 500: 4.1 s vs 2.5 s; 5k x 5k: 36 s vs 2.3 s — the
+per-pair pandas-UDF cosine loses to the pack's fixed cost even at tiny
+sizes) and its pair materialization does not survive scale.
 
 A fitted cosine ``SparkSemHash`` whose table fits both the fused
 threshold scan and the broadcast top-k runs neither separately:
@@ -55,38 +57,11 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from semhash_spark.functions.vectors import cosine_similarity
 
 # index sides up to this many rows take the broadcast-matmul path
 BROADCAST_TOPK_CAP = 500_000
-# no small-index crossjoin floor: measured 500x500 crossjoin 4.1 s vs
-# 2.5 s packed (the per-pair pandas-UDF cosine loses to the pack's
-# fixed cost even at tiny sizes), 5k x 5k 36 s vs 2.3 s
-
-
-def _topk_crossjoin(
-    query_feats: DataFrame,
-    index_feats: DataFrame,
-    k: int,
-    exclude_self: bool,
-    id_col: str,
-    emb_col: str,
-) -> DataFrame:
-    q = query_feats.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("_qe"))
-    i = index_feats.select(F.col(id_col).alias("index_id"), F.col(emb_col).alias("_ie"))
-    pairs = q.crossJoin(i)
-    if exclude_self:
-        pairs = pairs.where(F.col("query_id") != F.col("index_id"))
-    scored = (
-        pairs.withColumn("score", cosine_similarity("_qe", "_ie"))
-        .drop("_qe", "_ie")
-        .where(F.col("score").isNotNull())  # NULL/zero-norm never ranks
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("index_id").asc())
-    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
 
 
 def _topk_buffers(n_idx: int, exclude_self: bool):
@@ -269,12 +244,9 @@ def topk_scores(
     matmul — default while the index fits), ``ivf`` (cell equi-join,
     the distributed shape; ``n_probe`` defaults to ``n_cells`` =
     EXHAUSTIVE probing, which keeps results bit-exact vs brute force
-    — lower it for approximate pruned search at extreme scale),
-    ``crossjoin`` (explicit-only pair materialization; never chosen
-    automatically — VERDICT r2 #3: a |Q| x |X| crossjoin above the
-    broadcast cap was the remaining scale-killer, ``auto`` now falls
-    back to ``ivf`` instead). ``index_size``: the index's
-    ``_feat_bytes`` when the caller already has it.
+    — lower it for approximate pruned search at extreme scale; ``auto``
+    falls back to it above the broadcast cap). ``index_size``: the
+    index's ``_feat_bytes`` when the caller already has it.
     """
     if strategy == "auto":
         strategy, index_size = _auto_strategy(index_feats, emb_col, index_size)
@@ -293,8 +265,9 @@ def topk_scores(
             query_feats, index_feats, k, n_cells, n_probe, exclude_self,
             id_col, emb_col,
         )
-    fn = {"broadcast": _topk_broadcast, "crossjoin": _topk_crossjoin}[strategy]
-    return fn(query_feats, index_feats, k, exclude_self, id_col, emb_col)
+    if strategy != "broadcast":
+        raise ValueError(f"unknown top-k strategy {strategy!r}")
+    return _topk_broadcast(query_feats, index_feats, k, exclude_self, id_col, emb_col)
 
 
 def order_ranking(avgs: DataFrame) -> DataFrame:

@@ -1280,7 +1280,6 @@ def cosine_threshold_edges_ivf(
     seed: int = 42,
     n_rows: int | None = None,
     group_cap: int = 50_000,
-    payload_blob: bool | None = None,
 ) -> DataFrame:
     """All self pairs (a < b, score >= threshold) via coarse IVF
     cells + per-cell fused gemm — the at-scale cosine plan for MID
@@ -1322,9 +1321,9 @@ def cosine_threshold_edges_ivf(
     min-id CC (the star-cap argument, lsh.py:127), and ``max_k``
     bounds per-row edge emission exactly like the fused path.
 
-    ``payload_blob`` (round 6, guide §8): when blob transport is
-    available and the input is large (auto at >=
-    ``_IVF_BLOB_MIN_ROWS``), the salt shuffle ships ONLY
+    Id-only salt shuffle (round 6, guide §8): when blob transport is
+    available and the input has at least ``_IVF_BLOB_MIN_ROWS`` rows,
+    the salt shuffle ships ONLY
     (id, cell, salt, home) — the embedding payload moves exactly once
     into an executor-side blob (``write_blob``; the edges are detached
     and the blob dropped before the call returns) and each group
@@ -1342,20 +1341,8 @@ def cosine_threshold_edges_ivf(
 
     if n_rows is None:
         n_rows = feats.count()
-    transport = blob_transport_available(feats.sparkSession)
-    if payload_blob is None:
-        payload_blob = n_rows >= _IVF_BLOB_MIN_ROWS and transport
-    elif payload_blob and not transport:
-        import warnings
-
-        warnings.warn(
-            "ivf_payload_blob=True needs blob transport (a local master or "
-            "spark.semhash.blobDir); using the payload-shuffle plan, whose "
-            "edges are identical",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        payload_blob = False
+    use_blob = (n_rows >= _IVF_BLOB_MIN_ROWS
+                and blob_transport_available(feats.sparkSession))
     if n_cells is None:
         # home size ~2k/cell keeps per-cell gemm ~0.5 GFLOP; the cap
         # keeps driver k-means training bounded (train_cap rows)
@@ -1368,7 +1355,7 @@ def cosine_threshold_edges_ivf(
     cap = int(cell_cap)
     mk = max_k
 
-    shuffle_cols = [id_col] if payload_blob else [id_col, emb_col]
+    shuffle_cols = [id_col] if use_blob else [id_col, emb_col]
     ex = (
         feats.select(id_col, emb_col)
         .withColumn("_cells", ivf_probe_cells(emb_col, cents, n_probe))
@@ -1507,13 +1494,13 @@ def cosine_threshold_edges_ivf(
     # written last, so no earlier planning step can strand it
     ref = (
         write_blob(feats.select(id_col, emb_col), id_col, emb_col, "ivfrows")
-        if payload_blob
+        if use_blob
         else None
     )
     edges = grouped.groupBy("_cell", "_salt").applyInPandas(
         scan, "a long, b long, score double"
     ).distinct()
-    return detach(edges, ref) if payload_blob else edges
+    return detach(edges, ref) if use_blob else edges
 
 
 # below this many rows the fused self-scan keeps the input's own

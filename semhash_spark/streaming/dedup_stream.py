@@ -148,7 +148,7 @@ def stateful_neardup_stream(
     # must not enter banding: their identical signatures would funnel
     # every empty/whitespace-only record into one hot state bucket per
     # band AND report est=1.0 false matches — same pruning as the
-    # batch paths (_candidates_self / _build_cross_memos)
+    # batch paths (dedup.mode_bands)
     feats = (
         add_features(stream_df, cfg, "minhash")
         .where(F.size("shingles") > 0)

@@ -254,3 +254,29 @@ class OracleSemHash:
         if cnt == 0:
             return [r for r, _ in ranking], []
         return [r for r, _ in ranking[:-cnt]], [r for r, _ in ranking[-cnt:]]
+
+
+def topk_crossjoin(query_feats, index_feats, k, exclude_self=False,
+                   id_col="record_id", emb_col="embedding"):
+    """Spark-side top-k reference: (query_id, index_id, score, rk) from
+    the explicit |Q| x |X| pair crossjoin + per-query window, with the
+    library's tie-break (score desc, index_id asc) and NULL/zero-norm
+    rows never ranking. Too slow for any real size, so it is a test
+    reference of ``rank.topk_scores``'s plans, not one of them."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from semhash_spark.functions.vectors import cosine_similarity
+
+    q = query_feats.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("_qe"))
+    i = index_feats.select(F.col(id_col).alias("index_id"), F.col(emb_col).alias("_ie"))
+    pairs = q.crossJoin(i)
+    if exclude_self:
+        pairs = pairs.where(F.col("query_id") != F.col("index_id"))
+    scored = (
+        pairs.withColumn("score", cosine_similarity("_qe", "_ie"))
+        .drop("_qe", "_ie")
+        .where(F.col("score").isNotNull())
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("index_id").asc())
+    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)

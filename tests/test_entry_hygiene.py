@@ -28,3 +28,22 @@ def test_release_caches_drops_query_persists(spark):
     entry.release_caches()
     leaked = _persistent_ids(spark) - before
     assert not leaked, f"persisted RDDs leaked after release_caches: {leaked}"
+
+
+def test_release_caches_removes_job_export_dirs(spark, sf_dir):
+    """q_job_export writes the job's parquet outputs to a fresh temp dir
+    that its returned frame reads lazily; release_caches() removes it."""
+    import os
+    import tempfile
+
+    import __spark_entry__ as entry
+
+    def export_dirs() -> set[str]:
+        root = tempfile.gettempdir()
+        return {e for e in os.listdir(root) if e.startswith("semhash_job_export_")}
+
+    before = export_dirs()
+    assert entry.queries()["job_export"](spark, sf_dir).count() > 0
+    assert export_dirs() - before, "the export wrote no output dir"
+    entry.release_caches()
+    assert export_dirs() - before == set()

@@ -120,7 +120,7 @@ def test_index_key_table_reuse_matches_recompute(spark):
 
 
 def test_api_idx_keys_projection_matches_index_key_table(spark):
-    """api._build_cross_memos derives the fitted key table as a
+    """dedup.build_index derives a fit's key table as a
     projection of the persisted exemplars (each exact group's min-id
     row IS its exemplar); it must equal index_key_table over the full
     fitted frame, including under exact-duplicate groups."""
@@ -135,7 +135,7 @@ def test_api_idx_keys_projection_matches_index_key_table(spark):
     sh = SparkSemHash(DedupConfig(columns=("text",)), mode="minhash").fit(idx)
     try:
         sh._build_cross_memos()
-        got = {(r.exact_key, r.exemplar_id) for r in sh._idx_keys.collect()}
+        got = {(r.exact_key, r.exemplar_id) for r in sh._index.keys.collect()}
         want = {
             (r.exact_key, r.exemplar_id)
             for r in index_key_table(idx, ("text",)).collect()

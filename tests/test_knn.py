@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from semhash_spark.operators.knn import brute_topk, ivf_topk
 from semhash_spark.operators.rank import topk_scores
+from tests.oracle import topk_crossjoin
 
 
 def _clustered_embeddings(spark, n_centers=8, per_center=40, dim=16, seed=7):
@@ -33,7 +34,7 @@ def _clustered_embeddings(spark, n_centers=8, per_center=40, dim=16, seed=7):
 def test_topk_strategies_agree(spark):
     emb = _clustered_embeddings(spark, n_centers=4, per_center=20)
     kb = topk_scores(emb, emb, 5, exclude_self=True, strategy="broadcast")
-    kc = topk_scores(emb, emb, 5, exclude_self=True, strategy="crossjoin")
+    kc = topk_crossjoin(emb, emb, 5, exclude_self=True)
     b = {(r.query_id, r.rk): r.index_id for r in kb.collect()}
     c = {(r.query_id, r.rk): r.index_id for r in kc.collect()}
     assert b == c
@@ -211,22 +212,22 @@ def test_shared_scan_matches_edges_and_ranking(spark):
 
 
 def test_ivf_payload_blob_without_transport_falls_back(spark, monkeypatch):
-    """ivf_payload_blob=True on a session without blob transport runs
-    the payload-shuffle plan with a warning (identical edges) instead
-    of failing at plan time."""
+    """Above the IVF blob gate, a session without blob transport runs
+    the payload-shuffle plan (identical edges) instead of failing at
+    plan time."""
     from semhash_spark.operators import verify as V
 
     emb = _clustered_embeddings(spark, n_centers=4, per_center=30)
     kw = dict(n_cells=4, n_probe=2, max_k=20, n_rows=120)
     want = sorted(tuple(r) for r in V.cosine_threshold_edges_ivf(
-        emb, 0.9, payload_blob=False, **kw).collect())
+        emb, 0.9, **kw).collect())
+    monkeypatch.setattr(V, "_IVF_BLOB_MIN_ROWS", 0)
     monkeypatch.setattr(V, "blob_transport_available", lambda spark: False)
 
     def no_blob(*a, **k):
         raise AssertionError("no blob may be written without transport")
 
     monkeypatch.setattr(V, "write_blob", no_blob)
-    with pytest.warns(RuntimeWarning, match="payload-shuffle"):
-        edges = V.cosine_threshold_edges_ivf(emb, 0.9, payload_blob=True, **kw)
+    edges = V.cosine_threshold_edges_ivf(emb, 0.9, **kw)
     got = sorted(tuple(r) for r in edges.collect())
     assert got == want and len(got) > 100

@@ -12,6 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 import semhash_spark.operators.rank as rank_ops
+from tests.oracle import topk_crossjoin
 from semhash_spark.operators.rank import (
     cover_select,
     diversify,
@@ -74,7 +75,7 @@ def test_topk_broadcast_null_and_determinism(spark):
     emb = spark.createDataFrame(rows, "record_id long, embedding array<double>").repartition(3)
     tk = topk_scores(emb, emb, 5, exclude_self=True, strategy="broadcast")
     out = {(r["query_id"], r["rk"]): r["index_id"] for r in tk.collect()}
-    ref = topk_scores(emb, emb, 5, exclude_self=True, strategy="crossjoin")
+    ref = topk_crossjoin(emb, emb, 5, exclude_self=True)
     expect = {(r["query_id"], r["rk"]): r["index_id"] for r in ref.collect()}
     assert out == expect
     assert not any(q == 30 for q, _ in out)  # null query ranks nothing

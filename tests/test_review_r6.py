@@ -240,8 +240,8 @@ def test_streaming_candidate_pairs_match_relational(spark):
         assert got == want and len(got) > 500, (cap, batch, len(got), len(want))
 
 
-def test_ivf_payload_blob_matches_arrow_shuffle(spark):
-    """The IVF id-only plan (payload_blob=True: ids through the salt
+def test_ivf_payload_blob_matches_arrow_shuffle(spark, monkeypatch):
+    """The IVF id-only plan (forced by ``_IVF_BLOB_MIN_ROWS=0``: ids through the salt
     shuffle, embeddings gathered from the executor blob) must emit
     the IDENTICAL edge set and bit-exact scores as the round-5
     payload-shuffle plan, for f32 AND f64 embedding columns, with a
@@ -265,11 +265,13 @@ def test_ivf_payload_blob_matches_arrow_shuffle(spark):
         df.count()
         kw = dict(n_cells=8, n_probe=2, cell_cap=50, max_k=20,
                   n_rows=n, group_cap=64)
+        monkeypatch.setattr(V, "_IVF_BLOB_MIN_ROWS", float("inf"))
         a = V.cosine_threshold_edges_ivf(
-            df, 0.8, "record_id", "embedding", payload_blob=False, **kw
+            df, 0.8, "record_id", "embedding", **kw
         ).collect()
+        monkeypatch.setattr(V, "_IVF_BLOB_MIN_ROWS", 0)
         b = V.cosine_threshold_edges_ivf(
-            df, 0.8, "record_id", "embedding", payload_blob=True, **kw
+            df, 0.8, "record_id", "embedding", **kw
         ).collect()
         sa = sorted((r.a, r.b, r.score) for r in a)
         sb = sorted((r.a, r.b, r.score) for r in b)

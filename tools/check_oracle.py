@@ -100,6 +100,7 @@ def main(sf_dir: str = "/root/testdata/sf0.01", only: list[str] | None = None) -
                 print(f"    {p}")
         else:
             print(f"PASS {name}: {len(sdf)} rows [{time.time()-t0:.1f}s]")
+    entrymod.release_caches()
     print("failures:", failures)
     return 1 if failures else 0
 

@@ -102,26 +102,27 @@ def main() -> None:
     # cross dedup through the api memo path (after: blob single-job)
     from semhash_spark.api import SparkSemHash
 
-    xcfg = code_cfg
-    if hasattr(code_cfg, "cross_blob_min_rows"):
-        xcfg = code_cfg.with_(cross_blob_min_rows=1)
+    from semhash_spark.operators import dedup as dedup_ops
+
+    blob_min_rows = dedup_ops.CROSS_BLOB_MIN_ROWS
+    dedup_ops.CROSS_BLOB_MIN_ROWS = 1
     idx = corpus.where(F.col("record_id") % 100 != 1)
-    sh = SparkSemHash(xcfg, mode="minhash").fit(idx)
+    sh = SparkSemHash(code_cfg, mode="minhash").fit(idx)
     sh.prepare_index()
+    dedup_ops.CROSS_BLOB_MIN_ROWS = blob_min_rows
     q = corpus.where(F.col("record_id") % 100 == 1)
     res = sh.deduplicate(q, broadcast_query=True)
     dump("cross_dedup_filtered", res.filtered)
     dump("cross_dedup_pairs", res.pairs)
     sh.release()
 
-    # small-index relational path: below cross_thin_min_rows the band
+    # small-index relational path: below CROSS_THIN_MIN_ROWS the band
     # memo stays unthinned and candidate_pairs_cross thins per call
-    # (round-6 gate; large/blob-consuming fits pre-thin at prepare)
-    if hasattr(code_cfg, "cross_thin_min_rows"):
-        sh2 = SparkSemHash(code_cfg, mode="minhash").fit(idx)
-        sh2.prepare_index()
-        res2 = sh2.deduplicate(q, broadcast_query=True)
-        dump("cross_dedup_small_pairs", res2.pairs)
+    # (large/blob-consuming fits pre-thin at prepare)
+    sh2 = SparkSemHash(code_cfg, mode="minhash").fit(idx)
+    sh2.prepare_index()
+    res2 = sh2.deduplicate(q, broadcast_query=True)
+    dump("cross_dedup_small_pairs", res2.pairs)
 
     from semhash_spark.functions.hashing import shingle_hashes
     from semhash_spark.operators.containment import anchor_table

@@ -186,6 +186,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
+    from bench import StageTimer
     from semhash_spark.config import DedupConfig
     from semhash_spark.operators.dedup import self_deduplicate
     from semhash_spark.session import get_spark
@@ -214,7 +215,11 @@ def main() -> None:
     if args.ivf_group_cap is not None:
         cfg = cfg.with_(ivf_group_cap=args.ivf_group_cap)
     if args.ivf_payload != "auto":
-        cfg = cfg.with_(ivf_payload_blob=args.ivf_payload == "blob")
+        # force the IVF salt-shuffle transport: id-only + blob row
+        # gathers at any size, or the embedding-payload shuffle
+        from semhash_spark.operators import verify
+
+        verify._IVF_BLOB_MIN_ROWS = 0 if args.ivf_payload == "blob" else float("inf")
 
     c0 = canary_seconds()
     m0 = membw_canary_seconds()
@@ -244,13 +249,15 @@ def main() -> None:
     runs = []
     rss = RssSampler().start()
     for i in range(args.runs):
-        stages: dict = {}
+        timer = StageTimer()
         t0 = time.perf_counter()
-        res = self_deduplicate(corpus, cfg, mode=args.mode, stage_times=stages)
+        res = self_deduplicate(corpus, cfg, mode=args.mode, checkpointer=timer)
         n_sel = res.selected.count()
         n_fil = res.filtered.count()
         sec = round(time.perf_counter() - t0, 2)
         res.release()
+        stages = timer.seconds
+        timer.release()
         runs.append({"sec": sec, "stages": stages,
                      "load1": round(os.getloadavg()[0], 1)})
         print(f"[flagship] run {i}: {sec}s stages={stages} "
