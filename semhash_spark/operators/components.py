@@ -13,10 +13,17 @@ O(log n) rounds even on chain graphs, each round two hash shuffles
 (groupBy min + join). Lineage is truncated every round with
 ``localCheckpoint`` (on a cluster: checkpoint to the job's
 checkpoint dir) so plan size stays O(1) across iterations.
+
+Edge sets up to ``DRIVER_CC_CAP`` resolve on the driver instead
+(``labels``, numpy). ``self_deduplicate`` calls it on the edges it
+already holds there; ``connected_components`` probes for the edges
+only when the caller does not hold them.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -76,12 +83,13 @@ def _checksum(e: DataFrame) -> tuple[int, int]:
 DRIVER_CC_CAP = 5_000_000
 
 
-def _driver_components(spark, pdf, id_col: str) -> DataFrame:
-    import numpy as np
-
-    src = pdf["src"].to_numpy(np.int64)
-    dst = pdf["dst"].to_numpy(np.int64)
-    nodes = np.unique(np.concatenate([src, dst]))
+def labels(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(nodes, labels) of an undirected edge list on the driver: every
+    node appearing in ``src``/``dst`` (sorted, unique) and the min node
+    id of its component. Min-label propagation with pointer jumping
+    (labels are node ids, so chasing one hop per round gives O(log n)
+    rounds even on chains); duplicate edges are harmless."""
+    nodes = np.unique(np.concatenate([src, dst]).astype(np.int64))
     si = np.searchsorted(nodes, src)
     di = np.searchsorted(nodes, dst)
     lab = nodes.copy()
@@ -90,21 +98,14 @@ def _driver_components(spark, pdf, id_col: str) -> DataFrame:
         m = np.minimum(lab[si], lab[di])
         np.minimum.at(lab, si, m)
         np.minimum.at(lab, di, m)
-        # pointer jumping: labels are node ids, so chase one hop —
-        # O(log n) rounds even on chains
         lab = np.minimum(lab, lab[np.searchsorted(nodes, lab)])
         if np.array_equal(lab, before):
-            break
-    import pandas as pd
+            return nodes, lab
 
-    # Arrow path: a pandas frame serializes as columnar batches —
-    # the previous list(zip(...)) form pickled up to 5M python
-    # tuples through the row-based serializer (VERDICT r4 item 4)
-    out = spark.createDataFrame(
-        pd.DataFrame({id_col: nodes, "cluster_id": lab}),
-        schema=f"{id_col} long, cluster_id long",
-    )
-    return out
+
+def label_frame(spark, nodes: np.ndarray, lab: np.ndarray, id_col: str) -> DataFrame:
+    """The (id_col, cluster_id) frame of ``labels``, shipped through Arrow."""
+    return spark.createDataFrame(pa.table({id_col: nodes, "cluster_id": lab}))
 
 
 def connected_components(
@@ -118,39 +119,45 @@ def connected_components(
     cluster_id = min node id of the component. Isolated nodes are
     absent — callers left-join and coalesce to the node's own id.
     Edge sets up to ``driver_cap`` resolve with driver-side numpy
-    label propagation; larger ones run the distributed alternating
-    large-star/small-star rounds.
+    label propagation (``labels``); larger ones run the distributed
+    alternating large-star/small-star rounds (``star_components``).
 
-    The driver fast path is ONE probe job: ``limit(cap+1).toPandas``
-    both establishes the size and delivers the edges — the previous
-    count+xxhash checksum before the cap check was a redundant serial
-    job (VERDICT r2 #4). The numpy propagation tolerates duplicate
-    edges, so the probe skips ``distinct``/``localCheckpoint`` too;
-    only the distributed star rounds (probe overflow) pay for them.
-    Accepted tradeoff: when the edge set DOES overflow, the probe
-    ships cap+1 rows (~80 MB at the default cap) to the driver and
-    discards them — a one-off cost dwarfed by the distributed rounds
-    that follow, in exchange for the common small-graph case being a
-    single job.
+    The driver path is ONE probe job: ``limit(cap+1).toArrow`` both
+    establishes the size and delivers the edges. ``self_deduplicate``
+    reads the edges it already holds on the driver (``verify.held``)
+    and calls ``labels`` itself, so this probe serves only callers
+    whose edges are not held. The numpy propagation tolerates
+    duplicate edges, so the probe skips ``distinct``/
+    ``localCheckpoint``; only the star rounds pay for them. Accepted
+    tradeoff: when the edge set DOES overflow, the probe ships cap+1
+    rows (~80 MB at the default cap) to the driver and discards them —
+    a one-off cost dwarfed by the distributed rounds that follow.
 
     ``stats`` (optional dict) is filled with the path taken and, on
     the star path, per-round wall seconds + per-round edge counts —
     the instrumentation behind tools/cc_scale_bench.py.
     """
-    import time as _time
-
-    spark = edges.sparkSession
     base = edges.select(
         F.col("src").cast("long"), F.col("dst").cast("long")
     ).where(F.col("src") != F.col("dst"))
-    probe = base.limit(driver_cap + 1).toPandas()
-    if len(probe) == 0:
-        return spark.createDataFrame([], f"{id_col} long, cluster_id long")
-    if len(probe) <= driver_cap:
+    probe = base.limit(driver_cap + 1).toArrow()
+    if probe.num_rows <= driver_cap:
         if stats is not None:
             stats["path"] = "driver"
-            stats["n_edges_probe"] = len(probe)
-        return _driver_components(spark, probe, id_col)
+            stats["n_edges_probe"] = probe.num_rows
+        nodes, lab = labels(probe["src"].to_numpy(), probe["dst"].to_numpy())
+        return label_frame(edges.sparkSession, nodes, lab, id_col)
+    return star_components(base, id_col, max_iter, stats)
+
+
+def star_components(
+    base: DataFrame, id_col: str = "record_id", max_iter: int = 50,
+    stats: dict | None = None,
+) -> DataFrame:
+    """The distributed rounds of ``connected_components`` over ``base``,
+    long (src, dst) edges without self-loops: (id_col, cluster_id) of
+    every node in them."""
+    import time as _time
 
     if stats is not None:
         stats["path"] = "star"

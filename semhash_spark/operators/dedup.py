@@ -19,12 +19,21 @@ Plan shape (self mode, minhash):
      bucket generator: pairs scored in-task against the mmap'd blob
        (skew-guarded, exact float64 Jaccard)──► edges >= θ ──distinct,
        collected to the driver; blob removed──►
-     edges ──large-star/small-star CC (O(log n) rounds)──► clusters
-     clusters ──join back (1 shuffle)──► selected / filtered / pairs
+     edges (driver-held) ──numpy CC (``components.labels``)──►
+       dup nodes (id, exemplar_id, best score) + their pair rows
+     dup nodes, pair rows ──one broadcast join each against the
+       exact stage──► selected / filtered / pairs
 
 Content and signatures never enter the band shuffle (ids+hashes
 only), and no candidate pair relation exists: the generator emits
-only verified edges, collected before the blob is removed.
+only verified edges, collected before the blob is removed. The
+edges reach the driver once: the clusters, each dup node's best
+score and the semantic pairs are computed from that table, and each
+result frame is one join of the exact stage against a small
+driver-held frame (``_assemble``). Above ``DRIVER_CC_CAP`` edges
+(``cfg.driver_cc_cap``) the same two frames come from the distributed
+large-star/small-star CC (O(log n) rounds) and a ``groupBy`` of the
+mirrored edges instead.
 Without blob transport, or with a blob above
 VERIFY_BROADCAST_MAX_BYTES, the edges come from candidate pairs
 (distinct) joined with the shingle arrays instead (``_edges_minhash``).
@@ -35,7 +44,8 @@ Plan shape (self mode, cosine, below the fused caps):
      feats ──distributed parquet write──► blob (one per fit)
      feats ──mapInPandas: f32 tiled gemm against the mmap'd blob,
        f64 rescore of the survivors──► edges >= θ (a < b, max_k cap)
-     edges ──CC──► clusters ──join back──► selected / filtered / pairs
+     edges (driver-held) ──numpy CC──► dup nodes + pair rows
+       ──one broadcast join each──► selected / filtered / pairs
 
 Above the caps the edges come from IVF cells (``cosine_candidates=
 "ivf"``) or hyperplane-LSH candidates + verify. Called from a fitted
@@ -50,6 +60,9 @@ from __future__ import annotations
 from dataclasses import dataclass
 from typing import Callable
 
+import numpy as np
+import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -64,7 +77,7 @@ from semhash_spark.functions.hashing import (
     simhash_bands,
 )
 from semhash_spark.functions.vectors import cosine_similarity, hyperplane_bands
-from semhash_spark.operators.components import connected_components
+from semhash_spark.operators.components import labels, label_frame, star_components
 from semhash_spark.operators.exact import (
     EXACT_KEY,
     cross_exact_split,
@@ -81,6 +94,7 @@ from semhash_spark.operators.lsh import (
 )
 from semhash_spark.operators.verify import (
     detach,
+    held,
     jaccard_similarity,
     verify_cosine,
     verify_jaccard,
@@ -184,7 +198,7 @@ def _edges_minhash(feats: DataFrame, cfg: DedupConfig, id_col: str,
     if edges is None:
         cands = _candidates_self(feats, cfg, "minhash", id_col)
         edges = verify_jaccard(cands, feats, "shingles", id_col, threshold,
-                               strategy="join")
+                               strategy="join").select("a", "b", "score")
     return edges
 
 
@@ -450,12 +464,7 @@ def self_deduplicate(
             ),
         )
     elif mode == "minhash":
-        edges = ck(
-            f"edges_{mode}",
-            lambda: _edges_minhash(feats, cfg, id_col, threshold).select(
-                "a", "b", "score"
-            ),
-        )
+        edges = ck(f"edges_{mode}", lambda: _edges_minhash(feats, cfg, id_col, threshold))
     else:
         cands = ck(
             f"candidates_{mode}",
@@ -467,84 +476,37 @@ def self_deduplicate(
                 "a", "b", "score"
             ),
         )
-    if extra_edges is not None:
-        edges = edges.unionByName(extra_edges.select("a", "b", "score")).distinct()
-    if checkpointer is None:
-        edges = edges.persist()
-        persisted.append(edges)
-
     from semhash_spark.operators.components import DRIVER_CC_CAP
 
     cc_cap = cfg.driver_cc_cap if cfg.driver_cc_cap is not None else DRIVER_CC_CAP
-    cc = ck(
-        f"clusters_{mode}",
-        lambda: connected_components(
-            edges.select(F.col("a").alias("src"), F.col("b").alias("dst")), id_col,
-            driver_cap=cc_cap,
-        ),
-    )
-    if checkpointer is None:
-        # narrow (id, cluster_id) cache — one row per dup-graph node —
-        # so the star path's union/distinct never re-runs per action
-        # (the driver path's LocalRelation is cheap either way)
-        cc = cc.persist()
-        persisted.append(cc)
-
-    ex = exemplars.join(cc, id_col, "left").withColumn(
-        "cluster_id", F.coalesce("cluster_id", F.col(id_col))
-    )
-    # selected/filtered/pairs are separate downstream actions over
-    # this join, but caching it (round 2..5) materialized a SECOND
-    # full-width copy of the corpus (keyed above is already cached and
-    # cc is a small broadcast): each action now re-runs the broadcast
-    # join against the keyed cache with column pruning — a count()
-    # reads two narrow columns instead of filling a wide cache, and
-    # the duplicate cache memory is gone at scale.
-    sel = ex.where(F.col("cluster_id") == F.col(id_col)).drop(
-        "cluster_id", "exemplar_id", "is_exact_dup", "exact_key"
-    )
-
-    # best-neighbor score for each dropped exemplar
-    sym = edges.select(F.col("a").alias(id_col), F.col("b").alias("nbr"), "score").union(
-        edges.select(F.col("b").alias(id_col), F.col("a").alias("nbr"), "score")
-    )
-    best = sym.groupBy(id_col).agg(F.max("score").alias("best_score"))
-    sem_filtered = (
-        ex.where(F.col("cluster_id") != F.col(id_col))
-        .drop("exemplar_id", "is_exact_dup", "exact_key")
-        .withColumnRenamed("cluster_id", "exemplar_id")
-        .join(best, id_col, "left")
-        .withColumn("score", F.coalesce("best_score", F.lit(1.0)))
-        .drop("best_score")
-        .withColumn("exact", F.lit(False))
-    )
-    exact_filtered = (
-        exact_dups.drop("cluster_id", "is_exact_dup", "exact_key")
-        .withColumn("score", F.lit(1.0))
-        .withColumn("exact", F.lit(True))
-    )
-    filtered = exact_filtered.unionByName(sem_filtered)
-
-    sem_pairs = (
-        sym.join(
-            ex.where(F.col("cluster_id") != F.col(id_col)).select(id_col),
-            id_col,
-            "left_semi",
+    table, edges = _edge_table(edges, extra_edges, cc_cap, cache=checkpointer is None)
+    spark = keyed.sparkSession
+    if table is not None:
+        # driver path: the edges are on the driver already, so the
+        # clusters, best scores and pair rows are numpy, shipped as two
+        # small frames; nothing is persisted
+        nodes, lab, dups, dup_pairs = _dup_graph_local(table, id_col)
+        if checkpointer:
+            ck(f"clusters_{mode}", lambda: label_frame(spark, nodes, lab, id_col))
+        dups = spark.createDataFrame(dups)
+        dup_pairs = spark.createDataFrame(dup_pairs)
+    else:
+        if checkpointer is None:
+            edges = edges.persist()
+            persisted.append(edges)
+        cc = ck(
+            f"clusters_{mode}",
+            lambda: star_components(edges.select(
+                F.col("a").cast("long").alias("src"), F.col("b").cast("long").alias("dst"),
+            ).where(F.col("src") != F.col("dst")), id_col),
         )
-        .select(
-            F.col(id_col).alias("dup_id"),
-            F.col("nbr").alias("other_id"),
-            "score",
-            F.lit(False).alias("exact"),
-        )
-    )
-    exact_pairs = exact_dups.select(
-        F.col(id_col).alias("dup_id"),
-        F.col("exemplar_id").alias("other_id"),
-        F.lit(1.0).alias("score"),
-        F.lit(True).alias("exact"),
-    )
-    pairs = exact_pairs.unionByName(sem_pairs)
+        if checkpointer is None:
+            # narrow (id, cluster_id) cache — one row per dup-graph node —
+            # so the star path's union/distinct never re-runs per action
+            cc = cc.persist()
+            persisted.append(cc)
+        dups, dup_pairs = _dup_graph_star(edges, cc, id_col)
+    sel, filtered, pairs = _assemble(exemplars, exact_dups, dups, dup_pairs, id_col)
 
     if checkpointer:
         checkpointer.write_metrics()
@@ -557,6 +519,116 @@ def self_deduplicate(
         id_col=id_col,
         _persisted=persisted,
     )
+
+
+def _edge_table(edges: DataFrame, extra_edges: DataFrame | None, cap: int,
+                cache: bool) -> tuple["pa.Table | None", DataFrame]:
+    """The (a, b, score) edges, with ``extra_edges`` unioned in as
+    distinct rows: (their driver table, or None above ``cap`` rows;
+    their frame). Edges the driver holds already (``verify.held``) are
+    read back without a job; others are collected by one
+    ``limit(cap + 1)`` probe, over a cache of the frame when ``cache``
+    (kept only when the probe overflows, for the star path to reuse)."""
+    frames = [edges] + ([extra_edges] if extra_edges is not None else [])
+    tables = [held(f) for f in frames]
+    frame = edges if extra_edges is None else edges.unionByName(
+        extra_edges.select("a", "b", "score")).distinct()
+    if any(t is None for t in tables):
+        frame = frame.persist() if cache else frame
+        table = frame.select("a", "b", "score").limit(cap + 1).toArrow()
+        if cache and table.num_rows <= cap:
+            frame.unpersist()
+    elif extra_edges is None:
+        table = tables[0]
+    else:
+        pdf = pd.concat([t.select(["a", "b", "score"]).to_pandas() for t in tables])
+        table = pa.Table.from_pandas(pdf.drop_duplicates(), preserve_index=False)
+    return (table if table.num_rows <= cap else None), frame
+
+
+def _dup_graph_local(table: "pa.Table", id_col: str):
+    """The dup graph of an (a, b, score) edge table, in numpy: the
+    ``labels`` (nodes, cluster ids) of its non-loop edges, then as
+    Arrow tables the ``_assemble`` inputs ``dups`` (id, exemplar_id =
+    cluster label, score = max incident score, over loops too) of the
+    nodes whose label is not their own id, and ``dup_pairs`` (dup_id,
+    other_id, score): each edge once from every such endpoint, as the
+    mirrored edge list semi-joined to those nodes gives them."""
+    a = table["a"].to_numpy().astype(np.int64)
+    b = table["b"].to_numpy().astype(np.int64)
+    s = table["score"].to_numpy().astype(np.float64)
+    loop = a == b
+    nodes, lab = labels(a[~loop], b[~loop])
+    moved = lab != nodes
+    best = np.full(len(nodes), -np.inf)
+    from_dup = []
+    for end in (a, b):
+        pos = np.searchsorted(nodes, end)
+        hit = pos < len(nodes)
+        hit[hit] = nodes[pos[hit]] == end[hit]
+        np.maximum.at(best, pos[hit], s[hit])
+        is_dup = np.zeros(len(end), bool)
+        is_dup[hit] = moved[pos[hit]]
+        from_dup.append(is_dup)
+    da, db = from_dup
+    dups = pa.table({id_col: nodes[moved], "exemplar_id": lab[moved], "score": best[moved]})
+    dup_pairs = pa.table({
+        "dup_id": np.concatenate([a[da], b[db]]),
+        "other_id": np.concatenate([b[da], a[db]]),
+        "score": np.concatenate([s[da], s[db]]),
+    })
+    return nodes, lab, dups, dup_pairs
+
+
+def _dup_graph_star(edges: DataFrame, cc: DataFrame, id_col: str):
+    """The ``_assemble`` inputs of ``_dup_graph_local``, distributed: from
+    the star path's clusters ``cc`` and the mirrored edge list."""
+    sym = edges.select(F.col("a").alias(id_col), F.col("b").alias("nbr"), "score").union(
+        edges.select(F.col("b").alias(id_col), F.col("a").alias("nbr"), "score")
+    )
+    best = sym.groupBy(id_col).agg(F.max("score").alias("best_score"))
+    dups = (
+        cc.where(F.col("cluster_id") != F.col(id_col))
+        .join(best, id_col, "left")
+        .select(id_col, F.col("cluster_id").alias("exemplar_id"),
+                F.coalesce("best_score", F.lit(1.0)).alias("score"))
+    )
+    dup_pairs = sym.join(dups.select(id_col), id_col, "left_semi").select(
+        F.col(id_col).alias("dup_id"), F.col("nbr").alias("other_id"), "score")
+    return dups, dup_pairs
+
+
+def _assemble(exemplars: DataFrame, exact_dups: DataFrame, dups: DataFrame,
+              dup_pairs: DataFrame, id_col: str):
+    """(selected, filtered, pairs) of a self-dedup. An exemplar is a
+    semantic duplicate iff it is a ``dups`` node: a dup-graph node whose
+    cluster label is not its own id. ``dups`` and ``dup_pairs`` may
+    hold exact-duplicate rows (``extra_edges`` are computed over the
+    raw table), so the semantic rows come only from joins against the
+    exemplars: one join per frame, broadcast when the dup graph is a
+    small driver-held frame."""
+    drop = ("exemplar_id", "is_exact_dup", "exact_key")
+    sel = exemplars.join(dups.select(id_col), id_col, "left_anti").drop(*drop)
+    sem_filtered = exemplars.drop(*drop).join(dups, id_col).withColumn(
+        "exact", F.lit(False))
+    exact_filtered = (
+        exact_dups.drop("is_exact_dup", "exact_key")
+        .withColumn("score", F.lit(1.0))
+        .withColumn("exact", F.lit(True))
+    )
+    filtered = exact_filtered.unionByName(sem_filtered)
+    # an inner join on the unique exemplar ids is the semi-join that
+    # keeps the dup graph's rows on the build side
+    sem_pairs = dup_pairs.join(
+        exemplars.select(F.col(id_col).alias("dup_id")), "dup_id"
+    ).select("dup_id", "other_id", "score", F.lit(False).alias("exact"))
+    exact_pairs = exact_dups.select(
+        F.col(id_col).alias("dup_id"),
+        F.col("exemplar_id").alias("other_id"),
+        F.lit(1.0).alias("score"),
+        F.lit(True).alias("exact"),
+    )
+    return sel, filtered, exact_pairs.unionByName(sem_pairs)
 
 
 def deduplicate(
@@ -680,20 +752,27 @@ def _cross_result(kept, exact_dups, hits, cfg, threshold, id_col, persisted):
     """Shared result assembly for the cross paths: best-match per
     filtered query, selected anti-join, filtered/pairs frames.
     ``exact_dups`` must carry ``exemplar_id``; an ``exact_key`` column
-    is dropped if present (the blob path never builds one)."""
-    best = hits.groupBy("query_id").agg(
-        F.max_by(F.col("index_id"), F.struct(F.col("score"), -F.col("index_id"))).alias(
-            "exemplar_id"
-        ),
-        F.max("score").alias("score"),
-    )
+    is dropped if present (the blob path never builds one). Driver-held
+    ``hits`` (``verify.held``: the fused cosine path) give the best
+    matches in numpy, as one small frame both joins against ``kept``
+    read."""
+    rows = held(hits)
+    if rows is not None:
+        best = hits.sparkSession.createDataFrame(_best_matches(rows))
+    else:
+        best = hits.groupBy("query_id").agg(
+            F.max_by(F.col("index_id"), F.struct(F.col("score"), -F.col("index_id"))).alias(
+                "exemplar_id"
+            ),
+            F.max("score").alias("score"),
+        )
     sem_filtered = (
         kept.join(best, kept[id_col] == best["query_id"], "inner")
         .drop("query_id", "exact_key")
         .withColumn("exact", F.lit(False))
     )
-    selected = kept.join(hits.select("query_id").distinct(),
-                         kept[id_col] == F.col("query_id"), "left_anti").drop("exact_key")
+    selected = kept.join(best.select("query_id"), kept[id_col] == F.col("query_id"),
+                         "left_anti").drop("exact_key")
 
     exact_filtered = (
         exact_dups.drop("exact_key")
@@ -725,6 +804,20 @@ def _cross_result(kept, exact_dups, hits, cfg, threshold, id_col, persisted):
         cross=True,
         _persisted=persisted,
     )
+
+
+def _best_matches(hits: "pa.Table") -> "pa.Table":
+    """(query_id, exemplar_id, score) of each query's best hit in a
+    (query_id, index_id, score) table: max score, ties to the min
+    index id, as the distributed ``max_by`` picks it."""
+    q = hits["query_id"].to_numpy()
+    i = hits["index_id"].to_numpy()
+    sc = hits["score"].to_numpy()
+    order = np.lexsort((i, -sc, q))
+    q, i, sc = q[order], i[order], sc[order]
+    first = np.ones(len(q), bool)
+    first[1:] = q[1:] != q[:-1]
+    return pa.table({"query_id": q[first], "exemplar_id": i[first], "score": sc[first]})
 
 
 def incremental_deduplicate(

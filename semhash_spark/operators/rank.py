@@ -54,9 +54,11 @@ the fit's self ranking is read from it (``scan_ranking``).
 from __future__ import annotations
 
 import math
+import weakref
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -366,15 +368,55 @@ def cosine_self_scan(
 
 
 def scan_edges(scan: DataFrame) -> DataFrame:
-    """The threshold edges (a, b, score) of a ``cosine_self_scan``."""
-    return scan.where(F.col("a") < F.col("b"))
+    """The threshold edges (a, b, score) of a ``cosine_self_scan``;
+    driver-held (``verify.held``) when the scan is."""
+    from semhash_spark.operators.verify import held, hold
+
+    rows = held(scan)
+    if rows is None:
+        return scan.where(F.col("a") < F.col("b"))
+    return hold(scan.sparkSession, rows.filter(
+        pa.array(rows["a"].to_numpy() < rows["b"].to_numpy())))
 
 
 def scan_ranking(scan: DataFrame) -> DataFrame:
     """The self ranking (query_id, avg_score) of a ``cosine_self_scan``,
-    ordered as ``rank_by_avg_similarity`` orders it."""
-    return order_ranking(scan.where(F.col("a") == F.col("b")).select(
-        F.col("a").alias("query_id"), F.col("score").alias("avg_score")))
+    ordered as ``rank_by_avg_similarity`` orders it. A driver-held scan
+    gives a driver-held ranking: its rows, sorted (avg_score desc,
+    query_id asc), stay on the driver (``held_rows``), and
+    ``filter_outliers`` and ``find_representative`` slice them instead
+    of running jobs."""
+    from semhash_spark.operators.verify import held
+
+    rows = held(scan)
+    if rows is None:
+        return order_ranking(scan.where(F.col("a") == F.col("b")).select(
+            F.col("a").alias("query_id"), F.col("score").alias("avg_score")))
+    a = rows["a"].to_numpy()
+    own = a == rows["b"].to_numpy()
+    ids, avgs = a[own], rows["score"].to_numpy()[own]
+    order = np.lexsort((ids, -avgs))
+    return _ranking_frame(scan.sparkSession, pa.table(
+        {"query_id": ids[order], "avg_score": avgs[order]}))
+
+
+# the rows of each driver-held ranking, by frame, in ``order_ranking``
+# order; an entry lives as long as its frame
+_HELD_RANKINGS: "weakref.WeakKeyDictionary[DataFrame, pa.Table]" = (
+    weakref.WeakKeyDictionary())
+
+
+def _ranking_frame(spark, rows: pa.Table) -> DataFrame:
+    # one partition: the sort and a count need no exchange
+    out = order_ranking(spark.createDataFrame(rows).coalesce(1))
+    _HELD_RANKINGS[out] = rows
+    return out
+
+
+def held_rows(ranking: DataFrame) -> pa.Table | None:
+    """The sorted rows of a driver-held ranking (``scan_ranking``, or a
+    ``filter_outliers`` split of one), or None for any other ranking."""
+    return _HELD_RANKINGS.get(ranking)
 
 
 # boundary searches switch from direct TakeOrdered to quantile
@@ -440,15 +482,22 @@ def filter_outliers(
     of the descending ranking. Returns DataFrames with
     (query_id, avg_score).
 
-    Scale-safe plan: instead of a GLOBAL un-partitioned row_number
-    window (one task ranks everything), the exact cut boundary —
-    the cnt-th smallest (avg_score, query_id desc) — is computed by
-    distributed selection and applied as a broadcast filter
-    predicate. ids are unique within a ranking, so exactly ``cnt``
-    rows satisfy the boundary predicate: identical semantics, no
-    single-partition exchange.
+    A driver-held ranking (``held_rows``: the self ranking of a fit's
+    driver-held scan) is sliced on the driver: the inliers are
+    its first n - cnt sorted rows, the outliers its last cnt, each a
+    driver-held ranking again — no cache, no job. Its (avg desc, id
+    asc) order read backwards is ``_boundary_key``'s (avg asc, id desc)
+    tie order, so both plans cut at the same row.
 
-    The ranking is persisted (it feeds the count, the boundary
+    Scale-safe plan, for every other ranking: instead of a GLOBAL
+    un-partitioned row_number window (one task ranks everything), the
+    exact cut boundary — the cnt-th smallest (avg_score, query_id
+    desc) — is computed by distributed selection and applied as a
+    broadcast filter predicate. ids are unique within a ranking, so
+    exactly ``cnt`` rows satisfy the boundary predicate: identical
+    semantics, no single-partition exchange.
+
+    That ranking is persisted (it feeds the count, the boundary
     search, and both output splits); pass ``persisted`` (a list) to
     receive the cached frame for later ``unpersist`` —
     ``FilterResultDF.release()`` does this for the api surface
@@ -459,6 +508,12 @@ def filter_outliers(
     """
     if outlier_percentage < 0.0 or outlier_percentage > 1.0:
         raise ValueError("outlier_percentage must be between 0 and 1")
+    rows = held_rows(ranking)
+    if rows is not None:
+        cut = rows.num_rows - math.ceil(rows.num_rows * outlier_percentage)
+        spark = ranking.sparkSession
+        return (_ranking_frame(spark, rows.slice(0, cut)),
+                _ranking_frame(spark, rows.slice(cut)))
     if not ranking.is_cached:
         ranking = ranking.persist()
         if persisted is not None:
@@ -796,20 +851,38 @@ def find_representative(
     filtered_ids). Collects <= max(candidate_limit, 1000) rows — the
     bounded-driver-side step (SURVEY §2.6 R5): the top candidates of
     the ranking joined to their embeddings, in one collect, ordered on
-    the driver by (avg_score desc, id asc)."""
+    the driver by (avg_score desc, id asc). A driver-held ranking
+    (``held_rows``) gives its size and candidates from its sorted
+    rows, and only their embeddings are collected."""
+    rows = held_rows(ranking)
     if candidate_limit == "auto":
-        candidate_limit = compute_candidate_limit(ranking.count(), selection_size)
-    top = order_ranking(ranking).limit(int(candidate_limit))
-    rows = top.join(
-        feats.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("_emb")),
-        "query_id",
-    ).collect()
-    if not rows:
+        n = rows.num_rows if rows is not None else ranking.count()
+        candidate_limit = compute_candidate_limit(n, selection_size)
+    if rows is not None:
+        top = rows.slice(0, int(candidate_limit))
+        ids = top["query_id"].to_numpy()
+        embs_by_id = {}
+        if len(ids):
+            # one SQL IN list: Column.isin makes a JVM call per id
+            wanted = F.expr(f"`{id_col}` IN ({','.join(map(str, ids.tolist()))})")
+            embs_by_id = dict(feats.where(wanted).select(id_col, emb_col).collect())
+        found = np.array([i in embs_by_id for i in ids.tolist()], dtype=bool)
+        cand_ids = ids[found].tolist()
+        relevance = top["avg_score"].to_numpy()[found]
+        embs = [embs_by_id[i] for i in cand_ids]
+    else:
+        top = order_ranking(ranking).limit(int(candidate_limit))
+        got = top.join(
+            feats.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("_emb")),
+            "query_id",
+        ).collect()
+        got.sort(key=lambda r: (-r["avg_score"], r["query_id"]))
+        cand_ids = [int(r["query_id"]) for r in got]
+        relevance = np.array([float(r["avg_score"]) for r in got])
+        embs = [r["_emb"] for r in got]
+    if not cand_ids:
         return [], [], []
-    rows.sort(key=lambda r: (-r["avg_score"], r["query_id"]))
-    cand_ids = [int(r["query_id"]) for r in rows]
-    relevance = np.array([float(r["avg_score"]) for r in rows])
-    embs = np.stack([np.asarray(r["_emb"], dtype=np.float64) for r in rows])
+    embs = np.stack([np.asarray(e, dtype=np.float64) for e in embs])
 
     sel_pos, sel_scores = diversify(embs, relevance, selection_size, diversity, strategy)
     sel_ids = [cand_ids[p] for p in sel_pos]

@@ -33,8 +33,11 @@ identical float64 division — bit-identical to the DuckDB oracle.
 
 from __future__ import annotations
 
+import weakref
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -271,13 +274,34 @@ def drop_blob(ref: dict | None) -> None:
         shutil.rmtree(_pack_root(ref["tag"]), ignore_errors=True)
 
 
+# the Arrow table each driver-held frame (``detach``, ``hold``) was
+# built from, by frame: a caller reads a held frame's rows back with
+# ``held`` instead of collecting them again. An entry lives as long as
+# its frame.
+_HELD: "weakref.WeakKeyDictionary[DataFrame, pa.Table]" = weakref.WeakKeyDictionary()
+
+
+def hold(spark, table: "pa.Table") -> DataFrame:
+    """A driver-held frame of ``table``'s rows (a LocalRelation up to
+    Spark's local-relation size), readable back with ``held``."""
+    out = spark.createDataFrame(table)
+    _HELD[out] = table
+    return out
+
+
+def held(frame: DataFrame) -> "pa.Table | None":
+    """The Arrow table of a driver-held frame (``hold``, ``detach``),
+    or None when ``frame`` is not one."""
+    return _HELD.get(frame)
+
+
 def detach(frame: DataFrame, own: dict | None = None, in_order: bool = False) -> DataFrame:
     """Run ``frame``, a plan that reads blobs, now and return a frame
     that reads none; then drop ``own``, the blob the caller wrote for
     this frame alone (None when the blob's owner outlives the call).
-    Like the connected-components driver path, up to ``DRIVER_CC_CAP``
-    rows come back as a driver-held frame (no cache, nothing to
-    release); more stay on the executors as an eager local checkpoint,
+    Up to ``DRIVER_CC_CAP`` rows come back as a driver-held frame
+    (``hold``: no cache, nothing to release, its table kept for
+    ``held``); more stay on the executors as an eager local checkpoint,
     freed when the frame is garbage-collected. ``in_order`` makes the
     driver-held frame one partition in collected order, where each
     task's rows stay contiguous and in order, for consumers whose
@@ -292,7 +316,7 @@ def detach(frame: DataFrame, own: dict | None = None, in_order: bool = False) ->
         probe = frame.limit(DRIVER_CC_CAP + 1).toArrow()
         if probe.num_rows > DRIVER_CC_CAP:
             return frame.localCheckpoint(eager=True)
-        out = frame.sparkSession.createDataFrame(probe)
+        out = hold(frame.sparkSession, probe)
         return out.coalesce(1) if in_order else out
     finally:
         drop_blob(own)
