@@ -23,9 +23,9 @@ average (``rank.cosine_self_scan``), so ``self_deduplicate``,
 scan. The fit owns its blobs: every frame it hands out is detached
 from them (``verify.detach``), and ``release()`` drops them. The
 ranking memoization of the reference (semhash/semhash.py:41,
-498-518) maps to the fit's memo of its self ranking: the sorted rows
-on the driver (``rank.held_rows``) when the shared scan is
-driver-held, else a persisted DataFrame.
+498-518) maps to the fit's memo of its self ranking: its rows on the
+driver (``verify.held``) when the ranking is driver-held, else a
+persisted DataFrame.
 """
 
 from __future__ import annotations
@@ -442,6 +442,8 @@ class SparkSemHash:
 
     def self_rank(self) -> DataFrame:
         """Memoized self-ranking (reference semhash.py:490-519)."""
+        from semhash_spark.operators.verify import held
+
         self._require_fit()
         if self._ranking is None:
             # any shared scan of the fit carries the averages (they do
@@ -450,14 +452,12 @@ class SparkSemHash:
             if scan is None and self.mode == "cosine":
                 scan = self._shared_scan(self.cfg.threshold)
             if scan is not None:
-                # a driver-held scan gives a driver-held ranking, which
-                # the outlier cut and the representatives slice on the
-                # driver (rank.held_rows): nothing to cache
                 ranking = rank_ops.scan_ranking(scan)
-                self._ranking = (ranking if rank_ops.held_rows(ranking) is not None
-                                 else ranking.persist())
             else:
-                self._ranking = self._ranked(self._embedding_feats(), True).persist()
+                ranking = self._ranked(self._embedding_feats(), True)
+            # a driver-held ranking (verify.held), which the outlier cut
+            # and the representatives slice on the driver: nothing to cache
+            self._ranking = ranking if held(ranking) is not None else ranking.persist()
         return self._ranking
 
     def rank(self, query_df: DataFrame) -> DataFrame:

@@ -752,20 +752,13 @@ def _cross_result(kept, exact_dups, hits, cfg, threshold, id_col, persisted):
     """Shared result assembly for the cross paths: best-match per
     filtered query, selected anti-join, filtered/pairs frames.
     ``exact_dups`` must carry ``exemplar_id``; an ``exact_key`` column
-    is dropped if present (the blob path never builds one). Driver-held
-    ``hits`` (``verify.held``: the fused cosine path) give the best
-    matches in numpy, as one small frame both joins against ``kept``
-    read."""
-    rows = held(hits)
-    if rows is not None:
-        best = hits.sparkSession.createDataFrame(_best_matches(rows))
-    else:
-        best = hits.groupBy("query_id").agg(
-            F.max_by(F.col("index_id"), F.struct(F.col("score"), -F.col("index_id"))).alias(
-                "exemplar_id"
-            ),
-            F.max("score").alias("score"),
-        )
+    is dropped if present (the blob path never builds one)."""
+    best = hits.groupBy("query_id").agg(
+        F.max_by(F.col("index_id"), F.struct(F.col("score"), -F.col("index_id"))).alias(
+            "exemplar_id"
+        ),
+        F.max("score").alias("score"),
+    )
     sem_filtered = (
         kept.join(best, kept[id_col] == best["query_id"], "inner")
         .drop("query_id", "exact_key")
@@ -804,20 +797,6 @@ def _cross_result(kept, exact_dups, hits, cfg, threshold, id_col, persisted):
         cross=True,
         _persisted=persisted,
     )
-
-
-def _best_matches(hits: "pa.Table") -> "pa.Table":
-    """(query_id, exemplar_id, score) of each query's best hit in a
-    (query_id, index_id, score) table: max score, ties to the min
-    index id, as the distributed ``max_by`` picks it."""
-    q = hits["query_id"].to_numpy()
-    i = hits["index_id"].to_numpy()
-    sc = hits["score"].to_numpy()
-    order = np.lexsort((i, -sc, q))
-    q, i, sc = q[order], i[order], sc[order]
-    first = np.ones(len(q), bool)
-    first[1:] = q[1:] != q[:-1]
-    return pa.table({"query_id": q[first], "exemplar_id": i[first], "score": sc[first]})
 
 
 def incremental_deduplicate(

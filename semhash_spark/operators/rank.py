@@ -54,7 +54,6 @@ the fit's self ranking is read from it (``scan_ranking``).
 from __future__ import annotations
 
 import math
-import weakref
 
 import numpy as np
 import pandas as pd
@@ -382,41 +381,26 @@ def scan_edges(scan: DataFrame) -> DataFrame:
 def scan_ranking(scan: DataFrame) -> DataFrame:
     """The self ranking (query_id, avg_score) of a ``cosine_self_scan``,
     ordered as ``rank_by_avg_similarity`` orders it. A driver-held scan
-    gives a driver-held ranking: its rows, sorted (avg_score desc,
-    query_id asc), stay on the driver (``held_rows``), and
-    ``filter_outliers`` and ``find_representative`` slice them instead
-    of running jobs."""
-    from semhash_spark.operators.verify import held
+    gives a driver-held ranking (``verify.hold``: one partition, rows
+    in ranking order), which ``filter_outliers`` and ``find_representative`` slice
+    on the driver instead of running jobs."""
+    from semhash_spark.operators.verify import held, hold
 
     rows = held(scan)
     if rows is None:
         return order_ranking(scan.where(F.col("a") == F.col("b")).select(
             F.col("a").alias("query_id"), F.col("score").alias("avg_score")))
-    a = rows["a"].to_numpy()
-    own = a == rows["b"].to_numpy()
-    ids, avgs = a[own], rows["score"].to_numpy()[own]
-    order = np.lexsort((ids, -avgs))
-    return _ranking_frame(scan.sparkSession, pa.table(
-        {"query_id": ids[order], "avg_score": avgs[order]}))
+    own = pa.array(rows["a"].to_numpy() == rows["b"].to_numpy())
+    own_rows = rows.filter(own).select(["a", "score"]).rename_columns(
+        ["query_id", "avg_score"])
+    return hold(scan.sparkSession, _ranking_rows(own_rows), one_partition=True)
 
 
-# the rows of each driver-held ranking, by frame, in ``order_ranking``
-# order; an entry lives as long as its frame
-_HELD_RANKINGS: "weakref.WeakKeyDictionary[DataFrame, pa.Table]" = (
-    weakref.WeakKeyDictionary())
-
-
-def _ranking_frame(spark, rows: pa.Table) -> DataFrame:
-    # one partition: the sort and a count need no exchange
-    out = order_ranking(spark.createDataFrame(rows).coalesce(1))
-    _HELD_RANKINGS[out] = rows
-    return out
-
-
-def held_rows(ranking: DataFrame) -> pa.Table | None:
-    """The sorted rows of a driver-held ranking (``scan_ranking``, or a
-    ``filter_outliers`` split of one), or None for any other ranking."""
-    return _HELD_RANKINGS.get(ranking)
+def _ranking_rows(rows: pa.Table) -> pa.Table:
+    """A driver-held ranking's rows in ``order_ranking`` order
+    (avg_score desc, query_id asc)."""
+    order = np.lexsort((rows["query_id"].to_numpy(), -rows["avg_score"].to_numpy()))
+    return rows.take(order)
 
 
 # boundary searches switch from direct TakeOrdered to quantile
@@ -482,12 +466,13 @@ def filter_outliers(
     of the descending ranking. Returns DataFrames with
     (query_id, avg_score).
 
-    A driver-held ranking (``held_rows``: the self ranking of a fit's
-    driver-held scan) is sliced on the driver: the inliers are
-    its first n - cnt sorted rows, the outliers its last cnt, each a
-    driver-held ranking again — no cache, no job. Its (avg desc, id
-    asc) order read backwards is ``_boundary_key``'s (avg asc, id desc)
-    tie order, so both plans cut at the same row.
+    A driver-held ranking (``verify.held``: the self ranking of a
+    fit's driver-held scan, or a ranking the fit detached) is sliced on
+    the driver: sorted in ranking order, the inliers are its first
+    n - cnt rows and the outliers its last cnt, each a driver-held
+    ranking again — no cache, no job. That order read backwards is
+    ``_boundary_key``'s (avg asc, id desc) tie order, so both plans
+    cut at the same row.
 
     Scale-safe plan, for every other ranking: instead of a GLOBAL
     un-partitioned row_number window (one task ranks everything), the
@@ -506,14 +491,17 @@ def filter_outliers(
     left alone: its owner manages that cache, so release() here won't
     yank it from under the memo.
     """
+    from semhash_spark.operators.verify import held, hold
+
     if outlier_percentage < 0.0 or outlier_percentage > 1.0:
         raise ValueError("outlier_percentage must be between 0 and 1")
-    rows = held_rows(ranking)
+    rows = held(ranking)
     if rows is not None:
+        rows = _ranking_rows(rows)
         cut = rows.num_rows - math.ceil(rows.num_rows * outlier_percentage)
         spark = ranking.sparkSession
-        return (_ranking_frame(spark, rows.slice(0, cut)),
-                _ranking_frame(spark, rows.slice(cut)))
+        return (hold(spark, rows.slice(0, cut), one_partition=True),
+                hold(spark, rows.slice(cut), one_partition=True))
     if not ranking.is_cached:
         ranking = ranking.persist()
         if persisted is not None:
@@ -852,37 +840,32 @@ def find_representative(
     bounded-driver-side step (SURVEY §2.6 R5): the top candidates of
     the ranking joined to their embeddings, in one collect, ordered on
     the driver by (avg_score desc, id asc). A driver-held ranking
-    (``held_rows``) gives its size and candidates from its sorted
-    rows, and only their embeddings are collected."""
-    rows = held_rows(ranking)
+    (``verify.held``) gives its size and top candidates on the driver,
+    as a small frame joined to their embeddings."""
+    from semhash_spark.operators.verify import held
+
+    rows = held(ranking)
+    if rows is not None:
+        rows = _ranking_rows(rows)
     if candidate_limit == "auto":
         n = rows.num_rows if rows is not None else ranking.count()
         candidate_limit = compute_candidate_limit(n, selection_size)
     if rows is not None:
-        top = rows.slice(0, int(candidate_limit))
-        ids = top["query_id"].to_numpy()
-        embs_by_id = {}
-        if len(ids):
-            # one SQL IN list: Column.isin makes a JVM call per id
-            wanted = F.expr(f"`{id_col}` IN ({','.join(map(str, ids.tolist()))})")
-            embs_by_id = dict(feats.where(wanted).select(id_col, emb_col).collect())
-        found = np.array([i in embs_by_id for i in ids.tolist()], dtype=bool)
-        cand_ids = ids[found].tolist()
-        relevance = top["avg_score"].to_numpy()[found]
-        embs = [embs_by_id[i] for i in cand_ids]
+        # a small frame, not a literal id list: candidate_limit is the
+        # caller's and may be large
+        top = ranking.sparkSession.createDataFrame(rows.slice(0, int(candidate_limit)))
     else:
         top = order_ranking(ranking).limit(int(candidate_limit))
-        got = top.join(
-            feats.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("_emb")),
-            "query_id",
-        ).collect()
-        got.sort(key=lambda r: (-r["avg_score"], r["query_id"]))
-        cand_ids = [int(r["query_id"]) for r in got]
-        relevance = np.array([float(r["avg_score"]) for r in got])
-        embs = [r["_emb"] for r in got]
-    if not cand_ids:
+    got = top.join(
+        feats.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("_emb")),
+        "query_id",
+    ).collect()
+    if not got:
         return [], [], []
-    embs = np.stack([np.asarray(e, dtype=np.float64) for e in embs])
+    got.sort(key=lambda r: (-r["avg_score"], r["query_id"]))
+    cand_ids = [int(r["query_id"]) for r in got]
+    relevance = np.array([float(r["avg_score"]) for r in got])
+    embs = np.stack([np.asarray(r["_emb"], dtype=np.float64) for r in got])
 
     sel_pos, sel_scores = diversify(embs, relevance, selection_size, diversity, strategy)
     sel_ids = [cand_ids[p] for p in sel_pos]

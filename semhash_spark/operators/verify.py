@@ -281,10 +281,14 @@ def drop_blob(ref: dict | None) -> None:
 _HELD: "weakref.WeakKeyDictionary[DataFrame, pa.Table]" = weakref.WeakKeyDictionary()
 
 
-def hold(spark, table: "pa.Table") -> DataFrame:
+def hold(spark, table: "pa.Table", one_partition: bool = False) -> DataFrame:
     """A driver-held frame of ``table``'s rows (a LocalRelation up to
-    Spark's local-relation size), readable back with ``held``."""
+    Spark's local-relation size), readable back with ``held``.
+    ``one_partition`` keeps the rows in one partition in table order,
+    where a count or a sort needs no exchange."""
     out = spark.createDataFrame(table)
+    if one_partition:
+        out = out.coalesce(1)
     _HELD[out] = table
     return out
 
@@ -316,8 +320,7 @@ def detach(frame: DataFrame, own: dict | None = None, in_order: bool = False) ->
         probe = frame.limit(DRIVER_CC_CAP + 1).toArrow()
         if probe.num_rows > DRIVER_CC_CAP:
             return frame.localCheckpoint(eager=True)
-        out = hold(frame.sparkSession, probe)
-        return out.coalesce(1) if in_order else out
+        return hold(frame.sparkSession, probe, one_partition=in_order)
     finally:
         drop_blob(own)
 

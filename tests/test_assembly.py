@@ -9,10 +9,11 @@ self ranking.
   selected / filtered / pairs rows, also when containment
   ``extra_edges`` touch exact-duplicate rows (the semantic rows stay
   restricted to exemplars).
-* Held ranking parity: the self ranking of a driver-held scan is
-  sliced on the driver by ``filter_outliers`` and
-  ``find_representative``; with heavily tied averages both must agree
-  with the distributed plans over the same ranking as a plain frame.
+* Held ranking parity: a driver-held ranking (the self ranking of a
+  driver-held scan, or the detached ``rank()`` of a query) is sliced
+  on the driver by ``filter_outliers`` and ``find_representative``;
+  with heavily tied averages both must agree with the distributed
+  plans over the same ranking as a plain frame.
 """
 
 from __future__ import annotations
@@ -153,12 +154,12 @@ def _ids(df) -> list[int]:
 
 def test_held_filter_outliers_matches_distributed(spark, tied_fit):
     ranking = tied_fit.self_rank()
-    rows = rank_ops.held_rows(ranking)
+    rows = held(ranking)
     assert rows is not None and not ranking.is_cached
     avgs = rows["avg_score"].to_numpy()
     assert len(np.unique(avgs)) <= len(avgs) // 2  # heavy ties
     plain = spark.createDataFrame(ranking.collect(), "query_id long, avg_score double")
-    assert rank_ops.held_rows(plain) is None
+    assert held(plain) is None
     for pct in (0.0, 0.1, 0.5, 1.0):
         fo = tied_fit.self_filter_outliers(pct)
         # the new lifetime: nothing cached for a held ranking
@@ -177,8 +178,27 @@ def test_held_find_representative_matches_distributed(spark, tied_fit):
     ranking = tied_fit.self_rank()
     plain = spark.createDataFrame(ranking.collect(), "query_id long, avg_score double")
     feats = tied_fit._feats
-    for k, limit in ((5, "auto"), (3, 20)):
+    # a limit above the ranking's size takes every row
+    for k, limit in ((5, "auto"), (3, 20), (4, 10_000)):
         want = rank_ops.find_representative(plain, feats, k, limit)
         assert rank_ops.find_representative(ranking, feats, k, limit) == want
         assert tied_fit.self_find_representative(k, limit) == want
         assert len(want[0]) == k
+
+
+def test_held_query_ranking_matches_distributed(spark, tied_fit):
+    """``rank()`` of a query on the fit's blob comes back detached, so
+    its outlier cut and representatives are driver slices too."""
+    query = tied_fit._feats.where(F.col("record_id") % 3 == 0)
+    ranking = tied_fit.rank(query)
+    assert held(ranking) is not None
+    plain = spark.createDataFrame(ranking.collect(), "query_id long, avg_score double")
+    for pct in (0.0, 0.1, 0.5, 1.0):
+        fo = tied_fit.filter_outliers(query, pct)
+        assert fo._persisted == []
+        inl, outl = rank_ops.filter_outliers(plain, pct)
+        assert _ids(fo.selected) == _ids(inl), pct
+        assert _ids(fo.filtered) == _ids(outl), pct
+        fo.release()
+    want = rank_ops.find_representative(plain, query, 4, "auto")
+    assert tied_fit.find_representative(query, 4) == want

@@ -19,7 +19,7 @@ MINHASH = DedupConfig(columns=("content",), threshold=0.8, shingle_k=5,
 # shuffle partitions); the same passes ran 29 and 26 jobs when the
 # results were re-joined in Spark and the ranking was cut by
 # distributed selection
-COSINE_PASS_MAX_JOBS = 17
+COSINE_PASS_MAX_JOBS = 18
 MINHASH_PASS_MAX_JOBS = 19
 
 
