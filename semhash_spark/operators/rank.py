@@ -382,8 +382,9 @@ def scan_ranking(scan: DataFrame) -> DataFrame:
     """The self ranking (query_id, avg_score) of a ``cosine_self_scan``,
     ordered as ``rank_by_avg_similarity`` orders it. A driver-held scan
     gives a driver-held ranking (``verify.hold``: one partition, rows
-    in ranking order), which ``filter_outliers`` and ``find_representative`` slice
-    on the driver instead of running jobs."""
+    in ranking order), which ``filter_outliers`` and
+    ``find_representative`` slice on the driver instead of running
+    jobs."""
     from semhash_spark.operators.verify import held, hold
 
     rows = held(scan)
