@@ -158,10 +158,8 @@ def run_suite(sf_dir: str, cpus: int, sf: float, corpus_n: int) -> dict:
     corpus = generate_corpus(spark, corpus_n).persist()
     corpus.count()  # materialize generation outside the timed region
     # warm the python worker pool + JIT so query timings reflect
-    # steady state, not the first pandas stage's cold start
-    import pandas as _pd  # noqa: F401
-
-    spark.range(1000).mapInPandas(lambda it: (p for p in it), "id long").count()
+    # steady state, not the first Arrow stage's cold start
+    spark.range(1000).mapInArrow(lambda it: (b for b in it), "id long").count()
 
     # headline query: best-of-N with per-stage breakdown and 1-min
     # load average per run — even inside a gated window a single draw

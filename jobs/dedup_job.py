@@ -117,7 +117,7 @@ def main(argv: list[str] | None = None, stop_spark: bool = True) -> dict:
     cfg = DedupConfig(
         columns=tuple(args.columns), threshold=args.threshold,
         shingle_k=args.shingle_k, num_perm=args.num_perm, bands=args.bands,
-        bucket_cap=args.bucket_cap, checkpoint_dir=args.checkpoint_dir,
+        bucket_cap=args.bucket_cap,
     )
     df = spark.read.parquet(args.input)
     if "record_id" not in df.columns:

@@ -11,7 +11,7 @@ in-memory ANN index plays that role.
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from dataclasses import dataclass, replace
 
 
 @dataclass(frozen=True)
@@ -38,8 +38,7 @@ class DedupConfig:
     # dominates). Downstream banding/verify is family-agnostic.
     minhash_family: str = "kperm"
 
-    # --- SimHash ---
-    simhash_bits: int = 64
+    # --- SimHash (64-bit fingerprints) ---
     simhash_bands: int = 4  # band count for hamming-candidate generation
     simhash_max_hamming: int = 3
 
@@ -89,7 +88,7 @@ class DedupConfig:
     # overflows — the star-cap argument: every probe row still reaches
     # the cell's min-id members, so >=θ cliques stay CC-connected)
     ivf_cell_cap: int = 20000
-    # probe rows per salted IVF scan subgroup. applyInPandas
+    # probe rows per salted IVF scan subgroup. applyInArrow
     # materializes a WHOLE group in one python worker, and correlated
     # embeddings skew cell populations (round-5: unsalted mega-cell
     # groups OOM'd a 128 GiB box at 1M rows), so group size is bounded
@@ -127,10 +126,6 @@ class DedupConfig:
     # closing the mod policy's zero-anchor recall hole on short docs)
     anchor_policy: str = "mod"
     winnow_window: int = 8
-
-    # --- execution ---
-    checkpoint_dir: str | None = None
-    shuffle_partitions: int = 32
 
     def __post_init__(self) -> None:
         if self.num_perm % self.bands != 0:

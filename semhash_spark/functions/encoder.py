@@ -8,7 +8,7 @@ bag-of-words into ``dim`` buckets with +/-1 signs, L2-normalized —
 mirroring the normalized 128-dim test model the reference pins its
 tests to (reference tests/data/test_model/config.json).
 
-The SAME numpy kernel runs inside the Spark pandas UDF (Arrow
+The SAME numpy kernel runs inside the Spark Arrow UDF (Arrow
 batches, vectorized per unique token) and inside the pytest oracle,
 so cosine scores agree bit-for-bit between pipeline and oracle.
 """
@@ -20,8 +20,11 @@ from functools import lru_cache
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from semhash_spark.functions.arrays import list_array
 
 
 @lru_cache(maxsize=1 << 20)
@@ -39,9 +42,7 @@ def _ramp(lens: np.ndarray) -> np.ndarray:
     return np.arange(total, dtype=np.int64) - np.repeat(offs, lens)
 
 
-def encode_texts(
-    texts: list[str] | pd.Series, dim: int = 64, ngram: int = 1
-) -> np.ndarray:
+def encode_texts(texts: list[str], dim: int = 64, ngram: int = 1) -> np.ndarray:
     """Encode texts to L2-normalized float32 vectors, shape (n, dim).
 
     ``ngram`` > 1 hashes token n-grams (space-joined) instead of
@@ -56,8 +57,6 @@ def encode_texts(
     """
     import itertools
 
-    if isinstance(texts, pd.Series):
-        texts = texts.fillna("").tolist()
     n = len(texts)
     tok_lists = [t.split() for t in texts]
     tlens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64, count=n)
@@ -136,15 +135,17 @@ class HashingEncoder:
 
 
 def embed_udf(dim: int = 64, ngram: int = 1):
-    """Scalar pandas UDF: string column -> array<float> embedding.
+    """Scalar Arrow UDF: string column -> array<float> embedding
+    (float32 lists, the declared element type; NULL texts encode as
+    empty texts).
 
     Arrow-batched; the per-batch cost is one python loop over tokens
     (the encoder), identical to the reference's batch
     ``model.encode(texts)`` call shape (semhash/utils.py:79-82).
     """
 
-    @F.pandas_udf(T.ArrayType(T.FloatType()))
-    def _embed(s: pd.Series) -> pd.Series:
+    @F.arrow_udf(T.ArrayType(T.FloatType()))
+    def _embed(s: pa.Array) -> pa.Array:
         # encode in bounded row slices: a 50k-row Arrow batch of ~1 KB
         # texts explodes into ~6M python token strings at once inside
         # encode_texts (~0.4-0.7 GB/worker high-water, which the malloc
@@ -152,14 +153,15 @@ def embed_udf(dim: int = 64, ngram: int = 1):
         # the 1M flagship). Per-row output is independent of the slice
         # split, so this is bit-identical.
         step = 8192
-        if len(s) <= step:
-            mat = encode_texts(s, dim, ngram)
+        texts = s.fill_null("")
+        if len(texts) <= step:
+            mat = encode_texts(texts.to_pylist(), dim, ngram)
         else:
             mat = np.vstack([
-                encode_texts(s.iloc[lo:lo + step], dim, ngram)
-                for lo in range(0, len(s), step)
+                encode_texts(texts.slice(lo, step).to_pylist(), dim, ngram)
+                for lo in range(0, len(texts), step)
             ])
-        return pd.Series(list(mat))
+        return list_array(mat)
 
     return _embed
 

@@ -8,15 +8,18 @@ index; instead we compute per-row sketches:
 * ``shingle_hashes``: distinct xxhash64 of word/char k-grams — JVM
   expression (split + xxhash64 per shingle, O(tokens) per row).
 * ``minhash_signature``: classic Broder MinHash over the shingle
-  hashes via a vectorized pandas/Arrow UDF. A SQL higher-order
+  hashes via a vectorized Arrow UDF. A SQL higher-order
   formulation was tried first and is ~50x slower: HOF lambdas are
   evaluated INTERPRETED, one call per (shingle, permutation) — the
   numpy batch computes the same num_perm x n_shingles min-reduction
   with two BLAS-level ops per Arrow batch. The permutation family is
   multiply-add over Z/2^64 (``sig[p] = min_s (a_p * s + b_p)`` with
   odd ``a_p``, uint64 wraparound), seeded deterministically.
-* ``simhash64``: 64-bit bit-vote fingerprint, same pandas-UDF
+* ``simhash64``: 64-bit bit-vote fingerprint, same Arrow-UDF
   batching (bit expansion via numpy shifts).
+
+The sketch UDFs read the shingle column with ``arrays.list_segments``: a
+NULL shingle array reads as an empty set.
 
 Only candidate RECALL depends on these hash families; every
 surviving pair is re-verified with exact Jaccard on the full shingle
@@ -27,10 +30,12 @@ DuckDB oracle regardless of family.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+
+from semhash_spark.functions.arrays import list_array, list_segments
 
 
 def tokens(col: str | Column, pattern: str = r"\s+") -> Column:
@@ -189,28 +194,6 @@ def _perm_family(num_perm: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-
-
-def _segments(s: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Flatten a Series of int arrays -> (flat uint64, lens, offsets).
-
-    NULL rows are treated as empty shingle sets (they flow through to
-    the all-sentinel signature / zero fingerprint instead of crashing
-    the stage on ``np.asarray(None)``).
-    """
-    arrs = [_EMPTY_I64 if v is None else np.asarray(v, dtype=np.int64) for v in s]
-    lens = np.fromiter((len(v) for v in arrs), dtype=np.int64, count=len(arrs))
-    flat = (
-        np.concatenate(arrs).astype(np.int64).view(np.uint64)
-        if len(arrs)
-        else np.empty(0, dtype=np.uint64)
-    )
-    offs = np.zeros(len(lens) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    return flat, lens, offs
-
-
 # values-per-chunk for the segment kernels: the flat chunk plus one
 # scratch buffer stay L2-resident, so the 128-perm / 64-bit passes
 # re-read cache instead of DRAM (32 concurrent workers share the
@@ -255,12 +238,11 @@ def minhash_signature(shingles_col: str | Column, num_perm: int) -> Column:
     """
     A, B = _perm_family(num_perm)
 
-    @pandas_udf("array<long>")
-    def _sig(s: pd.Series, _sz: pd.Series) -> pd.Series:
+    @arrow_udf("array<long>")
+    def _sig(s: pa.Array, _sz: pa.Array) -> pa.Array:
         n = len(s)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        flat, lens, offs = _segments(s)
+        flat, lens, offs, _ = list_segments(s)
+        flat = flat.view(np.uint64)
         out = np.full((n, num_perm), np.uint64(_LONG_MAX), dtype=np.uint64)
         if flat.size:
             # row-chunked so the flat slice + scratch stay L2-resident
@@ -282,8 +264,7 @@ def minhash_signature(shingles_col: str | Column, num_perm: int) -> Column:
                     np.multiply(fc, A[p], out=buf)
                     buf += B[p]  # uint64 wraparound
                     out[rows, p] = np.minimum.reduceat(buf, starts)
-        signed = out.view(np.int64)
-        return pd.Series(list(signed))
+        return list_array(out.view(np.int64))
 
     c = F.col(shingles_col) if isinstance(shingles_col, str) else shingles_col
     return _sig(c, F.size(c))
@@ -319,14 +300,11 @@ def oph_signature(shingles_col: str | Column, num_perm: int) -> Column:
     if num_perm & (num_perm - 1) or num_perm <= 0:
         raise ValueError("oph_signature needs a power-of-two num_perm")
 
-    @pandas_udf("array<long>")
-    def _sig(s: pd.Series, _sz: pd.Series) -> pd.Series:
-        n = len(s)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        flat, lens, offs = _segments(s)
-        out = _oph_pack(flat, lens, n, num_perm)
-        return pd.Series(list(out.view(np.int64)))
+    @arrow_udf("array<long>")
+    def _sig(s: pa.Array, _sz: pa.Array) -> pa.Array:
+        flat, lens, _, _ = list_segments(s)
+        out = _oph_pack(flat.view(np.uint64), lens, len(s), num_perm)
+        return list_array(out.view(np.int64))
 
     c = F.col(shingles_col) if isinstance(shingles_col, str) else shingles_col
     return _sig(c, F.size(c))
@@ -397,12 +375,11 @@ def simhash64(shingles_col: str | Column) -> Column:
     CollapseProject-inline protection as ``minhash_signature``.
     """
 
-    @pandas_udf("long")
-    def _sim(s: pd.Series, _sz: pd.Series) -> pd.Series:
+    @arrow_udf("long")
+    def _sim(s: pa.Array, _sz: pa.Array) -> pa.Array:
         n = len(s)
-        if n == 0:
-            return pd.Series([], dtype="int64")
-        flat, lens, offs = _segments(s)
+        flat, lens, offs, _ = list_segments(s)
+        flat = flat.view(np.uint64)
         out = np.zeros(n, dtype=np.uint64)
         if flat.size:
             for r0, r1 in _row_chunks(offs, n):  # L2-resident chunks
@@ -419,7 +396,7 @@ def simhash64(shingles_col: str | Column) -> Column:
                     )
                     fp |= (2 * ones > ln).astype(np.uint64) << np.uint64(b)
                 out[np.arange(r0, r1)[ne]] = fp
-        return pd.Series(out.view(np.int64))
+        return pa.array(out.view(np.int64))
 
     c = F.col(shingles_col) if isinstance(shingles_col, str) else shingles_col
     return _sim(c, F.size(c))

@@ -6,12 +6,12 @@ similarity directly on ``array<float>`` columns.
 
 Two implementations:
 
-* ``cosine_similarity`` — vectorized pandas/Arrow UDF (numpy batch
-  matmul, float64). This is the hot path: Spark's SQL higher-order
-  functions (aggregate/zip_with) are evaluated INTERPRETED, one
-  lambda call per element, ~100x slower per pair than a BLAS dot
-  over an Arrow batch. The input_hint mandates vectorized
-  pandas/Arrow UDFs for exactly this reason.
+* ``cosine_similarity`` — vectorized Arrow UDF (numpy batch
+  matmul, float64; both sides read by ``arrays.list_matrix``). This
+  is the hot path: Spark's SQL higher-order functions
+  (aggregate/zip_with) are evaluated INTERPRETED, one lambda call
+  per element, ~100x slower per pair than a BLAS dot over an Arrow
+  batch.
 * ``cosine_similarity_expr`` — the pure-expression form, needed only
   where a Column must be evaluated inside another SQL lambda (e.g.
   scoring a literal centroid array in operators/knn.py) where UDFs
@@ -25,42 +25,32 @@ Both accumulate in float64, matching the DuckDB oracle's
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 from pyspark.sql.types import DoubleType
+
+from semhash_spark.functions.arrays import list_array, list_matrix
 
 
 def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def _stack(s: pd.Series) -> tuple[np.ndarray, np.ndarray]:
-    """(matrix float64, null-row mask) from a Series of array values."""
-    null = s.isna().to_numpy()
-    if null.any():
-        dim = next((len(v) for v in s if v is not None), 1)
-        vals = [np.zeros(dim) if v is None else np.asarray(v, dtype=np.float64) for v in s]
-        return np.vstack(vals), null
-    return np.vstack([np.asarray(v, dtype=np.float64) for v in s]), null
-
-
 # DataType object, not a DDL string: string parsing would require an
 # active SparkSession at import time
-@pandas_udf(DoubleType())
-def _cosine_pd(a: pd.Series, b: pd.Series) -> pd.Series:
-    if len(a) == 0:
-        return pd.Series([], dtype="Float64")
-    xa, na_mask = _stack(a)
-    xb, nb_mask = _stack(b)
+@arrow_udf(DoubleType())
+def _cosine(a: pa.Array, b: pa.Array) -> pa.Array:
+    xa, na_mask = list_matrix(a)
+    xb, nb_mask = list_matrix(b)
     num = np.einsum("ij,ij->i", xa, xb)
     den = np.linalg.norm(xa, axis=1) * np.linalg.norm(xb, axis=1)
     bad = (den <= 0) | na_mask | nb_mask
     out = np.divide(num, den, out=np.zeros_like(num), where=~bad)
-    res = pd.Series(out, dtype="Float64")
-    res[bad] = pd.NA  # zero-norm / null input -> NULL (never matches >= t)
-    return res
+    # zero-norm / null input -> NULL (never matches >= t), and so is a
+    # NaN score (NaN input)
+    return pa.array(out, mask=bad | np.isnan(out))
 
 
 def cosine_similarity(a: str | Column, b: str | Column) -> Column:
@@ -70,7 +60,7 @@ def cosine_similarity(a: str | Column, b: str | Column) -> Column:
     predicate), mirroring the reference where a zero vector simply
     has no neighbors above threshold.
     """
-    return _cosine_pd(_c(a), _c(b))
+    return _cosine(_c(a), _c(b))
 
 
 # ------------------------------------------------- expression variants
@@ -113,7 +103,8 @@ def hyperplane_bands(
     its band index — ready for ``explode_band_array`` + bucket join.
     P(bit agreement) = 1 - angle(x, y) / pi, so near-cosine pairs
     share band keys with tunable probability. Vectorized: one
-    |batch| x bits matmul per Arrow batch.
+    |batch| x bits matmul per Arrow batch. NULL embeddings get an
+    EMPTY band array.
     """
     if bits % bands != 0:
         raise ValueError("bits must be divisible by bands")
@@ -121,22 +112,13 @@ def hyperplane_bands(
     rng = np.random.Generator(np.random.PCG64(seed))
     h = rng.standard_normal((bits, dim))
 
-    @pandas_udf("array<long>")
-    def _bands(v: pd.Series) -> pd.Series:
+    @arrow_udf("array<long>")
+    def _bands(v: pa.Array) -> pa.Array:
         n = len(v)
-        if n == 0:
-            return pd.Series([], dtype=object)
         # NULL embeddings produce an EMPTY band array: posexplode
         # drops the row, so null rows simply generate no candidates
-        # (instead of crashing np.asarray(None) or co-bucketing all
-        # nulls into one mega-bucket)
-        null = np.fromiter((e is None for e in v), dtype=bool, count=n)
-        if null.all():
-            return pd.Series([[]] * n, dtype=object)
-        d = len(next(e for e in v if e is not None))
-        x = np.vstack(
-            [np.zeros(d) if e is None else np.asarray(e, dtype=np.float64) for e in v]
-        )
+        # (instead of co-bucketing all nulls into one mega-bucket)
+        x, null = list_matrix(v)
         out = np.zeros((n, bands), dtype=np.uint64)
         # row-chunk the projection so the |chunk| x bits float64
         # product stays ~64 MB (a 50k-row Arrow batch at 2048 bits
@@ -162,12 +144,7 @@ def hyperplane_bands(
                 # salt with band index so identical words in different
                 # bands never collide after explode
                 out[lo:hi, b] = word ^ (np.uint64(b) << np.uint64(56))
-        rows = out.view(np.int64)
-        if null.any():
-            return pd.Series(
-                [[] if null[i] else rows[i] for i in range(n)], dtype=object
-            )
-        return pd.Series(list(rows))
+        return list_array(out.view(np.int64), null)
 
     return _bands(_c(a))
 

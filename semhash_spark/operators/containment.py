@@ -360,17 +360,19 @@ def lcs_confirm(
     )
 
     def confirm(batches):
-        import pandas as pd
+        import pyarrow as pa
 
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
             fracs = []
-            for ca, cb in zip(pdf["_ca"], pdf["_cb"]):
+            for ca, cb in zip(batch["_ca"].to_pylist(), batch["_cb"].to_pylist()):
                 small, big = (ca, cb) if len(ca) <= len(cb) else (cb, ca)
                 fracs.append(_lcs_len_hash(big, small) / len(small) if small else 0.0)
-            out = pdf[["a", "b", "score"]].copy()
-            out["lcs_frac"] = fracs
-            yield out[out["lcs_frac"] >= min_frac]
+            fracs = np.asarray(fracs, dtype=np.float64)
+            out = pa.RecordBatch.from_arrays(
+                [batch["a"], batch["b"], batch["score"], pa.array(fracs)],
+                names=["a", "b", "score", "lcs_frac"])
+            yield out.filter(pa.array(fracs >= min_frac))
 
-    return j.mapInPandas(confirm, "a long, b long, score double, lcs_frac double")
+    return j.mapInArrow(confirm, "a long, b long, score double, lcs_frac double")

@@ -14,7 +14,7 @@ structures ONCE per fit as executor-side mmap blobs:
                    hash -> (band_idx, member id) runs
   * shingle sets — the existing ``load_feats_segments`` pack
 
-and answers a query batch in ONE map-only job (`mapInPandas` over the
+and answers a query batch in ONE map-only job (`mapInArrow` over the
 query side; exact lookup, band-bucket probes, candidate dedup, exact
 float64 Jaccard verify — no shuffle, no index-side scan). Emitted
 rows and scores are identical to the relational plan: same full-index
@@ -35,9 +35,10 @@ within ``VERIFY_BROADCAST_MAX_BYTES`` of shingle payload per executor.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from semhash_spark.functions.arrays import list_segments, record_batch
 
 from semhash_spark.operators.verify import (
     _gather_rows,
@@ -197,15 +198,15 @@ def cross_match_blob(
             load_feats_segments(refs["feats"])
         )
         segt = (flats, row_shard, row_off, row_len)
-        for pdf in batches:
-            n = len(pdf)
+        for batch in batches:
+            n = batch.num_rows
             if n == 0:
                 continue
-            qids = pdf["_qid"].to_numpy().astype(np.int64, copy=False)
-            out_frames = []
+            qids = batch["_qid"].to_numpy().astype(np.int64, copy=False)
+            out_batches = []
             # ---- exact stage: sorted-digest lookup
             kb = np.frombuffer(
-                bytes.fromhex("".join(pdf["_xk"])), dtype=">u8"
+                bytes.fromhex("".join(batch["_xk"].to_pylist())), dtype=">u8"
             ).reshape(n, 4).astype(np.uint64)
             exact_row = np.full(n, -1, dtype=np.int64)
             if len(k0):
@@ -220,7 +221,7 @@ def cross_match_blob(
             is_exact = exact_row >= 0
             if is_exact.any():
                 sel = np.flatnonzero(is_exact)
-                out_frames.append(pd.DataFrame({
+                out_batches.append(record_batch({
                     "query_id": qids[sel],
                     "match_id": exact_row[sel],
                     "score": np.ones(len(sel)),
@@ -229,16 +230,10 @@ def cross_match_blob(
             # ---- semantic stage for non-exact rows
             sem = np.flatnonzero(~is_exact)
             if len(sem) and len(bnos):
-                band_arrays = [
-                    np.asarray(pdf["_bands"].iloc[i], dtype=np.int64)
-                    for i in sem
-                ]
-                blens = np.fromiter(
-                    (len(a) for a in band_arrays), np.int64, count=len(sem)
-                )
+                b_flat, b_lens, b_offs, _ = list_segments(batch["_bands"])
+                blens = b_lens[sem]
                 if int(blens.sum()):
-                    h = (np.concatenate(band_arrays) if len(band_arrays)
-                         else np.empty(0, np.int64))
+                    h = b_flat[np.repeat(b_offs[sem], blens) + _ramp(blens)]
                     qrow_b = np.repeat(sem, blens)
                     bidx_b = _ramp(blens)
                     # route each probe hash to its owning sorted part
@@ -278,19 +273,7 @@ def cross_match_blob(
                         cq, ci = cq[first], ci[first]
                         # verify: exact float64 Jaccard
                         pos = _lookup_rows(ids_sorted, perm, ci, "index")
-                        sh_arrays = [
-                            np.asarray(pdf["_sh"].iloc[i], dtype=np.int64)
-                            if pdf["_sh"].iloc[i] is not None
-                            else np.empty(0, np.int64)
-                            for i in range(n)
-                        ]
-                        q_lens = np.fromiter(
-                            (len(a) for a in sh_arrays), np.int64, count=n
-                        )
-                        q_offs = np.zeros(n, dtype=np.int64)
-                        np.cumsum(q_lens[:-1], out=q_offs[1:])
-                        q_flat = (np.concatenate(sh_arrays) if n
-                                  else np.empty(0, np.int64))
+                        q_flat, q_lens, q_offs, _ = list_segments(batch["_sh"])
                         inter, la, lb = _cross_intersections(
                             segt, pos, q_flat, q_offs, q_lens, cq
                         )
@@ -301,15 +284,14 @@ def cross_match_blob(
                         )
                         keep = score >= thr
                         if keep.any():
-                            out_frames.append(pd.DataFrame({
+                            out_batches.append(record_batch({
                                 "query_id": qids[cq[keep]],
                                 "match_id": ci[keep],
                                 "score": score[keep],
                                 "exact": np.zeros(int(keep.sum()), dtype=bool),
                             }))
-            if out_frames:
-                yield pd.concat(out_frames, ignore_index=True)
+            yield from out_batches
 
-    return q.mapInPandas(
+    return q.mapInArrow(
         match, "query_id long, match_id long, score double, exact boolean"
     )

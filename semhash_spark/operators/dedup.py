@@ -40,9 +40,9 @@ VERIFY_BROADCAST_MAX_BYTES, the edges come from candidate pairs
 
 Plan shape (self mode, cosine, below the fused caps):
 
-  exemplars ──encoder (pandas UDF)──► feats (id, embedding)
+  exemplars ──encoder (Arrow UDF)──► feats (id, embedding)
      feats ──distributed parquet write──► blob (one per fit)
-     feats ──mapInPandas: f32 tiled gemm against the mmap'd blob,
+     feats ──mapInArrow: f32 tiled gemm against the mmap'd blob,
        f64 rescore of the survivors──► edges >= θ (a < b, max_k cap)
      edges (driver-held) ──numpy CC──► dup nodes + pair rows
        ──one broadcast join each──► selected / filtered / pairs
@@ -61,7 +61,6 @@ from dataclasses import dataclass
 from typing import Callable
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -125,7 +124,7 @@ def add_features(df: DataFrame, cfg: DedupConfig, mode: str) -> DataFrame:
 
     minhash   -> shingles + sig        (JVM expressions)
     simhash   -> shingles + sim64      (JVM expressions)
-    cosine    -> embedding             (pandas UDF hashing encoder)
+    cosine    -> embedding             (Arrow UDF hashing encoder)
     jaccard_exact -> shingles only     (no signature; brute-force)
     Multi-column records are rendered to one string per the reference
     (tab-join, records.py:6-17) before shingling; for embeddings each
@@ -541,8 +540,10 @@ def _edge_table(edges: DataFrame, extra_edges: DataFrame | None, cap: int,
     elif extra_edges is None:
         table = tables[0]
     else:
-        pdf = pd.concat([t.select(["a", "b", "score"]).to_pandas() for t in tables])
-        table = pa.Table.from_pandas(pdf.drop_duplicates(), preserve_index=False)
+        # the distinct (a, b, score) rows in first-occurrence order
+        # (an unthreaded group_by keeps its groups in that order)
+        table = pa.concat_tables([t.select(["a", "b", "score"]) for t in tables]).group_by(
+            ["a", "b", "score"], use_threads=False).aggregate([])
     return (table if table.num_rows <= cap else None), frame
 
 

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semhash_spark.functions.arrays import record_batch
+
 BAND_COLS = ("band_idx", "band_hash")
 
 
@@ -365,11 +367,8 @@ def candidate_pairs_self(
 
     if pack is None:
         def gen(batches):
-            import pyarrow as pa
-
             for a, b in _bucket_walk(batches, cap):
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(a), pa.array(b)], names=["a", "b"])
+                yield record_batch({"a": a, "b": b})
 
         return st.mapInArrow(gen, "a long, b long").distinct()
 
@@ -378,7 +377,6 @@ def candidate_pairs_self(
 
     def verified(batches):
         import numpy as np
-        import pyarrow as pa
 
         from semhash_spark.operators.verify import load_feats_segments, score_set_pairs
 
@@ -398,9 +396,8 @@ def candidate_pairs_self(
                 for i in range(0, len(a), _SCORE_CHUNK)
             ]
             if sum(len(o[0]) for o in out):
-                return pa.RecordBatch.from_arrays(
-                    [pa.array(np.concatenate([o[k] for o in out])) for k in range(3)],
-                    names=["a", "b", "score"])
+                return record_batch({k: np.concatenate([o[j] for o in out])
+                                     for j, k in enumerate(("a", "b", "score"))})
             return None
 
         pend: list = []

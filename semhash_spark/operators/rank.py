@@ -24,7 +24,7 @@ Top-k plan (``topk_scores``), chosen by index size:
   into the f64 normalized transposed matrix,
   ``verify.load_feats_rows(ref, "topk")``) and each query partition
   computes exact cosine top-k with one BLAS matmul + 2-D
-  argpartition inside ``mapInPandas`` (``_topk_chunks``) — no pair
+  argpartition inside ``mapInArrow`` (``_topk_chunks``) — no pair
   shuffle, no window, output is |Q| x k rows only. This is the plan a
   1000-executor cluster wants whenever the index matrix is bounded
   (100k x 64 floats = 50 MB per executor vs a |Q| x |X| pair
@@ -41,7 +41,7 @@ Top-k plan (``topk_scores``), chosen by index size:
 
 No |Q| x |X| crossjoin plan: it loses to the broadcast pack at every
 measured size (500 x 500: 4.1 s vs 2.5 s; 5k x 5k: 36 s vs 2.3 s — the
-per-pair pandas-UDF cosine loses to the pack's fixed cost even at tiny
+per-pair UDF cosine loses to the pack's fixed cost even at tiny
 sizes) and its pair materialization does not survive scale.
 
 A fitted cosine ``SparkSemHash`` whose table fits both the fused
@@ -56,10 +56,11 @@ from __future__ import annotations
 import math
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from semhash_spark.functions.arrays import list_matrix, record_batch
 
 # index sides up to this many rows take the broadcast-matmul path
 BROADCAST_TOPK_CAP = 500_000
@@ -170,8 +171,8 @@ def _topk_broadcast(
         ids_i, mnT, nz = load_feats_rows(ref, "topk")
         zn = ~nz
         bufs = _topk_buffers(len(ids_i), exclude_self)
-        for pdf in batches:
-            batch = normalized_batch(pdf, id_col, emb_col) if len(ids_i) else None
+        for rb in batches:
+            batch = normalized_batch(rb, id_col, emb_col) if len(ids_i) else None
             if batch is None:  # NULL queries rank nothing
                 continue
             q_ids, qm, qz = batch
@@ -180,22 +181,20 @@ def _topk_broadcast(
             ):
                 if avg:
                     q, s = _topk_avgs(q_ids[lo:hi], sorted_s, valid, counts)
-                    yield pd.DataFrame({"query_id": q, "avg_score": s})
+                    yield record_batch({"query_id": q, "avg_score": s})
                     continue
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(q_ids[lo:hi], counts),
-                        "index_id": sorted_i[valid],
-                        "score": sorted_s[valid],
-                        "rk": _ramp(counts) + 1,
-                    }
-                )
+                yield record_batch({
+                    "query_id": np.repeat(q_ids[lo:hi], counts),
+                    "index_id": sorted_i[valid],
+                    "score": sorted_s[valid],
+                    "rk": _ramp(counts) + 1,
+                })
 
     schema = (
         "query_id long, avg_score double" if avg
         else "query_id long, index_id long, score double, rk long"
     )
-    out = query_feats.select(id_col, emb_col).mapInPandas(compute, schema)
+    out = query_feats.select(id_col, emb_col).mapInArrow(compute, schema)
     # a query's k rows stay in one partition in rank order, so a Spark
     # avg over them equals the kernel's (``_topk_avgs``)
     return detach(out, own, in_order=not avg) if own else out
@@ -347,22 +346,22 @@ def cosine_self_scan(
         ids_t, mnT, nz_t = load_feats_rows(ref, "topk")
         zn = ~nz_t
         bufs = _topk_buffers(len(ids_t), True)
-        for pdf in batches:
-            batch = normalized_batch(pdf, id_col, emb_col)
+        for rb in batches:
+            batch = normalized_batch(rb, id_col, emb_col)
             if batch is None:
                 continue
             q_ids, qm, qz = batch
             for r_g, c, sc in _chunked_threshold(
                 q_ids, qm, qz, ids_b, matn, blocks, nz_b, thr, max_k, self_mode=True,
             ):
-                yield pd.DataFrame({"a": q_ids[r_g], "b": ids_b[c], "score": sc})
+                yield record_batch({"a": q_ids[r_g], "b": ids_b[c], "score": sc})
             for lo, hi, _, sorted_s, valid, counts in _topk_chunks(
                 q_ids, qm, qz, ids_t, mnT, zn, k, True, bufs,
             ):
                 q, s = _topk_avgs(q_ids[lo:hi], sorted_s, valid, counts)
-                yield pd.DataFrame({"a": q, "b": q, "score": s})
+                yield record_batch({"a": q, "b": q, "score": s})
 
-    return scan_rows(feats, id_col, emb_col, n_rows).mapInPandas(
+    return scan_rows(feats, id_col, emb_col, n_rows).mapInArrow(
         scan, "a long, b long, score double")
 
 
@@ -860,13 +859,15 @@ def find_representative(
     got = top.join(
         feats.select(F.col(id_col).alias("query_id"), F.col(emb_col).alias("_emb")),
         "query_id",
-    ).collect()
-    if not got:
+    ).toArrow()
+    if got.num_rows == 0:
         return [], [], []
-    got.sort(key=lambda r: (-r["avg_score"], r["query_id"]))
-    cand_ids = [int(r["query_id"]) for r in got]
-    relevance = np.array([float(r["avg_score"]) for r in got])
-    embs = np.stack([np.asarray(r["_emb"], dtype=np.float64) for r in got])
+    ids = got["query_id"].to_numpy().astype(np.int64, copy=False)
+    scores = got["avg_score"].to_numpy()
+    order = np.lexsort((ids, -scores))
+    cand_ids = ids[order].tolist()
+    relevance = scores[order]
+    embs = list_matrix(got["_emb"])[0][order]
 
     sel_pos, sel_scores = diversify(embs, relevance, selection_size, diversity, strategy)
     sel_ids = [cand_ids[p] for p in sel_pos]

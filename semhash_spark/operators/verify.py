@@ -10,7 +10,7 @@ chosen by feature-table size:
 
 * ``broadcast`` — the (id, shingles) table becomes a blob; the pair
   stream ships only (a, b) longs through Arrow (~16 bytes/pair
-  instead of two ~1 KB arrays/pair) and a mapInPandas kernel gathers
+  instead of two ~1 KB arrays/pair) and a mapInArrow kernel gathers
   both sides from the mmap'd pack and intersects them with one
   row-wise padded sort per batch. Measured ~8x faster than either
   join-based form at 576k pairs / 100k records (local[32]).
@@ -36,11 +36,11 @@ from __future__ import annotations
 import weakref
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from semhash_spark.functions.arrays import list_matrix, list_segments, record_batch
 from semhash_spark.functions.vectors import cosine_similarity
 
 # feature tables up to this many rows take the broadcast-blob path
@@ -207,9 +207,7 @@ def _capped_part_writer(path: str, max_bytes: int | None):
             writer.close()
             nbytes = os.path.getsize(tmp)
             os.replace(tmp, part)
-        yield pa.RecordBatch.from_arrays(
-            [pa.array([rows], pa.int64()), pa.array([nbytes], pa.int64())],
-            names=["rows", "bytes"])
+        yield record_batch({"rows": np.array([rows]), "bytes": np.array([nbytes])})
 
     return write
 
@@ -338,26 +336,14 @@ def _blob_files(ref: dict) -> list[str]:
 
 
 def _read_id_payload_files(files: list[str], id_col: str, payload_col: str):
-    """(ids int64, flat values, per-row lens int64, null_rows) of a
-    parquet file list.
-
-    Uses ``flatten()`` + ``value_lengths()`` (slice- and null-safe,
-    unlike raw ``.values``/``.offsets``); NULL payload rows read as
-    length 0 and are flagged in ``null_rows`` (None when there are
-    none)."""
+    """(ids int64, flat values, per-row lens int64, null-row mask) of a
+    parquet file list, the payload read by ``arrays.list_segments``
+    (NULL payload rows read as length 0)."""
     import pyarrow.parquet as pq
 
     tbl = pq.read_table(files, columns=[id_col, payload_col])
     ids = tbl.column(id_col).to_numpy().astype(np.int64, copy=False)
-    payload = tbl.column(payload_col).combine_chunks()
-    values = payload.flatten().to_numpy(zero_copy_only=False)
-    lens = payload.value_lengths().to_numpy(zero_copy_only=False)
-    lens = np.nan_to_num(lens.astype(np.float64), nan=0.0).astype(np.int64)
-    null_rows = (
-        payload.is_null().to_numpy(zero_copy_only=False)
-        if payload.null_count
-        else None
-    )
+    values, lens, _, null_rows = list_segments(tbl.column(payload_col))
     return ids, values, lens, null_rows
 
 
@@ -654,7 +640,7 @@ def _emb_part_builder(id_col: str, payload_col: str):
 
     def build(path):
         ids, values, lens, null_rows = _read_id_payload_files([path], id_col, payload_col)
-        if null_rows is not None:
+        if null_rows.any():
             keep = ~null_rows
             ids, lens = ids[keep], lens[keep]
         if len(ids) == 0:
@@ -1004,17 +990,18 @@ def _verify_set_broadcast(
 
     def score(batches):
         pack = load_feats_segments(ref)
-        for pdf in batches:
-            if len(pdf) == 0:
+        for batch in batches:
+            if batch.num_rows == 0:
                 continue
             a, b, s = score_set_pairs(
-                pack, pdf[left].to_numpy(dtype=np.int64),
-                pdf[right].to_numpy(dtype=np.int64), threshold, metric, left, right,
+                pack, batch[left].to_numpy().astype(np.int64, copy=False),
+                batch[right].to_numpy().astype(np.int64, copy=False),
+                threshold, metric, left, right,
             )
             if len(a):
-                yield pd.DataFrame({left: a, right: b, "score": s})
+                yield record_batch({left: a, right: b, "score": s})
 
-    return detach(pairs.select(left, right).mapInPandas(
+    return detach(pairs.select(left, right).mapInArrow(
         score, f"{left} long, {right} long, score double"), ref)
 
 
@@ -1321,16 +1308,16 @@ def cosine_threshold_edges_ivf(
       1. driver k-means over a bounded deterministic sample
          (``train_centroids`` — ordered-id sample, fixed seed)
       2. every row gets its ``n_probe`` nearest cells (vectorized
-         pandas UDF, home cell first), posexplode → (row, cell)
+         Arrow UDF, home cell first), posexplode → (row, cell)
       3. every cell's home pack is pre-capped to its ``cell_cap``
          lowest-id rows (window), the probe stream is salted so no
-         applyInPandas group holds more than ~``group_cap`` probe
+         applyInArrow group holds more than ~``group_cap`` probe
          rows, and the small capped pack replicates to each salt —
          correlated embeddings make mega-cells (measured round 5:
          unsalted groups OOM'd the box at 1M rows), and
-         applyInPandas materializes a whole group per worker, so
+         applyInArrow materializes a whole group per worker, so
          group size must be bounded BY CONSTRUCTION, not by hope
-      4. groupBy(cell, salt).applyInPandas: each subgroup runs the
+      4. groupBy(cell, salt).applyInArrow: each subgroup runs the
          SAME chunked f32-scan/f64-rescore kernel as the fused path,
          probe rows x the cell's capped home pack
       5. least/greatest normalize + distinct (a pair can surface in
@@ -1392,7 +1379,7 @@ def cosine_threshold_edges_ivf(
         )
     )
 
-    # Bound every applyInPandas group by construction. Cell population
+    # Bound every applyInArrow group by construction. Cell population
     # under correlated embeddings is skewed (boilerplate mega-cells):
     # an unbounded groupBy(cell) group is materialized WHOLE in one
     # python worker (plus the JVM's group buffer), which is exactly
@@ -1432,11 +1419,7 @@ def cosine_threshold_edges_ivf(
     )
     grouped = pack.unionByName(probes)
 
-    _empty = {
-        "a": np.array([], dtype=np.int64),
-        "b": np.array([], dtype=np.int64),
-        "score": np.array([], dtype=np.float64),
-    }
+    _schema = pa.schema([("a", pa.int64()), ("b", pa.int64()), ("score", pa.float64())])
 
     def _trim_arenas():
         # return the group's freed buffers to the OS between groups:
@@ -1453,36 +1436,32 @@ def cosine_threshold_edges_ivf(
         except Exception:
             pass
 
-    def scan(pdf):
+    def scan(table):
         try:
-            return _scan_inner(pdf)
+            return pa.Table.from_batches(list(_scan_inner(table)), _schema)
         finally:
             _trim_arenas()
 
-    def _scan_inner(pdf):
-        if len(pdf) < 2:
-            return pd.DataFrame(_empty)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
+    def _scan_inner(table):
+        if table.num_rows < 2:
+            return
+        ids = table[id_col].to_numpy().astype(np.int64, copy=False)
+        home = table["_home"].to_numpy()
         if ref is not None:
             # id-only group: gather normalized rows from the blob pack
             ids_sorted, perm, rowsrc, nrm_rows = load_feats_rows(ref, "keyed")
             rows, ok = _locate_rows(ids_sorted, perm, ids)
             if not ok.all():  # NULL-embedding ids are absent from the pack
-                pdf = pdf[ok]
-                ids = ids[ok]
-                rows = rows[ok]
-                if len(pdf) < 2:
-                    return pd.DataFrame(_empty)
+                ids, home, rows = ids[ok], home[ok], rows[ok]
+                if len(ids) < 2:
+                    return
             xm = rowsrc[rows]
             xzero = nrm_rows[rows] <= 0
         else:
-            x = np.vstack(
-                [np.asarray(v, dtype=np.float64) for v in pdf[emb_col]]
-            )
+            x, _ = list_matrix(table[emb_col])
             xn = np.linalg.norm(x, axis=1, keepdims=True)
             xm = np.divide(x, xn, out=x, where=xn > 0)  # zero rows stay 0
             xzero = xn.ravel() <= 0
-        home = pdf["_home"].to_numpy(dtype=bool)
         h_idx = np.flatnonzero(home)
         # probe side = the non-pack rows only: every pack row's own
         # pos==0 probe instance arrives separately (_home=False), so
@@ -1490,7 +1469,7 @@ def cosine_threshold_edges_ivf(
         # redo identical pairs once per salt
         p_idx = np.flatnonzero(~home)
         if len(h_idx) == 0 or len(p_idx) == 0:
-            return pd.DataFrame(_empty)
+            return
         if len(h_idx) > cap:
             order = np.argsort(ids[h_idx], kind="stable")
             h_idx = h_idx[order[:cap]]
@@ -1501,7 +1480,6 @@ def cosine_threshold_edges_ivf(
         p_ids = ids[p_idx]
         pm = xm[p_idx]
         p_zero = xzero[p_idx]
-        outs = []
         for r, c, s in _chunked_threshold(
             p_ids, pm, p_zero, h_ids, hm, h_blk, nz_h, thr, mk,
             self_mode=False,
@@ -1511,12 +1489,8 @@ def cosine_threshold_edges_ivf(
             ne = a != b
             if ne.any():
                 a, b, s = a[ne], b[ne], s[ne]
-                lo = np.minimum(a, b)
-                hi = np.maximum(a, b)
-                outs.append(pd.DataFrame({"a": lo, "b": hi, "score": s}))
-        if not outs:
-            return pd.DataFrame(_empty)
-        return pd.concat(outs, ignore_index=True)
+                yield record_batch(
+                    {"a": np.minimum(a, b), "b": np.maximum(a, b), "score": s})
 
     # written last, so no earlier planning step can strand it
     ref = (
@@ -1524,7 +1498,7 @@ def cosine_threshold_edges_ivf(
         if use_blob
         else None
     )
-    edges = grouped.groupBy("_cell", "_salt").applyInPandas(
+    edges = grouped.groupBy("_cell", "_salt").applyInArrow(
         scan, "a long, b long, score double"
     ).distinct()
     return detach(edges, ref) if use_blob else edges
@@ -1579,7 +1553,7 @@ def cosine_threshold_edges(
 
 def _fused_edges(query: DataFrame, ref: dict, threshold: float, max_k: int | None,
                  self_mode: bool, id_col: str, emb_col: str, names) -> DataFrame:
-    """The fused scan's ``mapInPandas``: each (id, embedding) batch of
+    """The fused scan's ``mapInArrow``: each (id, embedding) batch of
     ``query`` runs ``_chunked_threshold`` against the scan pack of
     ``ref`` and emits (names[0], names[1], score) rows."""
     thr = float(threshold)
@@ -1587,32 +1561,30 @@ def _fused_edges(query: DataFrame, ref: dict, threshold: float, max_k: int | Non
 
     def edges(batches):
         ids_i, matn, nz_i, blocks = load_feats_rows(ref, "scan")
-        for pdf_b in batches:
-            batch = normalized_batch(pdf_b, id_col, emb_col) if len(ids_i) else None
+        for rb in batches:
+            batch = normalized_batch(rb, id_col, emb_col) if len(ids_i) else None
             if batch is None:
                 continue
             q_ids, qm, qz = batch
             for r_g, c, sc in _chunked_threshold(
                 q_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k, self_mode,
             ):
-                yield pd.DataFrame({q_col: q_ids[r_g], i_col: ids_i[c], "score": sc})
+                yield record_batch(
+                    {q_col: q_ids[r_g], i_col: ids_i[c], "score": sc})
 
-    return query.mapInPandas(edges, f"{q_col} long, {i_col} long, score double")
+    return query.mapInArrow(edges, f"{q_col} long, {i_col} long, score double")
 
 
-def normalized_batch(pdf: pd.DataFrame, id_col: str, emb_col: str):
+def normalized_batch(batch: pa.RecordBatch, id_col: str, emb_col: str):
     """(ids, row-normalized float64 matrix, zero-norm mask) of one
     Arrow batch of (id, embedding) rows, NULL embeddings dropped; None
     when nothing is left. Zero-norm rows stay all-zero."""
-    if len(pdf) == 0:
+    q, null = list_matrix(batch[emb_col])
+    ids = batch[id_col].to_numpy().astype(np.int64, copy=False)
+    if null.any():  # NULL embeddings never pair or rank
+        q, ids = q[~null], ids[~null]
+    if len(ids) == 0:
         return None
-    nn = pdf[emb_col].notna()
-    if not nn.all():  # NULL embeddings never pair or rank
-        pdf = pdf[nn]
-        if len(pdf) == 0:
-            return None
-    ids = pdf[id_col].to_numpy(dtype=np.int64)
-    q = np.vstack([np.asarray(v, dtype=np.float64) for v in pdf[emb_col]])
     qn = np.linalg.norm(q, axis=1, keepdims=True)
     qm = np.divide(q, qn, out=q, where=qn > 0)
     return ids, qm, qn.ravel() <= 0
@@ -1649,7 +1621,7 @@ def cosine_cross_threshold_edges(
 
     The INDEX embeddings are written as an executor-side blob
     (distributed parquet write, mmap'd scan pack per host) and
-    the QUERY side streams through ``mapInPandas``: each Arrow batch
+    the QUERY side streams through ``mapInArrow``: each Arrow batch
     computes one |batch| x |index| matmul and emits only the passing
     pairs. This is exactly the reference benchmark shape (a 4.3k-row
     test split scored against a 1.8M-row fitted index,
@@ -1730,17 +1702,17 @@ def _verify_cosine_blob(
 
     Pairs whose ids are absent from ``feats`` drop (the join form's
     inner-join semantics); zero-norm sides never pass a threshold
-    and score NaN without one (NULL-cosine semantics)."""
+    and score NULL without one (NULL-cosine semantics)."""
     ref = write_blob(feats.select(id_col, feat_col), id_col, feat_col, "cosverify")
     thr = None if threshold is None else float(threshold)
 
     def score(batches):
         sorted_ids, perm, rows, nrm = load_feats_rows(ref, "keyed")
-        for pdf in batches:
-            if len(pdf) == 0 or len(sorted_ids) == 0:
+        for batch in batches:
+            if batch.num_rows == 0 or len(sorted_ids) == 0:
                 continue
-            a = pdf[left].to_numpy(np.int64)
-            b = pdf[right].to_numpy(np.int64)
+            a = batch[left].to_numpy().astype(np.int64, copy=False)
+            b = batch[right].to_numpy().astype(np.int64, copy=False)
             ia, oka = _locate_rows(sorted_ids, perm, a)
             ib, okb = _locate_rows(sorted_ids, perm, b)
             ok = oka & okb
@@ -1753,13 +1725,12 @@ def _verify_cosine_blob(
             if thr is None:
                 with np.errstate(divide="ignore", invalid="ignore"):
                     s = np.where(den > 0, num / den, np.nan)
-                yield pd.DataFrame({left: a, right: b, "score": s})
+                yield record_batch({left: a, right: b, "score": s})
             else:
                 m = (den > 0) & (num >= thr * den)
                 if m.any():
-                    yield pd.DataFrame(
-                        {left: a[m], right: b[m], "score": num[m] / den[m]}
-                    )
+                    yield record_batch(
+                        {left: a[m], right: b[m], "score": num[m] / den[m]})
 
-    return detach(pairs.select(left, right).mapInPandas(
+    return detach(pairs.select(left, right).mapInArrow(
         score, f"{left} long, {right} long, score double"), ref)

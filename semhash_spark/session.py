@@ -33,7 +33,7 @@ def get_spark(
         ncores = os.cpu_count() or 8 if cores == "*" else int(cores)
         shuffle_partitions = max(8, ncores)
 
-    # one BLAS thread per python worker: numpy kernels in pandas UDFs
+    # one BLAS thread per python worker: numpy kernels in Arrow UDFs
     # run in one worker per task slot already — nested BLAS threading
     # oversubscribes the host (32 workers x N BLAS threads) and
     # destroys scaling
@@ -71,7 +71,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # bigger Arrow batches amortize JVM<->Python transfer overhead
-        # for the pandas-UDF kernels (measured ~1.5x on pair scoring)
+        # for the Arrow UDF / mapInArrow kernels (measured ~1.5x on
+        # pair scoring)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "50000")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_memory)

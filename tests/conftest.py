@@ -10,6 +10,15 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def tiny_batches(spark):
+    """7-row Arrow batches, so kernels cross batch and chunk boundaries."""
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
+    yield
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return "/root/testdata/sf0.001"

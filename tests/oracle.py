@@ -280,3 +280,110 @@ def topk_crossjoin(query_feats, index_feats, k, exclude_self=False,
     )
     w = Window.partitionBy("query_id").orderBy(F.col("score").desc(), F.col("index_id").asc())
     return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k)
+
+
+# ------------------------------------------ per-row UDF references
+#
+# One row at a time, from each UDF's definition, so the batched Arrow
+# kernels (``functions/arrays.py`` at their boundary) can be checked on
+# NULL, empty, zero-norm and single-row input. ``None`` is a NULL list.
+
+LONG_MAX = (1 << 63) - 1
+
+
+def minhash_row(shingles, num_perm):
+    """Broder MinHash: sig[p] = min_s (a_p * s + b_p) mod 2^64, signed;
+    no shingles -> all LONG_MAX."""
+    from semhash_spark.functions.hashing import _perm_family
+
+    if not shingles:
+        return [LONG_MAX] * num_perm
+    a, b = _perm_family(num_perm)
+    s = np.asarray(shingles, dtype=np.int64).view(np.uint64)
+    return [int(np.min(s * a[p] + b[p]).astype(np.uint64).view(np.int64))
+            for p in range(num_perm)]
+
+
+def oph_row(shingles, num_perm):
+    """One-permutation MinHash of one row (the kernel on a 1-row batch)."""
+    from semhash_spark.functions.hashing import _oph_pack
+
+    s = np.asarray(shingles or [], dtype=np.int64).view(np.uint64)
+    return _oph_pack(s, np.array([len(s)]), 1, num_perm)[0].view(np.int64).tolist()
+
+
+def simhash_row(shingles):
+    """Bit b set iff more than half the shingle hashes have bit b set;
+    no shingles -> 0."""
+    s = np.asarray(shingles or [], dtype=np.int64).view(np.uint64)
+    fp = 0
+    for bit in range(64):
+        ones = int(((s >> np.uint64(bit)) & np.uint64(1)).sum())
+        if 2 * ones > len(s):
+            fp |= 1 << bit
+    return fp - (1 << 64) if fp >= 1 << 63 else fp
+
+
+def cosine_row(a, b):
+    """Cosine of two vectors; None when either is NULL or zero-norm
+    (an empty list reads as a zero vector)."""
+    if a is None or b is None or not any(a) or not any(b):
+        return None
+    x, y = np.asarray(a, dtype=np.float64), np.asarray(b, dtype=np.float64)
+    return float(x @ y / (np.linalg.norm(x) * np.linalg.norm(y)))
+
+
+def hyperplane_row(v, bits, bands, seed, dim):
+    """Sign-random-projection band keys of one vector: NULL -> [];
+    an empty list projects like a zero vector (all signs unset)."""
+    if v is None:
+        return []
+    h = np.random.Generator(np.random.PCG64(seed)).standard_normal((bits, dim))
+    x = np.zeros(dim) if len(v) == 0 else np.asarray(v, dtype=np.float64)
+    signs = (h[:, : len(x)] @ x) > 0
+    width = bits // bands
+    out = []
+    for b in range(bands):
+        word = sum(1 << j for j in range(width) if signs[b * width + j])
+        word ^= b << 56
+        out.append(word - (1 << 64) if word >= 1 << 63 else word)
+    return out
+
+
+def probe_cells_row(v, cents, n_probe):
+    """The n_probe nearest centroid cells of one vector, by (score
+    desc, cell asc); NULL, empty and zero-norm vectors -> []."""
+    if v is None or not any(v):
+        return []
+    x = np.asarray(v, dtype=np.float64)
+    s = np.asarray(cents, dtype=np.float64)[:, : len(x)] @ x
+    return sorted(range(len(s)), key=lambda c: (-s[c], c))[:n_probe]
+
+
+def threshold_edges(rows, threshold):
+    """{(a, b): cosine} of every a < b pair at >= threshold among
+    (id, vector) rows; NULL and zero-norm vectors never pair."""
+    ok = [(i, np.asarray(v, dtype=np.float64)) for i, v in rows
+          if v is not None and any(v)]
+    out = {}
+    for p, (i, x) in enumerate(ok):
+        for j, y in ok[p + 1:]:
+            s = float(x @ y / (np.linalg.norm(x) * np.linalg.norm(y)))
+            if s >= threshold:
+                out[(min(i, j), max(i, j))] = s
+    return out
+
+
+def self_topk_avgs(rows, k):
+    """{id: mean of its top-k cosines to the other rows} among (id,
+    vector) rows; NULL and zero-norm vectors never rank nor are
+    ranked, and a row with nothing to rank gets no entry."""
+    ok = [(i, np.asarray(v, dtype=np.float64)) for i, v in rows
+          if v is not None and any(v)]
+    out = {}
+    for i, x in ok:
+        sims = sorted((float(x @ y / (np.linalg.norm(x) * np.linalg.norm(y)))
+                       for j, y in ok if j != i), reverse=True)[:k]
+        if sims:
+            out[i] = sum(sims) / len(sims)
+    return out

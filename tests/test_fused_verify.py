@@ -56,14 +56,6 @@ def _rows(df) -> set:
     return {(r.a, r.b, r.score) for r in df.select("a", "b", "score").collect()}
 
 
-@pytest.fixture
-def tiny_batches(spark):
-    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
-    yield
-    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
-
-
 def _fused(bands, feats, cap, metric, threshold):
     ref = verify.write_blob(feats.select("record_id", "shingles"), "record_id",
                             "shingles", "paritytest")

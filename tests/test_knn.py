@@ -231,3 +231,87 @@ def test_ivf_payload_blob_without_transport_falls_back(spark, monkeypatch):
     edges = V.cosine_threshold_edges_ivf(emb, 0.9, **kw)
     got = sorted(tuple(r) for r in edges.collect())
     assert got == want and len(got) > 100
+
+
+def _edge_case_rows(n=40, dim=6, seed=31):
+    """(id, vector) rows with a NULL row, a zero vector and a tight
+    clique, as f32 values (the column's type)."""
+    rng = np.random.default_rng(seed)
+    base = rng.standard_normal((n, dim))
+    base[10:22] = base[10] + 0.05 * rng.standard_normal((12, dim))
+    rows = [(i, np.float32(v).tolist()) for i, v in enumerate(base)]
+    rows[3] = (3, [0.0] * dim)
+    rows[4] = (4, None)
+    return rows
+
+
+def test_probe_cells_at_the_arrow_boundary(spark, tiny_batches):
+    """ivf_probe_cells on NULL, empty, zero-norm and single-row input
+    in 7-row batches: numpy's cells, home first; empty for the rest."""
+    from semhash_spark.operators.knn import ivf_probe_cells
+    from tests import oracle
+
+    rows = _edge_case_rows() + [(40, [])]
+    cents = np.random.default_rng(2).standard_normal((5, 6))
+    df = spark.createDataFrame(rows, "record_id long, embedding array<float>")
+    got = {r.record_id: r.cells for r in df.repartition(3).select(
+        "record_id", ivf_probe_cells("embedding", cents, 3).alias("cells")).collect()}
+    for i, v in rows:
+        assert got[i] == oracle.probe_cells_row(v, cents, 3), i
+    assert got[4] == got[3] == got[40] == []
+    one = df.where("record_id = 0").select(ivf_probe_cells("embedding", cents, 3))
+    assert one.first()[0] == oracle.probe_cells_row(rows[0][1], cents, 3)
+
+
+def test_embedding_kernels_at_the_arrow_boundary(spark, tiny_batches, monkeypatch):
+    """The mapInArrow / applyInArrow kernels that read embeddings
+    through ``verify.normalized_batch`` or a group table — the fused
+    threshold scan, the broadcast top-k, the shared self scan and the
+    IVF group scan (payload and blob plans) — on a NULL row, a zero
+    vector and a one-row table, in 7-row batches, against numpy."""
+    from semhash_spark.operators import rank as rank_ops
+    from semhash_spark.operators import verify as V
+    from tests import oracle
+
+    rows = _edge_case_rows()
+    emb = spark.createDataFrame(
+        rows, "record_id long, embedding array<float>").repartition(3).persist()
+    thr = 0.9
+    want = oracle.threshold_edges(rows, thr)
+    avgs = oracle.self_topk_avgs(rows, 5)
+    assert len(want) > 40 and 3 not in avgs and 4 not in avgs
+
+    def check_edges(frame):
+        got = {(r.a, r.b): r.score for r in frame.collect()}
+        assert got.keys() == want.keys()
+        for key, s in want.items():
+            assert got[key] == pytest.approx(s, abs=1e-9), key
+
+    def check_avgs(frame):
+        got = {r.query_id: r.avg_score for r in frame.collect()}
+        assert got.keys() == avgs.keys()
+        for key, s in avgs.items():
+            assert got[key] == pytest.approx(s, abs=1e-9), key
+
+    try:
+        check_edges(V.cosine_threshold_edges(emb, thr))
+        check_avgs(rank_ops.rank_by_avg_similarity(emb, emb, 5, exclude_self=True))
+        ref = V.write_blob(emb, "record_id", "embedding", "t_edge")
+        try:
+            scan = V.detach(rank_ops.cosine_self_scan(emb, ref, thr, k=5, max_k=None))
+        finally:
+            V.drop_blob(ref)
+        check_edges(rank_ops.scan_edges(scan))
+        check_avgs(rank_ops.scan_ranking(scan))
+        # IVF takes no NULL rows (train_centroids rejects them);
+        # every cell probed, so its edges are the complete set
+        ivf_in = emb.where("embedding IS NOT NULL")
+        kw = dict(n_cells=4, n_probe=4, n_rows=39, group_cap=8)
+        check_edges(V.cosine_threshold_edges_ivf(ivf_in, thr, **kw))
+        monkeypatch.setattr(V, "_IVF_BLOB_MIN_ROWS", 0)
+        check_edges(V.cosine_threshold_edges_ivf(ivf_in, thr, **kw))
+        one = emb.where("record_id = 0")
+        assert V.cosine_threshold_edges(one, thr).count() == 0
+        assert rank_ops.rank_by_avg_similarity(one, emb, 5).count() == 1
+    finally:
+        emb.unpersist()

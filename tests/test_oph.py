@@ -57,22 +57,27 @@ def test_oph_estimator_tracks_jaccard(spark):
         assert abs(est - true_j) < 0.15, (true_j, est)
 
 
-def test_oph_empty_and_null_rows(spark):
+def test_oph_empty_and_null_rows(spark, tiny_batches):
+    from tests import oracle
+
     df = spark.createDataFrame(
-        [(0, ["a b c d"]), (1, []), (2, None)],
+        [(0, ["a b c d"]), (1, []), (2, None)]
+        + [(i, [f"w{j}" for j in range(i % 13)]) for i in range(3, 24)],
         "record_id long, toks array<string>",
-    )
+    ).repartition(2)
     feats = df.select(
         "record_id",
-        oph_signature(
-            F.transform("toks", lambda t: F.xxhash64(t)), 8
-        ).alias("sig"),
+        F.transform("toks", lambda t: F.xxhash64(t)).alias("sh"),
+    ).select(
+        "record_id", "sh", oph_signature("sh", 8).alias("sig"),
     ).collect()
     got = {r.record_id: r.sig for r in feats}
     LM = (1 << 63) - 1
     assert got[1] == [LM] * 8
     assert got[2] == [LM] * 8
     assert got[0] != [LM] * 8 and len(got[0]) == 8
+    for r in feats:
+        assert r.sig == oracle.oph_row(r.sh, 8), r.record_id
 
 
 def test_oph_power_of_two_required():

@@ -77,7 +77,7 @@ def main() -> None:
         .persist()
     )
     q.count()
-    spark.range(1000).mapInPandas(lambda it: (p for p in it), "id long").count()
+    spark.range(1000).mapInArrow(lambda it: (b for b in it), "id long").count()
 
     t0 = time.perf_counter()
     sh = SparkSemHash(cfg, mode="minhash").fit(idx)

@@ -244,7 +244,7 @@ def main() -> None:
         )
     corpus = corpus.persist()
     corpus.count()  # materialize outside the timed region
-    spark.range(1000).mapInPandas(lambda it: (p for p in it), "id long").count()
+    spark.range(1000).mapInArrow(lambda it: (b for b in it), "id long").count()
 
     runs = []
     rss = RssSampler().start()

@@ -31,8 +31,7 @@ def main() -> None:
     sc = spark.sparkContext
     corpus = generate_corpus(spark, n).persist()
     corpus.count()
-    import pandas as _pd  # noqa: F401
-    spark.range(1000).mapInPandas(lambda it: (p for p in it), "id long").count()
+    spark.range(1000).mapInArrow(lambda it: (b for b in it), "id long").count()
 
     cfg = DedupConfig(
         columns=("content",), threshold=0.75, embedding_dim=128,
@@ -69,12 +68,12 @@ def main() -> None:
     def pack_only(batches):
         from semhash_spark.operators.verify import load_feats_rows
         load_feats_rows(ref, "scan")
-        import pandas as pd
+        import pyarrow as pa
         for b in batches:
             pass
-        yield pd.DataFrame({"x": [0]})
+        yield pa.RecordBatch.from_pydict({"x": [0]})
 
-    timed("pack", lambda: spark.range(0, cpus, 1, cpus).mapInPandas(
+    timed("pack", lambda: spark.range(0, cpus, 1, cpus).mapInArrow(
         pack_only, "x long").count())
 
     # given the blob, the scans are lazy frames (not detached), so each

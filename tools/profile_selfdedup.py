@@ -44,7 +44,7 @@ def main() -> None:
 
     corpus = generate_corpus(spark, n).persist()
     corpus.count()
-    spark.range(1000).mapInPandas(lambda it: (p for p in it), "id long").count()
+    spark.range(1000).mapInArrow(lambda it: (b for b in it), "id long").count()
 
     t = {}
 
