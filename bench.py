@@ -3,7 +3,7 @@
 
 Runs the flagship dedup pipelines at ``$SPARK_GRAFT_SF_DIR``
 (default /root/testdata/sf0.1) on ``local[$SPARK_GRAFT_CPUS]``
-(default 32) and prints ONE JSON line:
+(default: the cores this process may run on) and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec",
      "queries": {...per-query sec...}, "sf": <sf>, ...}
@@ -94,12 +94,15 @@ def _burn(_):
 
 
 def _canary_seconds(procs: int = 8, timeout: float = 30.0) -> float:
-    """Delivered-compute canary: wall seconds for 8 concurrent
+    """Delivered-compute canary: wall seconds for ``procs`` concurrent
     10M-iteration python loops — ~0.7-1.6 s on a healthy window at
-    any procs <= 8. During a steal storm the canary itself can hang
-    for minutes, so the pool is killed at ``timeout`` and the elapsed
-    wall (>= timeout, i.e. far out of band) is returned — ADVICE r4:
-    an unbounded canary burned gate deadline inside a single run."""
+    any procs <= 8 when each loop has a core of its own, so ``main``
+    starts min(8, cores) of them (8 loops on 4 cores read 1.95-2.67 s,
+    over the bar on a quiet host). During a steal storm the canary
+    itself can hang for minutes, so the pool is killed at ``timeout``
+    and the elapsed wall (>= timeout, i.e. far out of band) is
+    returned — ADVICE r4: an unbounded canary burned gate deadline
+    inside a single run."""
     import multiprocessing as mp
 
     t0 = time.perf_counter()
@@ -358,7 +361,7 @@ def run_suite(sf_dir: str, cpus: int, sf: float, corpus_n: int) -> dict:
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", len(os.sched_getaffinity(0))))
     sf = _sf_from_dir(sf_dir)
     corpus_n = max(1_000, int(CORPUS_PER_SF * sf))
 
@@ -382,8 +385,9 @@ def main() -> None:
     best_out: dict | None = None
 
     membw_max = float(os.environ.get("SPARK_GRAFT_MEMBW_MAX", "0.5"))
+    canary_procs = min(8, cpus)
     while True:
-        c0 = _canary_seconds()
+        c0 = _canary_seconds(canary_procs)
         m0 = _membw_canary_seconds()
         if gate_on and (c0 > canary_max or m0 > membw_max) \
                 and time.monotonic() < deadline - 120:
@@ -396,7 +400,7 @@ def main() -> None:
         out = run_suite(sf_dir, cpus, sf, corpus_n)
         # ADVICE r4: measure canary_after AFTER spark.stop() so both
         # canaries run under the same conditions (no live 32-core JVM)
-        c1 = _canary_seconds()
+        c1 = _canary_seconds(canary_procs)
         m1 = _membw_canary_seconds()
         out["canary_before_sec"] = round(c0, 2)
         out["canary_after_sec"] = round(c1, 2)

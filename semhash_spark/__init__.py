@@ -8,6 +8,9 @@ candidate generation, exact verification, large-star/small-star
 connected components, and a winnowing containment stage.
 """
 
+# first: inside a Spark Python worker, every later task skips re-reading
+# the worker's zip archives (see _pyworker)
+from semhash_spark import _pyworker  # noqa: F401
 from semhash_spark.api import SparkSemHash  # noqa: F401
 from semhash_spark.config import DedupConfig  # noqa: F401
 from semhash_spark.datamodels import DedupResult, FilterResultDF  # noqa: F401

@@ -74,7 +74,9 @@ def kmeans_core(x: np.ndarray, n_cells: int, iters: int = 10,
     SAME centroids into DuckDB SQL, the same way the hyperplane
     oracle inlines the same Gaussian planes)."""
     norms = np.linalg.norm(x, axis=1, keepdims=True)
-    x = np.divide(x, norms, where=norms > 0)
+    # zero-norm rows keep the zeros of ``out``: without one they would
+    # hold whatever the fresh buffer held
+    x = np.divide(x, norms, out=np.zeros_like(x, dtype=np.float64), where=norms > 0)
     rng = np.random.default_rng(seed)
     cents = x[rng.choice(len(x), size=min(n_cells, len(x)), replace=False)]
     for _ in range(iters):

@@ -5,6 +5,23 @@ partition count is sized to the core count rather than the 200
 default so the sf0.001..0.1 local runs don't drown in empty tasks.
 On a real cluster the same settings hold, with shuffle partitions
 sized to ~2-3x total executor cores (or left to AQE coalescing).
+
+Spark's status store keeps at most ``STATUS_RETAINED`` jobs, stages and
+SQL executions (Spark's default is 1,000 each, kept even with the UI
+off), so the driver heap of a long stream of micro-batches stays flat.
+
+Python tasks and zip archives: the JVM starts each Python worker with
+``pyspark.zip``, the py4j zip and the Spark core jar at the front of its
+``PYTHONPATH`` (ahead of site-packages, pip installs ship the same zip),
+so a worker imports pyspark through ``zipimport``. Before every task the
+worker adds the task's files to ``sys.path`` and calls
+``importlib.invalidate_caches()`` so that it sees them; in CPython 3.11
+that makes each zip importer re-read its archive's whole directory,
+~16 reads (~150 ms) a task. Importing ``semhash_spark`` in a worker
+(every library task does) installs ``semhash_spark._pyworker``, after
+which an importer re-reads its archive only when the file's mtime or
+size changed: a rewritten archive is still re-read, an unchanged one
+keeps its directory. The driver's ``zipimport`` is left as it is.
 """
 
 from __future__ import annotations
@@ -12,6 +29,11 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# jobs, stages and SQL executions the status store keeps: far above the
+# jobs of one call (a self-dedup pass runs under 20), far below Spark's
+# default of 1,000 that let a streaming driver's heap grow per batch
+STATUS_RETAINED = 300
 
 
 def get_spark(
@@ -77,6 +99,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
+        .config("spark.ui.retainedJobs", str(STATUS_RETAINED))
+        .config("spark.ui.retainedStages", str(STATUS_RETAINED))
+        .config("spark.sql.ui.retainedExecutions", str(STATUS_RETAINED))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     for k, v in (extra_conf or {}).items():

@@ -69,8 +69,8 @@ def featurize(records, columns, encoder) -> np.ndarray:
 def _cosine_matrix(q: np.ndarray, x: np.ndarray) -> np.ndarray:
     qn = np.linalg.norm(q, axis=1, keepdims=True)
     xn = np.linalg.norm(x, axis=1, keepdims=True)
-    qq = np.divide(q, qn, where=qn > 0)
-    xx = np.divide(x, xn, where=xn > 0)
+    qq = np.divide(q, qn, out=np.zeros_like(q, dtype=np.float64), where=qn > 0)
+    xx = np.divide(x, xn, out=np.zeros_like(x, dtype=np.float64), where=xn > 0)
     return qq @ xx.T
 
 

@@ -173,6 +173,33 @@ def test_centroids_deterministic_across_partitionings(spark):
     np.testing.assert_array_equal(c1, cr)
 
 
+def test_centroids_deterministic_with_zero_rows(spark, monkeypatch):
+    """A training sample holding a zero and an empty embedding gets
+    bit-identical centroids on every call: zero-norm rows normalize to
+    zero, not to whatever a fresh numpy buffer held. The last call
+    hands ``kmeans_core`` a ``divide`` whose unset output starts as junk."""
+    from semhash_spark.operators import knn
+
+    extra = spark.createDataFrame(
+        [(-2, [0.0] * 16), (-1, [])], "record_id long, embedding array<float>")
+    sample = _clustered_embeddings(spark, n_centers=4, per_center=20).unionByName(extra)
+    first = knn.train_centroids(sample, 4)
+    np.testing.assert_array_equal(knn.train_centroids(sample, 4), first)
+
+    class JunkBuffers:
+        def __getattr__(self, name):
+            return getattr(np, name)
+
+        @staticmethod
+        def divide(a, b, out=None, **kw):
+            if out is None:
+                out = np.full(np.broadcast_shapes(np.shape(a), np.shape(b)), 2.83)
+            return np.divide(a, b, out=out, **kw)
+
+    monkeypatch.setattr(knn, "np", JunkBuffers())
+    np.testing.assert_array_equal(knn.train_centroids(sample, 4), first)
+
+
 def _scan_table(spark):
     rng = np.random.default_rng(23)
     base = rng.standard_normal((120, 16))
