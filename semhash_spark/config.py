@@ -25,8 +25,7 @@ class DedupConfig:
     # --- similarity threshold (reference default 0.9, semhash.py:173) ---
     threshold: float = 0.9
 
-    # --- shingling (scale path; no reference counterpart) ---
-    shingle_mode: str = "word"  # "word" | "char"
+    # --- word shingling (scale path; no reference counterpart) ---
     shingle_k: int = 3
 
     # --- MinHash / LSH banding ---
@@ -70,7 +69,6 @@ class DedupConfig:
     # random-hyperplane LSH for cosine candidates at scale
     hyperplane_bits: int = 64
     hyperplane_bands: int = 8
-    hyperplane_seed: int = 42
     # above-cap cosine candidate strategy: "hyperplane" (SRP banding —
     # right for HIGH thresholds, θ>=0.9, where width-16 bands separate
     # well) or "ivf" (coarse k-means cells + per-cell fused gemm scan —
@@ -84,16 +82,6 @@ class DedupConfig:
     # cells each row scans against (its home cell first)
     ivf_cells: int | None = None
     ivf_probe: int = 2
-    # home rows per cell actually scanned (lowest ids kept when a cell
-    # overflows — the star-cap argument: every probe row still reaches
-    # the cell's min-id members, so >=θ cliques stay CC-connected)
-    ivf_cell_cap: int = 20000
-    # probe rows per salted IVF scan subgroup. applyInArrow
-    # materializes a WHOLE group in one python worker, and correlated
-    # embeddings skew cell populations (round-5: unsalted mega-cell
-    # groups OOM'd a 128 GiB box at 1M rows), so group size is bounded
-    # by salting the probe stream and replicating the capped home pack
-    ivf_group_cap: int = 50000
     # per-row neighbor cap in the FUSED cosine kernels — the
     # reference's ANN result cap (max_k=100, semhash/index.py:59).
     # Bounds edge emission for mega-clusters (an m-member >=θ clique
@@ -145,12 +133,3 @@ class DedupConfig:
 
     def with_(self, **kw) -> "DedupConfig":
         return replace(self, **kw)
-
-    def with_tuned_bands(self, fp_weight: float = 0.5, fn_weight: float = 0.5
-                         ) -> "DedupConfig":
-        """Re-derive ``bands`` from the S-curve optimum for this
-        threshold/num_perm (operators/lsh.optimal_bands)."""
-        from semhash_spark.operators.lsh import optimal_bands
-
-        b, _ = optimal_bands(self.threshold, self.num_perm, fp_weight, fn_weight)
-        return replace(self, bands=b)

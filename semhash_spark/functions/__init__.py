@@ -5,4 +5,4 @@ from semhash_spark.functions.hashing import (  # noqa: F401
     simhash64,
     tokens,
 )
-from semhash_spark.functions.vectors import cosine_similarity, l2_normalize  # noqa: F401
+from semhash_spark.functions.vectors import cosine_similarity  # noqa: F401

@@ -5,7 +5,7 @@ model and delegates similarity search to an in-memory ANN index
 (semhash/index.py:31-48). At 10^12-file scale there is no global
 index; instead we compute per-row sketches:
 
-* ``shingle_hashes``: distinct xxhash64 of word/char k-grams — JVM
+* ``shingle_hashes``: distinct xxhash64 of word k-grams — JVM
   expression (split + xxhash64 per shingle, O(tokens) per row).
 * ``minhash_signature``: classic Broder MinHash over the shingle
   hashes via a vectorized Arrow UDF. A SQL higher-order
@@ -44,8 +44,8 @@ def tokens(col: str | Column, pattern: str = r"\s+") -> Column:
     return F.filter(F.split(c, pattern), lambda t: t != F.lit(""))
 
 
-def shingle_strings(col: str | Column, k: int, mode: str = "word") -> Column:
-    """Distinct k-gram shingle strings of a text column.
+def shingle_strings(col: str | Column, k: int) -> Column:
+    """Distinct word k-gram shingle strings of a text column.
 
     Texts shorter than k units produce a single shingle (the whole
     text) so no row ever has an empty shingle set — mirrors the
@@ -60,33 +60,19 @@ def shingle_strings(col: str | Column, k: int, mode: str = "word") -> Column:
     name = col if isinstance(col, str) else None
     if name is None:
         raise ValueError("shingle_strings needs a column name (used in SQL expr)")
-    if mode == "word":
-        # let w = tokens(name) in <shingles over w>, via transform-over-
-        # single-element-array binding; w is a lambda var => evaluated once.
-        return F.expr(
-            f"""
-            element_at(transform(array(filter(split({name}, '\\\\s+'), t -> t != '')),
-              w -> CASE WHEN size(w) < {k}
-                 THEN array(concat_ws(' ', w))
-                 ELSE array_distinct(transform(
-                        sequence(1, size(w) - {k} + 1),
-                        i -> concat_ws(' ', slice(w, i, {k}))))
-              END), 1)
-            """
-        )
-    elif mode == "char":
-        return F.expr(
-            f"""
-            element_at(transform(array({name}), s ->
-              CASE WHEN length(s) < {k}
-                 THEN array(s)
-                 ELSE array_distinct(transform(
-                        sequence(1, length(s) - {k} + 1),
-                        i -> substring(s, i, {k})))
-              END), 1)
-            """
-        )
-    raise ValueError(f"unknown shingle mode {mode!r}")
+    # let w = tokens(name) in <shingles over w>, via transform-over-
+    # single-element-array binding; w is a lambda var => evaluated once.
+    return F.expr(
+        f"""
+        element_at(transform(array(filter(split({name}, '\\\\s+'), t -> t != '')),
+          w -> CASE WHEN size(w) < {k}
+             THEN array(concat_ws(' ', w))
+             ELSE array_distinct(transform(
+                    sequence(1, size(w) - {k} + 1),
+                    i -> concat_ws(' ', slice(w, i, {k}))))
+          END), 1)
+        """
+    )
 
 
 def _word_shingle_hashes(name: str, k: int) -> Column:
@@ -121,22 +107,16 @@ def _word_shingle_hashes(name: str, k: int) -> Column:
     )
 
 
-def shingle_hashes(col: str, k: int, mode: str = "word") -> Column:
-    """Distinct k-gram shingle hashes (array<long>).
-
-    Word mode uses the token-tuple hashing fast path (never builds
-    shingle strings); char mode hashes the substring shingles.
-    """
-    if mode == "word":
-        if not isinstance(col, str):
-            raise ValueError("shingle_hashes needs a column name")
-        return _word_shingle_hashes(col, k)
-    sh = shingle_strings(col, k, mode)
-    return F.array_distinct(F.transform(sh, lambda s: F.xxhash64(s)))
+def shingle_hashes(col: str, k: int) -> Column:
+    """Distinct word k-gram shingle hashes (array<long>), by the
+    token-tuple hashing fast path (never builds shingle strings)."""
+    if not isinstance(col, str):
+        raise ValueError("shingle_hashes needs a column name")
+    return _word_shingle_hashes(col, k)
 
 
-def shingle_hashes_positional(col: str, k: int, mode: str = "word") -> Column:
-    """POSITIONAL k-gram shingle hashes — one entry per shingle
+def shingle_hashes_positional(col: str, k: int) -> Column:
+    """POSITIONAL word k-gram shingle hashes — one entry per shingle
     OCCURRENCE, document order preserved, duplicates kept.
 
     The winnowing anchor stage (operators/containment.py) needs the
@@ -148,39 +128,22 @@ def shingle_hashes_positional(col: str, k: int, mode: str = "word") -> Column:
     documents can then pick disjoint anchors for the same shared run
     (ADVICE r3). Jaccard/MinHash stages keep using the distinct form.
     """
-    if mode == "word":
-        if not isinstance(col, str):
-            raise ValueError("shingle_hashes_positional needs a column name")
-        tup = ", ".join(f"th[i + {j}]" for j in range(k))
-        return F.expr(
-            f"""
-            element_at(transform(array(transform(
-                filter(split({col}, '\\\\s+'), t -> t != ''), t -> xxhash64(t))),
-              th -> CASE WHEN size(th) = 0 THEN array()
-                 WHEN size(th) < {k}
-                 THEN array(xxhash64(th))
-                 ELSE transform(
-                        sequence(0, size(th) - {k}),
-                        i -> xxhash64({tup}))
-              END), 1)
-            """
-        )
-    if mode == "char":
-        name = col if isinstance(col, str) else None
-        if name is None:
-            raise ValueError("shingle_hashes_positional needs a column name")
-        return F.expr(
-            f"""
-            element_at(transform(array({name}), s ->
-              CASE WHEN length(s) < {k}
-                 THEN array(xxhash64(s))
-                 ELSE transform(
-                        sequence(1, length(s) - {k} + 1),
-                        i -> xxhash64(substring(s, i, {k})))
-              END), 1)
-            """
-        )
-    raise ValueError(f"unknown shingle mode {mode!r}")
+    if not isinstance(col, str):
+        raise ValueError("shingle_hashes_positional needs a column name")
+    tup = ", ".join(f"th[i + {j}]" for j in range(k))
+    return F.expr(
+        f"""
+        element_at(transform(array(transform(
+            filter(split({col}, '\\\\s+'), t -> t != ''), t -> xxhash64(t))),
+          th -> CASE WHEN size(th) = 0 THEN array()
+             WHEN size(th) < {k}
+             THEN array(xxhash64(th))
+             ELSE transform(
+                    sequence(0, size(th) - {k}),
+                    i -> xxhash64({tup}))
+          END), 1)
+        """
+    )
 
 
 _LONG_MAX = 9223372036854775807

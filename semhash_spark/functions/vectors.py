@@ -4,20 +4,12 @@ The reference converts ANN distances with ``similarity = 1 - cosine
 distance`` (semhash/index.py:59,66-67,86-87); we compute cosine
 similarity directly on ``array<float>`` columns.
 
-Two implementations:
-
-* ``cosine_similarity`` — vectorized Arrow UDF (numpy batch
-  matmul, float64; both sides read by ``arrays.list_matrix``). This
-  is the hot path: Spark's SQL higher-order functions
-  (aggregate/zip_with) are evaluated INTERPRETED, one lambda call
-  per element, ~100x slower per pair than a BLAS dot over an Arrow
-  batch.
-* ``cosine_similarity_expr`` — the pure-expression form, needed only
-  where a Column must be evaluated inside another SQL lambda (e.g.
-  scoring a literal centroid array in operators/knn.py) where UDFs
-  cannot appear.
-
-Both accumulate in float64, matching the DuckDB oracle's
+``cosine_similarity`` is a vectorized Arrow UDF (numpy batch matmul,
+float64; both sides read by ``arrays.list_matrix``). Spark's SQL
+higher-order functions (aggregate/zip_with) would evaluate the same
+sum INTERPRETED, one lambda call per element, ~100x slower per pair
+than a BLAS dot over an Arrow batch. It accumulates in float64,
+matching the DuckDB oracle's
 ``list_cosine_similarity(a::DOUBLE[], b::DOUBLE[])`` to ~1e-12
 (summation-order differences only).
 """
@@ -61,31 +53,6 @@ def cosine_similarity(a: str | Column, b: str | Column) -> Column:
     has no neighbors above threshold.
     """
     return _cosine(_c(a), _c(b))
-
-
-# ------------------------------------------------- expression variants
-# (usable inside SQL lambdas; interpreted, so keep off the hot path)
-
-
-def dot(a: str | Column, b: str | Column) -> Column:
-    return F.aggregate(
-        F.zip_with(_c(a), _c(b), lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: str | Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            _c(a), F.lit(0.0), lambda acc, x: acc + x.cast("double") * x.cast("double")
-        )
-    )
-
-
-def cosine_similarity_expr(a: str | Column, b: str | Column) -> Column:
-    d = norm(a) * norm(b)
-    return F.when(d > 0, dot(a, b) / d)
 
 
 def hyperplane_bands(
@@ -147,8 +114,3 @@ def hyperplane_bands(
         return list_array(out.view(np.int64), null)
 
     return _bands(_c(a))
-
-
-def l2_normalize(a: str | Column) -> Column:
-    n = norm(a)
-    return F.when(n > 0, F.transform(_c(a), lambda x: (x.cast("double") / n).cast("float"))).otherwise(_c(a))

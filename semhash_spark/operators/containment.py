@@ -19,15 +19,14 @@ Plan:
   scores every candidate pair in-task against the mmap'd blob:
   containment |S(a) ∩ S(b)| / min(|S(a)|, |S(b)|) --> distinct edges
   >= containment_threshold, collected before the blob and the
-  projection cache are dropped --> optional exact substring
-  confirmation via instr() on the content pair.
+  projection cache are dropped.
 
 No candidate pair relation is shuffled, counted or joined with the
 shingle arrays. Without blob transport, or with a blob above
 VERIFY_BROADCAST_MAX_BYTES, the candidates are joined with the
 shingle arrays and scored by ``verify_containment`` (JVM) instead.
-The substring check joins content back ONLY for surviving edges
-(tiny relation), never shuffling content at scale.
+``lcs_confirm`` joins content back ONLY for surviving edges (tiny
+relation), never shuffling content at scale.
 """
 
 from __future__ import annotations
@@ -106,9 +105,6 @@ def containment_edges(
     feats: DataFrame,
     cfg,
     id_col: str = "record_id",
-    confirm_substring: bool = False,
-    content_df: DataFrame | None = None,
-    content_col: str = "content",
     persisted: list | None = None,
 ) -> DataFrame:
     """Directed containment edges (a, b, score): the SMALLER side's
@@ -149,20 +145,6 @@ def containment_edges(
             cands, sh, "shingles", id_col, cfg.containment_threshold,
             strategy="join",
         ).select("a", "b", "score")
-
-    if confirm_substring and content_df is not None:
-        c = content_df.select(F.col(id_col), F.col(content_col))
-        ca = c.select(F.col(id_col).alias("a"), F.col(content_col).alias("_ca"))
-        cb = c.select(F.col(id_col).alias("b"), F.col(content_col).alias("_cb"))
-        scored = (
-            scored.join(ca, "a")
-            .join(cb, "b")
-            .where(
-                (F.instr(F.col("_ca"), F.col("_cb")) > 0)
-                | (F.instr(F.col("_cb"), F.col("_ca")) > 0)
-            )
-            .select("a", "b", "score")
-        )
     return scored
 
 

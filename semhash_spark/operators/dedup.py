@@ -139,7 +139,7 @@ def add_features(df: DataFrame, cfg: DedupConfig, mode: str) -> DataFrame:
             df = df.withColumn("_rendered", rendered_record(cfg.columns, df))
             text_col = "_rendered"
         df = df.withColumn(
-            "shingles", shingle_hashes(text_col, cfg.shingle_k, cfg.shingle_mode)
+            "shingles", shingle_hashes(text_col, cfg.shingle_k)
         )
         if mode == "minhash":
             if getattr(cfg, "minhash_family", "kperm") == "oph":
@@ -177,7 +177,7 @@ def mode_bands(feats: DataFrame, cfg: DedupConfig, mode: str) -> DataFrame:
     elif mode == "cosine":
         banded = feats.withColumn("_bands", hyperplane_bands(
             cfg.embedding_col, cfg.hyperplane_bits, cfg.hyperplane_bands,
-            cfg.hyperplane_seed, cfg.embedding_dim))
+            dim=cfg.embedding_dim))
     else:
         raise ValueError(f"mode {mode!r} has no band table")
     return explode_band_array(banded, "_bands", id_col)
@@ -457,9 +457,7 @@ def self_deduplicate(
             lambda: cosine_threshold_edges_ivf(
                 feats, threshold, id_col, cfg.embedding_col,
                 n_cells=cfg.ivf_cells, n_probe=cfg.ivf_probe,
-                cell_cap=cfg.ivf_cell_cap, max_k=cfg.cosine_max_k,
-                seed=cfg.hyperplane_seed, n_rows=n_feats,
-                group_cap=cfg.ivf_group_cap,
+                max_k=cfg.cosine_max_k, n_rows=n_feats,
             ),
         )
     elif mode == "minhash":

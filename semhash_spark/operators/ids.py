@@ -26,8 +26,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-SHA_COL = "content_sha"
-
 
 def rendered_record(columns, df: DataFrame | None = None) -> Column:
     """Tab-join of cleaned column values (reference records.py:6-17).

@@ -5,9 +5,9 @@
   IVF above it). The correctness baseline of the pruned search.
 * ``ivf_topk`` — the scale path: IVF (inverted-file) pruning.
   Centroids are trained driver-side with deterministic k-means over
-  a bounded sample (<= ``train_cap`` rows collected), broadcast as a
-  literal array; each index vector is assigned to its nearest
-  centroid (JVM expression), queries probe the ``n_probe`` nearest
+  a bounded sample (<= ``train_cap`` rows collected) and shipped with
+  the Arrow UDF ``ivf_probe_cells``; each index vector is assigned to
+  its nearest centroid, queries probe the ``n_probe`` nearest
   centroid cells only — turning the quadratic cross join into an
   equi-join on cell id with ~n_probe/n_cells of the work.
   Recall is tested against brute force in tests/test_knn.py.
@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from semhash_spark.functions.arrays import list_array, list_matrix
-from semhash_spark.functions.vectors import cosine_similarity, cosine_similarity_expr
+from semhash_spark.functions.vectors import cosine_similarity
 
 
 def brute_topk(
@@ -94,10 +94,8 @@ def kmeans_core(x: np.ndarray, n_cells: int, iters: int = 10,
 
 def ivf_probe_cells(emb_col: str, cents: np.ndarray, n_probe: int):
     """array<long> of the ``n_probe`` nearest centroid cells for an
-    embedding column, HOME (nearest) cell first — vectorized Arrow
-    UDF for at-scale cell assignment (the interpreted
-    ``_nearest_cells_expr`` is fine for the 16-cell knn default but
-    hopeless per-row at hundreds/thousands of dedup cells).
+    embedding column, HOME (nearest) cell first — the vectorized
+    Arrow UDF behind both the IVF threshold plan and ``ivf_topk``.
 
     Deterministic across partitionings: per-row order is
     (score desc, cell id asc). NULL and zero-norm embeddings get an
@@ -139,26 +137,6 @@ def ivf_probe_cells(emb_col: str, cents: np.ndarray, n_probe: int):
     return _cells(F.col(emb_col))
 
 
-def _nearest_cells_expr(emb_col: str, cents: np.ndarray, n: int):
-    """Array of the n nearest centroid ids for a vector column.
-
-    Centroids ship as a literal array<array<float>> (broadcast with
-    the plan); scoring is a JVM higher-order expression.
-    """
-    cent_lit = F.array(
-        *[F.array(*[F.lit(float(v)) for v in c]) for c in cents]
-    )
-    # cosine_similarity_expr: Python UDFs cannot appear inside SQL
-    # lambdas; centroid count is small so interpreted eval is fine here
-    scored = F.transform(
-        cent_lit,
-        lambda c, i: F.struct(
-            cosine_similarity_expr(F.col(emb_col), c).alias("s"), i.alias("cell")
-        ),
-    )
-    return F.slice(F.reverse(F.array_sort(scored)), 1, n)
-
-
 def ivf_topk(
     query: DataFrame,
     index: DataFrame,
@@ -173,19 +151,17 @@ def ivf_topk(
     if cents is None:
         cents = train_centroids(index, n_cells, emb_col, id_col=id_col)
 
+    # index rows live in their home cell, queries probe all n_probe
+    # cells; NULL / zero-norm rows have no cells, so explode drops them
     idx = index.select(
         F.col(id_col).alias("index_id"),
         F.col(emb_col).alias("_ie"),
-        F.element_at(_nearest_cells_expr(emb_col, cents, 1), 1)["cell"].alias("cell"),
+        F.explode(ivf_probe_cells(emb_col, cents, 1)).alias("cell"),
     )
     q = query.select(
         F.col(id_col).alias("query_id"),
         F.col(emb_col).alias("_qe"),
-        F.explode(
-            F.transform(
-                _nearest_cells_expr(emb_col, cents, n_probe), lambda s: s["cell"]
-            )
-        ).alias("cell"),
+        F.explode(ivf_probe_cells(emb_col, cents, n_probe)).alias("cell"),
     )
     pairs = q.join(idx, "cell")
     if exclude_self:

@@ -35,56 +35,6 @@ from semhash_spark.functions.arrays import record_batch
 BAND_COLS = ("band_idx", "band_hash")
 
 
-def candidate_probability(s: float, bands: int, rows_per_band: int) -> float:
-    """P(two records with Jaccard s share >= 1 band) = 1-(1-s^r)^b —
-    the LSH S-curve (Leskovec/Rajaraman/Ullman, Mining of Massive
-    Datasets §3.4)."""
-    return 1.0 - (1.0 - s**rows_per_band) ** bands
-
-
-def optimal_bands(
-    threshold: float,
-    num_perm: int,
-    fp_weight: float = 0.5,
-    fn_weight: float = 0.5,
-) -> tuple[int, int]:
-    """Pick (bands, rows_per_band) with bands*rows == num_perm that
-    minimizes the weighted false-positive + false-negative integrals
-    of the S-curve around ``threshold`` (same construction as
-    datasketch's public ``_optimal_param``; re-derived from the MMDS
-    S-curve, no code shared).
-
-    FP integral = ∫₀ᵗ P(s) ds (pairs below t that still collide →
-    wasted verification); FN integral = ∫ₜ¹ (1 - P(s)) ds (pairs
-    above t the banding misses → recall loss). At 100 TB the FP
-    weight prices shuffle + verify compute; the FN weight prices
-    recall, which the north rule bounds at 0.99 — so default weights
-    are even but recall-critical jobs should raise ``fn_weight``.
-    """
-    if not 0.0 < threshold < 1.0:
-        raise ValueError("threshold must be in (0, 1)")
-    best = None
-    steps = 200
-    for b in range(1, num_perm + 1):
-        if num_perm % b:
-            continue
-        r = num_perm // b
-        fp = sum(
-            candidate_probability(threshold * (i + 0.5) / steps, b, r)
-            for i in range(steps)
-        ) * threshold / steps
-        fn = sum(
-            1.0 - candidate_probability(
-                threshold + (1.0 - threshold) * (i + 0.5) / steps, b, r
-            )
-            for i in range(steps)
-        ) * (1.0 - threshold) / steps
-        err = fp_weight * fp + fn_weight * fn
-        if best is None or err < best[0]:
-            best = (err, b, r)
-    return best[1], best[2]
-
-
 def band_hash_array(
     sig_col: str, bands: int, rows_per_band: int | None = None
 ):

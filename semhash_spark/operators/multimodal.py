@@ -5,12 +5,9 @@ metadata; decode / feature-extraction runs as Arrow-batched
 ``mapInPandas`` so each Python worker sees columnar batches, never a
 row at a time. ``decoder="fake"`` produces a deterministic feature
 vector from the bytes (plumbing tests without any codec);
-``decoder="real"`` takes a ``decode_fn`` codec closure — WORKING
-stdlib-only implementations for PNG and WAV ship in
-``functions/media.py`` (``png_feature_fn`` / ``wav_feature_fn``,
-proven end-to-end in tests/test_multimodal.py), and production swaps
-in PIL/ffmpeg through the same seam. ``decoder="real"`` without a
-``decode_fn`` still raises with guidance.
+``decoder="real"`` takes a ``decode_fn`` codec closure (PIL/ffmpeg
+in production) through the same Arrow batch path. ``decoder="real"``
+without a ``decode_fn`` raises with guidance.
 """
 
 from __future__ import annotations
@@ -22,9 +19,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-MEDIA_SCHEMA = (
-    "media_id long, kind string, width int, height int, payload binary"
-)
 FEATURE_SCHEMA = (
     "media_id long, kind string, feat array<float>, feat_dim int, n_bytes long"
 )

@@ -1280,6 +1280,13 @@ def _cap_rows_sparse(r, c, s, ids_i, max_k):
 # above it the shuffle carries ids instead of n_probe + n_salt copies
 # of every embedding (guide §8)
 _IVF_BLOB_MIN_ROWS = 100_000
+# probe rows per salted IVF scan subgroup (``group_cap=None``).
+# applyInArrow materializes a WHOLE group in one python worker, and
+# correlated embeddings skew cell populations (round 5: unsalted
+# mega-cell groups OOM'd a 128 GiB box at 1M rows), so group size is
+# bounded by salting the probe stream and replicating the capped home
+# pack. Output-invariant.
+_IVF_GROUP_CAP = 50_000
 
 
 def cosine_threshold_edges_ivf(
@@ -1293,7 +1300,7 @@ def cosine_threshold_edges_ivf(
     max_k: int | None = None,
     seed: int = 42,
     n_rows: int | None = None,
-    group_cap: int = 50_000,
+    group_cap: int | None = None,
 ) -> DataFrame:
     """All self pairs (a < b, score >= threshold) via coarse IVF
     cells + per-cell fused gemm — the at-scale cosine plan for MID
@@ -1367,6 +1374,8 @@ def cosine_threshold_edges_ivf(
     )
     thr = float(threshold)
     cap = int(cell_cap)
+    if group_cap is None:
+        group_cap = _IVF_GROUP_CAP
     mk = max_k
 
     shuffle_cols = [id_col] if use_blob else [id_col, emb_col]

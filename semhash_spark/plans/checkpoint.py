@@ -76,17 +76,6 @@ class CheckpointManager:
         )
         return out
 
-    def invalidate_from(self, names: list[str]) -> None:
-        """Drop the given stages (and force recompute on next run)."""
-        import shutil
-
-        if self.base_dir is None:
-            return
-        for n in names:
-            p = self._path(n)
-            if os.path.exists(p):
-                shutil.rmtree(p)
-
     def _record(self, name: str, **kw) -> None:
         self.metrics.append({"stage": name, "ts": time.time(), **kw})
 

@@ -137,7 +137,3 @@ def truth_near_clusters(n: int) -> list[set[int]]:
 def truth_containment_pairs(n: int) -> list[tuple[int, int]]:
     """(fragment, container) pairs."""
     return [(i, i - 5) for i in range(n) if i % 100 == 5 and i - 5 >= 0]
-
-
-def truth_boiler_ids(n: int) -> list[int]:
-    return [i for i in range(n) if 10 <= i % 100 < 10 + BOILER_N]

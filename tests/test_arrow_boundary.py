@@ -1,22 +1,23 @@
 """The Python boundary of the library is Arrow: no pandas UDF, no
-mapInPandas, no applyInPandas, outside the three modules whose seam is
-pandas by design. Pure file scan, no Spark session."""
+mapInPandas, no applyInPandas (WithState included), outside the two
+modules whose seam is pandas by design. Pure file scan, no Spark
+session."""
 
 import pathlib
 import re
 
 PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "semhash_spark"
 
-# the corpus generator (strings only), the multimodal decode seam (a
-# user ``decode_fn`` over pandas bytes) and the stateful stream matcher
-# (``applyInPandasWithState``, which has no Arrow form)
+# the corpus generator (strings only) and the multimodal decode seam
+# (a user ``decode_fn`` over pandas bytes). The streaming module has no
+# exemption: its stateful matcher, the last ``applyInPandasWithState``,
+# is gone, and the pattern below matches that call too.
 EXEMPT = {
     "sources/corpus.py",
     "operators/multimodal.py",
-    "streaming/dedup_stream.py",
 }
 
-PANDAS_PATH = re.compile(r"mapInPandas|pandas_udf|applyInPandas\(")
+PANDAS_PATH = re.compile(r"mapInPandas|pandas_udf|applyInPandas")
 
 
 def test_no_pandas_path_outside_exempt_modules():

@@ -173,6 +173,43 @@ def test_centroids_deterministic_across_partitionings(spark):
     np.testing.assert_array_equal(c1, cr)
 
 
+def test_ivf_pruned_probe_deterministic_across_partitionings(spark):
+    """Pruned-probe IVF (n_probe < n_cells) returns identical rows and
+    scores however its input is partitioned, for the top-k search and
+    the threshold edges alike: the centroids come from the smallest
+    ids and every cell choice is made per row."""
+    from semhash_spark.operators.verify import cosine_threshold_edges_ivf
+
+    emb = _clustered_embeddings(spark, n_centers=6, per_center=30)
+    layouts = [emb.repartition(1), emb.repartition(8, "embedding"),
+               emb.orderBy(F.rand(3)).repartition(5)]
+
+    def topk(df):
+        return sorted(tuple(r) for r in ivf_topk(
+            df, df, 5, n_cells=8, n_probe=2, exclude_self=True).collect())
+
+    def edges(df):
+        return sorted(tuple(r) for r in cosine_threshold_edges_ivf(
+            df, 0.9, n_cells=8, n_probe=2, max_k=20, n_rows=180).collect())
+
+    want_topk, want_edges = topk(layouts[0]), edges(layouts[0])
+    assert len(want_topk) == 180 * 5 and len(want_edges) > 100
+    for df in layouts[1:]:
+        assert topk(df) == want_topk
+        assert edges(df) == want_edges
+
+
+def test_ivf_topk_skips_null_and_zero_rows(spark):
+    """A NULL or zero-norm embedding has no IVF cell: ivf_topk gives it
+    no row, as query or as index, instead of failing on the lookup."""
+    rows = _edge_case_rows()
+    emb = spark.createDataFrame(rows, "record_id long, embedding array<float>")
+    cents = np.random.default_rng(2).standard_normal((4, 6))
+    got = ivf_topk(emb, emb, 3, n_probe=2, exclude_self=True, cents=cents).collect()
+    ids = {r.query_id for r in got} | {r.index_id for r in got}
+    assert len(got) > 30 and not ids & {3, 4}
+
+
 def test_centroids_deterministic_with_zero_rows(spark, monkeypatch):
     """A training sample holding a zero and an empty embedding gets
     bit-identical centroids on every call: zero-norm rows normalize to

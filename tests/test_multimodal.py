@@ -106,146 +106,3 @@ def test_real_decoder_still_raises(spark):
     assert "NotImplementedError" in str(ei.value) or isinstance(
         ei.value, NotImplementedError
     )
-
-
-# ---------------------------------------------------------------- real codecs
-
-
-def _encode_png(img: np.ndarray) -> bytes:
-    """Minimal filter-0 PNG encoder (test-side only) so the decoder
-    is exercised against independently-constructed bytes."""
-    import struct
-    import zlib
-
-    h, w, ch = img.shape
-    color = {1: 0, 2: 4, 3: 2, 4: 6}[ch]
-
-    def chunk(t, d):
-        c = t + d
-        return struct.pack(">I", len(d)) + c + struct.pack(">I", zlib.crc32(c))
-
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    raw = b"".join(b"\x00" + img[y].tobytes() for y in range(h))
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def _encode_wav(samples: np.ndarray, rate: int = 8000) -> bytes:
-    import io
-    import wave
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes((samples * 32767).astype("<i2").tobytes())
-    return buf.getvalue()
-
-
-def test_decode_png_roundtrip():
-    from semhash_spark.functions.media import decode_png
-
-    rng = np.random.Generator(np.random.PCG64(5))
-    img = rng.integers(0, 256, size=(7, 5, 3), dtype=np.uint8)
-    out = decode_png(_encode_png(img))
-    np.testing.assert_array_equal(out, img)
-    with pytest.raises(ValueError):
-        decode_png(b"not a png")
-
-
-def test_decode_png_all_filters():
-    """Unfiltering paths 1-4: re-encode with each filter type and
-    check the decoder reconstructs the same pixels."""
-    import struct
-    import zlib
-
-    from semhash_spark.functions.media import decode_png
-
-    rng = np.random.Generator(np.random.PCG64(6))
-    img = rng.integers(0, 256, size=(4, 6, 3), dtype=np.uint8)
-    h, w, ch = img.shape
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-
-    for ftype in (1, 2, 3, 4):
-        rows = []
-        prev = np.zeros(w * ch, dtype=np.int32)
-        for y in range(h):
-            line = img[y].ravel().astype(np.int32)
-            enc = np.zeros_like(line)
-            for x in range(len(line)):
-                left = int(line[x - ch]) if x >= ch else 0
-                up = int(prev[x])
-                ul = int(prev[x - ch]) if x >= ch else 0
-                pred = {1: left, 2: up, 3: (left + up) >> 1,
-                        4: paeth(left, up, ul)}[ftype]
-                enc[x] = (int(line[x]) - pred) & 0xFF
-            rows.append(bytes([ftype]) + enc.astype(np.uint8).tobytes())
-            prev = line
-
-        def chunk(t, d):
-            c = t + d
-            return struct.pack(">I", len(d)) + c + struct.pack(">I", zlib.crc32(c))
-
-        ihdr = struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0)
-        png = (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-               + chunk(b"IDAT", zlib.compress(b"".join(rows)))
-               + chunk(b"IEND", b""))
-        np.testing.assert_array_equal(decode_png(png), img, err_msg=f"filter {ftype}")
-
-
-def test_decode_wav_roundtrip():
-    from semhash_spark.functions.media import decode_wav
-
-    t = np.linspace(0, 1, 800, endpoint=False)
-    sig = 0.5 * np.sin(2 * np.pi * 5 * t)
-    x, rate = decode_wav(_encode_wav(sig))
-    assert rate == 8000 and x.shape == (800, 1)
-    assert np.abs(x[:, 0] - sig).max() < 1e-3  # 16-bit quantization
-
-
-def test_real_decoders_through_spark_plumbing(spark):
-    """VERDICT r3 #8: REAL codecs (stdlib PNG + WAV) injected through
-    the decode_fn seam and executed in the Arrow-batched
-    mapInPandas path — the multimodal stage is no longer stub-only."""
-    from semhash_spark.functions.media import png_feature_fn, wav_feature_fn
-
-    rng = np.random.Generator(np.random.PCG64(7))
-    img_dark = np.zeros((8, 8, 3), dtype=np.uint8)
-    img_light = np.full((8, 8, 3), 250, dtype=np.uint8)
-    img_rand = rng.integers(0, 256, size=(8, 8, 3), dtype=np.uint8)
-    rows = [(i, "image", 8, 8, bytearray(_encode_png(im)))
-            for i, im in enumerate([img_dark, img_light, img_rand])]
-    df = spark.createDataFrame(
-        rows, "media_id long, kind string, width int, height int, payload binary"
-    )
-    out = {r.media_id: r for r in
-           extract_media_features(df, decoder="real",
-                                  decode_fn=png_feature_fn(16)).collect()}
-    assert all(r.feat_dim == 16 for r in out.values())
-    # dark image: all mass in the lowest luminance bin; light: highest
-    assert out[0].feat[0] == pytest.approx(1.0)
-    assert out[1].feat[13] == pytest.approx(1.0)
-    assert out[0].feat[14] == pytest.approx(0.0)          # mean luminance
-    assert out[1].feat[14] == pytest.approx(250.0 / 255)
-
-    t = np.linspace(0, 1, 1600, endpoint=False)
-    loud = 0.9 * np.sin(2 * np.pi * 20 * t)
-    quiet = 0.05 * np.sin(2 * np.pi * 20 * t)
-    arows = [(10, "audio", 0, 0, bytearray(_encode_wav(loud))),
-             (11, "audio", 0, 0, bytearray(_encode_wav(quiet)))]
-    adf = spark.createDataFrame(
-        arows, "media_id long, kind string, width int, height int, payload binary"
-    )
-    aout = {r.media_id: r for r in
-            extract_media_features(adf, decoder="real",
-                                   decode_fn=wav_feature_fn(8)).collect()}
-    assert aout[10].feat[6] > 10 * aout[11].feat[6]  # overall RMS ordering

@@ -81,38 +81,6 @@ def test_minhash_permutation_invariance_and_similarity(spark):
     assert 0.15 <= agree <= 0.52, agree
 
 
-def test_optimal_bands_s_curve():
-    """S-curve tuner: valid divisors, monotone response to threshold,
-    and sane recall at the chosen operating point."""
-    from semhash_spark.operators.lsh import candidate_probability, optimal_bands
-
-    b8, r8 = optimal_bands(0.8, 128)
-    b5, r5 = optimal_bands(0.5, 128)
-    assert b8 * r8 == 128 and b5 * r5 == 128
-    # higher threshold -> steeper curve wanted -> more rows per band
-    assert r8 >= r5
-    # well above threshold the tuned banding catches almost everything
-    assert candidate_probability(0.95, b8, r8) > 0.95
-    # recall-weighted tuning moves the curve left (more bands, higher
-    # capture above t) — the fn_weight knob the 0.99-recall bar needs
-    bf, rf = optimal_bands(0.8, 128, fp_weight=0.1, fn_weight=0.9)
-    assert bf >= b8
-    assert candidate_probability(0.9, bf, rf) > candidate_probability(0.9, b8, r8)
-    assert candidate_probability(0.9, bf, rf) > 0.99
-    import pytest
-
-    with pytest.raises(ValueError):
-        optimal_bands(1.0, 128)
-
-
-def test_with_tuned_bands_roundtrip():
-    from semhash_spark.config import DedupConfig
-
-    cfg = DedupConfig(columns=("text",), threshold=0.8, num_perm=128).with_tuned_bands()
-    assert cfg.num_perm % cfg.bands == 0
-    assert 1 <= cfg.bands <= 128
-
-
 def test_dpp_conditional_variance_matches_determinant_ratio():
     # the incremental-Cholesky d2 in dpp_select is the Schur
     # complement: picking item c after set S must satisfy

@@ -8,8 +8,6 @@ Each test pins a defect found reviewing the round-4 diff:
   against ``selected`` only — cross-dedup exemplar ids live in the
   INDEX id space, so every cross row rendered NULL (or, with
   overlapping id spaces, the wrong record's text).
-* ``wav_feature_fn`` emitted NaN for a 1-frame clip (mean of an
-  empty diff), silently un-pairing the row in cosine space.
 * ``records_from_strings`` only checked ``texts[0]`` for dicts, so a
   mixed list ingested ``str(dict)`` reprs instead of raising.
 * cosine fused-path memo: repeated ``deduplicate()`` calls re-ran
@@ -18,10 +16,6 @@ Each test pins a defect found reviewing the round-4 diff:
 
 from __future__ import annotations
 
-import io
-import wave
-
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -109,20 +103,6 @@ def test_filtered_strings_cross_uses_exemplar_records(spark):
         assert full[10] == "the quick brown fox jumps over the lazy dog today"
     finally:
         res.release()
-
-
-def test_wav_single_frame_features_finite():
-    from semhash_spark.functions.media import wav_feature_fn
-
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        w.writeframes(np.array([1234], dtype="<i2").tobytes())
-    feats = wav_feature_fn(dim=8)(buf.getvalue())
-    assert feats.shape == (8,)
-    assert np.isfinite(feats).all()
 
 
 def test_from_strings_rejects_dict_anywhere(spark):

@@ -88,188 +88,3 @@ def test_semantic_dedup_stream_vs_fitted_index(spark):
         assert out == [102, 103]
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_windowed_dup_counts(spark):
-    import datetime as dt
-    import shutil
-    import tempfile
-    import uuid
-
-    from semhash_spark.streaming.dedup_stream import windowed_dup_counts
-
-    tmp = tempfile.mkdtemp(prefix="semhash_stream2_")
-    try:
-        t0 = dt.datetime(2026, 1, 1, 12, 0, 0)
-        rows = [
-            (1, "alpha", t0),
-            (2, "alpha", t0 + dt.timedelta(seconds=10)),
-            (3, "alpha", t0 + dt.timedelta(seconds=20)),
-            (4, "beta", t0 + dt.timedelta(seconds=30)),
-        ]
-        df = spark.createDataFrame(rows, "event_id long, text string, event_time timestamp")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        stream = (
-            spark.readStream.schema("event_id long, text string, event_time timestamp")
-            .parquet(tmp)
-        )
-        counts = windowed_dup_counts(stream, ("text",), "event_time", "10 minutes", "5 minutes")
-        qname = "dupcnt_" + uuid.uuid4().hex[:8]
-        q = (counts.writeStream.format("memory").queryName(qname)
-             .outputMode("complete").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        out = spark.sql(f"SELECT n FROM {qname}").collect()
-        assert [r.n for r in out] == [3]  # only the alpha group repeats
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stateful_neardup_stream_matches_across_batches(spark):
-    """applyInPandasWithState near-dup matcher: per-LSH-bucket
-    signature state must survive micro-batch boundaries — a near-copy
-    arriving in batch 2 matches its batch-1 original; fresh rows and
-    the originals survive."""
-    import os
-
-    from semhash_spark.config import DedupConfig
-    from semhash_spark.streaming.dedup_stream import (
-        reduce_neardup_verdicts,
-        stateful_neardup_stream,
-    )
-
-    base = ("alpha beta gamma delta epsilon zeta eta theta iota kappa "
-            "lam mu nu xi omicron pi rho sigma tau upsilon phi chi psi "
-            "omega one two three four five six")
-    near = base.replace("four", "FOUR")
-    other = "second original doc full of its own distinct words right here"
-    fresh = "totally different content with its own tokens here now ok"
-
-    cfg = DedupConfig(columns=("text",), threshold=0.5, shingle_k=3,
-                      num_perm=64, bands=16)
-
-    tmp = tempfile.mkdtemp(prefix="semhash_statestream_")
-    try:
-        src = os.path.join(tmp, "src")
-        os.makedirs(src)
-
-        # two flat files + maxFilesPerTrigger=1 => two micro-batches,
-        # ordered by modification time (file source picks oldest first)
-        import glob
-        import time as _time
-
-        def _land(rows, name, mtime):
-            d = os.path.join(tmp, "stage_" + name)
-            spark.createDataFrame(rows, "record_id long, text string") \
-                .coalesce(1).write.parquet(d)
-            part = glob.glob(os.path.join(d, "part-*.parquet"))[0]
-            dest = os.path.join(src, name)
-            shutil.copy(part, dest)
-            os.utime(dest, (mtime, mtime))
-
-        now = _time.time()
-        _land([(1, base), (2, other)], "000.parquet", now - 60)
-        _land([(10, near), (11, fresh)], "001.parquet", now)
-
-        stream = (spark.readStream.schema("record_id long, text string")
-                  .option("maxFilesPerTrigger", 1).parquet(src))
-        verdicts = stateful_neardup_stream(stream, cfg)
-        qname = "statestream_verdicts"
-        q = (verdicts.writeStream.format("memory").queryName(qname)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(180)
-
-        red = {r.record_id: r for r in
-               reduce_neardup_verdicts(spark.table(qname)).collect()}
-        assert set(red) == {1, 2, 10, 11}
-        assert not red[1].is_dup and not red[2].is_dup and not red[11].is_dup
-        assert red[10].is_dup and red[10].matched_id == 1
-        assert red[10].est_score >= 0.5
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stateful_neardup_stream_state_cap_bounds_bucket(spark):
-    """state_cap is the streaming analogue of the batch bucket_cap:
-    a boilerplate bucket stores at most state_cap signatures, yet
-    overflow members still match against the stored head (connectivity
-    preserved, state bounded)."""
-    import os
-
-    from semhash_spark.config import DedupConfig
-    from semhash_spark.streaming.dedup_stream import (
-        reduce_neardup_verdicts,
-        stateful_neardup_stream,
-    )
-
-    boiler = ("license header apache version two point zero all rights "
-              "reserved redistribution and use in source and binary forms")
-    rows = [(i, boiler) for i in range(12)]  # 12 identical docs, cap 3
-
-    cfg = DedupConfig(columns=("text",), threshold=0.5, shingle_k=3,
-                      num_perm=64, bands=16)
-    tmp = tempfile.mkdtemp(prefix="semhash_capstream_")
-    try:
-        src = os.path.join(tmp, "src")
-        spark.createDataFrame(rows, "record_id long, text string") \
-            .coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema("record_id long, text string").parquet(src)
-        verdicts = stateful_neardup_stream(stream, cfg, state_cap=3)
-        qname = "capstream_verdicts"
-        q = (verdicts.writeStream.format("memory").queryName(qname)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(180)
-        red = {r.record_id: r for r in
-               reduce_neardup_verdicts(spark.table(qname)).collect()}
-        # first record is the exemplar; every other one still matches
-        # (stored head suffices) despite the bucket cap
-        assert not red[0].is_dup
-        for i in range(1, 12):
-            assert red[i].is_dup and red[i].matched_id == 0, (i, red[i])
-        # state is bounded: per band at most state_cap stored entries,
-        # so the verdict stream stays linear in input (no quadratic blowup)
-        assert spark.table(qname).count() == 12 * cfg.bands
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-def test_stateful_stream_prunes_tokenless_records(spark):
-    """Whitespace-only/empty records must not enter the band state:
-    their all-sentinel signatures would funnel every tokenless record
-    into one hot bucket per band and report est=1.0 false matches —
-    the streaming mirror of the batch empty-shingle pruning."""
-    import os
-
-    from semhash_spark.config import DedupConfig
-    from semhash_spark.streaming.dedup_stream import (
-        reduce_neardup_verdicts,
-        stateful_neardup_stream,
-    )
-
-    rows = [
-        (0, "   "),
-        (1, "\t\n"),
-        (2, "real tokens here in this lonely document today ok fine"),
-        (3, ""),
-    ]
-    cfg = DedupConfig(columns=("text",), threshold=0.5, shingle_k=3,
-                      num_perm=64, bands=16)
-    tmp = tempfile.mkdtemp(prefix="semhash_emptystream_")
-    try:
-        src = os.path.join(tmp, "src")
-        spark.createDataFrame(rows, "record_id long, text string") \
-            .coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema("record_id long, text string").parquet(src)
-        verdicts = stateful_neardup_stream(stream, cfg)
-        qname = "emptystream_verdicts"
-        q = (verdicts.writeStream.format("memory").queryName(qname)
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(180)
-        out = spark.table(qname)
-        # tokenless records emit NO verdict rows at all (pruned before
-        # banding); the real doc flows through unmatched
-        ids = {r.record_id for r in out.select("record_id").distinct().collect()}
-        assert ids == {2}
-        red = {r.record_id: r for r in reduce_neardup_verdicts(out).collect()}
-        assert not red[2].is_dup
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)

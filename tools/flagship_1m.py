@@ -178,7 +178,7 @@ def main() -> None:
                          "id-only shuffle + executor-blob gathers, "
                          "shuffle = round-5 payload shuffle")
     ap.add_argument("--ivf-group-cap", type=int, default=None,
-                    help="override DedupConfig.ivf_group_cap (salted "
+                    help="override verify._IVF_GROUP_CAP (salted "
                          "probe-group bound; output-invariant)")
     args = ap.parse_args()
 
@@ -212,13 +212,13 @@ def main() -> None:
         )
     if args.star_cc:
         cfg = cfg.with_(driver_cc_cap=0)
+    from semhash_spark.operators import verify
+
     if args.ivf_group_cap is not None:
-        cfg = cfg.with_(ivf_group_cap=args.ivf_group_cap)
+        verify._IVF_GROUP_CAP = args.ivf_group_cap
     if args.ivf_payload != "auto":
         # force the IVF salt-shuffle transport: id-only + blob row
         # gathers at any size, or the embedding-payload shuffle
-        from semhash_spark.operators import verify
-
         verify._IVF_BLOB_MIN_ROWS = 0 if args.ivf_payload == "blob" else float("inf")
 
     c0 = canary_seconds()
