@@ -4,8 +4,9 @@ A from-scratch reimplementation of the query semantics of
 MinishLab/semhash (deduplicate / self_deduplicate / filter_outliers /
 find_representative and the DeduplicationResult / FilterResult
 surfaces) as distributed DataFrame pipelines: MinHash/SimHash/LSH
-candidate generation, exact verification, large-star/small-star
-connected components, and a winnowing containment stage.
+candidate generation, exact verification by numpy kernels
+(``kernels``) over executor-side blobs (``blob``), connected
+components, and a winnowing containment stage.
 """
 
 # first: inside a Spark Python worker, every later task skips re-reading

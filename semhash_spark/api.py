@@ -21,10 +21,10 @@ per threshold for both the self-dedup edges and every row's top-k
 average (``rank.cosine_self_scan``), so ``self_deduplicate``,
 ``self_filter_outliers`` and ``self_find_representative`` share one
 scan. The fit owns its blobs: every frame it hands out is detached
-from them (``verify.detach``), and ``release()`` drops them. The
+from them (``blob.detach``), and ``release()`` drops them. The
 ranking memoization of the reference (semhash/semhash.py:41,
 498-518) maps to the fit's memo of its self ranking: its rows on the
-driver (``verify.held``) when the ranking is driver-held, else a
+driver (``blob.held``) when the ranking is driver-held, else a
 persisted DataFrame.
 """
 
@@ -35,6 +35,7 @@ from dataclasses import replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semhash_spark import blob
 from semhash_spark.config import DedupConfig
 from semhash_spark.datamodels import DedupResult, FilterResultDF
 from semhash_spark.operators import dedup as dedup_ops
@@ -242,9 +243,7 @@ class SparkSemHash:
         """Make ``ref`` this fit's blob: ``release()`` drops it."""
         import weakref
 
-        from semhash_spark.operators.verify import drop_blob
-
-        self._blob_drops.append(weakref.finalize(self, drop_blob, ref))
+        self._blob_drops.append(weakref.finalize(self, blob.drop_blob, ref))
         return ref
 
     # ---------------------------------------------------------- dedup
@@ -274,9 +273,7 @@ class SparkSemHash:
     def _emb_size(self) -> tuple[int, int]:
         """``_feat_bytes`` of the embedding table, once per fit."""
         if self._emb_size_memo is None:
-            from semhash_spark.operators.verify import _feat_bytes
-
-            self._emb_size_memo = _feat_bytes(
+            self._emb_size_memo = blob._feat_bytes(
                 self._embedding_feats(), self.cfg.embedding_col
             )
         return self._emb_size_memo
@@ -284,10 +281,8 @@ class SparkSemHash:
     def _emb_blob(self) -> dict:
         """The embedding table's executor-side blob, written once per fit."""
         if self._idx_blob_ref is None:
-            from semhash_spark.operators.verify import write_blob
-
             cfg = self.cfg
-            self._idx_blob_ref = self._own(write_blob(
+            self._idx_blob_ref = self._own(blob.write_blob(
                 self._embedding_feats().select(cfg.id_col, cfg.embedding_col),
                 cfg.id_col, cfg.embedding_col, "fitemb",
             ))
@@ -316,10 +311,8 @@ class SparkSemHash:
         if threshold not in self._scans:
             if not self._cosine_fused() or self._rank_blob() is None:
                 return None
-            from semhash_spark.operators.verify import detach
-
             cfg = self.cfg
-            self._scans[threshold] = detach(rank_ops.cosine_self_scan(
+            self._scans[threshold] = blob.detach(rank_ops.cosine_self_scan(
                 self._feats, self._emb_blob(), threshold, cfg.rank_k,
                 cfg.cosine_max_k, cfg.id_col, cfg.embedding_col,
                 n_rows=self._emb_size()[0],
@@ -333,10 +326,10 @@ class SparkSemHash:
         scan = self._shared_scan(threshold)
         if scan is not None:
             return rank_ops.scan_edges(scan)
-        from semhash_spark.operators.verify import cosine_threshold_edges, detach
+        from semhash_spark.operators.verify import cosine_threshold_edges
 
         cfg = self.cfg
-        return detach(cosine_threshold_edges(
+        return blob.detach(cosine_threshold_edges(
             self._feats, threshold, cfg.id_col, cfg.embedding_col,
             max_k=cfg.cosine_max_k, n_rows=self._emb_size()[0],
             ref=self._emb_blob(),
@@ -360,13 +353,11 @@ class SparkSemHash:
         # as executor-side blobs so deduplicate() is ONE map-only job
         # (operators/crossblob.py); below the gate the relational plan
         # wins, so small fits skip the build entirely
-        from semhash_spark.operators.verify import blob_transport_available
-
         if (
             self.mode == "minhash"
             and index.cross_blobs is None
             and n_feats >= dedup_ops.CROSS_BLOB_MIN_ROWS
-            and blob_transport_available(self._feats.sparkSession)
+            and blob.blob_transport_available(self._feats.sparkSession)
         ):
             from semhash_spark.operators.crossblob import build_cross_blobs
 
@@ -442,8 +433,6 @@ class SparkSemHash:
 
     def self_rank(self) -> DataFrame:
         """Memoized self-ranking (reference semhash.py:490-519)."""
-        from semhash_spark.operators.verify import held
-
         self._require_fit()
         if self._ranking is None:
             # any shared scan of the fit carries the averages (they do
@@ -455,9 +444,9 @@ class SparkSemHash:
                 ranking = rank_ops.scan_ranking(scan)
             else:
                 ranking = self._ranked(self._embedding_feats(), True)
-            # a driver-held ranking (verify.held), which the outlier cut
+            # a driver-held ranking (blob.held), which the outlier cut
             # and the representatives slice on the driver: nothing to cache
-            self._ranking = ranking if held(ranking) is not None else ranking.persist()
+            self._ranking = ranking if blob.held(ranking) is not None else ranking.persist()
         return self._ranking
 
     def rank(self, query_df: DataFrame) -> DataFrame:
@@ -467,15 +456,13 @@ class SparkSemHash:
     def _ranked(self, q: DataFrame, exclude_self: bool) -> DataFrame:
         """``rank_by_avg_similarity`` of ``q`` against the fit, detached
         when it reads the fit's blob."""
-        from semhash_spark.operators.verify import detach
-
         ref = self._rank_blob()
         ranking = rank_ops.rank_by_avg_similarity(
             q, self._embedding_feats(), self.cfg.rank_k, exclude_self=exclude_self,
             id_col=self.cfg.id_col, emb_col=self.cfg.embedding_col,
             ref=ref, index_size=self._emb_size(),
         )
-        return detach(ranking) if ref is not None else ranking
+        return blob.detach(ranking) if ref is not None else ranking
 
     def self_filter_outliers(self, outlier_percentage: float | None = None) -> FilterResultDF:
         pct = self.cfg.outlier_percentage if outlier_percentage is None else outlier_percentage

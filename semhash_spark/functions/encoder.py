@@ -25,21 +25,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from semhash_spark.functions.arrays import list_array
+from semhash_spark.kernels import _ramp
 
 
 @lru_cache(maxsize=1 << 20)
 def _token_hash(token: str) -> int:
     return int.from_bytes(hashlib.sha1(token.encode("utf-8")).digest()[:8], "little")
-
-
-def _ramp(lens: np.ndarray) -> np.ndarray:
-    """[0..lens[0]-1, 0..lens[1]-1, ...] per-segment position index."""
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    offs = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-    return np.arange(total, dtype=np.int64) - np.repeat(offs, lens)
 
 
 def encode_texts(texts: list[str], dim: int = 64, ngram: int = 1) -> np.ndarray:

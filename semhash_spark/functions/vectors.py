@@ -92,7 +92,7 @@ def hyperplane_bands(
         # would otherwise allocate ~800 MB per worker), and reuse ONE
         # preallocated output: fresh >32 MB buffers come from mmap
         # whose first-touch faults make the gemm 16x slower on this
-        # host (see verify._chunked_threshold)
+        # host (see kernels._chunked_threshold)
         step = max(64, int((16 << 20) // (8 * max(bits, 1))))
         hT = np.ascontiguousarray(h[:, : x.shape[1]].T)
         pbuf = np.empty((min(step, n), bits))

@@ -124,7 +124,7 @@ def connected_components(
 
     The driver path is ONE probe job: ``limit(cap+1).toArrow`` both
     establishes the size and delivers the edges. ``self_deduplicate``
-    reads the edges it already holds on the driver (``verify.held``)
+    reads the edges it already holds on the driver (``blob.held``)
     and calls ``labels`` itself, so this probe serves only callers
     whose edges are not held. The numpy propagation tolerates
     duplicate edges, so the probe skips ``distinct``/

@@ -35,6 +35,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semhash_spark.kernels import _lcs_len_hash
 from semhash_spark.operators.lsh import candidate_pairs_self, verified_edges_self
 
 
@@ -131,8 +132,8 @@ def containment_edges(
     try:
         at = anchor_table(
             sh, "shingles", cfg.anchor_mod, id_col,
-            policy=getattr(cfg, "anchor_policy", "mod"),
-            window=getattr(cfg, "winnow_window", 8),
+            policy=cfg.anchor_policy,
+            window=cfg.winnow_window,
             positional_col=pos,
         )
         scored = verified_edges_self(at, sh, cfg.bucket_cap, id_col, "containment",
@@ -151,154 +152,6 @@ def containment_edges(
 # -------------------------------------------------- substring confirm
 
 
-def _lcs_len(a: str, b: str) -> int:
-    """Length of the longest common substring via a suffix automaton
-    of ``a`` walked with ``b`` — O(|a| + |b|), the linear-time core a
-    suffix-array/LCP approach would also give (Gusfield ch.7)."""
-    # build suffix automaton of a
-    last = 0
-    states = [{"len": 0, "link": -1, "next": {}}]
-    for ch in a:
-        cur = len(states)
-        states.append({"len": states[last]["len"] + 1, "link": -1, "next": {}})
-        p = last
-        while p >= 0 and ch not in states[p]["next"]:
-            states[p]["next"][ch] = cur
-            p = states[p]["link"]
-        if p == -1:
-            states[cur]["link"] = 0
-        else:
-            q = states[p]["next"][ch]
-            if states[p]["len"] + 1 == states[q]["len"]:
-                states[cur]["link"] = q
-            else:
-                clone = len(states)
-                states.append({
-                    "len": states[p]["len"] + 1,
-                    "link": states[q]["link"],
-                    "next": dict(states[q]["next"]),
-                })
-                while p >= 0 and states[p]["next"].get(ch) == q:
-                    states[p]["next"][ch] = clone
-                    p = states[p]["link"]
-                states[q]["link"] = clone
-                states[cur]["link"] = clone
-        last = cur
-    # walk b
-    v, ln, best = 0, 0, 0
-    for ch in b:
-        while v and ch not in states[v]["next"]:
-            v = states[v]["link"]
-            ln = states[v]["len"]
-        if ch in states[v]["next"]:
-            v = states[v]["next"][ch]
-            ln += 1
-        else:
-            v, ln = 0, 0
-        best = max(best, ln)
-    return best
-
-
-class _HashAmbiguity(Exception):
-    """A rolling-hash match failed byte verification (collision) —
-    the caller must re-answer with the exact automaton."""
-
-
-_RH_BASE1 = np.uint64(0x9E3779B97F4A7C15 | 1)  # odd -> invertible mod 2^64
-_RH_BASE2 = np.uint64(0xC2B2AE3D27D4EB4F | 1)
-
-
-def _codepoints(s: str) -> np.ndarray:
-    """One uint64 per CHARACTER (code point), so hash-LCS semantics
-    match the automaton's character-level walk on non-ASCII too."""
-    return np.frombuffer(s.encode("utf-32-le"), dtype=np.uint32).astype(np.uint64)
-
-
-def _prefix_poly(cp: np.ndarray, base: np.uint64) -> tuple[np.ndarray, np.ndarray]:
-    """(P, powers): P[i] = sum_{j<i} cp[j] * base^(i-1-j) mod 2^64,
-    vectorized via the invertible-base trick: P[i] = base^i *
-    cumsum(cp[j] * base^-(j+1)). uint64 wraparound IS the mod."""
-    n = len(cp)
-    binv = pow(int(base), -1, 1 << 64)
-    pows = np.ones(n + 1, dtype=np.uint64)
-    pows[1:] = base
-    np.cumprod(pows, out=pows)  # base^i
-    ipows = np.ones(n + 1, dtype=np.uint64)
-    ipows[1:] = np.uint64(binv)
-    np.cumprod(ipows, out=ipows)  # base^-i
-    w = cp * ipows[1:]
-    c = np.zeros(n + 1, dtype=np.uint64)
-    np.cumsum(w, out=c[1:])
-    return c * pows, pows
-
-
-def _window_hashes(pre, L: int) -> np.ndarray:
-    """Rolling hashes of every length-L window from a _prefix_poly."""
-    P, pows = pre
-    return P[L:] - P[:-L] * pows[L] if L <= len(P) - 1 else np.empty(0, np.uint64)
-
-
-def _has_common_run(cp_a, cp_b, pre_a1, pre_a2, pre_b1, pre_b2, L: int) -> bool:
-    """True iff a and b share a length-L character run. Verified: the
-    double-hash match is confirmed code-point-for-code-point; a
-    confirmed mismatch (hash collision, ~2^-64 per candidate) raises
-    _HashAmbiguity so the caller re-answers exactly."""
-    ha = _window_hashes(pre_a1, L)
-    hb = _window_hashes(pre_b1, L)
-    if not len(ha) or not len(hb):
-        return False
-    common, ia, ib = np.intersect1d(ha, hb, return_indices=True)
-    if not len(common):
-        return False
-    ha2 = _window_hashes(pre_a2, L)
-    hb2 = _window_hashes(pre_b2, L)
-    ok2 = ha2[ia] == hb2[ib]
-    for i, j in zip(ia[ok2], ib[ok2]):
-        if np.array_equal(cp_a[i : i + L], cp_b[j : j + L]):
-            return True
-        raise _HashAmbiguity  # second-hash agreement but real mismatch
-    # h1 collided everywhere h2 disagreed: can't rule out a true run
-    # at other positions of the same h1 value
-    raise _HashAmbiguity
-
-
-# below this combined length the automaton's plain loops beat the
-# hash kernel's numpy call overhead (measured crossover ~1 KB)
-_LCS_HASH_MIN_CHARS = 1024
-
-
-def _lcs_len_hash(a: str, b: str) -> int:
-    """Longest common substring length via binary search over the run
-    length with double rolling hashes — O((|a|+|b|) log min) numpy
-    passes instead of the automaton's per-character Python loop
-    (measured 2.6-3x on multi-KB documents, growing with size).
-    Las-Vegas exact: every claimed match is verified code-point-for-
-    code-point; any hash ambiguity falls back to the exact automaton
-    for the whole pair. Small pairs (< _LCS_HASH_MIN_CHARS combined)
-    take the automaton directly — its plain loops win under numpy
-    call overhead there."""
-    if not a or not b:
-        return 0
-    if len(a) + len(b) < _LCS_HASH_MIN_CHARS:
-        return _lcs_len(a, b)
-    cp_a, cp_b = _codepoints(a), _codepoints(b)
-    pre_a1 = _prefix_poly(cp_a, _RH_BASE1)
-    pre_a2 = _prefix_poly(cp_a, _RH_BASE2)
-    pre_b1 = _prefix_poly(cp_b, _RH_BASE1)
-    pre_b2 = _prefix_poly(cp_b, _RH_BASE2)
-    try:
-        lo, hi = 0, min(len(cp_a), len(cp_b))
-        while lo < hi:
-            mid = (lo + hi + 1) // 2
-            if _has_common_run(cp_a, cp_b, pre_a1, pre_a2, pre_b1, pre_b2, mid):
-                lo = mid
-            else:
-                hi = mid - 1
-        return lo
-    except _HashAmbiguity:
-        return _lcs_len(a, b)
-
-
 def lcs_confirm(
     pairs: DataFrame,
     content_df: DataFrame,
@@ -313,8 +166,8 @@ def lcs_confirm(
     ratio (contiguity required) yet tolerant of fragments that are
     not byte-exact substrings, unlike ``instr``. Content joins only
     onto the surviving-candidate relation (tiny), never shuffling the
-    corpus; the per-pair automaton is linear in the two lengths and
-    runs Arrow-batched.
+    corpus; the per-pair kernel (``kernels._lcs_len_hash``) runs
+    Arrow-batched.
 
     Output: (a, b, score, lcs_frac).
 

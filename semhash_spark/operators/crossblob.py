@@ -12,7 +12,7 @@ structures ONCE per fit as executor-side mmap blobs:
   * exact keys   — sorted sha256 digests -> exemplar id
   * band table   — the THINNED table, range-sorted by band_hash,
                    hash -> (band_idx, member id) runs
-  * shingle sets — the existing ``load_feats_segments`` pack
+  * shingle sets — the existing ``blob.load_feats_segments`` pack
 
 and answers a query batch in ONE map-only job (`mapInArrow` over the
 query side; exact lookup, band-bucket probes, candidate dedup, exact
@@ -38,17 +38,9 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semhash_spark import blob
 from semhash_spark.functions.arrays import list_segments, record_batch
-
-from semhash_spark.operators.verify import (
-    _gather_rows,
-    _lookup_rows,
-    _pack_sharded,
-    _padded_intersections,
-    _ramp,
-    load_feats_segments,
-    write_blob,
-)
+from semhash_spark.kernels import _distinct_pairs, _lookup_rows, _pair_intersections, _ramp
 
 
 def build_cross_blobs(
@@ -71,11 +63,11 @@ def build_cross_blobs(
         .sortWithinPartitions("band_hash")
     )
     return {
-        "keys": write_blob(idx_keys.select("exemplar_id", "exact_key"),
-                           "exemplar_id", "exact_key", "xkeys"),
-        "bands": write_blob(bands, "member", "band_hash", "xbands"),
-        "feats": write_blob(feats.select(id_col, "shingles"), id_col, "shingles",
-                            "xfeats"),
+        "keys": blob.write_blob(idx_keys.select("exemplar_id", "exact_key"),
+                                "exemplar_id", "exact_key", "xkeys"),
+        "bands": blob.write_blob(bands, "member", "band_hash", "xbands"),
+        "feats": blob.write_blob(feats.select(id_col, "shingles"), id_col, "shingles",
+                                 "xfeats"),
     }
 
 
@@ -104,7 +96,7 @@ def _load_keys(ref: dict):
         order = np.lexsort((kb[:, 3], kb[:, 2], kb[:, 1], kb[:, 0]))
         return [kb[order].T, ex[order]]
 
-    (kbT, ex), _ = _pack_sharded(ref, "xkeys", part_builder, finalize_builder)
+    (kbT, ex), _ = blob._pack_sharded(ref, "xkeys", part_builder, finalize_builder)
     return kbT[0], kbT[1], kbT[2], kbT[3], ex
 
 
@@ -137,25 +129,10 @@ def _load_bands(ref: dict):
                 np.asarray(maxs, dtype=np.int64),
                 np.asarray(nos, dtype=np.int64)]
 
-    (mins, maxs, nos), shard_groups = _pack_sharded(
+    (mins, maxs, nos), shard_groups = blob._pack_sharded(
         ref, "xbands", part_builder, finalize_builder
     )
     return mins, maxs, nos, shard_groups
-
-
-def _cross_intersections(segt, pos_b, q_flat, q_offs, q_lens, qrow):
-    """|Q_r ∩ B_p| per pair: side A = the pair's query shingle set
-    (batch-local flat/offsets), side B = an index row of the sharded
-    segments pack — the padded-sort kernel of
-    ``verify._padded_intersections``. Returns (inter, la, lb)."""
-    la = q_lens[qrow]
-    lb = np.asarray(segt[3][pos_b])
-    inter = _padded_intersections(
-        la, lb,
-        lambda sel: q_flat[np.repeat(q_offs[qrow[sel]], la[sel]) + _ramp(la[sel])],
-        lambda sel: _gather_rows(segt, pos_b[sel], lb[sel]),
-    )
-    return inter, la, lb
 
 
 def cross_match_blob(
@@ -173,7 +150,7 @@ def cross_match_blob(
     rows: every (query, index) pair at Jaccard >= threshold reachable
     through the thinned band buckets — the relational plan's ``hits``
     relation, scores bit-identical. The frame reads the fit's blobs;
-    the caller detaches it (``verify.detach``).
+    the caller detaches it (``blob.detach``).
     """
     from semhash_spark.operators.dedup import add_features
     from semhash_spark.operators.ids import exact_key
@@ -195,7 +172,7 @@ def cross_match_blob(
         k0, k1, k2, k3, kex = _load_keys(refs["keys"])
         bmins, bmaxs, bnos, bshards = _load_bands(refs["bands"])
         ids_sorted, perm, row_shard, row_off, row_len, flats = (
-            load_feats_segments(refs["feats"])
+            blob.load_feats_segments(refs["feats"])
         )
         segt = (flats, row_shard, row_off, row_len)
         for batch in batches:
@@ -259,24 +236,14 @@ def cross_match_blob(
                         cand_q.append(np.repeat(qrow_b[sel_p], rl)[okb])
                         cand_i.append(np.asarray(sh_m)[idxs][okb])
                     if cand_q:
-                        cq = np.concatenate(cand_q)
-                        ci = np.concatenate(cand_i)
                         # distinct (query, index) candidates
-                        order = np.lexsort((ci, cq))
-                        cq, ci = cq[order], ci[order]
-                        first = np.empty(len(cq), dtype=bool)
-                        first[0] = True
-                        np.logical_or(
-                            cq[1:] != cq[:-1], ci[1:] != ci[:-1],
-                            out=first[1:],
-                        )
-                        cq, ci = cq[first], ci[first]
+                        cq, ci = _distinct_pairs(np.concatenate(cand_q),
+                                                 np.concatenate(cand_i))
                         # verify: exact float64 Jaccard
                         pos = _lookup_rows(ids_sorted, perm, ci, "index")
                         q_flat, q_lens, q_offs, _ = list_segments(batch["_sh"])
-                        inter, la, lb = _cross_intersections(
-                            segt, pos, q_flat, q_offs, q_lens, cq
-                        )
+                        inter, la, lb = _pair_intersections(
+                            segt, cq, pos, side_a=(q_flat, q_offs, q_lens))
                         union = la + lb - inter
                         score = np.divide(
                             inter.astype(np.float64), union,

@@ -65,6 +65,7 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semhash_spark import blob
 from semhash_spark.config import DedupConfig
 from semhash_spark.datamodels import DedupResult
 from semhash_spark.functions.encoder import featurize
@@ -92,8 +93,6 @@ from semhash_spark.operators.lsh import (
     verified_edges_self,
 )
 from semhash_spark.operators.verify import (
-    detach,
-    held,
     jaccard_similarity,
     verify_cosine,
     verify_jaccard,
@@ -142,7 +141,7 @@ def add_features(df: DataFrame, cfg: DedupConfig, mode: str) -> DataFrame:
             "shingles", shingle_hashes(text_col, cfg.shingle_k)
         )
         if mode == "minhash":
-            if getattr(cfg, "minhash_family", "kperm") == "oph":
+            if cfg.minhash_family == "oph":
                 from semhash_spark.functions.hashing import oph_signature
 
                 df = df.withColumn("sig", oph_signature("shingles", cfg.num_perm))
@@ -343,9 +342,9 @@ def build_index(
     if mode == "jaccard_exact":
         return FittedIndex(feats, keys)
     if mode == "cosine":
-        from semhash_spark.operators.verify import _feat_bytes, cosine_fused_fits
+        from semhash_spark.operators.verify import cosine_fused_fits
 
-        size = fit.feat_size if fit and fit.feat_size else _feat_bytes(
+        size = fit.feat_size if fit and fit.feat_size else blob._feat_bytes(
             feats, cfg.embedding_col)
         if cosine_fused_fits(cfg, *size, feats.sparkSession):
             return FittedIndex(feats, keys, emb_blob=emb_blob() if emb_blob else None)
@@ -422,16 +421,12 @@ def self_deduplicate(
         feats = feats.persist()
         persisted.append(feats)
 
-    from semhash_spark.operators.verify import (
-        _feat_bytes,
-        cosine_fused_fits,
-        cosine_threshold_edges,
-    )
+    from semhash_spark.operators.verify import cosine_fused_fits, cosine_threshold_edges
 
     if mode == "cosine":
         n_feats, feat_bytes = (
             fitted.feat_size if fitted and fitted.feat_size
-            else _feat_bytes(feats, cfg.embedding_col)
+            else blob._feat_bytes(feats, cfg.embedding_col)
         )
     # the fused matmul needs the executor-side blob; without transport
     # (cluster master, no spark.semhash.blobDir) fall through to the
@@ -522,12 +517,12 @@ def _edge_table(edges: DataFrame, extra_edges: DataFrame | None, cap: int,
                 cache: bool) -> tuple["pa.Table | None", DataFrame]:
     """The (a, b, score) edges, with ``extra_edges`` unioned in as
     distinct rows: (their driver table, or None above ``cap`` rows;
-    their frame). Edges the driver holds already (``verify.held``) are
+    their frame). Edges the driver holds already (``blob.held``) are
     read back without a job; others are collected by one
     ``limit(cap + 1)`` probe, over a cache of the frame when ``cache``
     (kept only when the probe overflows, for the star path to reuse)."""
     frames = [edges] + ([extra_edges] if extra_edges is not None else [])
-    tables = [held(f) for f in frames]
+    tables = [blob.held(f) for f in frames]
     frame = edges if extra_edges is None else edges.unionByName(
         extra_edges.select("a", "b", "score")).distinct()
     if any(t is None for t in tables):
@@ -670,7 +665,7 @@ def deduplicate(
         # reads them
         from semhash_spark.operators.crossblob import cross_match_blob
 
-        out = detach(cross_match_blob(query_df, cfg, fitted.cross_blobs, threshold, id_col))
+        out = blob.detach(cross_match_blob(query_df, cfg, fitted.cross_blobs, threshold, id_col))
         ex_hits = out.where(F.col("exact")).select(
             F.col("query_id"), F.col("match_id").alias("exemplar_id")
         )
@@ -722,7 +717,7 @@ def deduplicate(
             ref=fitted.emb_blob, max_k=cfg.cosine_max_k,
         )
         if fitted.emb_blob is not None:
-            hits = detach(hits)
+            hits = blob.detach(hits)
         return _cross_result(kept, exact_dups, hits, cfg, threshold, id_col, persisted)
     else:  # jaccard_exact: explicit brute-force correctness baseline
         cands = (

@@ -115,7 +115,7 @@ def ivf_probe_cells(emb_col: str, cents: np.ndarray, n_probe: int):
         d = x.shape[1]
         skip |= ~x.any(axis=1)  # zero-norm rows
         # chunk rows + reuse one score buffer (fresh big gemm outputs
-        # pay the first-touch fault storm — see verify loaders)
+        # pay the first-touch fault storm — see kernels._topk_buffers)
         step = max(16, int((16 << 20) // (8 * n_cells_)))
         buf = np.empty((min(step, len(x)), n_cells_))
         cells = np.empty((len(x), p), dtype=np.int64)

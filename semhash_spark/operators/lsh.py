@@ -30,7 +30,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semhash_spark import blob
 from semhash_spark.functions.arrays import record_batch
+from semhash_spark.kernels import _bucket_walk, _distinct_pairs, score_set_pairs
 
 BAND_COLS = ("band_idx", "band_hash")
 
@@ -65,7 +67,6 @@ def band_table(
     bands: int,
     id_col: str = "record_id",
     rows_per_band: int | None = None,
-    keep: tuple[str, ...] = (),
 ) -> DataFrame:
     """(record_id, band_idx, band_hash) — one row per band per record.
 
@@ -74,16 +75,11 @@ def band_table(
     SimHash/hyperplane bands pass the band array column directly via
     ``explode_band_array``. Pass ``rows_per_band`` (num_perm//bands)
     for the element_at fast path; without it a generic slice form is
-    used. ``keep`` carries extra columns through the explode (the
-    stateful streaming matcher keeps the signature itself; the batch
-    path keeps nothing — ids and hashes only in the shuffle).
+    used.
     """
     sliced = band_hash_array(sig_col, bands, rows_per_band)
     return df.select(
-        F.col(id_col),
-        *[F.col(c) for c in keep],
-        F.posexplode(sliced).alias("band_idx", "band_hash"),
-    )
+        F.col(id_col), F.posexplode(sliced).alias("band_idx", "band_hash"))
 
 
 def explode_band_array(
@@ -92,18 +88,6 @@ def explode_band_array(
     return df.select(
         F.col(id_col), F.posexplode(F.col(band_array_col)).alias("band_idx", "band_hash")
     )
-
-
-def _seg_ramp(lens):
-    """[0..lens[0]-1, 0..lens[1]-1, ...] per-segment position index."""
-    import numpy as np
-
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    offs = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-    return np.arange(total, dtype=np.int64) - np.repeat(offs, lens)
 
 
 # pairs scored per kernel call in verified mode: bounds each python
@@ -119,153 +103,6 @@ _SCORE_CHUNK = 2048
 # and every band of a bucket key lands in the same task once AQE
 # coalesces a small band shuffle
 _DEDUP_PAIRS = 1 << 20
-
-
-def _bucket_walk(batches, cap: int):
-    """Each bucket's pairs as (a, b) int64 arrays (one yield per input
-    batch that completes pairs), from Arrow record batches of
-    (band_idx, band_hash, _id) sorted by (bucket key, id).
-
-    All-pairs for buckets <= ``cap`` members, star edges (min-id ->
-    member) above it. Memory is bounded by construction: ids arrive
-    ascending within a bucket, so a bucket is buffered only up to
-    ``cap`` ids — the moment it overflows, the buffer flushes as star
-    edges (the first id IS the bucket min) and the rest of the bucket
-    streams through without being held, however large it is (a
-    10^9-member boilerplate bucket costs one task O(cap) memory). A
-    bucket open at a batch boundary is carried into the next batch.
-    """
-    import numpy as np
-
-    carry_key = None  # bucket key open at the last batch boundary
-    carry_ids = None  # buffered ids of the open bucket (<= cap)
-    star_min = None   # not None => the open bucket overflowed cap
-
-    def bucket_pairs(ids_seg):
-        """(a, b) arrays for ONE completed bucket (ascending ids)."""
-        k = len(ids_seg)
-        if k < 2:
-            return None
-        if k > cap:
-            return np.repeat(ids_seg[0], k - 1), ids_seg[1:]
-        rep = np.arange(k, dtype=np.int64)
-        b = np.repeat(ids_seg, rep)
-        a = ids_seg[_seg_ramp(rep)]
-        return a, b
-
-    def col(rb, name):
-        return rb.column(name).to_numpy(zero_copy_only=False)
-
-    for rb in batches:
-        n = rb.num_rows
-        if n == 0:
-            continue
-        bi = col(rb, "band_idx")
-        bh = col(rb, "band_hash")
-        ids = col(rb, "_id").astype(np.int64, copy=False)
-        new_seg = np.empty(n, dtype=bool)
-        new_seg[0] = True
-        np.logical_or(bi[1:] != bi[:-1], bh[1:] != bh[:-1], out=new_seg[1:])
-        seg_starts = np.flatnonzero(new_seg)
-        n_seg = len(seg_starts)
-        seg_ends = np.append(seg_starts[1:], n)
-        out_a: list = []
-        out_b: list = []
-        s_first = 0
-        first_key = (bi[0], bh[0])
-        if carry_key is not None:
-            if first_key == carry_key:
-                seg0 = ids[: seg_ends[0]]
-                open_at_end = n_seg == 1
-                if star_min is not None:
-                    out_a.append(np.repeat(star_min, len(seg0)))
-                    out_b.append(seg0)
-                else:
-                    merged = np.concatenate([carry_ids, seg0])
-                    if open_at_end and len(merged) <= cap:
-                        carry_ids = merged
-                        if out_a:
-                            yield np.concatenate(out_a), np.concatenate(out_b)
-                        continue
-                    if len(merged) > cap:
-                        # overflow: flush as star NOW (first id is
-                        # the bucket min under the ascending sort)
-                        # and stream the rest without buffering
-                        star_min = merged[0]
-                        out_a.append(np.repeat(star_min, len(merged) - 1))
-                        out_b.append(merged[1:])
-                        carry_ids = None
-                        if open_at_end:
-                            if out_a:
-                                yield np.concatenate(out_a), np.concatenate(out_b)
-                            continue
-                    else:
-                        p = bucket_pairs(merged)
-                        if p is not None:
-                            out_a.append(p[0])
-                            out_b.append(p[1])
-                if not open_at_end:
-                    carry_key = None
-                    carry_ids = None
-                    star_min = None
-                    s_first = 1
-                else:
-                    if out_a:
-                        yield np.concatenate(out_a), np.concatenate(out_b)
-                    continue
-            else:
-                # the carried bucket closed at the batch boundary
-                if star_min is None and carry_ids is not None:
-                    p = bucket_pairs(carry_ids)
-                    if p is not None:
-                        out_a.append(p[0])
-                        out_b.append(p[1])
-                carry_key = None
-                carry_ids = None
-                star_min = None
-
-        # segments [s_first, n_seg - 1) are complete: vectorized
-        # pair emission across all of them at once
-        if n_seg - 1 > s_first:
-            seg_len = seg_ends - seg_starts
-            seg_id = np.cumsum(new_seg) - 1
-            complete = np.zeros(n_seg, dtype=bool)
-            complete[s_first : n_seg - 1] = True
-            small = complete & (seg_len >= 2) & (seg_len <= cap)
-            big = complete & (seg_len > cap)
-            f_elem = seg_starts[seg_id]
-            local = np.arange(n, dtype=np.int64) - f_elem
-            if small.any():
-                sel = small[seg_id]
-                rep = local[sel]
-                b_s = np.repeat(ids[sel], rep)
-                base = np.repeat(f_elem[sel], rep)
-                a_s = ids[base + _seg_ramp(rep)]
-                out_a.append(a_s)
-                out_b.append(b_s)
-            if big.any():
-                m = big[seg_id] & (local > 0)
-                out_a.append(ids[f_elem[m]])
-                out_b.append(ids[m])
-
-        # the batch's last segment becomes (or stays) the carry
-        last = ids[seg_starts[-1] :]
-        carry_key = (bi[-1], bh[-1])
-        if len(last) > cap:
-            star_min = last[0]
-            out_a.append(np.repeat(star_min, len(last) - 1))
-            out_b.append(last[1:])
-            carry_ids = None
-        else:
-            star_min = None
-            carry_ids = last.copy()
-        if out_a:
-            yield np.concatenate(out_a), np.concatenate(out_b)
-
-    if carry_key is not None and star_min is None and carry_ids is not None:
-        p = bucket_pairs(carry_ids)
-        if p is not None:
-            yield p
 
 
 def candidate_pairs_self(
@@ -286,19 +123,20 @@ def candidate_pairs_self(
     Plan: the band table (ids and hashes only) is hash-repartitioned
     on the bucket key — the one shuffle — and locally sorted by
     (bucket key, id); a streaming ``mapInArrow`` generator walks the
-    buckets (``_bucket_walk``) and emits each bucket's pairs directly.
+    buckets (``kernels._bucket_walk``) and emits each bucket's pairs
+    directly.
 
     * pairs-only (``pack=None``; the simhash and cosine-LSH callers):
       the emitted (a, b) pairs, then ``distinct`` collapses the
       repeats of a pair that shares several bands.
-    * verified (``pack`` = a ``verify.write_blob`` ref of the
+    * verified (``pack`` = a ``blob.write_blob`` ref of the
       call's (id, shingles) table; ``verified_edges_self`` owns the
       blob around this plan): every task mmaps the pack
-      (``load_feats_segments``) and scores each emitted pair in
+      (``blob.load_feats_segments``) and scores each emitted pair in
       ``_SCORE_CHUNK``-pair chunks — after dropping the repeats among
       up to ``_DEDUP_PAIRS`` gathered pairs — with exact float64 ``metric``
       ("jaccard", with the ``J >= t => min >= t * max`` size prune,
-      or "containment"; ``verify.score_set_pairs``), keeping only
+      or "containment"; ``kernels.score_set_pairs``), keeping only
       edges >= ``threshold``. No pair relation is ever shuffled,
       sized or joined against the shingle arrays; the only
       ``distinct`` is on the small edge set. The scores are
@@ -328,18 +166,11 @@ def candidate_pairs_self(
     def verified(batches):
         import numpy as np
 
-        from semhash_spark.operators.verify import load_feats_segments, score_set_pairs
-
-        feats = load_feats_segments(pack)
+        feats = blob.load_feats_segments(pack)
 
         def score(pend):
-            a = np.concatenate([p[0] for p in pend])
-            b = np.concatenate([p[1] for p in pend])
-            order = np.lexsort((b, a))
-            a, b = a[order], b[order]
-            first = np.ones(len(a), dtype=bool)
-            np.logical_or(a[1:] != a[:-1], b[1:] != b[:-1], out=first[1:])
-            a, b = a[first], b[first]
+            a, b = _distinct_pairs(np.concatenate([p[0] for p in pend]),
+                                   np.concatenate([p[1] for p in pend]))
             out = [
                 score_set_pairs(feats, a[i : i + _SCORE_CHUNK],
                                 b[i : i + _SCORE_CHUNK], threshold, metric)
@@ -379,22 +210,22 @@ def verified_edges_self(
 ) -> DataFrame | None:
     """The distinct verified edges (a, b, score >= ``threshold``) of a
     band table, computed now: writes the (id, shingles) blob of
-    ``sets_df`` (``verify.write_blob``), runs the verified
+    ``sets_df`` (``blob.write_blob``), runs the verified
     ``candidate_pairs_self`` and detaches its edges before the blob
-    is dropped (``verify.detach``: a driver-held frame up to
+    is dropped (``blob.detach``: a driver-held frame up to
     ``DRIVER_CC_CAP`` edges, an eager local checkpoint above), so the
     returned frame never reads it. None when the blob cannot serve
     the call (no transport, or above ``VERIFY_BROADCAST_MAX_BYTES``):
     the caller keeps the candidates -> join-verify plan."""
     from semhash_spark.operators import verify
 
-    if not verify.blob_transport_available(sets_df.sparkSession):
+    if not blob.blob_transport_available(sets_df.sparkSession):
         return None
-    ref = verify.write_blob(sets_df.select(id_col, "shingles"), id_col, "shingles",
-                            name_prefix, max_bytes=verify.VERIFY_BROADCAST_MAX_BYTES)
+    ref = blob.write_blob(sets_df.select(id_col, "shingles"), id_col, "shingles",
+                          name_prefix, max_bytes=verify.VERIFY_BROADCAST_MAX_BYTES)
     if ref is None:
         return None
-    return verify.detach(candidate_pairs_self(
+    return blob.detach(candidate_pairs_self(
         bands_df, bucket_cap, id_col, pack=ref, metric=metric, threshold=threshold), ref)
 
 

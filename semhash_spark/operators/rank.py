@@ -20,18 +20,18 @@ Top-k plan (``topk_scores``), chosen by index size:
 
 * ``broadcast`` (default when the index fits executor memory): the
   index (id, embedding) table becomes an executor-side blob
-  (``verify.write_blob``: a distributed parquet write, packed per host
+  (``blob.write_blob``: a distributed parquet write, packed per host
   into the f64 normalized transposed matrix,
-  ``verify.load_feats_rows(ref, "topk")``) and each query partition
+  ``blob.load_feats_rows(ref, "topk")``) and each query partition
   computes exact cosine top-k with one BLAS matmul + 2-D
-  argpartition inside ``mapInArrow`` (``_topk_chunks``) — no pair
+  argpartition inside ``mapInArrow`` (``kernels._topk_chunks``) — no pair
   shuffle, no window, output is |Q| x k rows only. This is the plan a
   1000-executor cluster wants whenever the index matrix is bounded
   (100k x 64 floats = 50 MB per executor vs a |Q| x |X| pair
   shuffle). ``rank_by_avg_similarity`` on this plan averages inside
-  the kernel (``_topk_avgs``, equal to Spark's ``avg`` bit for bit),
+  the kernel (``kernels._topk_avgs``, equal to Spark's ``avg`` bit for bit),
   so only |Q| (query_id, avg_score) rows leave it. A call that writes
-  its own blob returns the rows detached (``verify.detach``) and has
+  its own blob returns the rows detached (``blob.detach``) and has
   dropped the blob; given the blob of a fit, it returns the lazy plan
   and the fit detaches it.
 * ``ivf`` (the automatic above-cap fallback): cell-id equi-join from
@@ -60,78 +60,19 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from semhash_spark import blob
 from semhash_spark.functions.arrays import list_matrix, record_batch
+from semhash_spark.kernels import (
+    _chunked_threshold,
+    _ramp,
+    _topk_avgs,
+    _topk_buffers,
+    _topk_chunks,
+    normalized_batch,
+)
 
 # index sides up to this many rows take the broadcast-matmul path
 BROADCAST_TOPK_CAP = 500_000
-
-
-def _topk_buffers(n_idx: int, exclude_self: bool):
-    """Reused per-partition work buffers of ``_topk_chunks``: the
-    |chunk| x |index| score block (row chunks sized to keep it ~16 MB)
-    and, when self matches are excluded, its id-equality mask. A fresh
-    64 MB gemm output per chunk measured 16x slower (mmap first-touch
-    faults + THP compaction; see verify._chunked_threshold)."""
-    step = max(16, int((16 << 20) // (8 * max(n_idx, 1))))
-    buf = np.empty((step, max(n_idx, 1)))
-    return buf, (np.empty(buf.shape, dtype=bool) if exclude_self else None)
-
-
-def _topk_chunks(q_ids, qm, qz, ids_i, mnT, zn, k, exclude_self, bufs):
-    """Exact top-k of one normalized query batch (``verify.normalized_batch``)
-    against the normalized TRANSPOSED index
-    (``verify.load_feats_rows(ref, "topk")``), in row chunks.
-
-    Yields ``(lo, hi, sorted_i, sorted_s, valid, counts)`` per chunk
-    with any ranked neighbor: each row's candidates ordered by (score
-    desc, index id asc), ``valid`` marking real neighbors (a prefix of
-    each row; zero-norm sides and excluded self matches never rank)
-    and ``counts`` their number per row."""
-    n_idx = len(ids_i)
-    if n_idx == 0:
-        return
-    buf, ebuf = bufs
-    step = buf.shape[0]
-    kk = min(k, n_idx)
-    for lo in range(0, len(q_ids), step):
-        hi = min(lo + step, len(q_ids))
-        scores = buf[: hi - lo]
-        np.dot(qm[lo:hi], mnT, out=scores)
-        # zero-norm on either side -> NULL semantically: exclude
-        scores[:, zn] = -np.inf
-        scores[qz[lo:hi], :] = -np.inf
-        if exclude_self:
-            sm = ebuf[: hi - lo]
-            np.equal(q_ids[lo:hi, None], ids_i[None, :], out=sm)
-            scores[sm] = -np.inf
-        if kk < n_idx:
-            part = np.argpartition(-scores, kk - 1, axis=1)[:, :kk]
-        else:
-            part = np.broadcast_to(np.arange(n_idx), scores.shape).copy()
-        ps = np.take_along_axis(scores, part, axis=1)
-        pid = ids_i[part]
-        # per-row (score desc, id asc) lexsort along the last axis
-        order = np.lexsort((pid, -ps), axis=1)
-        sorted_s = np.take_along_axis(ps, order, axis=1)
-        sorted_i = np.take_along_axis(pid, order, axis=1)
-        valid = sorted_s > -np.inf
-        counts = valid.sum(axis=1)
-        if counts.sum():
-            yield lo, hi, sorted_i, sorted_s, valid, counts
-
-
-def _topk_avgs(q_ids, sorted_s, valid, counts):
-    """(query ids, mean top-k score) of the rows of one ``_topk_chunks``
-    chunk that ranked anything. The scores are summed one rank at a
-    time from 0.0 and the sum divided by the count: the arithmetic of
-    Spark's ``avg`` over the kernel's rows, which arrive in rank order
-    within one task, so the result equals
-    ``groupBy("query_id").agg(avg("score"))`` bit for bit."""
-    acc = np.zeros(len(sorted_s))
-    for j in range(sorted_s.shape[1]):
-        acc += np.where(valid[:, j], sorted_s[:, j], 0.0)
-    has = counts > 0
-    return q_ids[has], acc[has] / counts[has]
 
 
 def _topk_broadcast(
@@ -144,7 +85,7 @@ def _topk_broadcast(
     ref: dict | None = None,
     avg: bool = False,
 ) -> DataFrame:
-    """Index matrix reaches the executors as a blob (``write_blob``:
+    """Index matrix reaches the executors as a blob (``blob.write_blob``:
     distributed parquet write + per-host mmap'd pack — NOT
     ``sc.broadcast``, whose ~100 MB pickle re-streams per task,
     measured ~10 s/task at local[32]); per-batch top-k is fully
@@ -154,21 +95,12 @@ def _topk_broadcast(
     writes its own blob and returns the rows detached.
     ``avg=True`` emits each query's (query_id, avg_score) instead of
     its k neighbor rows."""
-    from semhash_spark.operators.verify import (
-        detach,
-        load_feats_rows,
-        normalized_batch,
-        write_blob,
-    )
-
-    own = None if ref is not None else write_blob(
+    own = None if ref is not None else blob.write_blob(
         index_feats.select(id_col, emb_col), id_col, emb_col, "topk")
     ref = ref or own
 
     def compute(batches):
-        from semhash_spark.operators.verify import _ramp
-
-        ids_i, mnT, nz = load_feats_rows(ref, "topk")
+        ids_i, mnT, nz = blob.load_feats_rows(ref, "topk")
         zn = ~nz
         bufs = _topk_buffers(len(ids_i), exclude_self)
         for rb in batches:
@@ -197,7 +129,7 @@ def _topk_broadcast(
     out = query_feats.select(id_col, emb_col).mapInArrow(compute, schema)
     # a query's k rows stay in one partition in rank order, so a Spark
     # avg over them equals the kernel's (``_topk_avgs``)
-    return detach(out, own, in_order=not avg) if own else out
+    return blob.detach(out, own, in_order=not avg) if own else out
 
 
 def _auto_strategy(
@@ -206,19 +138,15 @@ def _auto_strategy(
     """(``broadcast`` or ``ivf``, index size) of ``strategy="auto"``:
     broadcast while the index fits BROADCAST_TOPK_CAP rows and
     VERIFY_BROADCAST_MAX_BYTES and blob transport is available.
-    ``index_size``: the index's ``_feat_bytes`` if already measured."""
-    from semhash_spark.operators.verify import (
-        VERIFY_BROADCAST_MAX_BYTES,
-        _feat_bytes,
-        blob_transport_available,
-    )
+    ``index_size``: the index's ``blob._feat_bytes`` if already measured."""
+    from semhash_spark.operators.verify import VERIFY_BROADCAST_MAX_BYTES
 
-    index_size = index_size or _feat_bytes(index_feats, emb_col)
+    index_size = index_size or blob._feat_bytes(index_feats, emb_col)
     n_idx, idx_bytes = index_size
     fits = (
         n_idx <= BROADCAST_TOPK_CAP
         and idx_bytes <= VERIFY_BROADCAST_MAX_BYTES
-        and blob_transport_available(index_feats.sparkSession)
+        and blob.blob_transport_available(index_feats.sparkSession)
     )
     return ("broadcast" if fits else "ivf"), index_size
 
@@ -246,7 +174,7 @@ def topk_scores(
     EXHAUSTIVE probing, which keeps results bit-exact vs brute force
     — lower it for approximate pruned search at extreme scale; ``auto``
     falls back to it above the broadcast cap). ``index_size``: the
-    index's ``_feat_bytes`` when the caller already has it.
+    index's ``blob._feat_bytes`` when the caller already has it.
     """
     if strategy == "auto":
         strategy, index_size = _auto_strategy(index_feats, emb_col, index_size)
@@ -323,7 +251,7 @@ def cosine_self_scan(
     ``ref`` (two packs finalized from its one decode: the f32 tiles of
     the threshold scan and the f64 matrix of the top-k). The frame
     reads the blob; its owner, the fit, detaches it
-    (``verify.detach``) once per threshold.
+    (``blob.detach``) once per threshold.
 
     Rows ``(a, b, score)`` with ``a < b`` are the >= ``threshold``
     edges of ``verify.cosine_threshold_edges`` (the same kernel and
@@ -332,18 +260,13 @@ def cosine_self_scan(
     ``rank_by_avg_similarity(feats, feats, k, exclude_self=True)``.
     Rows with a NULL or zero-norm embedding, or no other row to rank,
     get no average row."""
-    from semhash_spark.operators.verify import (
-        _chunked_threshold,
-        load_feats_rows,
-        normalized_batch,
-        scan_rows,
-    )
+    from semhash_spark.operators.verify import scan_rows
 
     thr = float(threshold)
 
     def scan(batches):
-        ids_b, matn, nz_b, blocks = load_feats_rows(ref, "scan")
-        ids_t, mnT, nz_t = load_feats_rows(ref, "topk")
+        ids_b, matn, nz_b, blocks = blob.load_feats_rows(ref, "scan")
+        ids_t, mnT, nz_t = blob.load_feats_rows(ref, "topk")
         zn = ~nz_t
         bufs = _topk_buffers(len(ids_t), True)
         for rb in batches:
@@ -367,33 +290,29 @@ def cosine_self_scan(
 
 def scan_edges(scan: DataFrame) -> DataFrame:
     """The threshold edges (a, b, score) of a ``cosine_self_scan``;
-    driver-held (``verify.held``) when the scan is."""
-    from semhash_spark.operators.verify import held, hold
-
-    rows = held(scan)
+    driver-held (``blob.held``) when the scan is."""
+    rows = blob.held(scan)
     if rows is None:
         return scan.where(F.col("a") < F.col("b"))
-    return hold(scan.sparkSession, rows.filter(
+    return blob.hold(scan.sparkSession, rows.filter(
         pa.array(rows["a"].to_numpy() < rows["b"].to_numpy())))
 
 
 def scan_ranking(scan: DataFrame) -> DataFrame:
     """The self ranking (query_id, avg_score) of a ``cosine_self_scan``,
     ordered as ``rank_by_avg_similarity`` orders it. A driver-held scan
-    gives a driver-held ranking (``verify.hold``: one partition, rows
+    gives a driver-held ranking (``blob.hold``: one partition, rows
     in ranking order), which ``filter_outliers`` and
     ``find_representative`` slice on the driver instead of running
     jobs."""
-    from semhash_spark.operators.verify import held, hold
-
-    rows = held(scan)
+    rows = blob.held(scan)
     if rows is None:
         return order_ranking(scan.where(F.col("a") == F.col("b")).select(
             F.col("a").alias("query_id"), F.col("score").alias("avg_score")))
     own = pa.array(rows["a"].to_numpy() == rows["b"].to_numpy())
     own_rows = rows.filter(own).select(["a", "score"]).rename_columns(
         ["query_id", "avg_score"])
-    return hold(scan.sparkSession, _ranking_rows(own_rows), one_partition=True)
+    return blob.hold(scan.sparkSession, _ranking_rows(own_rows), one_partition=True)
 
 
 def _ranking_rows(rows: pa.Table) -> pa.Table:
@@ -466,7 +385,7 @@ def filter_outliers(
     of the descending ranking. Returns DataFrames with
     (query_id, avg_score).
 
-    A driver-held ranking (``verify.held``: the self ranking of a
+    A driver-held ranking (``blob.held``: the self ranking of a
     fit's driver-held scan, or a ranking the fit detached) is sliced on
     the driver: sorted in ranking order, the inliers are its first
     n - cnt rows and the outliers its last cnt, each a driver-held
@@ -491,17 +410,15 @@ def filter_outliers(
     left alone: its owner manages that cache, so release() here won't
     yank it from under the memo.
     """
-    from semhash_spark.operators.verify import held, hold
-
     if outlier_percentage < 0.0 or outlier_percentage > 1.0:
         raise ValueError("outlier_percentage must be between 0 and 1")
-    rows = held(ranking)
+    rows = blob.held(ranking)
     if rows is not None:
         rows = _ranking_rows(rows)
         cut = rows.num_rows - math.ceil(rows.num_rows * outlier_percentage)
         spark = ranking.sparkSession
-        return (hold(spark, rows.slice(0, cut), one_partition=True),
-                hold(spark, rows.slice(cut), one_partition=True))
+        return (blob.hold(spark, rows.slice(0, cut), one_partition=True),
+                blob.hold(spark, rows.slice(cut), one_partition=True))
     if not ranking.is_cached:
         ranking = ranking.persist()
         if persisted is not None:
@@ -840,11 +757,9 @@ def find_representative(
     bounded-driver-side step (SURVEY §2.6 R5): the top candidates of
     the ranking joined to their embeddings, in one collect, ordered on
     the driver by (avg_score desc, id asc). A driver-held ranking
-    (``verify.held``) gives its size and top candidates on the driver,
+    (``blob.held``) gives its size and top candidates on the driver,
     as a small frame joined to their embeddings."""
-    from semhash_spark.operators.verify import held
-
-    rows = held(ranking)
+    rows = blob.held(ranking)
     if rows is not None:
         rows = _ranking_rows(rows)
     if candidate_limit == "auto":

@@ -1,5 +1,5 @@
-"""Exact verification of candidate pairs, and the executor-side blobs
-the verifying kernels read.
+"""Exact verification of candidate pairs: the Spark plans around the
+scoring kernels of ``kernels.py`` and the blobs of ``blob.py``.
 
 The reference never needs this (its ANN returns exact cosine
 distances, semhash/index.py:59); in the LSH plan, candidates are
@@ -33,15 +33,22 @@ identical float64 division — bit-identical to the DuckDB oracle.
 
 from __future__ import annotations
 
-import weakref
-
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from semhash_spark.functions.arrays import list_matrix, list_segments, record_batch
+from semhash_spark import blob
+from semhash_spark.functions.arrays import list_matrix, record_batch
 from semhash_spark.functions.vectors import cosine_similarity
+from semhash_spark.kernels import (
+    _build_blocks,
+    _chunked_threshold,
+    _locate_rows,
+    _normalize_rows,
+    normalized_batch,
+    score_set_pairs,
+)
 
 # feature tables up to this many rows take the broadcast-blob path
 VERIFY_BROADCAST_CAP = 2_000_000
@@ -65,19 +72,6 @@ def _c(col: str | Column) -> Column:
     return F.col(col) if isinstance(col, str) else col
 
 
-def blob_transport_available(spark) -> bool:
-    """True when ``write_blob`` can reach the executors: a local master
-    (executors share the driver's tempdir) or a configured shared
-    ``spark.semhash.blobDir``. AUTO strategy choices consult this so a
-    cluster without shared storage falls back to the join/LSH
-    strategies instead of dying in write_blob's check (the explicit
-    strategies still raise with guidance — an explicit ask should not
-    silently degrade)."""
-    if spark.conf.get("spark.semhash.blobDir", None):
-        return True
-    return spark.conf.get("spark.master", "").startswith("local")
-
-
 def jaccard_similarity(a: str | Column, b: str | Column) -> Column:
     """Exact Jaccard of two array<long> set columns (elements distinct
     within each array, as produced by shingle_hashes).
@@ -98,864 +92,17 @@ def containment_score(a: str | Column, b: str | Column) -> Column:
     return F.when(small > 0, inter / small).otherwise(F.lit(0.0))
 
 
-# ------------------------------------------- executor-side feature blob
-#
-# Packing a feature table on the DRIVER (toPandas -> numpy -> shipped
-# .npy) sends gigabytes through one process in a serial stage right
-# before an otherwise-parallel kernel, and ``sc.broadcast`` is worse: a
-# ~100 MB numpy pickle re-streams PER TASK (~10 s/task measured at
-# local[32]). A blob is instead the table written as parquet IN PLACE
-# by the executors (``write_blob``: one part per task, no driver hop)
-# under ``spark.semhash.blobDir`` or the driver tempdir, where every
-# python worker reads it directly. The workers of a host decode its
-# parts in parallel into mmap'd numpy shards and one of them finalizes
-# the small global index (``_pack_sharded``); the page cache shares
-# the pack across the host's workers and tasks.
-#
-# Every blob has one owner. A call drops the blobs it writes before it
-# returns, after running the frames that read them (``detach``); a
-# fitted ``SparkSemHash`` owns its embedding and cross-dedup blobs,
-# detaches every frame it hands out, and drops them in ``release()``.
-# No returned frame reads a blob, so results outlive both.
-
-# worker-side mmap cache: (kind, final, tag) -> (pack, pack dir, blob
-# dir), one entry per pack of a blob; survives tasks. Entries whose
-# pack dir or blob dir was removed (the blob's owner dropped it) are
-# dropped at the next load: _prune_blob_cache
-_BLOB_CACHE: dict = {}
-
-
-def _pack_root(tag: str) -> str:
-    """The host-local dir of a blob's packs (``_pack_sharded``). It is
-    kept apart from the blob, which may sit on shared storage
-    (``spark.semhash.blobDir``) that every host reads, while each host
-    packs for its own workers."""
-    import os
-    import tempfile
-
-    return os.path.join(tempfile.gettempdir(), "semhash_packed", tag)
-
-
-def _prune_blob_cache() -> None:
-    """Drop the cached packs of removed blobs. Their mmaps would
-    otherwise pin the deleted files' pages for the worker's lifetime
-    (each blob has a new tag, so the cache only grows). A blob gone
-    while its pack dir stays (a shared ``blobDir`` whose packs live on
-    worker-local disk the driver cannot reach) also removes the pack
-    dir here."""
-    import os
-    import shutil
-
-    for key, (_, root, src) in list(_BLOB_CACHE.items()):
-        if os.path.isdir(root) and os.path.isdir(src):
-            continue
-        shutil.rmtree(root, ignore_errors=True)
-        del _BLOB_CACHE[key]
-
-
-def _dir_bytes(path: str) -> int:
-    import os
-
-    total = 0
-    with os.scandir(path) as it:
-        for e in it:
-            try:
-                total += e.stat().st_size
-            except FileNotFoundError:  # a part renamed into place meanwhile
-                pass
-    return total
-
-
-def _capped_part_writer(path: str, max_bytes: int | None):
-    """``mapInArrow`` function writing each task's rows as one parquet
-    part under ``path``; yields the task's (rows, bytes) written.
-
-    With ``max_bytes``, writing stops once the dir holds more than
-    that: the task that sees it leaves an ``_OVER_CAP`` marker, and
-    every task checks the marker between batches and drains its input
-    without writing. A blob that cannot fit so costs at most
-    ``max_bytes`` plus one batch per concurrent task, not a write of
-    the whole table. Parts are named by partition and renamed into
-    place when complete, so a retried task replaces its part instead
-    of duplicating rows, and part order is partition order."""
-
-    def write(batches):
-        import os
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-        from pyspark import TaskContext
-
-        ctx = TaskContext.get()
-        part = os.path.join(path, f"part-{ctx.partitionId():05d}.parquet")
-        tmp = f"{part}.{ctx.attemptNumber()}.tmp"
-        over = os.path.join(path, "_OVER_CAP")
-        writer, rows = None, 0
-        for rb in batches:
-            if rb.num_rows == 0 or os.path.exists(over):
-                continue
-            if writer is None:
-                # scratch read back at once: hash/float payloads are
-                # high-entropy, so a codec only burns CPU
-                writer = pq.ParquetWriter(tmp, rb.schema, compression="none")
-            writer.write_batch(rb)
-            rows += rb.num_rows
-            if max_bytes is not None and _dir_bytes(path) > max_bytes:
-                open(over, "a").close()
-        nbytes = 0
-        if writer is not None:
-            writer.close()
-            nbytes = os.path.getsize(tmp)
-            os.replace(tmp, part)
-        yield record_batch({"rows": np.array([rows]), "bytes": np.array([nbytes])})
-
-    return write
-
-
-def write_blob(
-    df: DataFrame,
-    id_col: str,
-    payload_col: str,
-    name_prefix: str,
-    max_bytes: int | None = None,
-) -> dict | None:
-    """Write ``df`` (projected and ordered by the caller; one part per
-    partition) as a blob the executors read in place; return its ref:
-    ``tag``, ``path`` and the ``id_col`` / ``payload_col`` the loaders
-    read. The caller owns the blob.
-
-    ``max_bytes``: the size gate of callers with a fallback plan. A blob
-    above it is removed after a bounded write and None is returned; the
-    check reads the bytes being written, so no size job runs.
-
-    Raises on a non-local master without ``spark.semhash.blobDir``: the
-    driver tempdir would surface as a confusing executor
-    ``FileNotFoundError`` mid-stage, so this fails at plan time with the
-    fix in the message."""
-    import os
-    import tempfile
-    import uuid
-
-    spark = df.sparkSession
-    if not blob_transport_available(spark):
-        raise RuntimeError(
-            f"master {spark.conf.get('spark.master', '')!r} is not local and "
-            "spark.semhash.blobDir is not set; executor-side blobs default to "
-            "the driver's tempdir, which only local executors share. Set "
-            "spark.semhash.blobDir to shared storage (NFS / object-store mount) "
-            "in the session conf."
-        )
-    base = spark.conf.get("spark.semhash.blobDir", None) or tempfile.gettempdir()
-    tag = f"{name_prefix}_{uuid.uuid4().hex[:12]}"
-    path = os.path.join(base, tag)
-    os.makedirs(path)
-    written = df.mapInArrow(
-        _capped_part_writer(path, max_bytes), "rows long, bytes long").collect()
-    ref = {"tag": tag, "path": path, "id_col": id_col, "payload_col": payload_col}
-    if max_bytes is not None and (
-        sum(r.bytes for r in written) > max_bytes
-        or os.path.exists(os.path.join(path, "_OVER_CAP"))
-    ):
-        drop_blob(ref)
-        return None
-    return ref
-
-
-def drop_blob(ref: dict | None) -> None:
-    """Remove a blob and its packs (``semhash_packed/<tag>``); the
-    workers' caches drop the packs at their next load
-    (``_prune_blob_cache``). None is a no-op."""
-    import shutil
-
-    if ref is not None:
-        shutil.rmtree(ref["path"], ignore_errors=True)
-        shutil.rmtree(_pack_root(ref["tag"]), ignore_errors=True)
-
-
-# the Arrow table each driver-held frame (``detach``, ``hold``) was
-# built from, by frame: a caller reads a held frame's rows back with
-# ``held`` instead of collecting them again. An entry lives as long as
-# its frame.
-_HELD: "weakref.WeakKeyDictionary[DataFrame, pa.Table]" = weakref.WeakKeyDictionary()
-
-
-def hold(spark, table: "pa.Table", one_partition: bool = False) -> DataFrame:
-    """A driver-held frame of ``table``'s rows (a LocalRelation up to
-    Spark's local-relation size), readable back with ``held``.
-    ``one_partition`` keeps the rows in one partition in table order,
-    where a count or a sort needs no exchange."""
-    out = spark.createDataFrame(table)
-    if one_partition:
-        out = out.coalesce(1)
-    _HELD[out] = table
-    return out
-
-
-def held(frame: DataFrame) -> "pa.Table | None":
-    """The Arrow table of a driver-held frame (``hold``, ``detach``),
-    or None when ``frame`` is not one."""
-    return _HELD.get(frame)
-
-
-def detach(frame: DataFrame, own: dict | None = None, in_order: bool = False) -> DataFrame:
-    """Run ``frame``, a plan that reads blobs, now and return a frame
-    that reads none; then drop ``own``, the blob the caller wrote for
-    this frame alone (None when the blob's owner outlives the call).
-    Up to ``DRIVER_CC_CAP`` rows come back as a driver-held frame
-    (``hold``: no cache, nothing to release, its table kept for
-    ``held``); more stay on the executors as an eager local checkpoint,
-    freed when the frame is garbage-collected. ``in_order`` makes the
-    driver-held frame one partition in collected order, where each
-    task's rows stay contiguous and in order, for consumers whose
-    aggregates depend on row order (a float ``avg`` of a query's top-k
-    rows then sums as it does over ``frame``); otherwise its rows are
-    spread over the default parallelism, as downstream stages want."""
-    from semhash_spark.operators.components import DRIVER_CC_CAP
-
-    try:
-        # Arrow both ways: a pandas round trip cost ~100 MB more peak
-        # PSS on the 3,000-file benchmark (local[2], 4-core host)
-        probe = frame.limit(DRIVER_CC_CAP + 1).toArrow()
-        if probe.num_rows > DRIVER_CC_CAP:
-            return frame.localCheckpoint(eager=True)
-        return hold(frame.sparkSession, probe, one_partition=in_order)
-    finally:
-        drop_blob(own)
-
-
-def _blob_files(ref: dict) -> list[str]:
-    """The blob's parquet parts in partition order (none for an empty
-    table). A removed blob raises: reading it as empty would turn a
-    lifetime bug into silently missing results."""
-    import glob
-    import os
-
-    if not os.path.isdir(ref["path"]):
-        raise FileNotFoundError(f"blob {ref['path']} was dropped by its owner")
-    return sorted(glob.glob(os.path.join(ref["path"], "*.parquet")))
-
-
-def _read_id_payload_files(files: list[str], id_col: str, payload_col: str):
-    """(ids int64, flat values, per-row lens int64, null-row mask) of a
-    parquet file list, the payload read by ``arrays.list_segments``
-    (NULL payload rows read as length 0)."""
-    import pyarrow.parquet as pq
-
-    tbl = pq.read_table(files, columns=[id_col, payload_col])
-    ids = tbl.column(id_col).to_numpy().astype(np.int64, copy=False)
-    values, lens, _, null_rows = list_segments(tbl.column(payload_col))
-    return ids, values, lens, null_rows
-
-
-# a pack lock whose owner is alive but whose mtime is older than this
-# is treated as stale and reclaimed (well above the 8-20 s measured
-# pack cost; below the 600 s waiter deadline so reclaim fires first)
-_LOCK_STALE_SECS = 300.0
-
-
-def _acquire_pack_lock(lock: str, done: str) -> bool:
-    """O_CREAT|O_EXCL lock with STALE-OWNER RECLAIM (ADVICE r2: a
-    python worker SIGKILLed mid-build left its shard permanently
-    unbuilt and every peer polled 600 s into TimeoutError).
-
-    The lock file records the owner pid; a worker that finds the lock
-    held checks whether the owner still exists (python workers
-    sharing a tmp dir share a host/kernel, so ``os.kill(pid, 0)`` is
-    authoritative) and reclaims when the owner died uncleanly or the
-    lock outlived ``_LOCK_STALE_SECS``. Reclaim is unlink + O_EXCL
-    retry, so concurrent reclaimers still arbitrate through O_EXCL.
-    Returns True iff THIS worker now holds the lock; False when the
-    pack is done or genuinely held by a live owner."""
-    import os
-    import time as _time
-
-    while True:
-        if os.path.exists(done):
-            return False
-        try:
-            fd = os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-            os.write(fd, str(os.getpid()).encode())
-            os.close(fd)
-            return True
-        except FileExistsError:
-            pass
-        try:
-            with open(lock) as fh:
-                owner = int(fh.read().strip() or "-1")
-            age = _time.time() - os.path.getmtime(lock)
-        except (OSError, ValueError):
-            continue  # lock vanished/unreadable mid-check: retry acquire
-        alive = True
-        if owner > 0:
-            try:
-                os.kill(owner, 0)
-            except ProcessLookupError:
-                alive = False
-            except PermissionError:
-                pass  # pid exists under another uid: treat as alive
-        if alive and age <= _LOCK_STALE_SECS:
-            return False  # genuinely held by a live builder
-        try:
-            os.unlink(lock)  # stale: reclaim, then re-arbitrate
-        except FileNotFoundError:
-            pass
-
-
-def _release_pack_lock(lock: str) -> None:
-    """Unlink ``lock`` only if THIS process still owns it: after a
-    stale-owner reclaim the original (slow but alive) builder must
-    not delete the reclaimer's lock on its own failure path — that
-    would admit a third concurrent builder."""
-    import os
-
-    try:
-        with open(lock) as fh:
-            owner = int(fh.read().strip() or "-1")
-    except (OSError, ValueError):
-        return
-    if owner == os.getpid():
-        try:
-            os.unlink(lock)
-        except FileNotFoundError:
-            pass
-
-
-def _pack_sharded(ref: dict, kind: str, part_builder, finalize_builder,
-                  final: str | None = None):
-    """The executor pack of a blob: every python worker that needs it
-    claims unpacked parquet parts (one lock file per part), decodes
-    and saves its shards CONCURRENTLY with the other workers, then one
-    worker finalizes the small global index arrays; every later task
-    mmaps the saved files. Decode is the pack's dominant cost
-    (measured 8-20 s for a 535 MB shingle blob — disk + Arrow
-    assembly) and it is O(blob) while everything downstream is
-    O(pairs): with W workers the wall cost is ~decode/W + finalize,
-    where a whole-blob pack on one worker serialized it (the largest
-    fixed cost in the N->4N scaling profile; 6x slower verify at
-    local[32] when each worker packed for itself).
-
-    ``part_builder(path) -> [arrays]`` packs one parquet part into the
-    ``kind`` shards; ``finalize_builder(shard_arrays) -> [arrays]``
-    builds the ``final`` pack (default: ``kind``) from them. Several
-    finals can share one kind's shards, which are then decoded once.
-    Locks whose owner died or that outlived ``_LOCK_STALE_SECS`` are
-    reclaimed; a builder that raises releases its lock. Returns
-    (final_arrays, shard_arrays) — all mmap'd, shared across the
-    host's workers via the OS page cache."""
-    import os
-    import time as _time
-
-    final = final or kind
-    _prune_blob_cache()
-    key = (kind, final, ref["tag"])
-    if key in _BLOB_CACHE:
-        return _BLOB_CACHE[key][0]
-    parts = _blob_files(ref)
-    root = _pack_root(ref["tag"])
-    os.makedirs(root, exist_ok=True)
-
-    def _save(base: str, arrays) -> None:
-        pid = os.getpid()  # pid-unique tmps: post-reclaim double builds commute
-        for i, arr in enumerate(arrays):
-            path = f"{base}__{i:02d}.npy"
-            np.save(f"{path}.tmp{pid}.npy", np.ascontiguousarray(arr))
-            os.rename(f"{path}.tmp{pid}.npy", path)
-        with open(f"{base}.done.tmp{pid}", "w") as fh:
-            fh.write("ok")
-        os.rename(f"{base}.done.tmp{pid}", base + ".done")
-
-    def _mmap_group(base: str):
-        d, prefix = os.path.split(base)
-        names = sorted(
-            f for f in os.listdir(d)
-            if f.startswith(prefix + "__") and f.endswith(".npy")
-        )
-        return tuple(np.load(os.path.join(d, f), mmap_mode="r") for f in names)
-
-    def _claim_build(base: str, builder, *args) -> bool:
-        """Try to win ``base`` (stale-owner locks are reclaimed, see
-        _acquire_pack_lock); returns True if this worker built it."""
-        if not _acquire_pack_lock(base + ".lock", base + ".done"):
-            return False
-        try:
-            _save(base, builder(*args))
-        except BaseException:
-            _release_pack_lock(base + ".lock")  # let another worker retry
-            raise
-        return True
-
-    def _build_or_await(base: str, what: str, builder, *args) -> None:
-        """Wait for ``base`` — re-attempting acquisition each poll, so
-        a builder killed uncleanly (its lock goes stale) is TAKEN OVER
-        by a waiter instead of every peer timing out (ADVICE r2)."""
-        deadline = _time.time() + 600
-        while not os.path.exists(base + ".done"):
-            if _claim_build(base, builder, *args):
-                return
-            if _time.time() > deadline:
-                raise TimeoutError(f"{what} pack of {base} never completed")
-            _time.sleep(0.05)
-
-    shard_base = [os.path.join(root, f"_shard_{kind}_{k:04d}") for k in range(len(parts))]
-    for k, part in enumerate(parts):
-        _claim_build(shard_base[k], part_builder, part)
-    for k in range(len(parts)):
-        _build_or_await(shard_base[k], "shard", part_builder, parts[k])
-
-    final_base = os.path.join(root, f"_final_{final}")
-    if not os.path.exists(final_base + ".done"):
-        _build_or_await(
-            final_base,
-            "finalize",
-            lambda: finalize_builder([_mmap_group(b) for b in shard_base]),
-        )
-    pack = (_mmap_group(final_base), [_mmap_group(b) for b in shard_base])
-    _BLOB_CACHE[key] = (pack, root, ref["path"])
-    return pack
-
-
-def load_feats_segments(ref: dict):
-    """Worker-side pack of an (id, array<long>) parquet blob —
-    shard-parallel across the executor's python workers
-    (``_pack_sharded``), mmap'd by every worker. NULL shingle rows
-    pack as empty sets.
-
-    Returns ``(ids_sorted, perm, row_shard, row_off, row_len,
-    flats)``: flat values stay in PARQUET PART ORDER (one mmap'd
-    array per part — re-gathering into id order was 9 s of the
-    original 13.8 s single-worker pack); a record's row index is
-    ``row = perm[searchsorted(ids_sorted, id)]`` and its values live
-    at ``flats[row_shard[row]][row_off[row] : row_off[row] +
-    row_len[row]]``."""
-
-    id_col, payload_col = ref["id_col"], ref["payload_col"]
-
-    def part_builder(path):
-        ids, values, lens, _ = _read_id_payload_files([path], id_col, payload_col)
-        return [ids, lens, values.astype(np.int64, copy=False)]
-
-    def finalize_builder(shards):
-        shards = shards or [(np.empty(0, np.int64),) * 2]
-        ids_all = np.concatenate([s[0] for s in shards])
-        lens_all = np.concatenate([s[1] for s in shards])
-        row_shard = np.repeat(np.arange(len(shards), dtype=np.int64),
-                              [len(s[0]) for s in shards])
-        # each row's offset in its part: the exclusive prefix sum of lens
-        row_off = np.concatenate([np.cumsum(s[1]) - s[1] for s in shards]).astype(np.int64)
-        order = np.argsort(ids_all, kind="stable")
-        return [ids_all[order], order.astype(np.int64), row_shard, row_off, lens_all]
-
-    (ids_sorted, perm, row_shard, row_off, row_len), shard_groups = _pack_sharded(
-        ref, "seg", part_builder, finalize_builder
-    )
-    flats = [g[2] for g in shard_groups]
-    return ids_sorted, perm, row_shard, row_off, row_len, flats
-
-
-# fused-scan block geometry: the f32 index matrix is packed as
-# (n_blocks, dim, _BLK_W) column blocks so each sgemm B operand is a
-# ~2 MB C-contiguous tile that stays cache-resident across the row
-# chunks of a batch, and the score/mask buffers are (row_step x
-# _BLK_W) reused tiles instead of (rows x n) full-width strips. The
-# round-5 full-width kernel streamed the whole 50 MB B matrix + wrote
-# 3 full-width bool/score passes per 41-row chunk — measured 13-15 s
-# per worker under 32-way concurrency at 100k x 100k; the tiled form
-# measures ~3.5-5 s for the same partition (tools/ microbench, round
-# 6), identical output.
-_BLK_W = 4096
-_SCAN_ROW_STEP = 512
-
-
-def _fill_blocks(blocks: np.ndarray, matn: np.ndarray, r0: int) -> None:
-    """Write the rows of ``matn`` (normalized f64, global rows ``r0``
-    on) into their columns of the f32 tiles ``blocks``."""
-    mT = matn.T.astype(np.float32)
-    c0, end = r0, r0 + len(matn)
-    while c0 < end:
-        b = c0 // _BLK_W
-        w = min((b + 1) * _BLK_W, end) - c0
-        blocks[b][:, c0 - b * _BLK_W : c0 - b * _BLK_W + w] = mT[:, c0 - r0 : c0 - r0 + w]
-        c0 += w
-
-
-def _build_blocks(matn: np.ndarray) -> np.ndarray:
-    """(n_blocks, dim, _BLK_W) float32 zero-padded column blocks of a
-    row-major (n, dim) float64 normalized matrix — the fused scan's
-    gemm B operand tiles, ``matn.T.astype(float32)`` split by columns.
-    Padding columns are all-zero (they can only pass a thr <= 0 scan
-    and are dropped by the kernel's explicit width mask)."""
-    n, dim = matn.shape
-    blk = np.zeros((max(1, (n + _BLK_W - 1) // _BLK_W), dim, _BLK_W), dtype=np.float32)
-    _fill_blocks(blk, matn, 0)
-    return blk
-
-
-class _ShardRows:
-    """Lazy row provider over the mmap'd embedding shards: fancy
-    indexing (``rows[c]`` with an int array) returns normalized f64
-    rows, ``raw(c)`` the rows as stored, upcast to f64. Shards keep the
-    blob's source dtype, so an f32 row upcasts losslessly and an f64
-    row is read exactly — the values the Arrow path ships either way —
-    and normalization is the row-wise arithmetic of a whole-matrix
-    ``np.divide(m, norms, where=norms > 0)`` applied to just the
-    gathered rows. No (n, dim) f64 matrix is ever built or written for
-    the fused scan or the id-keyed gathers (at 100k x 128 that was a
-    100 MB compute + 100 MB disk write per call)."""
-
-    def __init__(self, flats, starts, nrm):
-        self._flats = flats      # list of (n_k, dim) mmaps, non-empty
-        self._starts = starts    # int64 start row of each shard
-        self._nrm = nrm          # (n,) f64 row norms, global order
-
-    def raw(self, idx) -> np.ndarray:
-        idx = np.asarray(idx, dtype=np.int64)
-        dim = self._flats[0].shape[1] if self._flats else 0
-        out = np.empty((len(idx), dim), dtype=np.float64)
-        if len(idx):
-            sh = np.searchsorted(self._starts, idx, side="right") - 1
-            for k in np.unique(sh):
-                m = sh == k
-                out[m] = self._flats[k][idx[m] - self._starts[k]]
-        return out
-
-    def __getitem__(self, idx):
-        idx = np.asarray(idx, dtype=np.int64)
-        out = self.raw(idx)
-        # divide IN PLACE (one buffer, not a second zeros allocation —
-        # gathers run inside the rescore hot loop): rows with nr <= 0
-        # are all-zero raw vectors, zeroed explicitly to mirror the
-        # whole-matrix np.divide(..., where=) semantics bit-for-bit
-        nr = self._nrm[idx][:, None]
-        pos = nr > 0
-        np.divide(out, nr, out=out, where=pos)
-        if not pos.all():
-            out[~pos.ravel()] = 0.0
-        return out
-
-
-def _emb_part_builder(id_col: str, payload_col: str):
-    """Shard pack of one (id, embedding) part: (ids, (n, dim) values in
-    the source dtype). NULL embedding rows are dropped (NULL-cosine
-    never pairs or ranks); ragged rows raise."""
-
-    def build(path):
-        ids, values, lens, null_rows = _read_id_payload_files([path], id_col, payload_col)
-        if null_rows.any():
-            keep = ~null_rows
-            ids, lens = ids[keep], lens[keep]
-        if len(ids) == 0:
-            return [ids, np.zeros((0, 0), dtype=values.dtype)]
-        dim = int(lens[0])
-        if not (lens == dim).all():
-            bad = int(np.argmax(lens != dim))
-            raise ValueError(
-                f"ragged embeddings: row id={ids[bad]} has dim {lens[bad]}, "
-                f"expected {dim}"
-            )
-        return [ids, values.reshape(-1, dim)]
-
-    return build
-
-
-def _emb_shards(shards):
-    """The non-empty embedding shards; raises on ragged dims across parts."""
-    shards = [s for s in shards if len(s[0])]
-    dims = {s[1].shape[1] for s in shards}
-    if len(dims) > 1:
-        raise ValueError(f"ragged embeddings across parts: dims {sorted(dims)}")
-    return shards
-
-
-def _normalized(vals) -> tuple[np.ndarray, np.ndarray]:
-    """(row-normalized f64 rows, f64 row norms); zero-norm rows stay 0."""
-    a = np.asarray(vals).astype(np.float64)
-    nr = np.linalg.norm(a, axis=1)
-    return np.divide(a, nr[:, None], out=np.zeros_like(a), where=nr[:, None] > 0), nr
-
-
-def _final_scan(shards):
-    """Fused threshold scan pack: [ids, f64 row norms, f32 tiles]."""
-    shards = _emb_shards(shards)
-    if not shards:
-        return [np.empty(0, np.int64), np.zeros(0), np.zeros((0, 0, 0), np.float32)]
-    ids = np.concatenate([s[0] for s in shards])
-    n, dim = len(ids), shards[0][1].shape[1]
-    blocks = np.zeros((max(1, (n + _BLK_W - 1) // _BLK_W), dim, _BLK_W), np.float32)
-    nrm = np.empty(n, dtype=np.float64)
-    r0 = 0
-    for s in shards:
-        an, nr = _normalized(s[1])
-        nrm[r0 : r0 + len(nr)] = nr
-        _fill_blocks(blocks, an, r0)
-        r0 += len(nr)
-    return [ids, nrm, blocks]
-
-
-def _final_topk(shards):
-    """Exact top-k pack: [ids, f64 normalized TRANSPOSED (dim x n)
-    matrix, nonzero-norm mask]. The transposed layout is the gemm B
-    operand's 3.6x layout win; top-k stays f64 because the ORDER near
-    the k-th boundary is the result."""
-    shards = _emb_shards(shards)
-    if not shards:
-        return [np.empty(0, np.int64), np.zeros((0, 0)), np.zeros(0, dtype=bool)]
-    ids = np.concatenate([s[0] for s in shards])
-    mnT = np.empty((shards[0][1].shape[1], len(ids)), dtype=np.float64)
-    nz = np.empty(len(ids), dtype=bool)
-    r0 = 0
-    for s in shards:
-        an, nr = _normalized(s[1])
-        mnT[:, r0 : r0 + len(nr)] = an.T
-        nz[r0 : r0 + len(nr)] = nr > 0
-        r0 += len(nr)
-    return [ids, mnT, nz]
-
-
-def _final_keyed(shards):
-    """Id-keyed gather pack: [ids_sorted, perm, f64 row norms]."""
-    shards = _emb_shards(shards)
-    if not shards:
-        return [np.empty(0, np.int64), np.empty(0, np.int64), np.zeros(0)]
-    ids = np.concatenate([s[0] for s in shards])
-    nrm = np.concatenate(
-        [np.linalg.norm(np.asarray(s[1]).astype(np.float64), axis=1) for s in shards])
-    order = np.argsort(ids, kind="stable")
-    return [ids[order], order.astype(np.int64), nrm]
-
-
-_EMB_FINALS = {"scan": _final_scan, "topk": _final_topk, "keyed": _final_keyed}
-
-
-def load_feats_rows(ref: dict, kind: str):
-    """Worker-side pack of an (id, array<float|double>) blob for the
-    consumer ``kind``. The parts decode once (``_pack_sharded``) into
-    shards that keep the source dtype — every kind of one blob shares
-    them — and each kind finalizes its own small pack:
-
-    * ``"scan"`` -> ``(ids, rows, nz, blocks)``: the fused threshold
-      scan's f32 tiles (``_build_blocks`` values) with ids in parquet
-      part order;
-    * ``"topk"`` -> ``(ids, mnT, nz)``: the exact top-k's f64
-      normalized transposed matrix, ids in part order;
-    * ``"keyed"`` -> ``(ids_sorted, perm, rows, nrm)``: id-keyed
-      gathers (the IVF id-only plan, ``verify_cosine``): id ``x`` lives
-      at row ``perm[searchsorted(ids_sorted, x)]``.
-
-    ``rows`` is a ``_ShardRows`` over the shards, so the f64 rescore of
-    the fused kernels reads exact source values; ``nrm`` are f64 row
-    norms and ``nz`` = norm > 0, in part order. NULL embedding rows are
-    dropped (their ids are absent); ragged rows raise."""
-    final, groups = _pack_sharded(
-        ref, "emb", _emb_part_builder(ref["id_col"], ref["payload_col"]),
-        _EMB_FINALS[kind], kind,
-    )
-    if kind == "topk":
-        return final
-    flats = [g[1] for g in groups if len(g[0])]
-    starts = np.concatenate(
-        ([0], np.cumsum([f.shape[0] for f in flats])[:-1])
-    ).astype(np.int64) if flats else np.zeros(1, dtype=np.int64)
-    if kind == "scan":
-        ids, nrm, blocks = final
-        nrm = np.asarray(nrm)
-        return ids, _ShardRows(flats, starts, nrm), nrm > 0, blocks
-    ids_sorted, perm, nrm = final
-    nrm = np.asarray(nrm)
-    return np.asarray(ids_sorted), np.asarray(perm), _ShardRows(flats, starts, nrm), nrm
-
-
-def _feat_bytes(feats: DataFrame, payload_col: str) -> tuple[int, int]:
-    """(row_count, estimated payload bytes) of an (id, array) table —
-    one aggregate job; 8 bytes per element + 16/row overhead."""
-    row = feats.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.sum(F.coalesce(F.size(payload_col), F.lit(0))), F.lit(0)).alias(
-            "vals"
-        ),
-    ).first()
-    n = int(row["n"])
-    return n, int(row["vals"]) * 8 + n * 16
-
-
 def cosine_fused_fits(cfg, n_rows: int, n_bytes: int, spark) -> bool:
     """The fused cosine scan's gate (self and cross dedup): the
-    embedding table (``n_rows``, ``n_bytes`` from ``_feat_bytes``)
+    embedding table (``n_rows``, ``n_bytes`` from ``blob._feat_bytes``)
     fits ``cfg.cosine_fused_cap`` (default VERIFY_BROADCAST_CAP) and
     VERIFY_BROADCAST_MAX_BYTES, and blob transport is available."""
     cap = cfg.cosine_fused_cap if cfg.cosine_fused_cap is not None else VERIFY_BROADCAST_CAP
     return (
         n_rows <= cap
         and n_bytes <= VERIFY_BROADCAST_MAX_BYTES
-        and blob_transport_available(spark)
+        and blob.blob_transport_available(spark)
     )
-
-
-def _locate_rows(ids_sorted: np.ndarray, perm: np.ndarray, x: np.ndarray):
-    """(pack rows, found mask) of the ids ``x`` in an id-keyed pack;
-    rows of absent ids are arbitrary and must be masked out."""
-    if len(ids_sorted) == 0:
-        return np.zeros(len(x), np.int64), np.zeros(len(x), bool)
-    p = np.minimum(np.searchsorted(ids_sorted, x), len(ids_sorted) - 1)
-    return perm[p], ids_sorted[p] == x
-
-
-def _lookup_rows(ids_sorted: np.ndarray, perm: np.ndarray, wanted: np.ndarray,
-                 side: str) -> np.ndarray:
-    """``_locate_rows`` + MEMBERSHIP CHECK: raises instead of silently
-    scoring a neighboring record's features when a pair id is absent
-    from the feature table (ADVICE r1)."""
-    rows, ok = _locate_rows(ids_sorted, perm, wanted)
-    if not ok.all():
-        raise KeyError(
-            f"pair column '{side}' contains ids absent from the feature "
-            f"table (sample: {wanted[~ok][:5].tolist()}); every pair id must "
-            "exist in feats for the broadcast strategy"
-        )
-    return rows
-
-
-# padded-matrix budget for _padded_intersections: 8M int64 cells =
-# 64 MB scratch per python worker (32 workers -> 2 GB total, bounded
-# regardless of how skewed the pair widths are)
-_PAIR_CELLS_BUDGET = 1 << 23
-
-
-def _gather_rows(seg, rows: np.ndarray, l: np.ndarray) -> np.ndarray:
-    """Concatenated payload values of ``rows`` (in row order) from the
-    sharded pack; ``l`` = lens of those rows. One fancy-indexed load
-    per REFERENCED shard (parquet parts are range-ish, scoring
-    batches touch few)."""
-    flats, row_shard, row_off, _ = seg
-    total = int(l.sum())
-    out = np.empty(total, dtype=np.int64)
-    if total == 0:
-        return out
-    dest0 = np.zeros(len(rows), dtype=np.int64)
-    np.cumsum(l[:-1], out=dest0[1:])
-    sh = row_shard[rows]
-    for s in np.unique(sh):
-        sel = sh == s
-        rsel, lsel = rows[sel], l[sel]
-        src = np.repeat(row_off[rsel], lsel) + _ramp(lsel)
-        dst = np.repeat(dest0[sel], lsel) + _ramp(lsel)
-        out[dst] = flats[s][src]
-    return out
-
-
-def _padded_intersections(la: np.ndarray, lb: np.ndarray, gather_a, gather_b) -> np.ndarray:
-    """|A ∩ B| per pair of duplicate-free sets of sizes ``la``, ``lb``;
-    ``gather_a(sel)`` / ``gather_b(sel)`` return the concatenated values
-    of side A / B of the pairs ``sel``, in order.
-
-    Row-wise padded sort: each pair's concatenated values fill one
-    row of an (n x wmax) INT64_MAX-padded matrix; ``sort(axis=1)`` is
-    one C call, and with duplicate-free sides the intersection is the
-    count of adjacent-equal positions inside the row's real length
-    (pads excluded by position, so a value colliding with the pad
-    stays correct). Pairs are processed in width-sorted blocks under
-    ``_PAIR_CELLS_BUDGET`` cells so ONE outlier-wide pair can no
-    longer inflate the whole batch's padded matrix (ADVICE r1).
-    """
-    n = len(la)
-    tot = la + lb
-    inter = np.zeros(n, dtype=np.int64)
-    if n == 0 or int(tot.max()) == 0:
-        return inter
-
-    def block(sel):
-        ns, las, lbs = len(sel), la[sel], lb[sel]
-        w = int((las + lbs).max())
-        m = np.full((ns, w), np.iinfo(np.int64).max, dtype=np.int64)
-        # for each pair: a's values then b's values into one padded row
-        m[np.repeat(np.arange(ns), las), _ramp(las)] = gather_a(sel)
-        m[np.repeat(np.arange(ns), lbs), _ramp(lbs) + np.repeat(las, lbs)] = gather_b(sel)
-        m.sort(axis=1)
-        eq = m[:, 1:] == m[:, :-1]
-        valid = np.arange(1, w)[None, :] < (las + lbs)[:, None]
-        return (eq & valid).sum(axis=1)
-
-    if n * int(tot.max()) <= _PAIR_CELLS_BUDGET:
-        return block(np.arange(n))
-    order = np.argsort(tot, kind="stable")
-    start = 0
-    while start < n:
-        width = int(tot[order[start]])
-        rows = max(1, _PAIR_CELLS_BUDGET // max(width, 1))
-        # widths ascend, so the block max is its LAST row's width;
-        # re-derive rows against that to honor the budget
-        end = min(start + rows, n)
-        width_end = int(tot[order[end - 1]])
-        if width_end > width:
-            rows = max(1, _PAIR_CELLS_BUDGET // width_end)
-            end = min(start + rows, n)
-        blk = order[start:end]
-        inter[blk] = block(blk)
-        start = end
-    return inter
-
-
-def _pair_intersections(
-    seg, pos_a: np.ndarray, pos_b: np.ndarray
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """(|A ∩ B|, len_a, len_b) per pair of rows of the sharded pack
-    ``seg`` = (flats, row_shard, row_off, lens); positions are global
-    rows (``_padded_intersections``)."""
-    la = np.asarray(seg[3][pos_a])
-    lb = np.asarray(seg[3][pos_b])
-    inter = _padded_intersections(
-        la, lb,
-        lambda sel: _gather_rows(seg, pos_a[sel], la[sel]),
-        lambda sel: _gather_rows(seg, pos_b[sel], lb[sel]),
-    )
-    return inter, la, lb
-
-
-def _ramp(lens: np.ndarray) -> np.ndarray:
-    """[0..lens[0]-1, 0..lens[1]-1, ...] — per-segment position index."""
-    total = int(lens.sum())
-    if total == 0:
-        return np.empty(0, dtype=np.int64)
-    offs = np.zeros(len(lens), dtype=np.int64)
-    np.cumsum(lens[:-1], out=offs[1:])
-    return np.arange(total, dtype=np.int64) - np.repeat(offs, lens)
-
-
-def score_set_pairs(
-    pack, a: np.ndarray, b: np.ndarray, threshold: float | None,
-    metric: str = "jaccard", left: str = "a", right: str = "b",
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Exact float64 set scores of the pairs (a[i], b[i]) against a
-    ``load_feats_segments`` pack: (a, b, score) of the pairs scoring
-    >= ``threshold`` (every pair when it is None).
-
-    ``metric`` "jaccard" scores |A∩B| / |A∪B| after the exact-safe size
-    prune J >= t  =>  min >= t * max (|A∩B| <= min, |A∪B| >= max),
-    which kills e.g. the boilerplate-vs-full-file band collisions
-    before any gather work; "containment" scores |A∩B| / min(|A|,|B|)
-    with no prune (the smaller side can be fully contained at any
-    size skew). Empty sets score 0.0, like the JVM join forms — the
-    same integer counts and float64 division, so the scores are
-    bit-identical to theirs."""
-    ids, perm, row_shard, row_off, row_len, flats = pack
-    pos_a = _lookup_rows(ids, perm, a, left)
-    pos_b = _lookup_rows(ids, perm, b, right)
-    is_jaccard = metric == "jaccard"
-    if threshold is not None and is_jaccard:
-        la0 = np.asarray(row_len[pos_a])
-        lb0 = np.asarray(row_len[pos_b])
-        keep = np.minimum(la0, lb0) >= threshold * np.maximum(la0, lb0)
-        if not keep.all():
-            a, b = a[keep], b[keep]
-            pos_a, pos_b = pos_a[keep], pos_b[keep]
-    inter, la, lb = _pair_intersections((flats, row_shard, row_off, row_len), pos_a, pos_b)
-    denom = la + lb - inter if is_jaccard else np.minimum(la, lb)
-    s = np.divide(
-        inter.astype(np.float64), denom, out=np.zeros(len(a)), where=denom > 0
-    )
-    if threshold is not None:
-        hit = s >= threshold
-        a, b, s = a[hit], b[hit], s[hit]
-    return a, b, s
 
 
 def _verify_set_broadcast(
@@ -986,10 +133,10 @@ def _verify_set_broadcast(
     # no broadcast hint: AQE broadcasts the id set when it is small
     # and falls back to an ids-only shuffle when it is not
     needed = feats.join(pair_ids, feats[id_col] == F.col("_pid"), "left_semi")
-    ref = write_blob(needed.select(id_col, feat_col), id_col, feat_col, "verify")
+    ref = blob.write_blob(needed.select(id_col, feat_col), id_col, feat_col, "verify")
 
     def score(batches):
-        pack = load_feats_segments(ref)
+        pack = blob.load_feats_segments(ref)
         for batch in batches:
             if batch.num_rows == 0:
                 continue
@@ -1001,7 +148,7 @@ def _verify_set_broadcast(
             if len(a):
                 yield record_batch({left: a, right: b, "score": s})
 
-    return detach(pairs.select(left, right).mapInArrow(
+    return blob.detach(pairs.select(left, right).mapInArrow(
         score, f"{left} long, {right} long, score double"), ref)
 
 
@@ -1058,7 +205,7 @@ def _verify_sets(pairs, feats, feat_col, id_col, threshold, left, right, strateg
                  metric) -> DataFrame:
     """The strategy choice and join plan shared by ``verify_jaccard``
     and ``verify_containment`` (see ``verify_jaccard``)."""
-    n_rows, est_bytes = _feat_bytes(feats, feat_col)
+    n_rows, est_bytes = blob._feat_bytes(feats, feat_col)
     feats_fit = n_rows <= VERIFY_BROADCAST_CAP and est_bytes <= VERIFY_BROADCAST_MAX_BYTES
     if strategy == "auto":
         extra = set(pairs.columns) - {left, right}
@@ -1067,7 +214,7 @@ def _verify_sets(pairs, feats, feat_col, id_col, threshold, left, right, strateg
             if not extra
             and feats_fit
             and est_bytes >= VERIFY_BLOB_MIN_BYTES
-            and blob_transport_available(feats.sparkSession)
+            and blob.blob_transport_available(feats.sparkSession)
             else "join"
         )
     if strategy == "broadcast":
@@ -1084,195 +231,6 @@ def _verify_sets(pairs, feats, feat_col, id_col, threshold, left, right, strateg
     if threshold is not None:
         scored = scored.where(F.col("score") >= threshold)
     return scored
-
-
-_F32_MARGIN = 1e-5
-
-
-# max survivors rescored per float64 einsum slice: bounds the two
-# (hits x dim) fancy-index copies at ~67 MB each at 128 dims
-_RESCORE_HITS = 1 << 16
-
-
-def _chunked_threshold(q_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k,
-                       self_mode, row_step=_SCAN_ROW_STEP):
-    """Tiled threshold gemm for the fused kernels, over
-    PRE-NORMALIZED rows on both sides (``load_feats_rows(ref, "scan")``;
-    callers normalize the query batch in place). ``blocks`` is the
-    (n_blocks, dim, _BLK_W) f32 tile pack (``_build_blocks``).
-
-    Round-5 history (kept because the same pathologies shape this
-    form): the one-shot kernel materialized the FULL |batch| x
-    |index| f64 similarity matrix per worker (page-fault/TLB storm,
-    ``git show b871efc:bench_r5_try2.log``); the row-chunked
-    full-width kernel fixed that but still streamed the whole 50 MB B
-    operand per 41-row chunk and wrote 3 full-width bool/score passes
-    per chunk — measured 13-15 s per worker at 100k x 100k under
-    32-way concurrency, nearly all
-    memory-bus time. Round 6 re-tiled it: per row chunk (~512 rows),
-    each ~2 MB B tile is one sgemm into a reused (row_step x _BLK_W)
-    score tile that stays cache-resident through its threshold mask
-    and nonzero — the full-width score matrix never exists, B traffic
-    drops ~12x, and the same partition measures 3.5-5 s (identical
-    output; tools/ microbench, round 6).
-
-    Self-mode column skip: when ``ids_i`` is strictly ascending
-    (parquet part order from the range-partitioned feature write —
-    verified per batch, not assumed), every column with id <= the
-    chunk's min query id is provably masked by ``q_id < id_i``, so
-    whole tiles below that bound are skipped — on average half the
-    scan. The residual per-pair ``q_id < id_i`` filter runs on the
-    HITS only (a few per thousand cells), replacing the round-5
-    full-width comparison matrix.
-
-    Zero-norm rows are all-zero after normalization, so they score
-    exactly 0.0 and any thr > 0 excludes them for free; thr <= 0
-    masks them explicitly (NULL-cosine semantics). Yields
-    (global_row_idx, col_idx, scores) per chunk; per-row max_k
-    capping is chunk-local because the cap is per ROW and every chunk
-    holds whole rows.
-
-    The scan itself runs in float32 (half the bandwidth, 2x sgemm)
-    against ``thr - _F32_MARGIN``; every surviving pair is re-scored
-    in float64, so the EMITTED edge set and scores are exactly the
-    float64 ones. The margin (1e-5) dominates the float32 dot's worst
-    error (~sqrt(dim) * 2^-24 ~ 1e-6 for unit rows), so no true pair
-    is lost. Before the f64 rescore, oversized rows (> max_k f32
-    hits) are pre-filtered to the candidates that can still reach the
-    f64 top-max_k: any hit whose f32 score is more than 2*margin
-    below the row's max_k-th largest f32 score is beaten by >= max_k
-    candidates in f64 with strict inequality (|s32 - s64| < margin on
-    both sides), so it can neither make the cap nor tie at its
-    boundary — dropping it is exact. This cuts the mega-clique
-    rescore from O(clique^2) gathers to O(clique * max_k).
-    """
-    n_idx = len(ids_i)
-    if n_idx == 0 or len(q_ids) == 0:
-        return
-    n_blocks = blocks.shape[0]
-    qm32 = qm.astype(np.float32)
-    ids_sorted = self_mode and (n_idx == 1 or bool((np.diff(ids_i) > 0).all()))
-    thr32 = np.float32(thr - _F32_MARGIN)
-    band32 = np.float32(2 * _F32_MARGIN)
-    # reused score/mask tiles (fresh big outputs pay the first-touch
-    # fault storm — see round-5 notes above)
-    obuf = np.empty(row_step * _BLK_W, dtype=np.float32)
-    mbuf = np.empty(row_step * _BLK_W, dtype=bool)
-    for lo in range(0, len(q_ids), row_step):
-        hi = min(lo + row_step, len(q_ids))
-        rows = hi - lo
-        b0 = 0
-        if ids_sorted:
-            j0 = int(np.searchsorted(ids_i, int(q_ids[lo:hi].min()), side="right"))
-            b0 = j0 // _BLK_W
-        q32c = qm32[lo:hi]
-        hr: list = []
-        hc: list = []
-        hs: list = []
-        for b in range(b0, n_blocks):
-            w = min(_BLK_W, n_idx - b * _BLK_W)
-            out = obuf[: rows * _BLK_W].reshape(rows, _BLK_W)
-            np.dot(q32c, blocks[b], out=out)
-            mask = mbuf[: rows * _BLK_W].reshape(rows, _BLK_W)
-            np.greater_equal(out, thr32, out=mask)
-            if w < _BLK_W:
-                mask[:, w:] = False  # zero-padded tail columns
-            if thr <= 0:
-                # normalized zero-norm rows score 0.0, which a
-                # non-positive threshold would wrongly admit
-                mask[:, :w] &= nz_i[b * _BLK_W : b * _BLK_W + w][None, :]
-                mask[qz[lo:hi]] = False
-            rl, cl = np.nonzero(mask)
-            if len(rl) == 0:
-                continue
-            cg = cl + b * _BLK_W
-            if self_mode:
-                keep = q_ids[lo + rl] < ids_i[cg]
-                if not keep.all():
-                    rl, cl, cg = rl[keep], cl[keep], cg[keep]
-                    if len(rl) == 0:
-                        continue
-            hr.append(rl)
-            hc.append(cg)
-            hs.append(out[rl, cl])
-        if not hr:
-            continue
-        r = np.concatenate(hr)
-        c = np.concatenate(hc)
-        s32 = np.concatenate(hs)
-        if len(hr) > 1:
-            # restore global row-major hit order across tiles (the
-            # cap slices rows out of a grouped-ascending r)
-            order = np.lexsort((c, r))
-            r, c, s32 = r[order], c[order], s32[order]
-        if max_k is not None:
-            counts = np.bincount(r, minlength=rows)
-            if (counts > max_k).any():
-                keep = np.ones(len(r), dtype=bool)
-                starts = np.concatenate(([0], np.cumsum(counts)))
-                for ri in np.flatnonzero(counts > max_k):
-                    sl = slice(starts[ri], starts[ri + 1])
-                    srow = s32[sl]
-                    kth = np.partition(srow, len(srow) - max_k)[len(srow) - max_k]
-                    keep[sl] = srow >= kth - band32
-                if not keep.all():
-                    r, c = r[keep], c[keep]
-        # exact float64 rescore of the scan's survivors only — in
-        # bounded slices: a mega-clique chunk (planted boilerplate,
-        # every pair >= thr) surfaces many survivors at once, and a
-        # one-shot fancy-index rescore materializes TWO (hits x dim)
-        # float64 copies: ~8 GB/worker at 4M hits x 128 dims, which is
-        # what globally OOM'd the 1M IVF flagship (14 workers at
-        # 7.6 GB RSS each, git show b871efc:flagship_r5_1m_ivf2.log).
-        # Slicing keeps the peak at ~2 x slice x dim x 8 bytes
-        # (~134 MB) with identical survivors, scores, and cap order.
-        if len(r) <= _RESCORE_HITS:
-            s = np.einsum("ij,ij->i", qm[lo + r], matn[c])
-            keep = s >= thr
-            r, c, s = r[keep], c[keep], s[keep]
-        else:
-            parts = []
-            for slo in range(0, len(r), _RESCORE_HITS):
-                rs = r[slo:slo + _RESCORE_HITS]
-                cs = c[slo:slo + _RESCORE_HITS]
-                ss = np.einsum("ij,ij->i", qm[lo + rs], matn[cs])
-                keep = ss >= thr
-                parts.append((rs[keep], cs[keep], ss[keep]))
-            r = np.concatenate([p[0] for p in parts])
-            c = np.concatenate([p[1] for p in parts])
-            s = np.concatenate([p[2] for p in parts])
-        if max_k is not None and len(r):
-            r, c, s = _cap_rows_sparse(r, c, s, ids_i, max_k)
-        if len(r):
-            yield r + lo, c, s
-
-
-def _cap_rows_sparse(r, c, s, ids_i, max_k):
-    """Per-row top-``max_k`` neighbor cap (reference ``max_k=100``,
-    semhash/index.py:59) on sparse (row, col, score) triplets
-    (r non-decreasing — np.nonzero row-major order): oversized rows
-    keep the ``max_k`` highest-score neighbors, ties broken by
-    ascending neighbor id. Only oversized rows pay the python loop —
-    these are exactly the mega-cluster members whose uncapped edge
-    emission is quadratic (a 8k-member boilerplate cluster emits 32M
-    edges uncapped; 0.8M capped). For a COMPLETE >=θ sub-cluster the
-    capped a<b graph stays connected (every non-max member keeps >=1
-    upward edge), so min-id connected components are unchanged; only
-    dense-but-incomplete clusters wider than max_k can differ — the
-    same truncation the reference's ANN cap applies (SURVEY §2.4 J2).
-    """
-    counts = np.bincount(r)
-    if (counts <= max_k).all():
-        return r, c, s
-    keep = np.ones(len(r), dtype=bool)
-    starts = np.concatenate(([0], np.cumsum(counts)))
-    for ri in np.flatnonzero(counts > max_k):
-        sl = slice(starts[ri], starts[ri + 1])
-        order = np.lexsort((ids_i[c[sl]], -s[sl]))
-        kmask = np.zeros(int(counts[ri]), dtype=bool)
-        kmask[order[:max_k]] = True
-        keep[sl] = kmask
-    return r[keep], c[keep], s[keep]
 
 
 # below this row count the IVF payload-blob plan's fixed cost (blob
@@ -1339,17 +297,17 @@ def cosine_threshold_edges_ivf(
     oversized cell (common-boilerplate mega-cluster) scans only its
     ``cell_cap`` lowest-id home rows — every probe row still reaches
     the cell's min-id members, so >=θ cliques stay connected for
-    min-id CC (the star-cap argument, lsh.py:127), and ``max_k``
+    min-id CC (the star-cap argument of ``kernels._bucket_walk``), and ``max_k``
     bounds per-row edge emission exactly like the fused path.
 
     Id-only salt shuffle (round 6, guide §8): when blob transport is
     available and the input has at least ``_IVF_BLOB_MIN_ROWS`` rows,
     the salt shuffle ships ONLY
     (id, cell, salt, home) — the embedding payload moves exactly once
-    into an executor-side blob (``write_blob``; the edges are detached
-    and the blob dropped before the call returns) and each group
-    GATHERS its rows from the mmap'd shard pack
-    (``load_feats_rows(ref, "keyed")``). Round 5 shipped every embedding through
+    into an executor-side blob (``blob.write_blob``; the edges are
+    detached and the blob dropped before the call returns) and each
+    group GATHERS its rows from the mmap'd shard pack
+    (``blob.load_feats_rows(ref, "keyed")``). Round 5 shipped every embedding through
     the groupBy shuffle ``n_probe`` times for probes plus once per
     salt for the replicated home packs, then paid the Arrow list
     conversion per group — the dominant residual worker RSS at the 1M
@@ -1363,7 +321,7 @@ def cosine_threshold_edges_ivf(
     if n_rows is None:
         n_rows = feats.count()
     use_blob = (n_rows >= _IVF_BLOB_MIN_ROWS
-                and blob_transport_available(feats.sparkSession))
+                and blob.blob_transport_available(feats.sparkSession))
     if n_cells is None:
         # home size ~2k/cell keeps per-cell gemm ~0.5 GFLOP; the cap
         # keeps driver k-means training bounded (train_cap rows)
@@ -1458,7 +416,7 @@ def cosine_threshold_edges_ivf(
         home = table["_home"].to_numpy()
         if ref is not None:
             # id-only group: gather normalized rows from the blob pack
-            ids_sorted, perm, rowsrc, nrm_rows = load_feats_rows(ref, "keyed")
+            ids_sorted, perm, rowsrc, nrm_rows = blob.load_feats_rows(ref, "keyed")
             rows, ok = _locate_rows(ids_sorted, perm, ids)
             if not ok.all():  # NULL-embedding ids are absent from the pack
                 ids, home, rows = ids[ok], home[ok], rows[ok]
@@ -1467,10 +425,8 @@ def cosine_threshold_edges_ivf(
             xm = rowsrc[rows]
             xzero = nrm_rows[rows] <= 0
         else:
-            x, _ = list_matrix(table[emb_col])
-            xn = np.linalg.norm(x, axis=1, keepdims=True)
-            xm = np.divide(x, xn, out=x, where=xn > 0)  # zero rows stay 0
-            xzero = xn.ravel() <= 0
+            xm, xn = _normalize_rows(list_matrix(table[emb_col])[0])
+            xzero = xn <= 0
         h_idx = np.flatnonzero(home)
         # probe side = the non-pack rows only: every pack row's own
         # pos==0 probe instance arrives separately (_home=False), so
@@ -1503,14 +459,14 @@ def cosine_threshold_edges_ivf(
 
     # written last, so no earlier planning step can strand it
     ref = (
-        write_blob(feats.select(id_col, emb_col), id_col, emb_col, "ivfrows")
+        blob.write_blob(feats.select(id_col, emb_col), id_col, emb_col, "ivfrows")
         if use_blob
         else None
     )
     edges = grouped.groupBy("_cell", "_salt").applyInArrow(
         scan, "a long, b long, score double"
     ).distinct()
-    return detach(edges, ref) if use_blob else edges
+    return blob.detach(edges, ref) if use_blob else edges
 
 
 # below this many rows the fused self-scan keeps the input's own
@@ -1535,41 +491,41 @@ def cosine_threshold_edges(
     """All pairs (a < b, score) with cosine >= threshold — fused
     candidate generation + verification via broadcast matmul.
     ``max_k`` caps each row's emitted neighbors (reference
-    query_threshold cap; see ``_cap_rows_sparse``).
+    query_threshold cap; see ``kernels._cap_rows_sparse``).
 
-    ``ref``: the ``write_blob`` blob of ``feats`` when its owner (a
+    ``ref``: the ``blob.write_blob`` blob of ``feats`` when its owner (a
     fitted ``SparkSemHash``) already wrote one; the returned frame then
     reads it and the owner detaches it. Without ``ref`` the call writes
-    its own blob and returns the edges detached (``detach``), the blob
-    already dropped.
+    its own blob and returns the edges detached (``blob.detach``), the
+    blob already dropped.
 
     The embedding table reaches the executors as a blob (a distributed
     write, NO driver collect/re-ship) whose pack each host's python
-    workers build once (``load_feats_rows(ref, "scan")``); each
+    workers build once (``blob.load_feats_rows(ref, "scan")``); each
     partition of rows runs the tiled f32 scan with an exact f64 rescore
-    (``_chunked_threshold``) and emits only the passing pairs — no
+    (``kernels._chunked_threshold``) and emits only the passing pairs — no
     |n|^2 pair materialization, no Arrow shipping of arrays per pair. The right plan whenever the matrix fits
     executor memory (64-dim floats: 2M rows ~ 1 GB); above that, use
     LSH candidates + verify_cosine. Zero-norm rows never pair
     (NULL-cosine semantics).
     """
-    own = None if ref is not None else write_blob(
+    own = None if ref is not None else blob.write_blob(
         feats.select(id_col, emb_col), id_col, emb_col, "cosedges")
     out = _fused_edges(scan_rows(feats, id_col, emb_col, n_rows), ref or own,
                        threshold, max_k, True, id_col, emb_col, ("a", "b"))
-    return detach(out, own) if own else out
+    return blob.detach(out, own) if own else out
 
 
 def _fused_edges(query: DataFrame, ref: dict, threshold: float, max_k: int | None,
                  self_mode: bool, id_col: str, emb_col: str, names) -> DataFrame:
     """The fused scan's ``mapInArrow``: each (id, embedding) batch of
-    ``query`` runs ``_chunked_threshold`` against the scan pack of
+    ``query`` runs ``kernels._chunked_threshold`` against the scan pack of
     ``ref`` and emits (names[0], names[1], score) rows."""
     thr = float(threshold)
     q_col, i_col = names
 
     def edges(batches):
-        ids_i, matn, nz_i, blocks = load_feats_rows(ref, "scan")
+        ids_i, matn, nz_i, blocks = blob.load_feats_rows(ref, "scan")
         for rb in batches:
             batch = normalized_batch(rb, id_col, emb_col) if len(ids_i) else None
             if batch is None:
@@ -1582,21 +538,6 @@ def _fused_edges(query: DataFrame, ref: dict, threshold: float, max_k: int | Non
                     {q_col: q_ids[r_g], i_col: ids_i[c], "score": sc})
 
     return query.mapInArrow(edges, f"{q_col} long, {i_col} long, score double")
-
-
-def normalized_batch(batch: pa.RecordBatch, id_col: str, emb_col: str):
-    """(ids, row-normalized float64 matrix, zero-norm mask) of one
-    Arrow batch of (id, embedding) rows, NULL embeddings dropped; None
-    when nothing is left. Zero-norm rows stay all-zero."""
-    q, null = list_matrix(batch[emb_col])
-    ids = batch[id_col].to_numpy().astype(np.int64, copy=False)
-    if null.any():  # NULL embeddings never pair or rank
-        q, ids = q[~null], ids[~null]
-    if len(ids) == 0:
-        return None
-    qn = np.linalg.norm(q, axis=1, keepdims=True)
-    qm = np.divide(q, qn, out=q, where=qn > 0)
-    return ids, qm, qn.ravel() <= 0
 
 
 def scan_rows(feats: DataFrame, id_col: str, emb_col: str,
@@ -1650,11 +591,11 @@ def cosine_cross_threshold_edges(
     Without it, the call writes, detaches and drops its own blob, as
     ``cosine_threshold_edges`` does.
     """
-    own = None if ref is not None else write_blob(
+    own = None if ref is not None else blob.write_blob(
         index_feats.select(id_col, emb_col), id_col, emb_col, "crossedges")
     out = _fused_edges(query_feats.select(id_col, emb_col), ref or own, threshold,
                        max_k, False, id_col, emb_col, ("query_id", "index_id"))
-    return detach(out, own) if own else out
+    return blob.detach(out, own) if own else out
 
 
 def verify_cosine(
@@ -1673,18 +614,16 @@ def verify_cosine(
     fits the executor byte cap, candidate ids ship 16 bytes/pair
     through Arrow and score against the call's embedding blob — one
     vectorized gather + einsum per batch, detached before the blob is
-    dropped. The join form rehydrates
-    two 128-float arrays per pair and evaluates the cosine as
-    INTERPRETED JVM higher-order lambdas, which is ~2 orders slower
-    at millions of candidates (round-5: 4M hyperplane candidates at
-    30k rows took 276 s join-form; the same shape scores in seconds
-    via the blob — the identical strategy split verify_jaccard has
-    had since round 2). ``join`` forces the fallback (no blob dir on
-    a cluster master, or oversized feature tables).
+    dropped. The join form scores with the vectorized Arrow UDF
+    ``cosine_similarity`` too, but its two joins rehydrate and shuffle
+    two embedding arrays per pair, where the blob form shuffles two
+    ids per pair — the strategy split ``verify_jaccard`` has. ``join``
+    forces the fallback (no blob dir on a cluster master, or
+    oversized feature tables).
     """
     spark = pairs.sparkSession
-    if strategy != "join" and blob_transport_available(spark):
-        _, nbytes = _feat_bytes(feats, feat_col)
+    if strategy != "join" and blob.blob_transport_available(spark):
+        _, nbytes = blob._feat_bytes(feats, feat_col)
         if strategy == "blob" or nbytes <= VERIFY_BROADCAST_MAX_BYTES:
             return _verify_cosine_blob(
                 pairs, feats, feat_col, id_col, threshold, left, right
@@ -1712,11 +651,11 @@ def _verify_cosine_blob(
     Pairs whose ids are absent from ``feats`` drop (the join form's
     inner-join semantics); zero-norm sides never pass a threshold
     and score NULL without one (NULL-cosine semantics)."""
-    ref = write_blob(feats.select(id_col, feat_col), id_col, feat_col, "cosverify")
+    ref = blob.write_blob(feats.select(id_col, feat_col), id_col, feat_col, "cosverify")
     thr = None if threshold is None else float(threshold)
 
     def score(batches):
-        sorted_ids, perm, rows, nrm = load_feats_rows(ref, "keyed")
+        sorted_ids, perm, rows, nrm = blob.load_feats_rows(ref, "keyed")
         for batch in batches:
             if batch.num_rows == 0 or len(sorted_ids) == 0:
                 continue
@@ -1741,5 +680,6 @@ def _verify_cosine_blob(
                     yield record_batch(
                         {left: a[m], right: b[m], "score": num[m] / den[m]})
 
-    return detach(pairs.select(left, right).mapInArrow(
+    return blob.detach(pairs.select(left, right).mapInArrow(
         score, f"{left} long, {right} long, score double"), ref)
+

@@ -63,7 +63,7 @@ def get_spark(
         os.environ.setdefault(var, "1")
     # keep numpy's big transient buffers IN the malloc arena instead
     # of mmap/munmap per allocation: with N workers each cycling
-    # ~64 MB chunk buffers (verify._chunked_threshold), per-free
+    # ~64 MB chunk buffers (kernels._chunked_threshold), per-free
     # munmap caused a kernel-side page-fault + THP-compaction storm
     # (khugepaged/kcompactd topping CPU, >90% system time, round-5
     # log: git show b871efc:bench_r5_try2.log). Trailing underscore =

@@ -2,7 +2,7 @@
 self ranking.
 
 * Assembly parity: ``self_deduplicate`` builds its dup-node table and
-  pair rows in numpy from the edges the driver holds (``verify.held``),
+  pair rows in numpy from the edges the driver holds (``blob.held``),
   from one probe of edges it does not hold (a checkpointer that
   re-reads each stage), or, above ``driver_cc_cap``, from the star CC
   and a distributed aggregation. All three must give the same
@@ -23,9 +23,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from semhash_spark.api import SparkSemHash
+from semhash_spark.blob import held
 from semhash_spark.config import DedupConfig
 from semhash_spark.operators import rank as rank_ops
-from semhash_spark.operators.verify import held
 from semhash_spark.plans.checkpoint import CheckpointManager
 
 MINHASH = DedupConfig(columns=("content",), threshold=0.8, shingle_k=5,

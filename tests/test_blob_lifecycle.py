@@ -9,17 +9,16 @@ faults, and blob lifetime.
   of dead or stale owners and releases the lock of a failed builder.
 * Every blob has one owner. Calls drop theirs before they return, a
   fit drops its own in ``release()``, and no result frame reads a
-  blob: over repeated calls the blob and pack dirs stay flat, and
-  released results still compute the same rows.
+  blob: over repeated calls every blob a call writes is gone with its
+  pack dir when its owner is done, and released results still compute
+  the same rows.
 """
 
 from __future__ import annotations
 
 import os
-import re
 import subprocess
 import sys
-import tempfile
 import threading
 import time
 import uuid
@@ -30,6 +29,7 @@ import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
+from semhash_spark import blob
 from semhash_spark.api import SparkSemHash
 from semhash_spark.config import DedupConfig
 from semhash_spark.operators import dedup as dedup_ops
@@ -81,7 +81,7 @@ def small_blob(tmp_path):
     ref = {"tag": path.name, "path": str(path), "id_col": "record_id",
            "payload_col": "shingles"}
     yield ref, rows
-    V.drop_blob(ref)
+    blob.drop_blob(ref)
 
 
 def _bounded(fn, secs: float = 60.0):
@@ -116,7 +116,7 @@ def _check_segments(pack, rows) -> None:
 def _plant_locks(ref, pid: int, age: float = 0.0) -> list[str]:
     """Lock files held by ``pid`` on the first shard and the final
     pack of the blob's "seg" kind, ``age`` seconds old."""
-    root = V._pack_root(ref["tag"])
+    root = blob._pack_root(ref["tag"])
     os.makedirs(root, exist_ok=True)
     locks = [os.path.join(root, f) for f in ("_shard_seg_0000.lock", "_final_seg.lock")]
     for lock in locks:
@@ -132,7 +132,7 @@ def test_pack_reclaims_lock_of_dead_owner(small_blob):
     proc = subprocess.Popen([sys.executable, "-c", "pass"])
     proc.wait()
     _plant_locks(ref, proc.pid)
-    _check_segments(_bounded(lambda: V.load_feats_segments(ref)), rows)
+    _check_segments(_bounded(lambda: blob.load_feats_segments(ref)), rows)
 
 
 def test_pack_reclaims_stale_lock_of_live_owner(small_blob):
@@ -140,9 +140,9 @@ def test_pack_reclaims_stale_lock_of_live_owner(small_blob):
     live = os.getppid()
     lock, _ = _plant_locks(ref, live)
     done = lock[: -len(".lock")] + ".done"
-    assert not V._acquire_pack_lock(lock, done)  # a fresh live lock holds
-    _plant_locks(ref, live, age=V._LOCK_STALE_SECS + 60)
-    _check_segments(_bounded(lambda: V.load_feats_segments(ref)), rows)
+    assert not blob._acquire_pack_lock(lock, done)  # a fresh live lock holds
+    _plant_locks(ref, live, age=blob._LOCK_STALE_SECS + 60)
+    _check_segments(_bounded(lambda: blob.load_feats_segments(ref)), rows)
 
 
 def test_failed_builder_releases_its_lock(small_blob):
@@ -158,10 +158,10 @@ def test_failed_builder_releases_its_lock(small_blob):
         return [np.concatenate([s[0] for s in shards])]
 
     with pytest.raises(RuntimeError, match="decode failed"):
-        V._pack_sharded(ref, "t", broken, final)
-    root = V._pack_root(ref["tag"])
+        blob._pack_sharded(ref, "t", broken, final)
+    root = blob._pack_root(ref["tag"])
     assert not [f for f in os.listdir(root) if f.endswith(".lock")]
-    (ids,), shards = _bounded(lambda: V._pack_sharded(ref, "t", part, final))
+    (ids,), shards = _bounded(lambda: blob._pack_sharded(ref, "t", part, final))
     assert np.asarray(ids).tolist() == list(range(30)) and len(shards) == 2
 
 
@@ -178,24 +178,36 @@ def test_write_blob_on_cluster_master_needs_blob_dir():
             conf = Conf()
 
     with pytest.raises(RuntimeError, match="spark.semhash.blobDir"):
-        V.write_blob(Frame(), "record_id", "shingles", "t")
+        blob.write_blob(Frame(), "record_id", "shingles", "t")
 
 
 # ------------------------------------------------ blob lifetime
 
 
-_BLOB_DIR = re.compile(r"^[a-z]+_[0-9a-f]{12}$")
+@pytest.fixture
+def written(monkeypatch) -> list:
+    """The refs of the blobs this test's calls write, in order:
+    ``blob.write_blob`` is the one writer every caller reaches. Only
+    these are checked, so blobs of other processes on the host (an
+    oracle check, a benchmark run) cannot fail the test."""
+    refs: list = []
+    write = blob.write_blob
+
+    def recorded(*args, **kwargs):
+        ref = write(*args, **kwargs)
+        if ref is not None:
+            refs.append(ref)
+        return ref
+
+    monkeypatch.setattr(blob, "write_blob", recorded)
+    return refs
 
 
-def _scratch_counts() -> tuple[int, int]:
-    """(blob dirs under the blob root, pack dirs in semhash_packed/)."""
-    root = tempfile.gettempdir()
-    blobs = sum(
-        1 for e in os.listdir(root)
-        if _BLOB_DIR.match(e) and os.path.isdir(os.path.join(root, e))
-    )
-    packed = os.path.join(root, "semhash_packed")
-    return blobs, len(os.listdir(packed)) if os.path.isdir(packed) else 0
+def _left_behind(refs) -> list[str]:
+    """The blob dirs and ``semhash_packed/<tag>`` pack dirs of ``refs``
+    that still exist."""
+    return [path for ref in refs for path in (ref["path"], blob._pack_root(ref["tag"]))
+            if os.path.exists(path)]
 
 
 def _rows(df) -> list:
@@ -212,13 +224,14 @@ def corpus(spark):
     df.unpersist()
 
 
-def test_cosine_fit_cycle_leaves_no_blobs(spark, corpus):
+def test_cosine_fit_cycle_leaves_no_blobs(spark, corpus, written):
     """20 fit -> self_deduplicate -> outliers -> representatives ->
-    release cycles: blob and pack dirs return to their count, and every
-    result frame computes the same rows after both releases."""
-    before = _scratch_counts()
+    release cycles: every blob a cycle writes is gone with its packs
+    after the release, and every result frame computes the same rows
+    after both releases."""
     kept = []
     for _ in range(20):
+        start = len(written)
         sh = SparkSemHash(COS, mode="cosine").fit(corpus)
         res = sh.self_deduplicate()
         fo = sh.self_filter_outliers(0.1)
@@ -229,25 +242,29 @@ def test_cosine_fit_cycle_leaves_no_blobs(spark, corpus):
         res.release()
         fo.release()
         sh.release()
-        assert reps[0] and _scratch_counts() == before
+        assert written[start:], "the cycle wrote no blob"
+        assert reps[0] and _left_behind(written[start:]) == []
     assert len({repr(rows) for _, rows in kept}) == 1
     for frames, rows in kept:
         assert [_rows(f) for f in frames] == rows
     assert kept[0][1][2], "the corpus must have semantic duplicates"
 
 
-def test_unfitted_cosine_calls_leave_no_blobs(spark, corpus):
+def test_unfitted_cosine_calls_leave_no_blobs(spark, corpus, written):
     """20 unfitted cosine self_deduplicate and deduplicate calls each:
     every call drops its blobs before it returns, and released results
     still compute."""
     index = corpus.where(F.col("record_id") % 3 != 0)
     query = corpus.where(F.col("record_id") % 3 == 0)
-    before = _scratch_counts()
+    calls = (lambda: dedup_ops.self_deduplicate(corpus, COS, mode="cosine"),
+             lambda: dedup_ops.deduplicate(query, index, COS, mode="cosine"))
     kept = []
     for _ in range(20):
-        for res in (dedup_ops.self_deduplicate(corpus, COS, mode="cosine"),
-                    dedup_ops.deduplicate(query, index, COS, mode="cosine")):
-            assert _scratch_counts() == before
+        for call in calls:
+            start = len(written)
+            res = call()
+            assert written[start:], "the call wrote no blob"
+            assert _left_behind(written[start:]) == []
             frames = (res.selected.select("record_id"), res.filtered, res.pairs)
             kept.append((frames, [_rows(f) for f in frames]))
             res.release()

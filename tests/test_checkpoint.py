@@ -19,8 +19,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from semhash_spark import blob
 from semhash_spark.config import DedupConfig
-from semhash_spark.operators import verify
 from semhash_spark.operators.dedup import self_deduplicate
 from semhash_spark.plans.checkpoint import CheckpointManager
 from semhash_spark.sources.corpus import generate_corpus
@@ -35,14 +35,14 @@ def _assignment(res):
 
 def test_resume_from_partial_checkpoints(spark, monkeypatch):
     blobs: list = []
-    write = verify.write_blob
+    write = blob.write_blob
 
     def counted_write(*args, **kwargs):
         ref = write(*args, **kwargs)
         blobs.append(ref)
         return ref
 
-    monkeypatch.setattr(verify, "write_blob", counted_write)
+    monkeypatch.setattr(blob, "write_blob", counted_write)
     base = tempfile.mkdtemp(prefix="semhash_ckpt_")
     try:
         cfg = DedupConfig(columns=("content",), threshold=0.8, shingle_k=5,

@@ -54,7 +54,8 @@ def test_lcs_confirm_accepts_fragments_rejects_shuffles(spark):
     """LCS confirmation: a contiguous fragment passes even with small
     edits; a bag-of-same-tokens shuffle (high shingle overlap is
     impossible but high token overlap is) fails the contiguity bar."""
-    from semhash_spark.operators.containment import _lcs_len, lcs_confirm
+    from semhash_spark.kernels import _lcs_len
+    from semhash_spark.operators.containment import lcs_confirm
 
     # kernel sanity
     assert _lcs_len("abcdefgh", "cdef") == 4
@@ -77,41 +78,6 @@ def test_lcs_confirm_accepts_fragments_rejects_shuffles(spark):
     assert (1, 0) in out and out[(1, 0)] == 1.0
     assert (2, 0) in out and out[(2, 0)] >= 0.45  # edit splits the run
     assert (3, 0) not in out
-
-
-def test_lcs_hash_kernel_matches_automaton():
-    # the rolling-hash binary-search kernel must agree with the exact
-    # suffix automaton on random strings, repeats, unicode, and edges
-    import random
-
-    from semhash_spark.operators.containment import _lcs_len, _lcs_len_hash
-
-    rng = random.Random(31337)
-    cases = [
-        ("", ""), ("", "abc"), ("abc", ""), ("a", "a"), ("a", "b"),
-        ("aaaa", "aaaaaa"), ("abab", "babab"),
-        ("héllo wörld", "wörld héllo"),        # multi-byte code points
-        ("xyz" * 50, "abc" + "xyz" * 30 + "q"),
-    ]
-    for _ in range(150):
-        al = rng.randint(0, 60)
-        bl = rng.randint(0, 60)
-        alpha = rng.choice(["ab", "abc", "abcdefgh", "a"])
-        a = "".join(rng.choice(alpha) for _ in range(al))
-        b = "".join(rng.choice(alpha) for _ in range(bl))
-        cases.append((a, b))
-    for a, b in cases:
-        assert _lcs_len_hash(a, b) == _lcs_len(a, b), (a, b)
-
-
-def test_lcs_hash_kernel_big_documents():
-    from semhash_spark.operators.containment import _lcs_len, _lcs_len_hash
-
-    big = "def f(x):\n    return x + 1\n" * 400          # ~10 KB
-    frag = big[3000:7000]
-    mutated = frag[:2000] + "# CHANGED\n" + frag[2000:]
-    assert _lcs_len_hash(big, frag) == len(frag)
-    assert _lcs_len_hash(big, mutated) == _lcs_len(big, mutated)
 
 
 def test_winnow_policy_finds_planted_fragments(spark):

@@ -8,12 +8,14 @@
   ``incremental_deduplicate`` the same way on a banded and on a
   blob-served index side.
 * Lifetime: 50 micro-batches against one fit, the
-  ``semantic_dedup_stream`` pattern, leave the blob and pack dir
-  counts where they started, on the fused cosine path and on the
-  minhash single-job blob path.
+  ``semantic_dedup_stream`` pattern, leave no blob or pack dir of
+  their own behind and the fit's blobs in place until its release, on
+  the fused cosine path and on the minhash single-job blob path.
 """
 
 from __future__ import annotations
+
+import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,7 +23,7 @@ from pyspark.sql import functions as F
 from semhash_spark.api import SparkSemHash
 from semhash_spark.config import DedupConfig
 from semhash_spark.operators import dedup as dedup_ops
-from tests.test_blob_lifecycle import _scratch_counts
+from tests.test_blob_lifecycle import _left_behind, written  # noqa: F401 (fixture)
 
 CFG = DedupConfig(columns=("content",), threshold=0.8, shingle_k=5,
                   embedding_dim=64, embedding_ngram=2)
@@ -122,11 +124,10 @@ def _micro_batches(sh, query, n=50):
 
 
 @pytest.mark.parametrize("mode", ["cosine", "minhash"])
-def test_micro_batches_leave_no_blobs(spark, split, monkeypatch, mode):
+def test_micro_batches_leave_no_blobs(spark, split, monkeypatch, mode, written):
     index, query = split
     if mode == "minhash":  # the single-job blob path at any size
         monkeypatch.setattr(dedup_ops, "CROSS_BLOB_MIN_ROWS", 1)
-    start = _scratch_counts()
     sh = SparkSemHash(CFG, mode=mode).fit(index).prepare_index()
     try:
         if mode == "minhash":
@@ -134,9 +135,11 @@ def test_micro_batches_leave_no_blobs(spark, split, monkeypatch, mode):
         else:
             assert sh._index.emb_blob is not None
         _micro_batches(sh, query, n=1)  # the fit's blobs get packed
-        warm = _scratch_counts()
+        fit_refs = list(written)
+        assert fit_refs, "the fit wrote no blob"
         _micro_batches(sh, query)
-        assert _scratch_counts() == warm
+        assert _left_behind(written[len(fit_refs):]) == []
+        assert all(os.path.isdir(ref["path"]) for ref in fit_refs)
     finally:
         sh.release()
-    assert _scratch_counts() == start
+    assert _left_behind(written) == []

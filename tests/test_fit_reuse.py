@@ -13,11 +13,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from semhash_spark import blob
 from semhash_spark.api import SparkSemHash
 from semhash_spark.config import DedupConfig
 from semhash_spark.operators import dedup as dedup_ops
 from semhash_spark.operators import rank as rank_ops
-from semhash_spark.operators import verify as verify_ops
 
 COS = DedupConfig(columns=("content",), threshold=0.75, embedding_dim=64,
                   embedding_ngram=2, rank_k=20)
@@ -72,8 +72,8 @@ def test_cosine_fit_runs_each_step_once_and_matches(spark, corpus, monkeypatch):
     _counting(monkeypatch, dedup_ops, "featurize", counts)
     _counting(monkeypatch, api, "self_exact_dedup", counts)
     _counting(monkeypatch, dedup_ops, "self_exact_dedup", counts)
-    _counting(monkeypatch, verify_ops, "write_blob", counts)
-    _counting(monkeypatch, verify_ops, "_feat_bytes", counts)
+    _counting(monkeypatch, blob, "write_blob", counts)
+    _counting(monkeypatch, blob, "_feat_bytes", counts)
 
     sh = SparkSemHash(COS, mode="cosine").fit(corpus)
     res = sh.self_deduplicate()
@@ -102,19 +102,19 @@ def test_cosine_fit_runs_each_step_once_and_matches(spark, corpus, monkeypatch):
 
     scan = sh._scans[COS.threshold]
     n_scan = scan.count()
-    blob = sh._idx_blob_ref["path"]
+    blob_dir = sh._idx_blob_ref["path"]
     fit_frames = (sh._keyed, sh._feats)
     assert not any(any(f is p for p in res._persisted) for f in (*fit_frames, scan))
     res.release()
     fo.release()
     assert all(_cached(f) for f in fit_frames)
-    assert sh._scans[COS.threshold] is scan and os.path.isdir(blob)
+    assert sh._scans[COS.threshold] is scan and os.path.isdir(blob_dir)
     # the fit's release drops them, the blob, the scan memo and the
     # size memo; the detached scan still computes without its blob
     sh.release()
     assert not any(_cached(f) for f in fit_frames)
     assert sh._scans == {} and sh._emb_size_memo is None
-    assert not os.path.exists(blob) and scan.count() == n_scan
+    assert not os.path.exists(blob_dir) and scan.count() == n_scan
     ref.release()
     unfused.unpersist()
 
@@ -142,7 +142,7 @@ def test_cosine_above_topk_cap_keeps_fused_edges(spark, corpus, monkeypatch):
     the edges still come from the fused scan over the fit's blob and
     the ranking from the IVF plan, with the same results."""
     counts: dict = {}
-    _counting(monkeypatch, verify_ops, "write_blob", counts)
+    _counting(monkeypatch, blob, "write_blob", counts)
     monkeypatch.setattr(rank_ops, "BROADCAST_TOPK_CAP", 0)
     sh = SparkSemHash(COS, mode="cosine").fit(corpus)
     try:

@@ -16,6 +16,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from semhash_spark import blob
 from semhash_spark.config import DedupConfig
 from semhash_spark.functions.hashing import minhash_signature, shingle_hashes
 from semhash_spark.operators import verify
@@ -57,13 +58,13 @@ def _rows(df) -> set:
 
 
 def _fused(bands, feats, cap, metric, threshold):
-    ref = verify.write_blob(feats.select("record_id", "shingles"), "record_id",
-                            "shingles", "paritytest")
+    ref = blob.write_blob(feats.select("record_id", "shingles"), "record_id",
+                          "shingles", "paritytest")
     try:
         return _rows(candidate_pairs_self(bands, cap, "record_id", pack=ref,
                                           metric=metric, threshold=threshold))
     finally:
-        verify.drop_blob(ref)
+        blob.drop_blob(ref)
 
 
 def _joined(bands, feats, cap, metric, threshold):
@@ -114,8 +115,8 @@ def test_fallback_without_blob_transport_matches_fused(spark, corpus, feats, mon
     def no_blob(*args, **kwargs):
         raise AssertionError("the fallback wrote a blob")
 
-    monkeypatch.setattr(verify, "blob_transport_available", lambda spark: False)
-    monkeypatch.setattr(verify, "write_blob", no_blob)
+    monkeypatch.setattr(blob, "blob_transport_available", lambda spark: False)
+    monkeypatch.setattr(blob, "write_blob", no_blob)
     assert _rows(containment_edges(sh, CFG, "record_id")) == fused_c
     res = self_deduplicate(corpus, CFG, mode="minhash")
     assert {tuple(r) for r in res.pairs.collect()} == fused_pairs
@@ -129,21 +130,21 @@ def test_blob_above_cap_falls_back_after_a_bounded_write(spark, feats, monkeypat
     VERIFY_BROADCAST_MAX_BYTES, is removed, and the call keeps the join
     plan with the same edges."""
     sh = feats.select("record_id", "shingles")
-    ref = verify.write_blob(sh, "record_id", "shingles", "captest")
-    full = verify._dir_bytes(ref["path"])
-    verify.drop_blob(ref)
+    ref = blob.write_blob(sh, "record_id", "shingles", "captest")
+    full = blob._dir_bytes(ref["path"])
+    blob.drop_blob(ref)
     fused = _rows(containment_edges(sh, CFG, "record_id"))
 
     seen = []
-    drop = verify.drop_blob
+    drop = blob.drop_blob
 
     def measured_drop(ref):
-        seen.append(verify._dir_bytes(ref["path"]))
+        seen.append(blob._dir_bytes(ref["path"]))
         drop(ref)
 
     monkeypatch.setattr(verify, "VERIFY_BROADCAST_MAX_BYTES", full // 20)
-    monkeypatch.setattr(verify, "drop_blob", measured_drop)
-    assert verify.write_blob(sh, "record_id", "shingles", "captest",
+    monkeypatch.setattr(blob, "drop_blob", measured_drop)
+    assert blob.write_blob(sh, "record_id", "shingles", "captest",
                              max_bytes=full // 20) is None
     assert len(seen) == 1 and seen[0] < full // 2, (seen, full)
     assert _rows(containment_edges(sh, CFG, "record_id")) == fused
@@ -187,7 +188,7 @@ def _worker_cache_sizes(spark, tags: set) -> list[tuple[int, int]]:
     def probe(batches):
         import pandas as pd
 
-        from semhash_spark.operators import verify as v
+        from semhash_spark import blob as v
 
         def mine():
             return sum(key[-1] in tags for key in v._BLOB_CACHE)
@@ -210,7 +211,7 @@ def test_blob_lifecycle_flat_over_repeated_calls(spark, monkeypatch):
     feats = corpus.select(
         "record_id", shingle_hashes("content", CFG.shingle_k).alias("shingles"))
     tags: set = set()
-    write = verify.write_blob
+    write = blob.write_blob
 
     def recorded_write(*args, **kwargs):
         ref = write(*args, **kwargs)
@@ -218,7 +219,7 @@ def test_blob_lifecycle_flat_over_repeated_calls(spark, monkeypatch):
         tags.add(ref["tag"])
         return ref
 
-    monkeypatch.setattr(verify, "write_blob", recorded_write)
+    monkeypatch.setattr(blob, "write_blob", recorded_write)
     before = _scratch_entries()
     counts = set()
     for _ in range(20):

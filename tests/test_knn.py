@@ -251,12 +251,8 @@ def test_shared_scan_matches_edges_and_ranking(spark):
     """One cosine_self_scan pass emits exactly cosine_threshold_edges'
     edges (max_k cap included) and rank_by_avg_similarity's ranking."""
     from semhash_spark.operators import rank as rank_ops
-    from semhash_spark.operators.verify import (
-        cosine_threshold_edges,
-        detach,
-        drop_blob,
-        write_blob,
-    )
+    from semhash_spark.blob import detach, drop_blob, write_blob
+    from semhash_spark.operators.verify import cosine_threshold_edges
 
     emb = _scan_table(spark).persist()
     ref = write_blob(emb, "record_id", "embedding", "t_scan")
@@ -279,6 +275,7 @@ def test_ivf_payload_blob_without_transport_falls_back(spark, monkeypatch):
     """Above the IVF blob gate, a session without blob transport runs
     the payload-shuffle plan (identical edges) instead of failing at
     plan time."""
+    from semhash_spark import blob
     from semhash_spark.operators import verify as V
 
     emb = _clustered_embeddings(spark, n_centers=4, per_center=30)
@@ -286,12 +283,12 @@ def test_ivf_payload_blob_without_transport_falls_back(spark, monkeypatch):
     want = sorted(tuple(r) for r in V.cosine_threshold_edges_ivf(
         emb, 0.9, **kw).collect())
     monkeypatch.setattr(V, "_IVF_BLOB_MIN_ROWS", 0)
-    monkeypatch.setattr(V, "blob_transport_available", lambda spark: False)
+    monkeypatch.setattr(blob, "blob_transport_available", lambda spark: False)
 
     def no_blob(*a, **k):
         raise AssertionError("no blob may be written without transport")
 
-    monkeypatch.setattr(V, "write_blob", no_blob)
+    monkeypatch.setattr(blob, "write_blob", no_blob)
     edges = V.cosine_threshold_edges_ivf(emb, 0.9, **kw)
     got = sorted(tuple(r) for r in edges.collect())
     assert got == want and len(got) > 100
@@ -329,10 +326,11 @@ def test_probe_cells_at_the_arrow_boundary(spark, tiny_batches):
 
 def test_embedding_kernels_at_the_arrow_boundary(spark, tiny_batches, monkeypatch):
     """The mapInArrow / applyInArrow kernels that read embeddings
-    through ``verify.normalized_batch`` or a group table — the fused
+    through ``kernels.normalized_batch`` or a group table — the fused
     threshold scan, the broadcast top-k, the shared self scan and the
     IVF group scan (payload and blob plans) — on a NULL row, a zero
     vector and a one-row table, in 7-row batches, against numpy."""
+    from semhash_spark import blob
     from semhash_spark.operators import rank as rank_ops
     from semhash_spark.operators import verify as V
     from tests import oracle
@@ -360,11 +358,11 @@ def test_embedding_kernels_at_the_arrow_boundary(spark, tiny_batches, monkeypatc
     try:
         check_edges(V.cosine_threshold_edges(emb, thr))
         check_avgs(rank_ops.rank_by_avg_similarity(emb, emb, 5, exclude_self=True))
-        ref = V.write_blob(emb, "record_id", "embedding", "t_edge")
+        ref = blob.write_blob(emb, "record_id", "embedding", "t_edge")
         try:
-            scan = V.detach(rank_ops.cosine_self_scan(emb, ref, thr, k=5, max_k=None))
+            scan = blob.detach(rank_ops.cosine_self_scan(emb, ref, thr, k=5, max_k=None))
         finally:
-            V.drop_blob(ref)
+            blob.drop_blob(ref)
         check_edges(rank_ops.scan_edges(scan))
         check_avgs(rank_ops.scan_ranking(scan))
         # IVF takes no NULL rows (train_centroids rejects them);

@@ -101,60 +101,6 @@ def test_driver_cc_cap_zero_forces_star_path(spark):
         r_star.release()
 
 
-def test_chunked_threshold_kernel_edges():
-    """Unit coverage of the round-5 f32-scan/f64-rescore kernel:
-    zero-norm exclusion at thr<=0 (normalized zero rows score exactly
-    0.0, which a non-positive threshold would wrongly admit), exact
-    f64 emission, and the sparse per-row max_k cap."""
-    import numpy as np
-
-    from semhash_spark.operators.verify import (
-        _cap_rows_sparse,
-        _chunked_threshold,
-    )
-
-    from semhash_spark.operators.verify import _build_blocks
-
-    rng = np.random.default_rng(7)
-    matn = rng.standard_normal((50, 16))
-    matn[3] = 0.0  # zero-norm row
-    nrm = np.linalg.norm(matn, axis=1, keepdims=True)
-    matn = np.divide(matn, nrm, out=matn, where=nrm > 0)
-    nz = nrm.ravel() > 0
-    ids = np.arange(50, dtype=np.int64)
-    m32 = _build_blocks(matn)
-
-    # thr <= 0: every non-zero-norm ordered pair passes; none touch
-    # the zero-norm row on either side
-    got = [
-        (int(a), int(b))
-        for r, c, s in _chunked_threshold(
-            ids, matn, ~nz, ids, matn, m32, nz, -1.0, None, self_mode=True)
-        for a, b in zip(ids[r], ids[c])
-    ]
-    want = [(a, b) for a in range(50) for b in range(50)
-            if a < b and a != 3 and b != 3]
-    assert sorted(got) == want
-
-    # emitted scores are the exact float64 dot of the normalized rows
-    for r, c, s in _chunked_threshold(
-            ids, matn, ~nz, ids, matn, m32, nz, 0.2, None, self_mode=True):
-        expect = np.einsum("ij,ij->i", matn[r], matn[c])
-        assert np.array_equal(s, expect)
-        assert (s >= 0.2).all()
-
-    # sparse cap: row 0 has 5 hits, cap 2 keeps the 2 best by
-    # (score desc, id asc)
-    r = np.array([0, 0, 0, 0, 0, 1])
-    c = np.array([1, 2, 3, 4, 5, 6])
-    s = np.array([0.9, 0.95, 0.9, 0.8, 0.99, 0.5])
-    ids_i = np.arange(10, dtype=np.int64)
-    rr, cc, ss = _cap_rows_sparse(r, c, s, ids_i, 2)
-    # keep-mask filter preserves triplet order; the KEPT SET is the
-    # top-2 by (score desc, id asc) plus the under-cap row
-    assert sorted(zip(rr.tolist(), cc.tolist())) == [(0, 2), (0, 5), (1, 6)]
-
-
 def test_ivf_salting_is_output_invariant(spark):
     """The round-5 OOM fix: the IVF scan bounds applyInPandas group
     size by salting the probe stream and replicating each cell's
@@ -187,43 +133,3 @@ def test_ivf_salting_is_output_invariant(spark):
     as_set = lambda res: {(r.a, r.b, r.score) for r in res}  # noqa: E731
     assert len(salted) > 100  # the blob actually pairs
     assert as_set(salted) == as_set(plain)
-
-
-def test_rescore_slicing_is_output_invariant(monkeypatch):
-    """The bounded-slice f64 rescore (the 1M-IVF OOM fix: a
-    mega-clique chunk surfaces step*n_idx survivors at once and the
-    one-shot fancy-index rescore held two (hits x dim) f64 copies
-    ~8 GB/worker) must emit bit-identical (r, c, s) triplets to the
-    one-shot path at any slice size."""
-    import numpy as np
-
-    import semhash_spark.operators.verify as V
-
-    rng = np.random.default_rng(11)
-    matn = rng.standard_normal((80, 16))
-    nrm = np.linalg.norm(matn, axis=1, keepdims=True)
-    matn = np.divide(matn, nrm, out=matn, where=nrm > 0)
-    nz = nrm.ravel() > 0
-    ids = np.arange(80, dtype=np.int64)
-    m32 = V._build_blocks(matn)
-
-    def run():
-        out = [
-            (r.copy(), c.copy(), s.copy())
-            for r, c, s in V._chunked_threshold(
-                ids, matn, ~nz, ids, matn, m32, nz, -1.0, 7,
-                self_mode=True)
-        ]
-        r = np.concatenate([o[0] for o in out])
-        c = np.concatenate([o[1] for o in out])
-        s = np.concatenate([o[2] for o in out])
-        return r, c, s
-
-    r0, c0, s0 = run()  # default _RESCORE_HITS: one-shot path
-    assert len(r0) > 500  # the all-pairs thr=-1 clique, capped at 7/row
-    for slice_hits in (1, 37, 100):
-        monkeypatch.setattr(V, "_RESCORE_HITS", slice_hits)
-        r1, c1, s1 = run()
-        assert np.array_equal(r0, r1)
-        assert np.array_equal(c0, c1)
-        assert np.array_equal(s0, s1)

@@ -2,12 +2,12 @@
 
 The fused cosine scan was re-tiled in round 6 (blocked f32 gemm +
 sorted-id tile skip + f32 prefilter before the f64 rescore,
-operators/verify.py:_chunked_threshold). These tests pin the
-optimization to the brute-force f64 semantics: the emitted edge set,
-the bit-exact f64 scores, and the per-row cap must be IDENTICAL to a
-naive full-matrix evaluation for every code path the kernel has —
-multi-tile inputs, unsorted index ids (skip disabled), oversized rows
-(prefilter active), cross mode, and thr <= 0 zero-norm masking.
+``kernels._chunked_threshold``); its brute-force parity tests run
+without Spark in tests/test_kernels.py. These tests pin the Spark side
+of the same round: the blocked scan pack against the whole-blob
+normalized matrix, the one-shuffle streaming candidate generator
+against the relational plan, and the IVF id-only plan against the
+payload shuffle.
 """
 
 from __future__ import annotations
@@ -15,109 +15,7 @@ from __future__ import annotations
 import numpy as np
 
 import semhash_spark.operators.verify as V
-
-
-def _mk(n, dim, seed, clique=0, zero_rows=()):
-    rng = np.random.default_rng(seed)
-    m = rng.standard_normal((n, dim))
-    if clique:
-        base = rng.standard_normal(dim)
-        m[:clique] = base + 0.03 * rng.standard_normal((clique, dim))
-    for z in zero_rows:
-        m[z] = 0.0
-    nrm = np.linalg.norm(m, axis=1, keepdims=True)
-    matn = np.divide(m, nrm, out=np.zeros_like(m), where=nrm > 0)
-    return matn, nrm.ravel() > 0
-
-
-def _brute(q_ids, qm, qz, ids_i, matn, nz_i, thr, max_k, self_mode):
-    """Naive f64 reference: all pairs scored with the SAME einsum op
-    the kernel's rescore uses (a dgemm sums in a different order and
-    can differ in the last ulp), threshold, per-row cap by
-    (score desc, id asc)."""
-    out = []
-    nj = len(ids_i)
-    for i in range(len(q_ids)):
-        if thr <= 0 and qz[i]:
-            continue
-        s_row = np.einsum(
-            "ij,ij->i", np.broadcast_to(qm[i], (nj, qm.shape[1])), matn
-        )
-        cand = []
-        for j in range(nj):
-            if self_mode and not q_ids[i] < ids_i[j]:
-                continue
-            if thr <= 0 and not nz_i[j]:
-                continue
-            if s_row[j] >= thr:
-                cand.append((j, s_row[j]))
-        if max_k is not None and len(cand) > max_k:
-            cand.sort(key=lambda t: (-t[1], ids_i[t[0]]))
-            cand = cand[:max_k]
-        for j, sc in cand:
-            out.append((int(q_ids[i]), int(ids_i[j]), float(sc)))
-    return sorted(out)
-
-
-def _run(q_ids, qm, qz, ids_i, matn, nz_i, thr, max_k, self_mode,
-         row_step=64):
-    blocks = V._build_blocks(matn)
-    got = []
-    for r, c, s in V._chunked_threshold(
-            q_ids, qm, qz, ids_i, matn, blocks, nz_i, thr, max_k,
-            self_mode=self_mode, row_step=row_step):
-        got.extend(zip(q_ids[r].tolist(), ids_i[c].tolist(), s.tolist()))
-    return sorted(got)
-
-
-def test_tiled_kernel_matches_bruteforce_multitile():
-    """> _BLK_W index rows => multiple tiles, including a padded tail."""
-    n = V._BLK_W + 700
-    matn, nz = _mk(n, 8, 3)
-    ids = np.arange(n, dtype=np.int64) * 2 + 1  # sorted, non-contiguous
-    q_sel = np.arange(0, n, 97)
-    got = _run(ids[q_sel], matn[q_sel], ~nz[q_sel], ids, matn, nz,
-               0.6, None, self_mode=True)
-    want = _brute(ids[q_sel], matn[q_sel], ~nz[q_sel], ids, matn, nz,
-                  0.6, None, self_mode=True)
-    assert got == want and len(got) > 0
-
-
-def test_tiled_kernel_unsorted_ids_no_skip():
-    """Unsorted index ids disable the tile skip; results unchanged."""
-    matn, nz = _mk(300, 16, 5)
-    ids = np.arange(300, dtype=np.int64)
-    rng = np.random.default_rng(0)
-    perm = rng.permutation(300)
-    got = _run(ids, matn, ~nz, ids[perm], matn[perm], nz[perm],
-               0.5, None, self_mode=True)
-    want = _brute(ids, matn, ~nz, ids[perm], matn[perm], nz[perm],
-                  0.5, None, self_mode=True)
-    assert got == want and len(got) > 0
-
-
-def test_tiled_kernel_prefilter_cap_exact():
-    """A clique far larger than max_k exercises the f32 prefilter;
-    the capped edge set and f64 scores must equal brute force."""
-    matn, nz = _mk(400, 12, 9, clique=250)
-    ids = np.arange(400, dtype=np.int64)
-    for max_k in (5, 40):
-        got = _run(ids, matn, ~nz, ids, matn, nz, 0.7, max_k,
-                   self_mode=True)
-        want = _brute(ids, matn, ~nz, ids, matn, nz, 0.7, max_k,
-                      self_mode=True)
-        assert got == want
-        assert len(got) > 250  # the clique actually paired and capped
-
-
-def test_tiled_kernel_cross_and_zero_threshold():
-    matn, nz = _mk(150, 10, 13, zero_rows=(4, 77))
-    q, qnz = _mk(60, 10, 14, zero_rows=(8,))
-    ids = np.arange(150, dtype=np.int64)
-    q_ids = np.arange(1000, 1060, dtype=np.int64)
-    got = _run(q_ids, q, ~qnz, ids, matn, nz, -0.2, 9, self_mode=False)
-    want = _brute(q_ids, q, ~qnz, ids, matn, nz, -0.2, 9, self_mode=False)
-    assert got == want and len(got) > 0
+from semhash_spark import blob
 
 
 def test_blocked_pack_matches_normalized_loader(spark, tmp_path):
@@ -143,7 +41,7 @@ def test_blocked_pack_matches_normalized_loader(spark, tmp_path):
         pd.DataFrame({"record_id": np.arange(n), "embedding": emb}),
         schema="record_id long, embedding array<float>",
     ).repartition(7, F.col("record_id"))
-    ref = V.write_blob(df, "record_id", "embedding", "t_blk")
+    ref = blob.write_blob(df, "record_id", "embedding", "t_blk")
 
     tbl = pq.read_table(sorted(glob.glob(os.path.join(ref["path"], "*.parquet"))))
     tbl = tbl.filter(tbl.column("embedding").is_valid())
@@ -155,7 +53,7 @@ def test_blocked_pack_matches_normalized_loader(spark, tmp_path):
     nz_a = nrm > 0
     assert len(ids_a) == n - 1 and not nz_a[ids_a == 12].any()
 
-    ids_b, rows_b, nz_b, blocks = V.load_feats_rows(ref, "scan")
+    ids_b, rows_b, nz_b, blocks = blob.load_feats_rows(ref, "scan")
     assert np.array_equal(ids_a, ids_b)
     # the blocked pack serves rows lazily (_ShardRows): gathering every
     # row must reproduce the whole-blob normalized matrix bit-for-bit,
@@ -172,10 +70,10 @@ def test_blocked_pack_matches_normalized_loader(spark, tmp_path):
     assert np.array_equal(flat, full.T.astype(np.float32))
     # the top-k pack finalizes the same shards into the f64 transposed
     # matrix the whole-blob loader built
-    ids_t, mnT, nz_t = V.load_feats_rows(ref, "topk")
+    ids_t, mnT, nz_t = blob.load_feats_rows(ref, "topk")
     assert np.array_equal(ids_t, ids_a) and np.array_equal(nz_t, nz_a)
     assert np.array_equal(np.asarray(mnT), matn_a.T)
-    V.drop_blob(ref)
+    blob.drop_blob(ref)
 
 
 def _relational_pairs(spark, rows, cap):

@@ -25,7 +25,7 @@ def test_sharded_pack_built_once_and_reused(spark):
     original row."""
     import os
 
-    import semhash_spark.operators.verify as V
+    from semhash_spark import blob
 
     feats = spark.createDataFrame(
         [(i, list(range(i % 5 + 1))) for i in range(50)],
@@ -33,8 +33,8 @@ def test_sharded_pack_built_once_and_reused(spark):
     ).repartition(3)  # multiple parquet parts -> multiple shards
     import tempfile
 
-    ref = V.write_blob(feats, "record_id", "shingles", "packtest")
-    out1 = V.load_feats_segments(ref)
+    ref = blob.write_blob(feats, "record_id", "shingles", "packtest")
+    out1 = blob.load_feats_segments(ref)
     root = os.path.join(tempfile.gettempdir(), "semhash_packed", ref["tag"])
     packed = sorted(f for f in os.listdir(root) if f.endswith(".npy"))
     shard_files = [f for f in packed if f.startswith("_shard_seg")]
@@ -43,8 +43,8 @@ def test_sharded_pack_built_once_and_reused(spark):
     assert len(shard_files) >= 3  # >=1 part x 3 arrays
     assert os.path.exists(os.path.join(root, "_final_seg.done"))
     mtimes = [os.path.getmtime(os.path.join(root, f)) for f in packed]
-    V._BLOB_CACHE.pop(("seg", "seg", ref["tag"]), None)  # fresh worker simulation
-    out2 = V.load_feats_segments(ref)
+    blob._BLOB_CACHE.pop(("seg", "seg", ref["tag"]), None)  # fresh worker simulation
+    out2 = blob.load_feats_segments(ref)
     for a, b in zip(out1[:5], out2[:5]):
         assert np.array_equal(np.asarray(a), np.asarray(b))
     assert mtimes == [os.path.getmtime(os.path.join(root, f)) for f in packed]
@@ -58,7 +58,7 @@ def test_sharded_pack_built_once_and_reused(spark):
         s0 = int(row_shard[row]); o0 = int(row_off[row]); l0 = int(row_len[row])
         got = np.asarray(flats[s0][o0:o0 + l0]).tolist()
         assert got == rows[int(rid)], rid
-    V.drop_blob(ref)
+    blob.drop_blob(ref)
 
 
 def _feats(spark, n=60, seed=3):
@@ -104,65 +104,6 @@ def test_jaccard_and_containment_values(spark):
     ).orderBy("i").collect()
     assert [r.j for r in out] == [2 / 6, 1.0, 2 / 6, 0.0]
     assert [r.c for r in out] == [2 / 4, 1.0, 1.0, 0.0]
-
-
-def test_pair_intersections_sharded_kernel_matches_sets():
-    """Pure-kernel check (no Spark): the sharded padded-sort
-    intersection must equal python set intersection for random
-    multi-shard layouts, including empty rows and wide outliers."""
-    import random
-
-    import semhash_spark.operators.verify as V
-
-    rng = random.Random(99)
-    for trial in range(10):
-        n_shards = rng.randint(1, 4)
-        rows = []          # list of value-lists, global row order
-        flats, row_shard, row_off, row_len = [], [], [], []
-        for s in range(n_shards):
-            vals = []
-            for _ in range(rng.randint(0, 8)):
-                w = rng.choice([0, 1, 3, 7, 50])
-                r = rng.sample(range(-100, 100), w)
-                row_shard.append(s)
-                row_off.append(len(vals))
-                row_len.append(w)
-                vals.extend(r)
-                rows.append(r)
-            flats.append(np.asarray(vals, dtype=np.int64))
-        n = len(rows)
-        if n < 2:
-            continue
-        seg = (flats, np.asarray(row_shard), np.asarray(row_off),
-               np.asarray(row_len, dtype=np.int64))
-        pos_a = np.asarray([rng.randrange(n) for _ in range(30)])
-        pos_b = np.asarray([rng.randrange(n) for _ in range(30)])
-        inter, la, lb = V._pair_intersections(seg, pos_a, pos_b)
-        for k in range(30):
-            expect = len(set(rows[pos_a[k]]) & set(rows[pos_b[k]]))
-            assert inter[k] == expect, (trial, k)
-            assert la[k] == len(rows[pos_a[k]]) and lb[k] == len(rows[pos_b[k]])
-
-
-def test_pair_intersections_blocking_respects_budget(monkeypatch):
-    """Width-sorted blocking must stay correct when the cells budget
-    forces many tiny blocks (one mega-wide outlier pair)."""
-    import semhash_spark.operators.verify as V
-
-    big = list(range(3000))
-    rows = [big, list(range(1500)), [1, 2, 3], [2, 3, 4], []]
-    flat = np.asarray([v for r in rows for v in r], dtype=np.int64)
-    offs, lens = [], []
-    off = 0
-    for r in rows:
-        offs.append(off); lens.append(len(r)); off += len(r)
-    seg = ([flat], np.zeros(len(rows), dtype=np.int64),
-           np.asarray(offs), np.asarray(lens, dtype=np.int64))
-    monkeypatch.setattr(V, "_PAIR_CELLS_BUDGET", 4096)
-    pos_a = np.asarray([0, 0, 2, 4])
-    pos_b = np.asarray([1, 2, 3, 0])
-    inter, la, lb = V._pair_intersections(seg, pos_a, pos_b)
-    assert inter.tolist() == [1500, 3, 2, 0]
 
 
 def test_verify_containment_strategies_bit_identical(spark):

@@ -18,6 +18,7 @@ os.makedirs(OUT, exist_ok=True)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from semhash_spark.blob import drop_blob, write_blob  # noqa: E402
 from semhash_spark.config import DedupConfig  # noqa: E402
 from semhash_spark.operators.dedup import add_features, deduplicate  # noqa: E402
 from semhash_spark.operators.exact import self_exact_dedup  # noqa: E402
@@ -26,11 +27,7 @@ from semhash_spark.operators.rank import (  # noqa: E402
     cosine_self_scan,
     rank_by_avg_similarity,
 )
-from semhash_spark.operators.verify import (  # noqa: E402
-    cosine_threshold_edges,
-    drop_blob,
-    write_blob,
-)
+from semhash_spark.operators.verify import cosine_threshold_edges  # noqa: E402
 from semhash_spark.session import get_spark  # noqa: E402
 from semhash_spark.sources.corpus import generate_corpus  # noqa: E402
 

@@ -50,9 +50,8 @@ def main() -> None:
 
     from semhash_spark.operators.exact import self_exact_dedup
     from semhash_spark.operators.dedup import add_features
-    from semhash_spark.operators.verify import (
-        _feat_bytes, cosine_threshold_edges, drop_blob, write_blob,
-    )
+    from semhash_spark.blob import _feat_bytes, drop_blob, write_blob
+    from semhash_spark.operators.verify import cosine_threshold_edges
 
     keyed = self_exact_dedup(corpus, cfg.columns, cfg.id_col).persist()
     timed("exact", keyed.count)
@@ -66,7 +65,7 @@ def main() -> None:
 
     # pack only: one no-output pass that forces every worker to build/mmap
     def pack_only(batches):
-        from semhash_spark.operators.verify import load_feats_rows
+        from semhash_spark.blob import load_feats_rows
         load_feats_rows(ref, "scan")
         import pyarrow as pa
         for b in batches:
